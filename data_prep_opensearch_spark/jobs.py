@@ -292,7 +292,18 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"cancel_requested": args.index}))
         return 0
     spark = _spark(f"dposs_{args.cmd}")
+    try:
+        return _run(args, spark)
+    except ValueError as exc:
+        if args.cmd not in ("query", "search"):
+            raise
+        # query text outside the syntax contract (e.g. a fuzzy budget
+        # past Lucene's 0..2) is a usage error, not a traceback
+        raise SystemExit(f"{args.cmd}: {exc}") from None
 
+
+def _run(args: argparse.Namespace, spark) -> int:
+    """Run one Spark-backed command; returns the exit code."""
     if args.cmd == "build":
         from data_prep_opensearch_spark.operators.index_build import (
             build_index,

@@ -17,20 +17,21 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
   3. global df per term: tiny agg collected to the driver = the broadcast
      dictionary step (X10 in SURVEY.md §4).
   4. join the per-shard doclen sidecar (small, broadcast).
-  5. per-shard scoring in mapInPandas: decode + block-max WAND (or dense
-     exhaustive) -> local top-k per shard.
+  5. per-shard scoring in mapInPandas: decode + one exhaustive dense
+     kernel, or its exact pruning specializations (block-max WAND for
+     OR queries, pigeonhole for msm) -> local top-k per shard.
   6. final top-k: orderBy(score desc, doc_id asc).limit(k) — Spark's
      TakeOrderedAndProject does the partial/final merge.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import math
 import os
 import re
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -201,8 +202,8 @@ def parse_query(
     under the 'code' tokenizer) stay literal. A chunk ending in ``~``
     or ``~N`` (N in 0..2, bare ``~`` = ES AUTO by length) is a FUZZY
     clause: the last stem token becomes a :class:`Fuzzy` entry in the
-    prefix-stem list (``~0`` collapses to a literal). A chunk starting
-    A chunk with ``*``/``?`` anywhere but the pure-trailing position is
+    prefix-stem list (``~0`` collapses to a literal; ``~3`` and up raise
+    ``ValueError``, as Lucene rejects them). A chunk with ``*``/``?`` anywhere but the pure-trailing position is
     a WILDCARD clause (Lucene WildcardQuery: ``*`` any run, ``?`` one
     char), and ``/body/`` is a REGEXP clause (Lucene RegexpQuery,
     implicitly anchored) — both expand against the dictionary under the
@@ -286,11 +287,11 @@ def parse_query(
             stem_tokens = tok(fm.group(1))
             if not stem_tokens:
                 continue
-            # user-supplied budgets clamp to Lucene's 0..2 ceiling instead
-            # of surfacing the constructor's ValueError as a CLI traceback
+            # a budget past Lucene's 0..2 ceiling raises (Fuzzy's check),
+            # like Lucene's FuzzyQuery; the CLI reports it as a message
             stem = Fuzzy(
                 stem_tokens[-1],
-                None if fm.group(2) == "" else min(int(fm.group(2)), 2),
+                None if fm.group(2) == "" else int(fm.group(2)),
                 boost,
             )
             if neg:
@@ -382,7 +383,16 @@ class BM25Engine:
         it by shard with no exchange and no driver transit.
     A warm query is then exactly ONE Spark job:
       filter(term IN ...) -> colocated sidecar join -> per-shard
-      block-max WAND / dense top-k -> TakeOrderedAndProject.
+      top-k -> TakeOrderedAndProject.
+
+    ``topk``, ``match_scores`` and ``topk_batch`` plan through one
+    ``_shard_scored``. Per shard, every query runs ONE exhaustive kernel
+    (``_score_shard_dense``: a dense accumulator covering terms,
+    phrases, msm and must_not) or one of its exact pruning
+    specializations — block-max WAND/MaxScore for OR queries
+    (``_score_shard_wand``) and pigeonhole candidates for msm
+    (``_score_shard_msm``); both fall back to the dense kernel when
+    nothing is skippable.
     """
 
     def __init__(
@@ -893,18 +903,6 @@ class BM25Engine:
             boosts,
         )
 
-    @staticmethod
-    def _pick_scorer(terms: list[str], df_map: dict[str, int],
-                     n_docs: int, scorer: str) -> str:
-        if scorer == "auto":
-            # the pruned scorer pays off when skipping can save work:
-            # several terms, none of them scanning most of the corpus.
-            # Single-term or stopword-dominated queries score (nearly)
-            # every posting either way -> the dense accumulator wins.
-            hot = max(df_map[t] for t in terms) > 0.1 * n_docs
-            scorer = "dense" if (len(terms) == 1 or hot) else "wand"
-        return scorer
-
     # local tier caps: fall back to the distributed path past this query
     # posting mass, and bound the driver-resident posting cache
     LOCAL_MAX_POSTINGS = 2_000_000
@@ -1187,10 +1185,12 @@ class BM25Engine:
         uniq, starts = np.unique(docs, return_index=True)
         scores = np.add.reduceat(contrib, starts)
         if msm > 1:
-            if all(len(cl) == 1 for cl in clauses):
-                # per-term docs are unique and each matched phrase added
-                # exactly one parts_d entry per doc, so the posting count
-                # per unique doc IS its distinct matched-clause count
+            if all(len(cl) == 1 for cl in clauses) and len(terms) == len(clauses):
+                # one distinct term per clause: per-term docs are unique
+                # and each matched phrase added exactly one parts_d entry
+                # per doc, so the posting count per unique doc IS its
+                # matched-clause count (a literal repeated as its
+                # prefix's only expansion is two clauses on one term)
                 nmatch = np.diff(np.append(starts, docs.size))
             else:
                 # prefix clauses: a clause counts once per doc however
@@ -1280,21 +1280,19 @@ class BM25Engine:
         consumed, so per-shard k-cuts would drop rows pages still need);
         the cursor filter runs before Spark's TakeOrdered, which caps
         network at k per partition as usual."""
-        if search_after is not None:
-            local = self._shard_scored(query, None, "dense",
-                                       min_should_match, max_expansions,
-                                       synonyms)
-            if local is not None:
-                s, d = float(search_after[0]), int(search_after[1])
-                local = local.filter(
-                    (F.col("score") < s)
-                    | ((F.col("score") == s) & (F.col("doc_id") > d))
-                )
-        else:
-            local = self._shard_scored(query, k, scorer, min_should_match,
-                                       max_expansions, synonyms)
+        after = search_after is not None
+        local = self._shard_scored(
+            [query], None if after else k, "dense" if after else scorer,
+            min_should_match, max_expansions, synonyms)
         if local is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
+        local = local.drop("query_id")
+        if after:
+            s, d = float(search_after[0]), int(search_after[1])
+            local = local.filter(
+                (F.col("score") < s)
+                | ((F.col("score") == s) & (F.col("doc_id") > d))
+            )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def explain(self, query: str, doc_id: int,
@@ -1516,100 +1514,76 @@ class BM25Engine:
         OpenSearch semantics (filter context never changes idf). Result
         stays distributed; shards are disjoint docID ranges so there
         are no cross-shard duplicates."""
-        local = self._shard_scored(query, None, "dense", min_should_match,
+        local = self._shard_scored([query], None, "dense", min_should_match,
                                    max_expansions, synonyms)
         if local is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        return local
+        return local.drop("query_id")
+
+    def _query_plan(
+        self, query: str, scorer: str,
+        min_should_match: int | str | None, max_expansions: int | None,
+        synonyms: dict[str, list[str]] | None, resolve: bool,
+    ) -> _QueryPlan | None:
+        """Plan one query's clauses once, on the driver. None when no doc
+        can match: fewer surviving clauses than msm (incl. AND with an
+        unindexed term or a no-match prefix), or a pure-negative query,
+        which has no positive clause to generate candidates (Lucene bool
+        with only must_not)."""
+        clauses, n_clauses, negs, phrases, neg_phrases, boosts = (
+            self._plan_clauses(query, max_expansions, synonyms,
+                               resolve=resolve)
+        )
+        msm = resolve_msm(min_should_match, n_clauses)
+        terms = {t for cl in clauses for t in cl}
+        if (not terms and not phrases) or len(clauses) + len(phrases) < msm:
+            return None
+        terms.update(t for ph in phrases + neg_phrases for t in ph)
+        return _QueryPlan(sorted(terms), negs, scorer, msm, clauses,
+                          phrases, neg_phrases, boosts)
 
     def _shard_scored(
-        self, query: str, k: int | None, scorer: str,
+        self, queries: list[str], k: int | None, scorer: str,
         min_should_match: int | str | None,
         max_expansions: int | None,
         synonyms: dict[str, list[str]] | None = None,
     ) -> DataFrame | None:
-        """Plan + per-shard scoring shared by ``topk`` (k-cut per shard)
-        and ``match_ids`` (``k=None``: emit every positive-score doc —
-        the dense accumulator already touches the whole shard, so 'all
-        matches' costs the same kernel pass as top-k)."""
+        """The one distributed plan behind ``topk``, ``match_scores`` and
+        ``topk_batch``: every query's terms union into one segment
+        filter, and one per-shard loop (:func:`_score_group`) scores
+        each (shard, query) pair, emitting (query_id, doc_id, score) —
+        the shard's top-k per query, or with ``k=None`` every positive-
+        score doc (the exhaustive kernel touches the whole shard anyway,
+        so 'all matches' costs the same pass). None when no query can
+        match.
+
+        Global df: a warm engine resolves it on the driver (cached). A
+        cold one computes it INSIDE the job — a broadcast gdf aggregate
+        joined onto the filtered rows — so one-shot queries and batches
+        skip the resolve_df job; results are identical (gdf = the same
+        Σ df over shards/gens). Synonym blending needs driver-side dfs,
+        so synonym queries always resolve."""
         self._maybe_refresh()
-        # in-plan idf mode: when neither synonym blending (needs driver-
-        # side dfs) nor auto scorer routing (needs dfs to pick wand vs
-        # dense) is in play, GLOBAL df per term is computed inside the
-        # query job itself — a broadcast gdf aggregate joined onto the
-        # filtered segment rows — and the per-shard kernels derive
-        # idf from the column. That removes the resolve_df collect (one
-        # whole Spark job) from every cold one-shot query; results are
-        # identical (gdf = the same Σ df over shards/gens).
-        is_phrase_q = '"' in query
-        inplan = (
-            not self._shard_partitioned  # warm engines: _df_cache is free
-            and synonyms is None
-            and not (
-                scorer == "auto"
-                and resolve_msm(min_should_match, 8) <= 1
-                and not is_phrase_q
-            )
-        )
-        clauses, n_clauses, negs, phrases, neg_phrases, boosts = (
-            self._plan_clauses(query, max_expansions, synonyms,
-                               resolve=not inplan)
-        )
-        msm = resolve_msm(min_should_match, n_clauses)
-        # auto routing may still be needed when the query turned out
-        # msm<=1 single-clause-shaped after parsing — fall back to
-        # resolved planning in that corner
-        if inplan and scorer == "auto" and not (phrases or neg_phrases) \
-                and msm <= 1:
-            inplan = False
-            clauses, n_clauses, negs, phrases, neg_phrases, boosts = (
-                self._plan_clauses(query, max_expansions, synonyms)
-            )
-        terms = sorted({t for cl in clauses for t in cl})
-        pterms = sorted(
-            {t for ph in phrases for t in ph}
-            | {t for ph in neg_phrases for t in ph}
-        )
-        # fewer surviving clauses than msm (incl. AND with an unindexed
-        # term or a no-match prefix): no doc can satisfy the clause
-        # count. A pure-negative query has no positive clause to
-        # generate candidates (Lucene bool with only must_not) -> empty.
-        if (not terms and not phrases) or len(clauses) + len(phrases) < msm:
+        inplan = not self._shard_partitioned and synonyms is None
+        plans = [self._query_plan(q, scorer, min_should_match,
+                                  max_expansions, synonyms, not inplan)
+                 for q in queries]
+        live = [p for p in plans if p is not None]
+        if not live:
             return None
-        keff = (1 << 31) if k is None else k
         n_docs, avgdl = int(self.meta["n_docs"]), float(self.meta["avgdl"])
+        keff = (1 << 31) if k is None else k
+        terms = {t for p in live for t in p.terms}
+        positional = any(p.phrases or p.neg_phrases for p in live)
+        seg_src = self._seg_positional() if positional else self.seg
+        seg = seg_src.filter(F.col("term").isin(
+            sorted(terms.union(*(p.negs for p in live)))))
         if inplan:
-            idf_raw = idf_map = None
-        else:
-            df_map = self.resolve_df(terms + pterms)
-            # fuzzy similarity boosts fold into the per-term weights the
-            # scorers consume; phrase clauses weight with UNBOOSTED idf
-            idf_raw = {t: idf(n_docs, df_map[t]) for t in terms + pterms}
-            idf_map = {t: w * boosts.get(t, 1.0)
-                       for t, w in idf_raw.items()}
-
-        is_phrase = bool(phrases or neg_phrases)
-        if is_phrase:
-            # phrase queries read the positional twin; the dedicated
-            # scorer handles term clauses + phrase clauses + msm together
-            scorer_fn = functools.partial(
-                _score_shard_phrase, msm=msm, clauses=clauses,
-                phrases=phrases, neg_phrases=neg_phrases,
-            )
-        elif msm > 1:
-            cl_arg = None if all(len(c) == 1 for c in clauses) else clauses
-            scorer_fn = functools.partial(_score_shard_msm, msm=msm,
-                                          clauses=cl_arg)
-        else:
-            if not inplan:
-                scorer = self._pick_scorer(terms, df_map, n_docs, scorer)
-            scorer_fn = _score_shard_wand if scorer == "wand" else _score_shard_dense
-
-        seg_src = self._seg_positional() if is_phrase else self.seg
-        seg = seg_src.filter(F.col("term").isin(terms + negs + pterms))
-        if inplan:
+            df_map = None
             gdf = seg.groupBy("term").agg(F.sum("df").alias("gdf"))
             seg = seg.join(F.broadcast(gdf), "term")
+        else:
+            df_map = self.resolve_df(sorted(terms))
         if not self._shard_partitioned:
             # cold path: co-locate each shard's rows (the filtered set is
             # tiny — <= |terms| rows per shard — so this shuffle is cheap)
@@ -1621,7 +1595,6 @@ class BM25Engine:
         # (thousands of shards x ~MB dl_bytes) it falls back to a join on
         # the two caches' SHARED hash partitioning — still exchange-free.
         seg = seg.join(self.sidecar, "shard", "inner")
-        neg_set = set(negs)
 
         def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # a shard's rows can span Arrow batches: consume the WHOLE
@@ -1631,30 +1604,15 @@ class BM25Engine:
             if not chunks:
                 return
             pdf = pd.concat(chunks, ignore_index=True)
-            for shard, grp in pdf.groupby("shard"):
-                base, dl_bytes, deleted = _sidecar_of(grp)
-                if idf_map is None:
-                    ir: dict[str, float] = {}
-                    for t, g in zip(grp["term"].to_numpy(),
-                                    grp["gdf"].to_numpy()):
-                        if t not in ir:
-                            ir[t] = idf(n_docs, int(g))
-                    im = {t: w * boosts.get(t, 1.0) for t, w in ir.items()}
-                else:
-                    ir, im = idf_raw, idf_map
-                if neg_set:
-                    grp, deleted = _apply_must_not(grp, neg_set, base,
-                                                   deleted)
-                    if grp is None:
-                        continue
-                if is_phrase:
-                    yield scorer_fn(grp, im, avgdl, keff, base, dl_bytes,
-                                    deleted, phrase_idf=ir)
-                else:
-                    yield scorer_fn(grp, im, avgdl, keff, base, dl_bytes,
-                                    deleted)
+            for _, grp in pdf.groupby("shard"):
+                gdf_of = df_map if df_map is not None else {
+                    t: int(g) for t, g in zip(grp["term"].to_numpy(),
+                                              grp["gdf"].to_numpy())
+                }
+                yield from _score_group(grp, plans, gdf_of, n_docs, avgdl,
+                                        keff)
 
-        return seg.mapInPandas(score_partition, TOPK_SCHEMA)
+        return seg.mapInPandas(score_partition, BATCH_TOPK_SCHEMA)
 
     def topk_batch(
         self, queries: list[str], k: int = 10, scorer: str = "auto",
@@ -1669,104 +1627,16 @@ class BM25Engine:
         bound (~0.4s) with the scorer kernel at ~100ms — batching
         amortizes the scheduling: all queries' terms union into one
         segment filter, every (shard, query) pair scores inside the same
-        mapInPandas pass, and one window takes each query's top-k.
-        Per-query results are IDENTICAL to ``topk`` (parity-tested).
-        Queries with no indexed terms return no rows."""
-        self._maybe_refresh()
-        spark = self.spark
-        clause_plans = [self._plan_clauses(q, max_expansions, synonyms)
-                        for q in queries]
-        n_docs, avgdl = int(self.meta["n_docs"]), float(self.meta["avgdl"])
-
-        plans: list[tuple[list[str], dict[str, float], object, list[str]]] = []
-        any_phrases = False
-        for clauses, n_clauses, negs, phrases, neg_phrases, boosts in (
-                clause_plans):
-            msm = resolve_msm(min_should_match, n_clauses)
-            ts = sorted({t for cl in clauses for t in cl})
-            pts = sorted(
-                {t for ph in phrases for t in ph}
-                | {t for ph in neg_phrases for t in ph}
-            )
-            df_map = self.resolve_df(ts + pts)
-            if (not ts and not phrases) or len(clauses) + len(phrases) < msm:
-                plans.append(([], {}, None, []))
-                continue
-            idf_raw = {t: idf(n_docs, df_map[t]) for t in ts + pts}
-            idf_map = {t: w * boosts.get(t, 1.0)
-                       for t, w in idf_raw.items()}
-            if phrases or neg_phrases:
-                any_phrases = True
-                fn = functools.partial(
-                    _score_shard_phrase, msm=msm, clauses=clauses,
-                    phrases=phrases, neg_phrases=neg_phrases,
-                    phrase_idf=idf_raw,
-                )
-                # the phrase scorer needs the phrase terms' rows in its
-                # slice of the shard group
-                ts = sorted(set(ts) | set(pts))
-            elif msm > 1:
-                cl_arg = (None if all(len(c) == 1 for c in clauses)
-                          else clauses)
-                fn = functools.partial(_score_shard_msm, msm=msm,
-                                       clauses=cl_arg)
-            else:
-                s = self._pick_scorer(ts, df_map, n_docs, scorer)
-                fn = _score_shard_wand if s == "wand" else _score_shard_dense
-            plans.append((ts, idf_map, fn, negs))
-
-        union_terms = sorted(
-            {t for ts, _, _, ns in plans for t in ts}
-            | {t for _, _, _, ns in plans for t in ns}
-        )
-        if not any(ts for ts, _, _, _ in plans):
-            return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-        all_negs = {t for _, _, _, ns in plans for t in ns}
-        seg_src = self._seg_positional() if any_phrases else self.seg
-        seg = seg_src.filter(F.col("term").isin(union_terms))
-        if not self._shard_partitioned:
-            seg = seg.repartition(F.col("shard"))
-        seg = seg.join(self.sidecar, "shard", "inner")
-
-        def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            chunks = list(batches)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            for shard, grp in pdf.groupby("shard"):
-                base, dl_bytes, deleted = _sidecar_of(grp)
-                # decode the shard's exclusion postings ONCE for every
-                # query in the batch, union per query below
-                neg_docs: dict[str, np.ndarray] = {}
-                if all_negs:
-                    neg_rows = grp[grp["term"].isin(all_negs)]
-                    if len(neg_rows):
-                        neg_docs = {
-                            t: d for t, (d, _) in
-                            _decode_group(neg_rows, base).items()
-                        }
-                for qi, (ts, idf_map, fn, negs_q) in enumerate(plans):
-                    if not ts:
-                        continue
-                    sub = grp[grp["term"].isin(ts)]
-                    if sub.empty:
-                        continue
-                    del_q = deleted
-                    ps = [neg_docs[t] for t in negs_q
-                          if t in neg_docs and neg_docs[t].size]
-                    if ps:
-                        excl = (ps[0] if len(ps) == 1
-                                else np.unique(np.concatenate(ps)))
-                        del_q = (excl if del_q is None or not del_q.size
-                                 else np.union1d(del_q, excl))
-                    out = fn(sub, idf_map, avgdl, k, base, dl_bytes, del_q)
-                    if len(out):
-                        out.insert(0, "query_id", np.int32(qi))
-                        yield out
-
+        mapInPandas pass (``_shard_scored``, the plan ``topk`` uses),
+        and one window takes each query's top-k. Per-query results are
+        IDENTICAL to ``topk`` (parity-tested). Queries with no indexed
+        terms return no rows."""
+        local = self._shard_scored(queries, k, scorer, min_should_match,
+                                   max_expansions, synonyms)
+        if local is None:
+            return self.spark.createDataFrame([], BATCH_TOPK_SCHEMA)
         from pyspark.sql import Window
 
-        local = seg.mapInPandas(score_partition, BATCH_TOPK_SCHEMA)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -1807,8 +1677,93 @@ def _empty_topk() -> pd.DataFrame:
     })
 
 
-def _decode_group(grp: pd.DataFrame, base: int) -> dict[str, tuple[np.ndarray, np.ndarray]]:
-    """Decode (and merge across generations) each term's postings.
+class _QueryPlan(NamedTuple):
+    """One query's kernel inputs, planned once on the driver."""
+    terms: list[str]          # positive rows read: clause + phrase terms
+    negs: list[str]           # must_not terms
+    scorer: str               # "auto" | "wand" | "dense"
+    msm: int
+    clauses: list[list[str]]
+    phrases: list[Phrase]
+    neg_phrases: list[Phrase]
+    boosts: dict[str, float]  # per-term weights != 1.0
+
+
+def _score_query(
+    grp: pd.DataFrame, plan: _QueryPlan, gdf: dict[str, int], n_docs: int,
+    avgdl: float, k: int, base: int, dl_bytes: bytes,
+    deleted: np.ndarray | None,
+) -> pd.DataFrame:
+    """Kernel wrapper: one query's rows of one shard -> its top-k.
+
+    idf comes from the per-term GLOBAL df ``gdf``. Phrase queries take
+    the exhaustive kernel, msm > 1 the pigeonhole specialization, and
+    OR queries wand or dense. ``scorer="auto"`` picks over the terms
+    this shard holds: dense for a single term or when any df exceeds
+    10% of the corpus (every posting gets scored either way, so the
+    plain accumulator wins), else wand. Every kernel is exact, so the
+    pick never changes results."""
+    ir = {t: idf(n_docs, gdf[t]) for t in grp["term"].unique()}
+    im = {t: w * plan.boosts.get(t, 1.0) for t, w in ir.items()}
+    args = (grp, im, avgdl, k, base, dl_bytes, deleted)
+    if plan.phrases or plan.neg_phrases:
+        return _score_shard_dense(
+            *args, msm=plan.msm, clauses=plan.clauses, phrases=plan.phrases,
+            neg_phrases=plan.neg_phrases, phrase_idf=ir)
+    if plan.msm > 1:
+        return _score_shard_msm(*args, msm=plan.msm, clauses=plan.clauses)
+    scorer = plan.scorer
+    if scorer == "auto":
+        hot = max(gdf[t] for t in ir) > 0.1 * n_docs
+        scorer = "dense" if len(ir) == 1 or hot else "wand"
+    return (_score_shard_wand if scorer == "wand" else _score_shard_dense)(*args)
+
+
+def _score_group(
+    grp: pd.DataFrame, plans: list[_QueryPlan | None], gdf: dict[str, int],
+    n_docs: int, avgdl: float, k: int,
+) -> Iterator[pd.DataFrame]:
+    """One shard's rows (joined with its sidecar) -> (query_id, doc_id,
+    score) per planned query; query_id = position in ``plans``.
+
+    must_not docs ARE per-query tombstones, and every kernel honors
+    ``deleted`` — so exclusion happens BEFORE top-k (a masked doc is
+    replaced by the next-best, never dropped from a shorter result).
+    The shard's exclusion postings are decoded ONCE for every query."""
+    base, dl_bytes, deleted = _sidecar_of(grp)
+    all_negs = {t for p in plans if p is not None for t in p.negs}
+    neg_docs: dict[str, np.ndarray] = {}
+    if all_negs:
+        neg_rows = grp[grp["term"].isin(all_negs)]
+        if len(neg_rows):
+            neg_docs = {t: d for t, (d, _, _) in
+                        _decode_group(neg_rows, base).items() if d.size}
+    for qi, plan in enumerate(plans):
+        if plan is None:
+            continue
+        sub = grp[grp["term"].isin(plan.terms)]
+        if sub.empty:
+            continue
+        del_q = deleted
+        ps = [neg_docs[t] for t in plan.negs if t in neg_docs]
+        if ps:
+            excl = ps[0] if len(ps) == 1 else np.unique(np.concatenate(ps))
+            del_q = (excl if del_q is None or not del_q.size
+                     else np.union1d(del_q, excl))
+        out = _score_query(sub, plan, gdf, n_docs, avgdl, k, base,
+                           dl_bytes, del_q)
+        if len(out):
+            out.insert(0, "query_id", np.int32(qi))
+            yield out
+
+
+def _decode_group(
+    grp: pd.DataFrame, base: int, pos_terms: set[str] | frozenset = frozenset(),
+) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray | None]]:
+    """Decode (and merge across generations) each term's postings into
+    (docs, tfs, positions); positions are decoded only for ``pos_terms``
+    (phrase terms — the generation merge keeps them aligned via the
+    token-run gather) and are None otherwise.
     Column-array access, not itertuples: materializing wide rows (two
     byte buffers + six block arrays) through pandas row objects measured
     ~0.7 ms per shard-group call — comparable to the scoring itself."""
@@ -1816,13 +1771,27 @@ def _decode_group(grp: pd.DataFrame, base: int) -> dict[str, tuple[np.ndarray, n
     gens = grp["gen"].to_numpy()
     docs_b = grp["doc_bytes"].to_numpy()
     tfs_b = grp["tf_bytes"].to_numpy()
-    out: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    pos_b = (grp["pos_bytes"].to_numpy()
+             if pos_terms and "pos_bytes" in grp.columns else None)
+    out: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray | None]] = {}
     for i in np.argsort(gens, kind="stable"):
         t = terms[i]
         docs, tfs = decode_posting_list(bytes(docs_b[i]), bytes(tfs_b[i]), base=base)
+        if t not in pos_terms:
+            if t in out:
+                docs, tfs = merge_posting_runs([out[t][:2], (docs, tfs)])
+            out[t] = (docs, tfs, None)
+            continue
+        if pos_b is None or pos_b[i] is None:
+            raise ValueError(
+                "phrase query over a segment without positions "
+                "(index built with positions=False?)"
+            )
+        pos = decode_positions(bytes(pos_b[i]), tfs)
         if t in out:
-            docs, tfs = merge_posting_runs([out[t], (docs, tfs)])
-        out[t] = (docs, tfs)
+            docs, tfs, pos = merge_posting_runs_with_pos(
+                [out[t], (docs, tfs, pos)])
+        out[t] = (docs, tfs, pos)
     return out
 
 
@@ -1922,182 +1891,48 @@ def _phrase_freqs_slop(
     return cand[nz], pf[nz].astype(np.int64)
 
 
-def _decode_group_pos(
-    grp: pd.DataFrame, base: int, pos_terms: set[str]
-) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray | None]]:
-    """Like :func:`_decode_group` but rows of ``pos_terms`` also decode
-    their position stream (generation merge keeps positions aligned via
-    the token-run gather)."""
-    terms = grp["term"].to_numpy()
-    gens = grp["gen"].to_numpy()
-    docs_b = grp["doc_bytes"].to_numpy()
-    tfs_b = grp["tf_bytes"].to_numpy()
-    pos_b = grp["pos_bytes"].to_numpy() if "pos_bytes" in grp.columns else None
-    out: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray | None]] = {}
-    for i in np.argsort(gens, kind="stable"):
-        t = terms[i]
-        docs, tfs = decode_posting_list(bytes(docs_b[i]), bytes(tfs_b[i]), base=base)
-        if t in pos_terms:
-            if pos_b is None or pos_b[i] is None:
-                raise ValueError(
-                    "phrase query over a segment without positions "
-                    "(index built with positions=False?)"
-                )
-            pos = decode_positions(bytes(pos_b[i]), tfs)
-            if t in out:
-                prev = out[t]
-                docs, tfs, pos = merge_posting_runs_with_pos(
-                    [(prev[0], prev[1], prev[2]), (docs, tfs, pos)]
-                )
-            out[t] = (docs, tfs, pos)
-        else:
-            if t in out:
-                prev = out[t]
-                docs, tfs = merge_posting_runs([(prev[0], prev[1]), (docs, tfs)])
-            out[t] = (docs, tfs, None)
-    return out
-
-
-def _score_shard_phrase(
-    grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
-    base: int, dl_bytes: bytes, deleted: np.ndarray | None = None,
-    msm: int = 1, clauses: list[list[str]] | None = None,
-    phrases: list[list[str]] | None = None,
-    neg_phrases: list[list[str]] | None = None,
-    phrase_idf: dict[str, float] | None = None,
-) -> pd.DataFrame:
-    """Dense scorer for phrase-bearing queries. Term clauses accumulate
-    BM25 exactly like :func:`_score_shard_dense`; each phrase clause
-    contributes ``(Σ idf of its terms) * tf_term(phrase_freq, dl)`` —
-    Lucene's PhraseQuery-under-BM25 weighting — and counts once toward
-    ``msm``. ``neg_phrases`` exclude their matching docs (must_not).
-    Phrase candidates intersect the phrase terms' postings, so the
-    exhaustive accumulation is bounded by the rarest phrase term.
-    ``phrase_idf`` (when given) supplies the UNBOOSTED idf for phrase
-    weighting — ``idf_map`` may carry fuzzy similarity boosts that must
-    not leak into a phrase clause sharing a term."""
-    phrases = phrases or []
-    neg_phrases = neg_phrases or []
-    pos_terms = {t for ph in phrases for t in ph}
-    pos_terms.update(t for ph in neg_phrases for t in ph)
-    postings = _decode_group_pos(grp, base, pos_terms)
-    dl_arr = vbyte_decode(dl_bytes).astype(np.int64)
-    if not postings:
-        return _empty_topk()
-    acc = np.zeros(dl_arr.shape[0], dtype=np.float64)
-    cnt = np.zeros(dl_arr.shape[0], dtype=np.int32) if msm > 1 else None
-    term_clauses = clauses or []
-    # a term shared by several clauses (literal + expansion/synonym
-    # overlap) scores ONCE with its folded max weight — the _plan_clauses
-    # contract every other tier honors; the per-clause loop below feeds
-    # only the msm match count
-    for term in {t for cl in term_clauses for t in cl}:
-        if term not in postings:
-            continue
-        docs, tfs, _ = postings[term]
-        if docs.size == 0:
-            continue
-        off = docs - base
-        dl = dl_arr[off]
-        acc[off] += idf_map[term] * bm25_tf_term(
-            tfs.astype(np.float64), dl.astype(np.float64), avgdl
-        )
-    if cnt is not None:
-        for cl in term_clauses:
-            offs = [
-                postings[t][0] - base for t in cl
-                if t in postings and postings[t][0].size
-            ]
-            if offs:
-                u = offs[0] if len(offs) == 1 else np.unique(
-                    np.concatenate(offs)
-                )
-                cnt[u] += 1
-    for ph in phrases:
-        if any(t not in postings or postings[t][0].size == 0 for t in ph):
-            continue
-        pdocs, pf = _phrase_freqs([postings[t] for t in ph], slop=getattr(ph, 'slop', 0))
-        if pdocs.size == 0:
-            continue
-        off = pdocs - base
-        dl = dl_arr[off]
-        w = getattr(ph, "boost", 1.0) * sum(
-            (phrase_idf or idf_map)[t] for t in ph
-        )
-        acc[off] += w * bm25_tf_term(
-            pf.astype(np.float64), dl.astype(np.float64), avgdl
-        )
-        if cnt is not None:
-            cnt[off] += 1
-    for ph in neg_phrases:
-        if any(t not in postings or postings[t][0].size == 0 for t in ph):
-            continue
-        pdocs, _ = _phrase_freqs([postings[t] for t in ph], slop=getattr(ph, 'slop', 0))
-        if pdocs.size:
-            acc[pdocs - base] = 0.0
-    if cnt is not None:
-        acc[cnt < msm] = 0.0
-    if deleted is not None and deleted.size:
-        off = deleted - base
-        acc[off[(off >= 0) & (off < acc.shape[0])]] = 0.0
-    nz = np.flatnonzero(acc)
-    if nz.size == 0:
-        return _empty_topk()
-    order = np.lexsort((nz, -acc[nz]))[:k]
-    sel = nz[order]
-    return pd.DataFrame({
-        "doc_id": (sel + base).astype("int64"),
-        "score": acc[sel],
-    })
-
-
-def _apply_must_not(
-    grp: pd.DataFrame, neg_set: set[str], base: int,
-    deleted: np.ndarray | None,
-) -> tuple[pd.DataFrame | None, np.ndarray | None]:
-    """Split off a shard's must_not rows and fold their matched docs
-    into the tombstone mask: exclusion docs ARE per-query tombstones,
-    and every scorer already honors ``deleted`` — so exclusion happens
-    BEFORE top-k selection (a masked doc is replaced by the next-best,
-    never silently dropped from a shorter result). Returns (positive
-    rows or None if the shard has none, merged deleted array)."""
-    is_neg = grp["term"].isin(neg_set).to_numpy()
-    if is_neg.any():
-        nd = _decode_group(grp[is_neg], base)
-        parts = [d for d, _ in nd.values() if d.size]
-        if parts:
-            excl = (parts[0] if len(parts) == 1
-                    else np.unique(np.concatenate(parts)))
-            deleted = (excl if deleted is None or not deleted.size
-                       else np.union1d(deleted, excl))
-        grp = grp[~is_neg]
-    if len(grp) == 0:
-        return None, deleted
-    return grp, deleted
-
-
 def _score_shard_dense(
     grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
     base: int, dl_bytes: bytes, deleted: np.ndarray | None = None,
     dl_arr: np.ndarray | None = None, msm: int = 1,
     clauses: list[list[str]] | None = None,
+    phrases: list[Phrase] | None = None,
+    neg_phrases: list[Phrase] | None = None,
+    phrase_idf: dict[str, float] | None = None,
 ) -> pd.DataFrame:
-    """Exhaustive vectorized scorer: dense accumulator over the shard's
-    contiguous docID range (shards ARE docID ranges by construction).
-    ``msm`` > 1 adds a parallel match-count accumulator (postings are
-    unique per (term, doc) after generation merge, so the count IS the
-    number of distinct matched query terms) and zeroes docs below it.
-    ``clauses`` groups terms into clauses for the count (a prefix
-    clause's expansions count once per doc however many matched)."""
-    postings = _decode_group(grp, base)
+    """The exhaustive shard kernel every query shape can take: a dense
+    accumulator over the shard's contiguous docID range (shards ARE
+    docID ranges by construction), then one top-k selection.
+
+    - Term rows add idf-weighted BM25. With ``clauses`` given, only
+      clause members score — a term that appears only inside a phrase
+      does not — and a term shared by several clauses scores ONCE with
+      its folded max weight (the ``_plan_clauses`` contract).
+    - ``msm`` > 1 adds a match-count accumulator and zeroes docs below
+      it. Without ``clauses`` every term is its own clause (postings
+      are unique per (term, doc) after generation merge); a clause (a
+      prefix's expansions) counts once per doc however many matched.
+    - Each of ``phrases`` adds ``(Σ idf of its terms) *
+      tf_term(phrase_freq, dl)`` — Lucene's PhraseQuery weighting under
+      BM25 — and counts once toward ``msm``. ``phrase_idf`` supplies the
+      UNBOOSTED idf: ``idf_map`` may carry fuzzy similarity boosts that
+      must not leak into a phrase sharing a term. Callers passing
+      phrases pass ``clauses`` too.
+    - ``neg_phrases`` (must_not) and ``deleted`` zero their docs before
+      the top-k cut."""
+    phrases = phrases or []
+    neg_phrases = neg_phrases or []
+    postings = _decode_group(
+        grp, base, {t for ph in phrases + neg_phrases for t in ph})
     if dl_arr is None:
         dl_arr = vbyte_decode(dl_bytes).astype(np.int64)
     if not postings:
         return _empty_topk()
     acc = np.zeros(dl_arr.shape[0], dtype=np.float64)
     cnt = np.zeros(dl_arr.shape[0], dtype=np.int32) if msm > 1 else None
-    for term, (docs, tfs) in postings.items():
-        if docs.size == 0:
+    scored = None if clauses is None else {t for cl in clauses for t in cl}
+    for term, (docs, tfs, _) in postings.items():
+        if docs.size == 0 or (scored is not None and term not in scored):
             continue
         off = docs - base
         dl = dl_arr[off]
@@ -2118,6 +1953,24 @@ def _score_shard_dense(
                 np.concatenate(offs)
             )
             cnt[u] += 1
+    # positive phrases first: a negative phrase's mask must win
+    for i, ph in enumerate(phrases + neg_phrases):
+        if any(t not in postings or postings[t][0].size == 0 for t in ph):
+            continue
+        pdocs, pf = _phrase_freqs([postings[t] for t in ph],
+                                  slop=getattr(ph, "slop", 0))
+        off = pdocs - base
+        if i >= len(phrases):
+            acc[off] = 0.0
+            continue
+        w = getattr(ph, "boost", 1.0) * sum(
+            (phrase_idf or idf_map)[t] for t in ph
+        )
+        acc[off] += w * bm25_tf_term(
+            pf.astype(np.float64), dl_arr[off].astype(np.float64), avgdl
+        )
+        if cnt is not None:
+            cnt[off] += 1
     if cnt is not None:
         acc[cnt < msm] = 0.0
     if deleted is not None and deleted.size:
@@ -2230,6 +2083,25 @@ class _LazyTermPostings:
         return tfs[safe].astype(np.float64), hit
 
 
+def _lazy_postings(grp: pd.DataFrame, base: int) -> dict[str, _LazyTermPostings]:
+    """A shard group's rows as block-lazy postings per term (one row
+    per generation; column-array access, as in :func:`_decode_group`)."""
+    cols = {c: grp[c].to_numpy() for c in (
+        "gen", "df", "doc_bytes", "tf_bytes", "block_first",
+        "block_last", "block_max_tf", "block_min_dl")}
+    has_offs = "block_doc_off" in grp.columns
+    if has_offs:
+        cols["block_doc_off"] = grp["block_doc_off"].to_numpy()
+        cols["block_tf_off"] = grp["block_tf_off"].to_numpy()
+    by_term: dict[str, list[dict]] = {}
+    for i, t in enumerate(grp["term"].to_numpy()):
+        row = {c: v[i] for c, v in cols.items()}
+        if not has_offs:
+            row["block_doc_off"] = None
+        by_term.setdefault(t, []).append(row)
+    return {t: _LazyTermPostings(rows, base) for t, rows in by_term.items()}
+
+
 def _score_shard_wand(
     grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
     base: int, dl_bytes: bytes, deleted: np.ndarray | None = None,
@@ -2326,21 +2198,7 @@ def _score_shard_wand(
         return _score_shard_dense(grp, idf_map, avgdl, k, base, dl_bytes,
                                   deleted, dl_arr=dl_arr)
 
-    cols = {c: grp[c].to_numpy() for c in (
-        "gen", "df", "doc_bytes", "tf_bytes", "block_first",
-        "block_last", "block_max_tf", "block_min_dl")}
-    has_offs = "block_doc_off" in grp.columns
-    if has_offs:
-        cols["block_doc_off"] = grp["block_doc_off"].to_numpy()
-        cols["block_tf_off"] = grp["block_tf_off"].to_numpy()
-    by_term: dict[str, list[dict]] = {}
-    for i in range(len(grp)):
-        row = {c: v[i] for c, v in cols.items()}
-        if not has_offs:
-            row["block_doc_off"] = None
-        by_term.setdefault(term_arr[i], []).append(row)
-
-    lazies = {t: _LazyTermPostings(rows, base) for t, rows in by_term.items()}
+    lazies = _lazy_postings(grp, base)
     terms = list(lazies)
     ub = ub_by_term  # computed in the router, no decode
     order = sorted(terms, key=lambda t: (-ub[t], t))
@@ -2469,23 +2327,7 @@ def _score_shard_msm(
                                   deleted, dl_arr=dl_arr, msm=msm,
                                   clauses=clauses)
 
-    cols = {c: grp[c].to_numpy() for c in (
-        "gen", "df", "doc_bytes", "tf_bytes", "block_first",
-        "block_last", "block_max_tf", "block_min_dl")}
-    has_offs = "block_doc_off" in grp.columns
-    if has_offs:
-        cols["block_doc_off"] = grp["block_doc_off"].to_numpy()
-        cols["block_tf_off"] = grp["block_tf_off"].to_numpy()
-    by_term: dict[str, list[dict]] = {}
-    for i in range(len(grp)):
-        row = {c: v[i] for c, v in cols.items()}
-        if not has_offs:
-            row["block_doc_off"] = None
-        by_term.setdefault(term_arr[i], []).append(row)
-    lazies = {
-        t: _LazyTermPostings(by_term[t], base)
-        for g in groups for t in g
-    }
+    lazies = _lazy_postings(grp, base)
 
     parts_d, parts_c = [], []
     small_docs: list[np.ndarray] = []  # per small CLAUSE: unique doc union

@@ -239,6 +239,10 @@ def minhash_lsh_pairs(
     ``max_bucket_size=None`` restores the uncapped join. Reference
     analogue: the deferral-style skew isolation of api/mysql_store.py:841-865.
     """
+    if bands < 1 or n_hashes % bands:
+        # leftover seeds would silently fall outside every band
+        raise ValueError(
+            f"n_hashes ({n_hashes}) must split evenly into bands ({bands})")
     rows_per_band = n_hashes // bands
     # band hashes straight off the WIDE per-doc signature row: each
     # band's members are fixed seed columns, so md5(concat of the sorted

@@ -135,4 +135,9 @@ def test_cli_errors(cli_index, capsys):
               "--filter-sql", "a=1"])  # filter without attrs
     with pytest.raises(SystemExit):
         main(["suggest", "--index", idx])  # neither text nor prefix
+    # a fuzzy budget past Lucene's 0..2 is a clean usage error
+    with pytest.raises(SystemExit, match=r"^query: .*0\.\.2"):
+        main(["query", "--index", idx, "--q", "import~5"])
+    with pytest.raises(SystemExit, match=r"^search: .*0\.\.2"):
+        main(["search", "--index", idx, "--q", "merge~3"])
     capsys.readouterr()

@@ -274,6 +274,7 @@ def _msm_query_set():
         "import def",              # hot + hot -> dense fallback
         "class self sym10",
         "zzz_absent needle2",      # absent term counts toward n
+        "needle0 needle0*",        # one term, two clauses (sole expansion)
     ]
 
 

@@ -60,12 +60,14 @@ def test_parse_fuzzy_shapes():
     assert len(npre) == 1 and isinstance(npre[0], Fuzzy)
     assert str(npre[0]) == "bar" and npre[0].max_edits == 1
 
-    # out-of-range user budgets clamp to Lucene's ceiling instead of
-    # surfacing a ValueError traceback through the CLI (ADVICE r5)
-    _, prefs3, *_ = parse_query("foo~3", tok)
-    assert len(prefs3) == 1 and prefs3[0].max_edits == 2
+    # out-of-range user budgets raise, as Lucene's FuzzyQuery does —
+    # nothing is clamped silently
+    with pytest.raises(ValueError, match=r"0\.\.2"):
+        parse_query("foo~3", tok)
+    with pytest.raises(ValueError, match=r"0\.\.2"):
+        parse_query("-foo~5", tok)
     with pytest.raises(ValueError):
-        Fuzzy("foo", 3)  # the constructor still enforces the bound
+        Fuzzy("foo", 3)  # the constructor enforces the same bound
 
     # code tokenizer: earlier sub-tokens stay literal, last becomes the
     # fuzzy stem (same rule as prefix chunks)

@@ -90,6 +90,14 @@ def test_minhash_lsh_catches_exact_dups(spark):
     assert (1, 4) not in pairs and (2, 4) not in pairs
 
 
+def test_minhash_lsh_rejects_uneven_bands(spark):
+    from data_prep_opensearch_spark.operators.dedup import minhash_lsh_pairs
+
+    # 16 seeds do not split into 5 bands: one seed would be dropped
+    with pytest.raises(ValueError, match="evenly"):
+        minhash_lsh_pairs(_docs(spark), n_hashes=16, bands=5)
+
+
 def test_simhash_similar_docs_close(spark):
     from data_prep_opensearch_spark.operators.dedup import simhash64
 

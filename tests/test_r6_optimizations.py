@@ -151,7 +151,8 @@ def test_columnar_bm25_matches_explode_twin(spark, docs_df):
 
 def test_warm_vs_cold_engine_parity(spark, tmp_path, docs_df):
     """cache=True (driver-resolved idf) and cache=False (in-plan gdf)
-    engines must be rank- and score-identical across clause shapes."""
+    engines must be rank- and score-identical across clause shapes, on
+    every distributed entry point: topk, topk_batch and match_scores."""
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
     from data_prep_opensearch_spark.operators.index_build import build_index
 
@@ -174,13 +175,40 @@ def test_warm_vs_cold_engine_parity(spark, tmp_path, docs_df):
         ('"quick brown" dog', {}),
         ("quick -jugs", {}),
         ("qick~1 dog", {"max_expansions": 5}),
+        ('"quick brown" lazy dog', {"min_should_match": 2}),
+        ('lazy -"quick brown"', {}),
     ]
+
+    def rows(df):
+        return [(r["doc_id"], round(r["score"], 6)) for r in df.collect()]
+
     try:
+        tops = {}
         for q, kw in cases:
-            a = [(r["doc_id"], round(r["score"], 6))
-                 for r in warm.topk(q, 8, **kw).collect()]
-            b = [(r["doc_id"], round(r["score"], 6))
-                 for r in cold.topk(q, 8, **kw).collect()]
+            a = rows(warm.topk(q, 8, **kw))
+            b = rows(cold.topk(q, 8, **kw))
             assert a == b, (q, kw, a, b)
+            tops[(q, tuple(sorted(kw.items())))] = b
+            mkw = {n: v for n, v in kw.items() if n != "scorer"}
+            a = sorted(rows(warm.match_scores(q, **mkw)))
+            b = sorted(rows(cold.match_scores(q, **mkw)))
+            assert a == b, ("match_scores", q, kw, a, b)
+        # batches: one per option set, each query checked against topk
+        by_kw: dict[tuple, list[str]] = {}
+        for q, kw in cases:
+            by_kw.setdefault(tuple(sorted(kw.items())), []).append(q)
+        for kwt, qs in by_kw.items():
+            got = {}
+            for eng in (warm, cold):
+                out = eng.topk_batch(qs, 8, **dict(kwt)).collect()
+                got[eng is warm] = [
+                    sorted(((r["doc_id"], round(r["score"], 6))
+                            for r in out if r["query_id"] == i),
+                           key=lambda x: (-x[1], x[0]))
+                    for i in range(len(qs))
+                ]
+            assert got[True] == got[False], ("topk_batch", qs, kwt)
+            for q, b in zip(qs, got[False]):
+                assert b == tops[(q, kwt)], ("batch vs topk", q, kwt)
     finally:
         warm.unpersist()
