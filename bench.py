@@ -52,7 +52,8 @@ catalog's checkpoint-heavy queries 2-4x even after unpersist):
      query (ft_lsh_pairs) recorded alongside its in-catalog wall.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), BENCH_CORPUS_DOCS (default 500000),
+     SPARK_GRAFT_CPUS (default: the machine's cores),
+     BENCH_CORPUS_DOCS (default 500000),
      BENCH_LOW_CORES (default 2), BENCH_TRIALS (default 5),
      BENCH_SCALING_RETRIES (default 4), BENCH_SCALING_WALL_BUDGET
      (default 3000 s — the scaling loop stops launching pairs past
@@ -81,8 +82,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from data_prep_opensearch_spark.session import spark_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = spark_cores()
 CORPUS_DOCS = int(os.environ.get("BENCH_CORPUS_DOCS", "500000"))
 LOW = int(os.environ.get("BENCH_LOW_CORES", "2"))
 TRIALS = int(os.environ.get("BENCH_TRIALS", "5"))

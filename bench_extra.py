@@ -11,7 +11,7 @@ Modes:
   --time <name> [reps]   run one query reps times, print each wall.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the machine's cores).
 """
 
 from __future__ import annotations
@@ -24,8 +24,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from data_prep_opensearch_spark.session import spark_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = spark_cores()
 
 
 def _spark():

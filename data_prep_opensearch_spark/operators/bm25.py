@@ -14,8 +14,10 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
   2. dictionary semi-join: segment scan FILTERED on term — Catalyst pushes
      ``term IN (...)`` into the parquet scan (term is the leading sort key
      of segment files, so row-group min/max stats prune aggressively).
-  3. global df per term: tiny agg collected to the driver = the broadcast
-     dictionary step (X10 in SURVEY.md §4).
+  3. global df per term: a warm engine reads it on the driver with a
+     row-group-pruned pyarrow point read of the segment files (the
+     dictionary step X10 in SURVEY.md §4); a cold one aggregates it in
+     the plan.
   4. join the per-shard doclen sidecar (small, broadcast).
   5. per-shard scoring in mapInPandas: decode + one exhaustive dense
      kernel, or its exact pruning specializations (block-max WAND for
@@ -26,6 +28,7 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -35,6 +38,9 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -371,19 +377,113 @@ def load_meta(index_dir: str) -> dict:
         return json.load(f)
 
 
+def _successor(stem: str) -> str | None:
+    """The least string above every string that starts with ``stem``, in
+    code-point order (= the UTF-8 byte order of parquet statistics);
+    None when no such string exists. U+10FFFF cannot be incremented, so
+    it is dropped and the char before it is; the surrogate block has no
+    UTF-8 form and is skipped."""
+    while stem:
+        c = ord(stem[-1]) + 1
+        if c <= 0x10FFFF:
+            return stem[:-1] + chr(0xE000 if 0xD800 <= c <= 0xDFFF else c)
+        stem = stem[:-1]
+    return None
+
+
+def term_point_filter(terms) -> pc.Expression:
+    """Rows of any of ``terms``, as an OR of equalities. pyarrow 16 tests
+    each equality against row-group min/max statistics but not ``isin``,
+    which reads every row group. The OR is built as a balanced tree."""
+    exprs = [pc.field("term") == t for t in sorted(set(terms))]
+    while len(exprs) > 1:
+        exprs = [a | b for a, b in zip(exprs[::2], exprs[1::2])] + (
+            exprs[-1:] if len(exprs) % 2 else [])
+    return exprs[0]
+
+
+def term_prefix_filter(stem: str) -> pc.Expression:
+    """Rows whose term starts with ``stem``: the ``[stem, successor)``
+    range prunes row groups on both sides; ``starts_with`` alone prunes
+    none."""
+    term = pc.field("term")
+    cond = (term >= stem) & pc.starts_with(term, stem)
+    hi = _successor(stem)
+    return cond if hi is None else cond & (term < hi)
+
+
+class SegmentsRetired(FileNotFoundError):
+    """A segment file of the engine's snapshot is gone: a concurrent
+    merge retired it after the engine's staleness check."""
+
+
+class _SegmentReader:
+    """Driver-side reads of the live segment files with pyarrow. The
+    files are term-sorted after ``sort_segments``, so a term-bounded
+    filter reads only the row groups whose min/max range can hold it —
+    the term-dictionary lookup a search node answers in-process, with
+    no Spark job."""
+
+    def __init__(self, files: list[str]) -> None:
+        dset = pads.dataset(files, format="parquet")
+        frags = list(dset.get_fragments())
+        for f in frags:  # keep row-group statistics for every read
+            f.ensure_complete_metadata()
+        # files from different writers can differ in optional columns
+        self._dset = dset.replace_schema(
+            pa.unify_schemas([f.physical_schema for f in frags]))
+
+    def read(self, cond: pc.Expression, columns: list[str]) -> pa.Table:
+        try:
+            return self._dset.to_table(columns=columns, filter=cond)
+        except FileNotFoundError as exc:
+            raise SegmentsRetired(str(exc)) from exc
+
+    def dfs(self, cond: pc.Expression) -> pa.Table:
+        """(term, df) with df summed over shards and generations."""
+        return self.read(cond, ["term", "df"]).group_by("term").aggregate(
+            [("df", "sum")]).rename_columns(["term", "df"])
+
+
+def _one_snapshot(method):
+    """Run an engine entry point against one index snapshot. When a
+    concurrent merge retires a segment file between the staleness check
+    and a driver-side read, reload and run the whole call once more.
+    Nested entry points leave the retry to the outermost, so no answer
+    mixes two snapshots."""
+    @functools.wraps(method)
+    def call(self, *args, **kwargs):
+        if self._entered:
+            return method(self, *args, **kwargs)
+        self._entered = True
+        try:
+            try:
+                return method(self, *args, **kwargs)
+            except SegmentsRetired:
+                self.unpersist()
+                self._load()
+            return method(self, *args, **kwargs)
+        finally:
+            self._entered = False
+    return call
+
+
 class BM25Engine:
     """Warm query engine. Init loads, once:
-      - the term dictionary (term -> global df) into driver memory (tiny:
-        one row per term; at web scale this becomes its own filtered-read
-        table — the broadcast-dictionary step X10 of SURVEY.md §4),
+      - a driver-side pyarrow reader over the live segment files (the
+        term dictionary step X10 of SURVEY.md §4): df resolution, prefix
+        expansion and the driver-local tier's posting fetches are
+        row-group-pruned point reads on the term-sorted files, with no
+        Spark job; resolved dfs are cached per term,
       - segments CACHED pre-partitioned by shard (so a query is filter +
         mapInPandas with NO shuffle),
       - the per-shard (doclen, masked-ids) sidecar as a one-row-per-shard
         DataFrame cached CO-PARTITIONED with the segments — queries join
         it by shard with no exchange and no driver transit.
-    A warm query is then exactly ONE Spark job:
-      filter(term IN ...) -> colocated sidecar join -> per-shard
-      top-k -> TakeOrderedAndProject.
+    A warm ``topk`` then runs 2 Spark jobs: the scoring job
+      filter(term IN ...) -> sidecar join -> per-shard top-k ->
+      TakeOrderedAndProject,
+    and the per-query broadcast of the cached sidecar it joins.
 
     ``topk``, ``match_scores`` and ``topk_batch`` plan through one
     ``_shard_scored``. Per shard, every query runs ONE exhaustive kernel
@@ -455,13 +555,17 @@ class BM25Engine:
             self.unpersist()
             self._load()
 
+    _entered = False  # inside an _one_snapshot entry point
+
     def _load(self) -> None:
         from data_prep_opensearch_spark.operators.incremental import (
             masked_doc_ids_per_shard,
         )
         from data_prep_opensearch_spark.operators.manifest import (
+            load_manifest,
             read_doclens,
             read_segments,
+            segment_files,
         )
 
         spark = self.spark
@@ -470,7 +574,11 @@ class BM25Engine:
         prune_superseded = self._prune_superseded
         self._token = self._index_token()
         self.meta = load_meta(index_dir)
-        seg = read_segments(spark, index_dir)
+        # one manifest load: the Spark scan and the driver-side reader see
+        # the same segment files
+        m = load_manifest(index_dir)
+        seg = read_segments(spark, index_dir, m)
+        self._segments = _SegmentReader(segment_files(index_dir, m))
 
         sidecar = read_doclens(spark, index_dir).select("shard", "base", "dl_bytes")
         masked = masked_doc_ids_per_shard(
@@ -515,12 +623,11 @@ class BM25Engine:
         else:
             self.seg = seg
             self.sidecar = sidecar
-        # term dictionary: resolved LAZILY per query via a `term IN (...)`
-        # filtered aggregate over the (term-sorted) segment files — the
-        # parquet scan prunes on term min/max stats, so this is a
-        # dictionary-table point read, never a full-vocabulary collect
-        # (the round-1 toPandas() pulled the whole vocab to the driver,
-        # which cannot exist at 10^12 docs). Warm terms are cached.
+        # term dictionary: resolved LAZILY per query by a driver-side
+        # point read of the (term-sorted) segment files, pruned on term
+        # min/max stats — never a full-vocabulary collect (the round-1
+        # toPandas() pulled the whole vocab to the driver, which cannot
+        # exist at 10^12 docs). Warm terms are cached.
         self._df_cache: dict[str, int] = {}
         # prefix-expansion cache: (stem, cap) -> [(term, df), ...]
         self._prefix_cache: dict[tuple[str, int], list[tuple[str, int]]] = {}
@@ -567,11 +674,7 @@ class BM25Engine:
         sidecar join stays exchange-free. Kept separate from the warm
         cache: positions roughly double the bytes and only phrase
         queries read them."""
-        if not self.meta.get("positions"):
-            raise ValueError(
-                "phrase query requires an index built with positions=True "
-                f"({self.index_dir} has none)"
-            )
+        self._require_positions()
         if self._seg_pos is None:
             sp = self._seg_all
             if self._shard_partitioned:
@@ -580,18 +683,22 @@ class BM25Engine:
             self._seg_pos = sp
         return self._seg_pos
 
+    def _require_positions(self) -> None:
+        if not self.meta.get("positions") or self._seg_all is None:
+            raise ValueError(
+                "phrase query requires an index built with positions=True "
+                f"({self.index_dir} has none)"
+            )
+
+    @_one_snapshot
     def resolve_df(self, terms: list[str]) -> dict[str, int]:
-        """Global df per term (summed over shards/generations) via one tiny
-        filtered-scan job for cache misses; absent terms resolve to 0."""
+        """Global df per term (summed over shards/generations) via one
+        driver-side point read for cache misses; absent terms resolve
+        to 0."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            rows = (
-                self.seg.filter(F.col("term").isin(missing))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
+            got = self._segments.dfs(term_point_filter(missing))
+            found = dict(zip(got["term"].to_pylist(), got["df"].to_pylist()))
             if len(self._df_cache) > 4_000_000:  # bound driver memory
                 self._df_cache.clear()
             for t in missing:
@@ -601,17 +708,17 @@ class BM25Engine:
     # Lucene-style default cap on multi-term expansion
     MAX_EXPANSIONS = 50
 
+    @_one_snapshot
     def expand_prefix(
         self, stem: str, max_expansions: int | None = None
     ) -> list[tuple[str, int]]:
         """Expand a prefix stem against the index dictionary: one
-        filtered-aggregate job over the TERM-SORTED segment files —
-        `startswith` pushes to the parquet scan as a StringStartsWith
-        filter, so row groups outside the stem's [stem, stem~) min/max
-        range are pruned and this stays a dictionary point-read at any
-        corpus size (never a vocabulary collect). The cap keeps the
-        expanded clause bounded (Lucene's max_expansions): when a stem
-        matches more terms, the HIGHEST-df expansions win (ties to the
+        driver-side read of the TERM-SORTED segment files bounded to
+        the stem's [stem, successor) range, so row groups outside it are
+        pruned and this stays a dictionary point-read at any corpus size
+        (never a vocabulary collect). The cap keeps the expanded clause
+        bounded (Lucene's max_expansions): when a stem matches more
+        terms, the HIGHEST-df expansions win (ties to the
         lexicographically first term) — the deterministic choice that
         retains the expansions with the most matches.
         Returns [(term, global_df), ...] df-desc; cached per stem until
@@ -619,15 +726,9 @@ class BM25Engine:
         cap = self.MAX_EXPANSIONS if max_expansions is None else max_expansions
         key = (stem, cap)
         if key not in self._prefix_cache:
-            rows = (
-                self.seg.filter(F.col("term").startswith(stem))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-                .orderBy(F.desc("df"), F.asc("term"))
-                .limit(cap)
-                .collect()
-            )
-            exp = [(r["term"], int(r["df"])) for r in rows]
+            got = self._segments.dfs(term_prefix_filter(stem)).sort_by(
+                [("df", "descending"), ("term", "ascending")]).slice(0, cap)
+            exp = list(zip(got["term"].to_pylist(), got["df"].to_pylist()))
             self._prefix_cache[key] = exp
             for t, d in exp:  # expansion dfs seed the term-df cache
                 self._df_cache.setdefault(t, d)
@@ -936,60 +1037,38 @@ class BM25Engine:
             else np.zeros(0, dtype=np.int64)
         )
 
-    def _ensure_local_pos(self, pterms: list[str]) -> None:
-        """Pull missing phrase terms' POSITIONAL postings to the driver:
-        per (term, shard) generation-merge with positions, shard-ordered
-        concat, flat (docs, tfs, dls, pos) arrays — the positional twin
-        of ``_local_flat``, same budget."""
-        missing = [t for t in pterms if t not in self._local_pos]
-        if not missing:
-            return
-        if self._seg_all is None or not self.meta.get("positions"):
-            raise ValueError(
-                "phrase query requires an index built with positions=True "
-                f"({self.index_dir} has none)"
-            )
-        rows = [
-            r.asDict()
-            for r in self._seg_all.filter(F.col("term").isin(missing))
-            .select("term", "shard", "gen", "doc_bytes", "tf_bytes",
-                    "pos_bytes").collect()
-        ]
+    def _fetch_local(self, terms: list[str], positional: bool) -> dict:
+        """Pull terms' postings to the driver with one point read: per
+        (term, shard) generation-merge, shard-ordered concat, flat
+        (docs, tfs, dls) arrays per term, plus flat positions when
+        ``positional``. Counts against LOCAL_CACHE_BYTES."""
+        cols = ["term", "shard", "gen", "doc_bytes", "tf_bytes"]
+        if positional:
+            self._require_positions()
+            cols.append("pos_bytes")
+        rows = self._segments.read(term_point_filter(terms), cols).to_pandas()
         self._load_local_sidecars(sorted(
-            {int(d["shard"]) for d in rows} - self._local_side.keys()
-        ))
-        by_ts: dict[tuple, list[dict]] = {}
-        for d in rows:
-            by_ts.setdefault((d["term"], int(d["shard"])), []).append(d)
-        parts: dict[str, list] = {t: [] for t in missing}
-        for (t, shard), ds in by_ts.items():
-            base, dl_arr, _ = self._local_side[shard]
-            runs = []
-            for d in sorted(ds, key=lambda d: int(d["gen"])):
-                docs, tfs = decode_posting_list(
-                    bytes(d["doc_bytes"]), bytes(d["tf_bytes"]), base=base
-                )
-                runs.append((docs, tfs,
-                             decode_positions(bytes(d["pos_bytes"]), tfs)))
-            docs, tfs, pos = (
-                runs[0] if len(runs) == 1 else merge_posting_runs_with_pos(runs)
-            )
-            parts[t].append((shard, docs, tfs, dl_arr[docs - base], pos))
-        size = 0
-        for t in missing:
-            ps = sorted(parts[t], key=lambda p: p[0])
-            if ps:
-                docs = np.concatenate([p[1] for p in ps])
-                tfs = np.concatenate([p[2] for p in ps])
-                dls = np.concatenate([p[3] for p in ps])
-                pos = np.concatenate([p[4] for p in ps])
+            set(rows["shard"].tolist()) - self._local_side.keys()))
+        parts: dict[str, list] = {t: [] for t in terms}
+        for shard, grp in rows.groupby("shard"):  # shard order: deterministic
+            base, dl_arr, _ = self._local_side[int(shard)]
+            for t, (docs, tfs, pos) in _decode_group(
+                    grp, base, set(terms) if positional else frozenset()).items():
+                parts[t].append((docs, tfs, dl_arr[docs - base])
+                                + ((pos,) if positional else ()))
+        out = {}
+        for t in terms:
+            if parts[t]:
+                arrs = tuple(np.concatenate(col) for col in zip(*parts[t]))
             else:
-                docs = tfs = pos = np.zeros(0, dtype=np.int64)
-                dls = np.zeros(0, dtype=np.float64)
-            self._local_pos[t] = (docs, tfs, dls, pos)
-            size += int(docs.nbytes + tfs.nbytes + dls.nbytes + pos.nbytes)
-        self._local_bytes += size
+                arrs = (np.zeros(0, np.int64), np.zeros(0, np.int64),
+                        np.zeros(0, np.float64)) + (
+                    (np.zeros(0, np.int64),) if positional else ())
+            out[t] = arrs
+            self._local_bytes += sum(int(a.nbytes) for a in arrs)
+        return out
 
+    @_one_snapshot
     def topk_local(
         self,
         query: str,
@@ -1015,8 +1094,10 @@ class BM25Engine:
         ``max_postings`` (default LOCAL_MAX_POSTINGS) falls back to the
         distributed path — at 10^12 docs a stopword's postings are GBs
         and belong on executors; the selective queries a latency tier
-        exists for stay MBs. Cold per new term: one filtered-scan job
-        for the rows + one for unseen shards' sidecars.
+        exists for stay MBs. A new term costs two driver-side point
+        reads of the segment files (its df, then its rows) and no Spark
+        job; only a shard whose sidecar is not yet cached adds one, and
+        a fuzzy clause's first expansion is a Spark scan.
 
         Under the cap the tier scores EXHAUSTIVELY over flat cached
         per-term arrays (|terms| vectorized contribution ops + one
@@ -1057,8 +1138,9 @@ class BM25Engine:
                              max_expansions=max_expansions,
                              search_after=search_after, synonyms=synonyms)
             return dist.toPandas() if as_pandas else dist
-        if pterms:
-            self._ensure_local_pos(pterms)
+        missing = [t for t in pterms if t not in self._local_pos]
+        if missing:
+            self._local_pos.update(self._fetch_local(missing, True))
 
         # fetch + decode ONCE per term: the cache holds flat, fully
         # decoded (docs, tf, dl) arrays per term spanning all shards and
@@ -1069,39 +1151,10 @@ class BM25Engine:
         # redundant dl decodes per query at 128 shards).
         missing = [t for t in terms + negs if t not in self._local_flat]
         if missing:
-            rows = [
-                r.asDict()
-                for r in self.seg.filter(F.col("term").isin(missing)).collect()
-            ]
-            self._load_local_sidecars(sorted(
-                {int(d["shard"]) for d in rows} - self._local_side.keys()
-            ))
-            by_ts: dict[tuple, list[dict]] = {}
-            for d in rows:
-                by_ts.setdefault((d["term"], int(d["shard"])), []).append(d)
-            flat_parts: dict[str, list] = {t: [] for t in missing}
-            for (t, shard), ds in by_ts.items():
-                base, dl_arr, _ = self._local_side[shard]
-                runs = [
-                    decode_posting_list(bytes(d["doc_bytes"]),
-                                        bytes(d["tf_bytes"]), base=base)
-                    for d in sorted(ds, key=lambda d: int(d["gen"]))
-                ]
-                docs, tfs = runs[0] if len(runs) == 1 else merge_posting_runs(runs)
-                flat_parts[t].append((shard, docs, tfs, dl_arr[docs - base]))
-            size = 0
-            for t in missing:
-                ps = sorted(flat_parts[t])  # shard order: deterministic concat
-                if ps:
-                    docs = np.concatenate([p[1] for p in ps])
-                    tfs = np.concatenate([p[2] for p in ps]).astype(np.float64)
-                    dls = np.concatenate([p[3] for p in ps])
-                else:
-                    docs = np.zeros(0, dtype=np.int64)
-                    tfs = dls = np.zeros(0, dtype=np.float64)
-                self._local_flat[t] = (docs, tfs, dls)
-                size += docs.nbytes + int(tfs.nbytes) + int(dls.nbytes)
-            self._local_bytes += size
+            self._local_flat.update(
+                (t, (docs, tfs.astype(np.float64), dls))
+                for t, (docs, tfs, dls) in self._fetch_local(missing, False).items()
+            )
         if self._local_bytes > self.LOCAL_CACHE_BYTES:
             # evict down to THIS query's working set: its terms' flat
             # arrays, its phrase terms' positional arrays, AND the
@@ -1295,6 +1348,7 @@ class BM25Engine:
             )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
+    @_one_snapshot
     def explain(self, query: str, doc_id: int,
                 min_should_match: int | str | None = None,
                 max_expansions: int | None = None,
@@ -1307,11 +1361,12 @@ class BM25Engine:
         (msm unmet, tombstoned, or excluded by must_not — Lucene's
         "doesn't match" explanation).
 
-        Cost: one filtered collect of the doc's SHARD rows for the
-        query's terms (a shard's per-term posting list is bounded by
-        the shard width, the same driver budget the local tier already
-        accepts) — explain is a debugging surface for single documents,
-        never a bulk path."""
+        Cost: one Spark job collects the doc's shard sidecar, and one
+        driver-side point read fetches the shard's rows for the query's
+        terms (a shard's per-term posting list is bounded by the shard
+        width, the same driver budget the local tier already accepts) —
+        explain is a debugging surface for single documents, never a
+        bulk path."""
         self._maybe_refresh()
         clauses, n_clauses, negs, phrases, neg_phrases, boosts = (
             self._plan_clauses(query, max_expansions, synonyms)
@@ -1346,36 +1401,20 @@ class BM25Engine:
             return empty
         dl = float(dl_arr[off])
 
-        seg_src = self._seg_positional() if phrases or neg_phrases else self.seg
-        want = sorted(set(terms) | set(negs) | set(pterms))
-        rows = [r.asDict() for r in seg_src.filter(
-            (F.col("term").isin(want)) & (F.col("shard") == shard)
-        ).collect()]
-        by_term: dict[str, list[dict]] = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
+        read_cols = ["term", "gen", "doc_bytes", "tf_bytes"]
+        if phrases or neg_phrases:
+            self._require_positions()
+            read_cols.append("pos_bytes")
+        postings = _decode_group(self._segments.read(
+            term_point_filter(set(terms) | set(negs) | set(pterms))
+            & (pc.field("shard") == shard),
+            read_cols,
+        ).to_pandas(), base, set(pterms))
         tf_of: dict[str, int] = {}
-        pos_of: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for t, ds in by_term.items():
-            runs = [
-                decode_posting_list(bytes(d["doc_bytes"]),
-                                    bytes(d["tf_bytes"]), base=base)
-                for d in sorted(ds, key=lambda d: int(d["gen"]))
-            ]
-            docs, tfs = runs[0] if len(runs) == 1 else merge_posting_runs(runs)
+        for t, (docs, tfs, _) in postings.items():
             i = np.searchsorted(docs, doc_id)
             if i < docs.size and docs[i] == doc_id:
                 tf_of[t] = int(tfs[i])
-            if (phrases or neg_phrases) and t in pterms:
-                pruns = []
-                for d in sorted(ds, key=lambda d: int(d["gen"])):
-                    docs2, tfs2 = decode_posting_list(
-                        bytes(d["doc_bytes"]), bytes(d["tf_bytes"]),
-                        base=base)
-                    pruns.append((docs2, tfs2, decode_positions(
-                        bytes(d["pos_bytes"]), tfs2)))
-                pos_of[t] = (pruns[0] if len(pruns) == 1
-                             else merge_posting_runs_with_pos(pruns))
 
         if any(t in tf_of for t in negs):
             return empty
@@ -1383,7 +1422,7 @@ class BM25Engine:
         def _phrase_freq_of(ph) -> int:
             arrs = []
             for t in ph:
-                v = pos_of.get(t)
+                v = postings.get(t)
                 if v is None or v[0].size == 0:
                     return 0
                 arrs.append(v)
@@ -1435,7 +1474,7 @@ class BM25Engine:
         (same unified-highlighter rationale — no stored term vectors),
         keep terms with tf >= min_term_freq and index df >= min_doc_freq,
         rank by tf * idf desc (ties term asc), cap at max_query_terms.
-        One filtered-scan job resolves every candidate's df."""
+        One driver-side point read resolves every candidate's df."""
         mq = self.MLT_MAX_QUERY_TERMS if max_query_terms is None else max_query_terms
         mtf = self.MLT_MIN_TERM_FREQ if min_term_freq is None else min_term_freq
         mdf = self.MLT_MIN_DOC_FREQ if min_doc_freq is None else min_doc_freq
@@ -1542,6 +1581,7 @@ class BM25Engine:
         return _QueryPlan(sorted(terms), negs, scorer, msm, clauses,
                           phrases, neg_phrases, boosts)
 
+    @_one_snapshot
     def _shard_scored(
         self, queries: list[str], k: int | None, scorer: str,
         min_should_match: int | str | None,
@@ -1620,8 +1660,8 @@ class BM25Engine:
         max_expansions: int | None = None,
         synonyms: dict[str, list[str]] | None = None,
     ) -> DataFrame:
-        """Score a BATCH of queries in ONE Spark job (returns (query_id,
-        doc_id, score); query_id = position in ``queries``).
+        """Score a BATCH of queries in one scoring pass (returns
+        (query_id, doc_id, score); query_id = position in ``queries``).
 
         Warm single-query latency at sandbox scale is job-scheduling
         bound (~0.4s) with the scorer kernel at ~100ms — batching

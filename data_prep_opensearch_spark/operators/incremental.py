@@ -189,9 +189,8 @@ def _add_documents_locked(
         all_stats = old_stats.filter(F.col("shard").isin(shards_touched)).select(
             *g_stats.columns
         ).unionByName(g_stats)
-        encode_doclens(all_stats).write.mode("overwrite").parquet(
-            os.path.join(index_dir, dl_rel)
-        )
+        mf.write_doclens(encode_doclens(all_stats),
+                         os.path.join(index_dir, dl_rel))
 
     def _mut(m):
         if os.path.exists(kind0):

@@ -975,9 +975,8 @@ def _build_index_locked(
                         F.sum("n_terms").alias("s"),
                         F.sum("doclen").alias("dl"),
                     )
-                    encode_doclens(observed).write.mode("overwrite").parquet(
-                        os.path.join(index_dir, dl_rel)
-                    )
+                    mf.write_doclens(encode_doclens(observed),
+                                     os.path.join(index_dir, dl_rel))
                     agg_row = obs.get
                     n_docs = int(agg_row["n"])
                     fp = int(agg_row["fp"] or 0) ^ n_docs

@@ -50,6 +50,8 @@ import re
 import shutil
 import time
 
+import numpy as np
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 MANIFEST = "manifest.json"
@@ -118,14 +120,34 @@ def _abs(index_dir: str, rel: str) -> str:
     return os.path.join(index_dir, rel)
 
 
-def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
-    m = load_manifest(index_dir)
+def _segment_dirs(index_dir: str, m: dict | None) -> list[str]:
     if m is None:
-        return spark.read.parquet(os.path.join(index_dir, "segments"))
+        return [os.path.join(index_dir, "segments")]
     paths = [_abs(index_dir, e["path"]) for e in m["segments"]]
     if not paths:
         raise FileNotFoundError(f"no live segments in {index_dir}/{MANIFEST}")
-    return spark.read.parquet(*paths)
+    return paths
+
+
+def read_segments(spark: SparkSession, index_dir: str,
+                  m: dict | None = None) -> DataFrame:
+    """The live segment table. ``m``: a manifest the caller already
+    loaded, so this frame and ``segment_files(index_dir, m)`` read the
+    same snapshot (None loads it)."""
+    if m is None:
+        m = load_manifest(index_dir)
+    return spark.read.parquet(*_segment_dirs(index_dir, m))
+
+
+def segment_files(index_dir: str, m: dict | None) -> list[str]:
+    """The parquet files behind ``read_segments`` for manifest ``m``
+    (None: the legacy ``segments/`` dir), for driver-side reads. Hidden
+    and ``_``-prefixed files are skipped, as Spark's listing skips them."""
+    return sorted(
+        os.path.join(d, f)
+        for d in _segment_dirs(index_dir, m) for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
 
 def read_doc_stats(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -198,6 +220,23 @@ def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_ord")
     )
+
+
+def write_doclens(frame: DataFrame, path: str) -> None:
+    """Write a doclen sidecar dir for publishing and assert it holds one
+    row per shard: ``read_doclens``' single-dir fast path and the
+    engine's per-shard sidecar join rely on it. The check reads the
+    written files' ``shard`` column on the driver (no Spark job)."""
+    frame.write.mode("overwrite").parquet(path)
+    shards = pads.dataset(path, format="parquet").to_table(
+        columns=["shard"])["shard"].to_numpy()
+    vals, counts = np.unique(shards, return_counts=True)
+    if (counts > 1).any():
+        raise ValueError(
+            f"doclens {path} has several rows for shard(s) "
+            f"{vals[counts > 1].tolist()}; the sidecar must hold one row "
+            "per shard"
+        )
 
 
 def committed_gens(m: dict) -> set[int]:

@@ -187,9 +187,8 @@ def _vacuum_doc_stats(spark: SparkSession, index_dir: str, meta: dict) -> None:
     from data_prep_opensearch_spark.operators.index_build import encode_doclens
 
     dl_rel = f"dl_vacuum_v{int(m.get('version', 0)) + 1}"
-    encode_doclens(alive_new).write.mode("overwrite").parquet(
-        os.path.join(index_dir, dl_rel)
-    )
+    mf.write_doclens(encode_doclens(alive_new),
+                     os.path.join(index_dir, dl_rel))
     old_stats = list(m["doc_stats"])
     old_dls = list(m["doclens"])
 

@@ -13,6 +13,48 @@ import os
 
 from pyspark.sql import SparkSession
 
+# local mode runs every task thread in the driver JVM: give it half the
+# machine's memory, within these bounds
+DRIVER_MEM_MIN_GB = 1
+DRIVER_MEM_MAX_GB = 64
+
+
+def machine_cores() -> int:
+    """Cores this process may run on (its affinity mask, which a
+    container or ``taskset`` narrows below the host's count)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def machine_memory_bytes() -> int:
+    """Physical memory, capped by a cgroup v2 limit when one is set."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+    except OSError:
+        return total
+    return min(total, int(limit)) if limit.isdigit() else total
+
+
+def spark_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` when set, else the machine's cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or machine_cores()
+
+
+def default_driver_memory(mem_bytes: int) -> str:
+    """Half of ``mem_bytes`` as a JVM heap size, within
+    [DRIVER_MEM_MIN_GB, DRIVER_MEM_MAX_GB]."""
+    gb = min(max(mem_bytes // 2 >> 30, DRIVER_MEM_MIN_GB), DRIVER_MEM_MAX_GB)
+    return f"{gb}g"
+
+
+def driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM`` when set, else derived from the machine."""
+    return (os.environ.get("SPARK_DRIVER_MEM")
+            or default_driver_memory(machine_memory_bytes()))
+
 
 def get_spark(
     app_name: str = "data_prep_opensearch_spark",
@@ -21,7 +63,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)
+        cores = spark_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cores), 8)
     builder = (
@@ -37,7 +79,7 @@ def get_spark(
         # local mode = driver-only: the heap serves all executor threads.
         # Undersizing it GC-thrashes precisely when parallelism is high,
         # which shows up as ANTI-scaling (32 threads slower than 8).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

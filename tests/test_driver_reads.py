@@ -1,0 +1,224 @@
+"""The engine's driver-side segment reads (``resolve_df``,
+``expand_prefix``, the local tier's posting fetch) against the Spark
+aggregates they replace, their Spark job counts, and their behaviour
+when a concurrent merge retires the files they read.
+
+Four indexes: a base build plus a delta generation with tombstones; the
+same base in the legacy layout (no manifest, a ``segments/`` dir); the
+delta index after ``merge_segments(apply_deletes=True)``; and the delta
+index opened with ``cache=False``.
+"""
+
+from __future__ import annotations
+
+import itertools
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from data_prep_opensearch_spark.operators import manifest as mf
+from data_prep_opensearch_spark.operators.bm25 import (
+    BM25Engine,
+    term_point_filter,
+)
+from data_prep_opensearch_spark.operators.incremental import (
+    add_documents,
+    delete_documents,
+)
+from data_prep_opensearch_spark.operators.index_build import (
+    build_index,
+    sort_segments,
+)
+from data_prep_opensearch_spark.operators.segment_merge import merge_segments
+from data_prep_opensearch_spark.sources.corpus import corpus_df
+
+N = 240
+TERMS = ["import", "def", "needle0", "needle3", "sym1", "fn3", "return",
+         "zzz_absent"]
+STEMS = ["sym", "fn", "needle", "re", "zzq"]  # "zzq" matches nothing
+QUERIES = ["import def", "needle0 import", "sym1 fn3 return", "import -def",
+           '"import def" return', "sym* fn3", "fn1* -import"]
+
+
+def _copy_legacy(src: str, dst: str) -> None:
+    """``src`` (a one-dir manifest index) in the legacy flat layout."""
+    m = mf.load_manifest(src)
+    (seg,), (dl,), (st,) = ([e["path"] for e in m["segments"]],
+                            m["doclens"], m["doc_stats"])
+    for rel, name in ((seg, "segments"), (dl, "doclens"), (st, "doc_stats")):
+        shutil.copytree(os.path.join(src, rel), os.path.join(dst, name))
+    shutil.copy(os.path.join(src, "meta.json"), dst)
+
+
+@pytest.fixture(scope="module")
+def indexes(spark, tmp_root):
+    root = os.path.join(tmp_root, "driver_reads")
+    base, legacy = os.path.join(root, "base"), os.path.join(root, "legacy")
+    delta, merged = os.path.join(root, "delta"), os.path.join(root, "merged")
+    full = corpus_df(spark, N)
+    key = F.xxhash64("repo", "path", "commit") % 4
+    build_index(spark, full.filter(key != 0), base, n_shards=4, n_groups=1)
+    sort_segments(spark, base, n_files=2)
+    os.makedirs(legacy)
+    _copy_legacy(base, legacy)
+    shutil.copytree(base, delta)
+    assert add_documents(spark, delta, full.filter(key == 0))["docs_added"]
+    stats = mf.read_doc_stats(spark, delta)
+    assert delete_documents(
+        spark, delta, stats.filter(F.col("doc_id") % 7 == 0).select("doc_id"))
+    assert len(mf.load_manifest(delta)["segments"]) == 2
+    shutil.copytree(delta, merged)
+    merge_segments(spark, merged, apply_deletes=True)
+    return {"delta": (delta, True), "legacy": (legacy, True),
+            "merged": (merged, True), "uncached": (delta, False)}
+
+
+@pytest.fixture(scope="module", params=["delta", "legacy", "merged", "uncached"])
+def engine(request, spark, indexes):
+    idx, cache = indexes[request.param]
+    eng = BM25Engine(spark, idx, cache=cache)
+    yield idx, eng
+    eng.unpersist()
+
+
+def _spark_dfs(spark, idx):
+    return (mf.read_segments(spark, idx).groupBy("term")
+            .agg(F.sum("df").alias("df")))
+
+
+def test_resolve_df_matches_spark_aggregate(spark, engine):
+    idx, eng = engine
+    want = {r["term"]: int(r["df"]) for r in _spark_dfs(spark, idx)
+            .filter(F.col("term").isin(TERMS)).collect()}
+    got = eng.resolve_df(TERMS)
+    assert got == {t: want.get(t, 0) for t in TERMS}
+    assert got["zzz_absent"] == 0 and got["import"] > 0
+
+
+def test_expand_prefix_matches_spark_aggregate(spark, engine):
+    idx, eng = engine
+    dfs = _spark_dfs(spark, idx)
+    tied_cuts = 0
+    for stem in STEMS:
+        ranked = [(r["term"], int(r["df"])) for r in dfs.filter(
+            F.col("term").startswith(stem)).orderBy(
+            F.desc("df"), F.asc("term")).collect()]
+        assert eng.expand_prefix(stem, 10_000) == ranked
+        if not ranked:
+            assert stem == "zzq"
+        # a cap that cuts between two tied dfs keeps the lexicographically
+        # first terms, as the Spark order does (the first few such cuts)
+        ties = [c for c in range(1, len(ranked))
+                if ranked[c - 1][1] == ranked[c][1]][:4]
+        for cap in ties:
+            assert eng.expand_prefix(stem, cap) == ranked[:cap], (stem, cap)
+        tied_cuts += len(ties)
+    assert tied_cuts
+    assert eng.expand_prefix("sym") == eng.expand_prefix("sym", 10_000)[:50]
+
+
+def test_posting_fetch_matches_spark_rows(spark, engine):
+    idx, eng = engine
+    cols = ["term", "shard", "gen", "df", "doc_bytes", "tf_bytes", "pos_bytes"]
+    want = sorted(tuple(r) for r in mf.read_segments(spark, idx).filter(
+        F.col("term").isin(TERMS)).select(*cols).collect())
+    got = sorted(tuple(r.values()) for r in eng._segments.read(
+        term_point_filter(TERMS), cols).to_pylist())
+    assert got == want and got
+
+
+def test_topk_local_equals_topk(engine):
+    _, eng = engine
+    for q in QUERIES:
+        want = [(r["doc_id"], round(r["score"], 12))
+                for r in eng.topk(q, 10).collect()]
+        got = [(int(r.doc_id), round(float(r.score), 12))
+               for r in eng.topk_local(q, 10, as_pandas=True).itertuples()]
+        assert got == want and got, q
+
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through its job group."""
+    sc = spark.sparkContext
+    group = f"driver-reads-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_lookups_run_no_spark_job(spark, indexes):
+    idx, _ = indexes["delta"]
+    eng = BM25Engine(spark, idx, cache=True)
+    try:
+        eng.topk_local("import", 10, as_pandas=True)  # loads every sidecar
+        assert len(eng._local_side) == eng.meta["n_shards"]
+        assert _jobs(spark, lambda: eng.resolve_df(["needle2", "fn7", "zz"])) == 0
+        assert _jobs(spark, lambda: eng.expand_prefix("sym")) == 0
+        for q in ("needle1", "return -needle2", '"def return"', "fn*"):
+            assert _jobs(spark, lambda: eng.topk_local(q, 10, as_pandas=True)) == 0, q
+        # explain keeps its one sidecar collect on Spark
+        doc = int(eng.topk_local("class", 1, as_pandas=True)["doc_id"][0])
+        assert _jobs(spark, lambda: eng.explain('class "self return"', doc)) == 1
+        # a whole-dictionary fuzzy scan stays a Spark job
+        assert _jobs(spark, lambda: eng.expand_fuzzy("retrn", 1)) >= 1
+    finally:
+        eng.unpersist()
+
+
+def test_merge_between_check_and_read_reloads_once(spark, indexes, tmp_root,
+                                                   monkeypatch):
+    """A merge that retires the engine's segment dirs (grace 0) after its
+    staleness check and before its point read: the call reloads once and
+    answers from the merged index alone."""
+    idx = os.path.join(tmp_root, "driver_reads", "race")
+    shutil.copytree(indexes["delta"][0], idx)
+    monkeypatch.setenv(mf.GC_GRACE_ENV, "0")
+    eng = BM25Engine(spark, idx, cache=True)
+    try:
+        eng.topk_local("import", 10, as_pandas=True)
+        old_dirs = [os.path.join(idx, e["path"])
+                    for e in mf.load_manifest(idx)["segments"]]
+        check, loads = eng._maybe_refresh, []
+
+        def racing_check():
+            check()
+            if not loads:
+                merge_segments(spark, idx)
+            loads.append(1)
+        monkeypatch.setattr(eng, "_maybe_refresh", racing_check)
+        real_load = eng._load
+        reloads = []
+        monkeypatch.setattr(eng, "_load",
+                            lambda: (reloads.append(1), real_load()))
+
+        q = "needle0 sym1* -def"
+        got = eng.topk_local(q, 10, as_pandas=True)
+        assert not any(os.path.exists(d) for d in old_dirs)
+        assert len(reloads) == 1 and len(loads) == 2
+        fresh = BM25Engine(spark, idx, cache=False)
+        want = fresh.topk(q, 10).toPandas()
+        assert got["doc_id"].tolist() == want["doc_id"].tolist()
+        assert got["score"].round(12).tolist() == want["score"].round(12).tolist()
+        assert len(got)
+    finally:
+        eng.unpersist()
+
+
+def test_doclens_publish_rejects_duplicate_shard(spark, tmp_root):
+    from data_prep_opensearch_spark.operators.index_build import DOCLEN_SCHEMA
+
+    rows = [(0, 0, 3, b"\x01\x02\x03"), (1, 1 << 20, 1, b"\x05"),
+            (1, 1 << 20, 1, b"\x05")]
+    frame = spark.createDataFrame(rows, DOCLEN_SCHEMA)
+    path = os.path.join(tmp_root, "dup_doclens")
+    with pytest.raises(ValueError, match=r"shard\(s\) \[1\]"):
+        mf.write_doclens(frame, path)
+    mf.write_doclens(spark.createDataFrame(rows[:2], DOCLEN_SCHEMA), path)

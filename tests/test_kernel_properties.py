@@ -15,7 +15,9 @@ query — literals, a prefix group, msm, phrases with and without slop,
   shapes,
 
 and each must equal ``OracleIndex.query`` over the live docs on ranks,
-with scores within 1e-9. Docs whose oracle scores lie within 1e-9 of
+with scores within 1e-9. A second family of shards puts wand's early
+exit on the spot: docs the head term never reaches win only through the
+sum of two tail terms, each bounded below the pooled k-th score. Docs whose oracle scores lie within 1e-9 of
 each other may swap ranks: float sums in a different term order can
 split an exact tie by an ulp.
 """
@@ -204,3 +206,46 @@ def test_kernels_match_oracle(shard, data):
     else:
         _assert_ranks(bm25._score_shard_msm(
             *args, msm=plan.msm, clauses=plan.clauses), full, ("msm", q))
+
+
+@st.composite
+def tail_shards(draw):
+    """(texts, query) where the winners past the head term's docs score
+    only through two tail terms. The head term's bound comes from one
+    short doc that repeats it; its K or more other docs are long, so the
+    k-th pooled score is low. Each tail term sits in most docs (a low
+    idf, so its bound is below that score), and docs holding both beat
+    it."""
+    head, tails = "omega", ["alpha", "beta"]
+    n = draw(st.integers(20, 40))  # the length of a short doc
+
+    def doc(words, length):
+        return " ".join(["the", "of"] + words + ["and"] * (length - len(words)))
+
+    texts = [doc([head] * draw(st.integers(6, 12)), 0)]
+    texts += [doc([head], 6 * n) for _ in range(draw(st.integers(K, K + 3)))]
+    texts += [doc(tails, n) for _ in range(draw(st.integers(1, 3)))]
+    texts += [doc(ws, n + extra) for ws, extra in draw(st.lists(st.tuples(
+        st.sampled_from([tails] * 4 + [tails[:1], tails[1:]]),
+        st.integers(0, n)), min_size=15, max_size=30))]
+    order = draw(st.permutations(range(len(texts))))
+    return ({BASE + i: texts[j] for i, j in enumerate(order)},
+            " ".join([head, *tails, "the", "of"]))
+
+
+@settings(max_examples=150, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(shard=tail_shards())
+def test_wand_early_exit_keeps_tail_bound(shard):
+    texts, q = shard
+    grp, oracle = _encode(texts, [], "")
+    full = oracle.query(q, k=len(texts))
+    plan = _MemEngine(oracle)._query_plan(q, "wand", None, None, None, True)
+    n, avgdl = oracle.n_docs, oracle.avgdl
+    gdf = {t: oracle.df[t] for t in plan.terms}
+    sub = grp[grp["term"].isin(plan.terms)]
+    im = {t: bm25.idf(n, gdf[t]) for t in plan.terms}
+    _assert_ranks(bm25._score_shard_wand(
+        sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[0]), full, ("wand", q))
+    outs = list(bm25._score_group(grp, [plan], gdf, n, avgdl, K))
+    _assert_ranks(outs[0], full, ("loop", q))
