@@ -1663,9 +1663,11 @@ class BM25Engine:
         """Score a BATCH of queries in one scoring pass (returns
         (query_id, doc_id, score); query_id = position in ``queries``).
 
-        Warm single-query latency at sandbox scale is job-scheduling
-        bound (~0.4s) with the scorer kernel at ~100ms — batching
-        amortizes the scheduling: all queries' terms union into one
+        Warm single-query latency on a small index is planning and
+        job-scheduling bound: a warm ``topk`` (2 jobs, ~0.25s wall on
+        local[2]) spends ~200ms of CPU in the JVM against ~25ms in the
+        Python workers and ~15ms on the driver — batching amortizes the
+        planning and scheduling: all queries' terms union into one
         segment filter, every (shard, query) pair scores inside the same
         mapInPandas pass (``_shard_scored``, the plan ``topk`` uses),
         and one window takes each query's top-k. Per-query results are

@@ -5,6 +5,9 @@ AQE is on (runtime coalesce + skew-join splitting); Arrow is on (every
 pandas UDF transfer is vectorized); shuffle partitions default to the
 local core count rather than 200 so small-SF runs don't drown in empty
 tasks — on a real cluster this is overridden via spark-submit conf.
+Python workers run under ``worker_daemon`` (pyspark's daemon without its
+fixed per-task zip re-read and import-time GC walk), and find this
+package through ``spark.executorEnv.PYTHONPATH`` from any working dir.
 """
 
 from __future__ import annotations
@@ -12,6 +15,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package, which Python workers must import:
+# the daemon module and every UDF the package ships live in it
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # local mode runs every task thread in the driver JVM: give it half the
 # machine's memory, within these bounds
@@ -56,6 +63,12 @@ def driver_memory() -> str:
             or default_driver_memory(machine_memory_bytes()))
 
 
+def worker_pythonpath() -> str:
+    """PACKAGE_PARENT ahead of the user's ``$PYTHONPATH``."""
+    user = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return os.pathsep.join([PACKAGE_PARENT] + [p for p in user if p and p != PACKAGE_PARENT])
+
+
 def get_spark(
     app_name: str = "data_prep_opensearch_spark",
     cores: int | None = None,
@@ -82,6 +95,8 @@ def get_spark(
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "data_prep_opensearch_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_pythonpath())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from data_prep_opensearch_spark import session
 
 
@@ -29,3 +31,12 @@ def test_env_overrides_the_machine(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEM", "9g")
     assert session.spark_cores() == 5
     assert session.driver_memory() == "9g"
+
+
+def test_workers_get_the_package_ahead_of_the_user_path(monkeypatch):
+    pkg = session.PACKAGE_PARENT
+    assert os.path.isdir(os.path.join(pkg, "data_prep_opensearch_spark"))
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(["/a", pkg, "", "/b"]))
+    assert session.worker_pythonpath() == os.pathsep.join([pkg, "/a", "/b"])
+    monkeypatch.delenv("PYTHONPATH")
+    assert session.worker_pythonpath() == pkg
