@@ -486,13 +486,15 @@ class BM25Engine:
     and the per-query broadcast of the cached sidecar it joins.
 
     ``topk``, ``match_scores`` and ``topk_batch`` plan through one
-    ``_shard_scored``. Per shard, every query runs ONE exhaustive kernel
-    (``_score_shard_dense``: a dense accumulator covering terms,
-    phrases, msm and must_not) or one of its exact pruning
+    ``_shard_scored``. Per shard, every query runs the ONE clause
+    evaluator (``_evaluate`` over a dense accumulator, via
+    ``_score_shard_dense``: terms, phrases, msm, must_not, tombstones,
+    the cursor and the top-k cut) or one of its exact pruning
     specializations — block-max WAND/MaxScore for OR queries
     (``_score_shard_wand``) and pigeonhole candidates for msm
     (``_score_shard_msm``); both fall back to the dense kernel when
-    nothing is skippable.
+    nothing is skippable. ``topk_local`` runs the same evaluator on the
+    driver over a sparse accumulator.
     """
 
     def __init__(
@@ -631,22 +633,16 @@ class BM25Engine:
         self._df_cache: dict[str, int] = {}
         # prefix-expansion cache: (stem, cap) -> [(term, df), ...]
         self._prefix_cache: dict[tuple[str, int], list[tuple[str, int]]] = {}
-        # driver-local latency tier (topk_local): fully decoded per-term
-        # posting arrays and per-shard sidecars, fetched on demand and
+        # driver-local latency tier (topk_local): per term, fully decoded
+        # (docs, tfs, dls, positions | None) spanning all shards and
+        # generations, and per-shard sidecars — fetched on demand and
         # LRU-bounded
-        self._local_flat: dict[
-            str, tuple[np.ndarray, np.ndarray, np.ndarray]
-        ] = {}
+        self._local_postings: dict[str, tuple] = {}
         self._local_side: dict[
             int, tuple[int, np.ndarray, np.ndarray | None]
         ] = {}
         self._local_deleted: np.ndarray = np.zeros(0, dtype=np.int64)
         self._local_bytes = 0
-        # driver-local positional cache (phrase queries): term ->
-        # (docs, tfs, dls, flat positions) spanning all shards/gens
-        self._local_pos: dict[
-            str, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]
-        ] = {}
 
     def unpersist(self) -> None:
         """Release the cached segment + sidecar partitions (blocking).
@@ -662,8 +658,7 @@ class BM25Engine:
         self._seg_pos = None
         self._df_cache.clear()
         self._prefix_cache.clear()
-        self._local_flat.clear()
-        self._local_pos.clear()
+        self._local_postings.clear()
         self._local_side.clear()
         self._local_deleted = np.zeros(0, dtype=np.int64)
         self._local_bytes = 0
@@ -1012,7 +1007,7 @@ class BM25Engine:
     def _load_local_sidecars(self, s_missing: list[int]) -> None:
         """Pull the listed shards' doclen/tombstone sidecars to the driver
         and refresh the merged tombstone union. Sidecar arrays count
-        against the SAME budget as the flat postings: at 10^12 docs the
+        against the SAME budget as the postings: at 10^12 docs the
         per-shard doclen arrays alone are GBs — an unaccounted sidecar
         cache would make LOCAL_CACHE_BYTES a fiction."""
         if not s_missing:
@@ -1024,49 +1019,60 @@ class BM25Engine:
                 else np.asarray(dd["deleted"], dtype=np.int64)
             )
             dl_arr = vbyte_decode(bytes(dd["dl_bytes"])).astype(np.float64)
-            self._local_side[int(dd["shard"])] = (
-                int(dd["base"]), dl_arr, deleted
-            )
-            self._local_bytes += int(dl_arr.nbytes) + (
-                int(deleted.nbytes) if deleted is not None else 0
-            )
-        dels = [d for _, _, d in self._local_side.values()
-                if d is not None and d.size]
-        self._local_deleted = (
-            np.unique(np.concatenate(dels)) if dels
-            else np.zeros(0, dtype=np.int64)
-        )
+            side = (int(dd["base"]), dl_arr, deleted)
+            self._local_side[int(dd["shard"])] = side
+            self._local_bytes += _nbytes(side)
+        self._local_deleted = _doc_union(
+            d for _, _, d in self._local_side.values())
 
-    def _fetch_local(self, terms: list[str], positional: bool) -> dict:
-        """Pull terms' postings to the driver with one point read: per
-        (term, shard) generation-merge, shard-ordered concat, flat
-        (docs, tfs, dls) arrays per term, plus flat positions when
-        ``positional``. Counts against LOCAL_CACHE_BYTES."""
+    def _cache_local(self, terms: list[str], pos_terms: set[str]) -> None:
+        """Make ``terms``' decoded postings driver-resident. The missing
+        ones — and any of ``pos_terms`` cached without positions — come
+        from one point read: per (term, shard) generation-merge, shard-
+        ordered concat, flat (docs, tfs, dls, positions | None) per
+        term. Past LOCAL_CACHE_BYTES the cache is evicted down to this
+        query's working set: its terms and the sidecars of the shards
+        they touch."""
+        cache = self._local_postings
+        missing = sorted({t for t in terms if t not in cache
+                          or (t in pos_terms and cache[t][3] is None)})
+        if not missing:
+            return
         cols = ["term", "shard", "gen", "doc_bytes", "tf_bytes"]
-        if positional:
+        pos_terms = pos_terms & set(missing)
+        if pos_terms:
             self._require_positions()
             cols.append("pos_bytes")
-        rows = self._segments.read(term_point_filter(terms), cols).to_pandas()
+        rows = self._segments.read(term_point_filter(missing), cols).to_pandas()
         self._load_local_sidecars(sorted(
             set(rows["shard"].tolist()) - self._local_side.keys()))
-        parts: dict[str, list] = {t: [] for t in terms}
+        parts: dict[str, list] = {t: [] for t in missing}
         for shard, grp in rows.groupby("shard"):  # shard order: deterministic
             base, dl_arr, _ = self._local_side[int(shard)]
-            for t, (docs, tfs, pos) in _decode_group(
-                    grp, base, set(terms) if positional else frozenset()).items():
-                parts[t].append((docs, tfs, dl_arr[docs - base])
-                                + ((pos,) if positional else ()))
-        out = {}
-        for t in terms:
-            if parts[t]:
-                arrs = tuple(np.concatenate(col) for col in zip(*parts[t]))
-            else:
-                arrs = (np.zeros(0, np.int64), np.zeros(0, np.int64),
-                        np.zeros(0, np.float64)) + (
-                    (np.zeros(0, np.int64),) if positional else ())
-            out[t] = arrs
-            self._local_bytes += sum(int(a.nbytes) for a in arrs)
-        return out
+            for t, (docs, tfs, pos) in _decode_group(grp, base, pos_terms).items():
+                parts[t].append((docs, tfs.astype(np.float64),
+                                 dl_arr[docs - base], pos))
+        empty = np.zeros(0, np.int64)
+        for t in missing:
+            v = tuple(None if col[0] is None else np.concatenate(col)
+                      for col in zip(*parts[t] or [(
+                          empty, np.zeros(0), np.zeros(0),
+                          empty if t in pos_terms else None)]))
+            self._local_bytes += _nbytes(v) - _nbytes(cache.get(t, ()))
+            cache[t] = v
+        if self._local_bytes > self.LOCAL_CACHE_BYTES:
+            keep = set(terms)
+            self._local_postings = {t: v for t, v in cache.items() if t in keep}
+            width = int(self.meta["shard_width"])
+            shards: set[int] = set()
+            for docs, *_ in self._local_postings.values():
+                shards.update(np.unique(docs // width).tolist())
+            self._local_side = {sh: v for sh, v in self._local_side.items()
+                                if sh in shards}
+            self._local_deleted = _doc_union(
+                d for _, _, d in self._local_side.values())
+            self._local_bytes = sum(map(_nbytes, self._local_postings.values())) \
+                + sum(map(_nbytes, self._local_side.values()))
 
     @_one_snapshot
     def topk_local(
@@ -1081,12 +1087,13 @@ class BM25Engine:
         search_after: tuple[float, int] | None = None,
         synonyms: dict[str, list[str]] | None = None,
     ) -> DataFrame | pd.DataFrame:
-        """Driver-local LATENCY TIER: identical scores to ``topk`` (same
-        scorer kernels on the same decoded bytes — parity-tested), but
-        the warm path runs ZERO Spark jobs. Sandbox-scale warm single-
-        query latency is ~0.4 s of pure job scheduling around a ~10 ms
-        scorer kernel; this tier is the single-query answer the way
-        ``topk_batch`` is the throughput answer.
+        """Driver-local LATENCY TIER: identical scores to ``topk`` (the
+        same clause evaluator, :func:`_evaluate`, on the same decoded
+        bytes — parity-tested), but the warm path runs ZERO Spark jobs.
+        Sandbox-scale warm single-query latency is ~0.4 s of pure job
+        scheduling around a ~10 ms scorer kernel; this tier is the
+        single-query answer the way ``topk_batch`` is the throughput
+        answer.
 
         Scale honesty: per-term postings and per-shard doclen sidecars
         are pulled to the driver ON DEMAND and LRU-bounded
@@ -1099,212 +1106,41 @@ class BM25Engine:
         job; only a shard whose sidecar is not yet cached adds one, and
         a fuzzy clause's first expansion is a Spark scan.
 
-        Under the cap the tier scores EXHAUSTIVELY over flat cached
-        per-term arrays (|terms| vectorized contribution ops + one
-        sort/reduce): with the candidate mass guard-bounded, pruning
-        has nothing worth skipping, and the per-shard kernel loop it
-        replaces spent its time on ~n_shards tiny calls per query.
-        ``scorer`` only routes the over-cap fallback.
+        Under the cap the evaluator scores EXHAUSTIVELY over the cached
+        flat per-term arrays, with a sparse accumulator: one slot per
+        doc of the query's positive postings. ``scorer`` only routes
+        the over-cap fallback.
 
         ``as_pandas=True`` returns the result as a pandas DataFrame
         directly — the natural shape for a driver-local tier (the
         default Spark-DataFrame return pays a local-relation round-trip
         that roughly doubles warm latency; values are identical)."""
         self._maybe_refresh()
-        spark = self.spark
-
-        def _out(pdf: pd.DataFrame):
-            if as_pandas:
-                return pdf.reset_index(drop=True)
-            return spark.createDataFrame(pdf, TOPK_SCHEMA)
-
-        clauses, n_clauses, negs, phrases, neg_phrases, boosts = (
-            self._plan_clauses(query, max_expansions, synonyms)
-        )
-        msm = resolve_msm(min_should_match, n_clauses)
-        terms = sorted({t for cl in clauses for t in cl})
-        pterms = sorted(
-            {t for ph in phrases for t in ph}
-            | {t for ph in neg_phrases for t in ph}
-        )
-        if (not terms and not phrases) or len(clauses) + len(phrases) < msm:
-            return _out(_empty_topk())
-        df_map = self.resolve_df(terms + negs + pterms)
-        cap = self.LOCAL_MAX_POSTINGS if max_postings is None else max_postings
-        # exclusion and phrase postings are pulled to the driver too —
-        # they count against the same posting-mass guard
-        if sum(df_map[t] for t in terms + negs + pterms) > cap:
-            dist = self.topk(query, k, scorer, min_should_match=msm,
-                             max_expansions=max_expansions,
-                             search_after=search_after, synonyms=synonyms)
-            return dist.toPandas() if as_pandas else dist
-        missing = [t for t in pterms if t not in self._local_pos]
-        if missing:
-            self._local_pos.update(self._fetch_local(missing, True))
-
-        # fetch + decode ONCE per term: the cache holds flat, fully
-        # decoded (docs, tf, dl) arrays per term spanning all shards and
-        # generations (per-shard gen-merge applied at build). The warm
-        # query is then |terms| vectorized contribution ops + one
-        # sort/reduce — no per-shard loop, no pandas machinery (the
-        # per-shard kernel path measured ~90 small scorer calls and 18k
-        # redundant dl decodes per query at 128 shards).
-        missing = [t for t in terms + negs if t not in self._local_flat]
-        if missing:
-            self._local_flat.update(
-                (t, (docs, tfs.astype(np.float64), dls))
-                for t, (docs, tfs, dls) in self._fetch_local(missing, False).items()
-            )
-        if self._local_bytes > self.LOCAL_CACHE_BYTES:
-            # evict down to THIS query's working set: its terms' flat
-            # arrays, its phrase terms' positional arrays, AND the
-            # sidecars of the shards they touch (shard = doc // width)
-            self._local_flat = {
-                t: v for t, v in self._local_flat.items()
-                if t in set(terms) | set(negs)
-            }
-            self._local_pos = {
-                t: v for t, v in self._local_pos.items() if t in set(pterms)
-            }
-            width = int(self.meta["shard_width"])
-            kept_shards: set[int] = set()
-            for docs_t, *_ in list(self._local_flat.values()) + list(
-                self._local_pos.values()
-            ):
-                if docs_t.size:
-                    kept_shards.update((np.unique(docs_t // width)).tolist())
-            self._local_side = {
-                sh: v for sh, v in self._local_side.items()
-                if sh in kept_shards
-            }
-            dels = [d for _, _, d in self._local_side.values()
-                    if d is not None and d.size]
-            self._local_deleted = (
-                np.unique(np.concatenate(dels)) if dels
-                else np.zeros(0, dtype=np.int64)
-            )
-            self._local_bytes = sum(
-                sum(int(a.nbytes) for a in v)
-                for v in self._local_flat.values()
-            ) + sum(
-                sum(int(a.nbytes) for a in v)
-                for v in self._local_pos.values()
-            ) + sum(
-                int(dl.nbytes)
-                + (int(d.nbytes) if d is not None else 0)
-                for _, dl, d in self._local_side.values()
-            )
-
-        n_docs, avgdl = int(self.meta["n_docs"]), float(self.meta["avgdl"])
-        parts_d, parts_c = [], []
-        for t in terms:
-            docs, tfs, dls = self._local_flat[t]
-            if docs.size:
-                parts_d.append(docs)
-                parts_c.append(
-                    idf(n_docs, df_map[t]) * boosts.get(t, 1.0)
-                    * bm25_tf_term(tfs, dls, avgdl)
-                )
-        phrase_hits: list[np.ndarray] = []
-        for ph in phrases:
-            arrs = []
-            for t in ph:
-                v = self._local_pos.get(t)
-                if v is None or v[0].size == 0:
-                    arrs = None
-                    break
-                arrs.append((v[0], v[1], v[3]))
-            if arrs is None:
-                phrase_hits.append(np.zeros(0, np.int64))
-                continue
-            pdocs, pf = _phrase_freqs(arrs, slop=getattr(ph, 'slop', 0))
-            phrase_hits.append(pdocs)
-            if pdocs.size:
-                d0, _, dl0, _ = self._local_pos[ph[0]]
-                dl = dl0[np.searchsorted(d0, pdocs)]
-                w = getattr(ph, "boost", 1.0) * sum(
-                    idf(n_docs, df_map[t]) for t in ph
-                )
-                parts_d.append(pdocs)
-                parts_c.append(
-                    w * bm25_tf_term(pf.astype(np.float64), dl, avgdl)
-                )
-        if not parts_d:
-            return _out(_empty_topk())
-        docs = np.concatenate(parts_d)
-        contrib = np.concatenate(parts_c)
-        order = np.argsort(docs, kind="stable")
-        docs, contrib = docs[order], contrib[order]
-        uniq, starts = np.unique(docs, return_index=True)
-        scores = np.add.reduceat(contrib, starts)
-        if msm > 1:
-            if all(len(cl) == 1 for cl in clauses) and len(terms) == len(clauses):
-                # one distinct term per clause: per-term docs are unique
-                # and each matched phrase added exactly one parts_d entry
-                # per doc, so the posting count per unique doc IS its
-                # matched-clause count (a literal repeated as its
-                # prefix's only expansion is two clauses on one term)
-                nmatch = np.diff(np.append(starts, docs.size))
-            else:
-                # prefix clauses: a clause counts once per doc however
-                # many of its member expansions matched — per clause,
-                # union the member postings and mark (uniq is sorted, so
-                # searchsorted maps each clause-doc to its slot)
-                nmatch = np.zeros(uniq.size, dtype=np.int64)
-                for cl in clauses:
-                    ps = [
-                        self._local_flat[t][0] for t in cl
-                        if t in self._local_flat
-                        and self._local_flat[t][0].size
-                    ]
-                    if not ps:
-                        continue
-                    dcl = ps[0] if len(ps) == 1 else np.unique(
-                        np.concatenate(ps)
-                    )
-                    nmatch[np.searchsorted(uniq, dcl)] += 1
-                for pdocs in phrase_hits:
-                    if pdocs.size:
-                        nmatch[np.searchsorted(uniq, pdocs)] += 1
-            uniq, scores = uniq[nmatch >= msm], scores[nmatch >= msm]
-        for ph in neg_phrases:
-            arrs = []
-            for t in ph:
-                v = self._local_pos.get(t)
-                if v is None or v[0].size == 0:
-                    arrs = None
-                    break
-                arrs.append((v[0], v[1], v[3]))
-            if arrs is None:
-                continue
-            pdocs, _ = _phrase_freqs(arrs, slop=getattr(ph, 'slop', 0))
-            if pdocs.size:
-                alive = ~np.isin(uniq, pdocs)
-                uniq, scores = uniq[alive], scores[alive]
-        if negs:
-            ps = [self._local_flat[t][0] for t in negs
-                  if t in self._local_flat and self._local_flat[t][0].size]
-            if ps:
-                excl = ps[0] if len(ps) == 1 else np.unique(
-                    np.concatenate(ps)
-                )
-                alive = ~np.isin(uniq, excl)
-                uniq, scores = uniq[alive], scores[alive]
-        if self._local_deleted.size:
-            alive = ~np.isin(uniq, self._local_deleted, assume_unique=True)
-            uniq, scores = uniq[alive], scores[alive]
-        if search_after is not None:
-            s, d = float(search_after[0]), int(search_after[1])
-            after = (scores < s) | ((scores == s) & (uniq > d))
-            uniq, scores = uniq[after], scores[after]
-        if uniq.size == 0:
-            return _out(_empty_topk())
-        sel = np.lexsort((uniq, -scores))[:k]
-        res = pd.DataFrame({
-            "doc_id": uniq[sel].astype("int64"),
-            "score": scores[sel],
-        })
-        return _out(res)
+        plan = self._query_plan(query, scorer, min_should_match,
+                                max_expansions, synonyms, True, search_after)
+        if plan is None:
+            res = _empty_topk()
+        else:
+            need = sorted(set(plan.terms) | set(plan.negs))
+            df_map = self.resolve_df(need)
+            cap = self.LOCAL_MAX_POSTINGS if max_postings is None else max_postings
+            # exclusion and phrase postings are pulled to the driver too —
+            # they count against the same posting-mass guard
+            if sum(df_map.values()) > cap:
+                dist = self.topk(query, k, scorer, min_should_match=min_should_match,
+                                 max_expansions=max_expansions,
+                                 search_after=search_after, synonyms=synonyms)
+                return dist.toPandas() if as_pandas else dist
+            self._cache_local(need, {t for ph in plan.phrases + plan.neg_phrases
+                                     for t in ph})
+            weights, idfs = _term_weights(plan.terms, plan, df_map,
+                                          int(self.meta["n_docs"]))
+            res = _evaluate({t: self._local_postings[t] for t in need}, plan,
+                            weights, idfs, float(self.meta["avgdl"]),
+                            self._local_deleted, k)
+        if as_pandas:
+            return res.reset_index(drop=True)
+        return self.spark.createDataFrame(res, TOPK_SCHEMA)
 
     def topk(
         self, query: str, k: int = 10, scorer: str = "auto",
@@ -1328,25 +1164,16 @@ class BM25Engine:
         ``search_after=(score, doc_id)`` is OpenSearch deep pagination:
         return the next k results STRICTLY AFTER the cursor in the
         (score desc, doc_id asc) total order — pass the previous page's
-        last row. Cursored pages route through the dense full-emission
-        path (a shard cannot know how much of its top-k the cursor
-        consumed, so per-shard k-cuts would drop rows pages still need);
-        the cursor filter runs before Spark's TakeOrdered, which caps
-        network at k per partition as usual."""
-        after = search_after is not None
-        local = self._shard_scored(
-            [query], None if after else k, "dense" if after else scorer,
-            min_should_match, max_expansions, synonyms)
+        last row. The cursor rides in the query plan to the exhaustive
+        kernel, which drops every doc at or before it BEFORE its
+        per-shard top-k cut, so each shard still emits only k rows and
+        the cut stays exact."""
+        local = self._shard_scored([query], k, scorer, min_should_match,
+                                   max_expansions, synonyms, search_after)
         if local is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        local = local.drop("query_id")
-        if after:
-            s, d = float(search_after[0]), int(search_after[1])
-            local = local.filter(
-                (F.col("score") < s)
-                | ((F.col("score") == s) & (F.col("doc_id") > d))
-            )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return local.drop("query_id").orderBy(
+            F.desc("score"), F.asc("doc_id")).limit(k)
 
     @_one_snapshot
     def explain(self, query: str, doc_id: int,
@@ -1531,8 +1358,8 @@ class BM25Engine:
         is the aggregation/facet entry point (OpenSearch runs its aggs
         over the full match set, not the hits page): the same clause
         semantics as ``topk`` (msm, prefix/fuzzy expansion, must_not,
-        phrases, tombstones), but each shard emits every doc whose score
-        is positive and nothing is globally sorted — the result stays
+        phrases, tombstones), but each shard emits every matching doc
+        and nothing is globally sorted — the result stays
         distributed (one row per match, linear shuffle into whatever
         aggregation follows; never a driver collect)."""
         return self.match_scores(query, min_should_match,
@@ -1563,6 +1390,7 @@ class BM25Engine:
         self, query: str, scorer: str,
         min_should_match: int | str | None, max_expansions: int | None,
         synonyms: dict[str, list[str]] | None, resolve: bool,
+        search_after: tuple[float, int] | None = None,
     ) -> _QueryPlan | None:
         """Plan one query's clauses once, on the driver. None when no doc
         can match: fewer surviving clauses than msm (incl. AND with an
@@ -1579,7 +1407,7 @@ class BM25Engine:
             return None
         terms.update(t for ph in phrases + neg_phrases for t in ph)
         return _QueryPlan(sorted(terms), negs, scorer, msm, clauses,
-                          phrases, neg_phrases, boosts)
+                          phrases, neg_phrases, boosts, search_after)
 
     @_one_snapshot
     def _shard_scored(
@@ -1587,15 +1415,16 @@ class BM25Engine:
         min_should_match: int | str | None,
         max_expansions: int | None,
         synonyms: dict[str, list[str]] | None = None,
+        search_after: tuple[float, int] | None = None,
     ) -> DataFrame | None:
         """The one distributed plan behind ``topk``, ``match_scores`` and
         ``topk_batch``: every query's terms union into one segment
         filter, and one per-shard loop (:func:`_score_group`) scores
         each (shard, query) pair, emitting (query_id, doc_id, score) —
-        the shard's top-k per query, or with ``k=None`` every positive-
-        score doc (the exhaustive kernel touches the whole shard anyway,
-        so 'all matches' costs the same pass). None when no query can
-        match.
+        the shard's top-k per query after ``search_after``, or with
+        ``k=None`` every matching doc (the exhaustive kernel touches the
+        whole shard anyway, so 'all matches' costs the same pass). None
+        when no query can match.
 
         Global df: a warm engine resolves it on the driver (cached). A
         cold one computes it INSIDE the job — a broadcast gdf aggregate
@@ -1606,7 +1435,8 @@ class BM25Engine:
         self._maybe_refresh()
         inplan = not self._shard_partitioned and synonyms is None
         plans = [self._query_plan(q, scorer, min_should_match,
-                                  max_expansions, synonyms, not inplan)
+                                  max_expansions, synonyms, not inplan,
+                                  search_after)
                  for q in queries]
         live = [p for p in plans if p is not None]
         if not live:
@@ -1729,6 +1559,29 @@ class _QueryPlan(NamedTuple):
     phrases: list[Phrase]
     neg_phrases: list[Phrase]
     boosts: dict[str, float]  # per-term weights != 1.0
+    after: tuple[float, int] | None = None  # search_after cursor
+
+
+def _doc_union(arrays) -> np.ndarray:
+    """Sorted union of doc-id arrays; None and empty arrays are skipped
+    (a single array is returned as is)."""
+    ps = [a for a in arrays if a is not None and a.size]
+    if not ps:
+        return np.zeros(0, dtype=np.int64)
+    return ps[0] if len(ps) == 1 else np.unique(np.concatenate(ps))
+
+
+def _nbytes(arrays) -> int:
+    return sum(int(a.nbytes) for a in arrays if isinstance(a, np.ndarray))
+
+
+def _term_weights(
+    terms, plan: _QueryPlan, gdf: dict[str, int], n_docs: int,
+) -> tuple[dict[str, float], dict[str, float]]:
+    """(boosted weight, unboosted idf) per term; idf comes from the
+    per-term GLOBAL df ``gdf``."""
+    ir = {t: idf(n_docs, gdf[t]) for t in terms}
+    return {t: w * plan.boosts.get(t, 1.0) for t, w in ir.items()}, ir
 
 
 def _score_query(
@@ -1738,27 +1591,25 @@ def _score_query(
 ) -> pd.DataFrame:
     """Kernel wrapper: one query's rows of one shard -> its top-k.
 
-    idf comes from the per-term GLOBAL df ``gdf``. Phrase queries take
-    the exhaustive kernel, msm > 1 the pigeonhole specialization, and
-    OR queries wand or dense. ``scorer="auto"`` picks over the terms
-    this shard holds: dense for a single term or when any df exceeds
-    10% of the corpus (every posting gets scored either way, so the
-    plain accumulator wins), else wand. Every kernel is exact, so the
-    pick never changes results."""
-    ir = {t: idf(n_docs, gdf[t]) for t in grp["term"].unique()}
-    im = {t: w * plan.boosts.get(t, 1.0) for t, w in ir.items()}
+    Phrase and cursored queries take the exhaustive kernel, msm > 1 the
+    pigeonhole specialization, and OR queries wand or dense.
+    ``scorer="auto"`` picks over the terms this shard holds: dense for a
+    single term or when any df exceeds 10% of the corpus (every posting
+    gets scored either way, so the plain accumulator wins), else wand.
+    Every kernel is exact, so the pick never changes results."""
+    im, ir = _term_weights(grp["term"].unique(), plan, gdf, n_docs)
     args = (grp, im, avgdl, k, base, dl_bytes, deleted)
-    if plan.phrases or plan.neg_phrases:
-        return _score_shard_dense(
-            *args, msm=plan.msm, clauses=plan.clauses, phrases=plan.phrases,
-            neg_phrases=plan.neg_phrases, phrase_idf=ir)
+    if plan.phrases or plan.neg_phrases or plan.after is not None:
+        return _score_shard_dense(*args, plan, ir)
     if plan.msm > 1:
-        return _score_shard_msm(*args, msm=plan.msm, clauses=plan.clauses)
+        return _score_shard_msm(*args, plan)
     scorer = plan.scorer
     if scorer == "auto":
         hot = max(gdf[t] for t in ir) > 0.1 * n_docs
         scorer = "dense" if len(ir) == 1 or hot else "wand"
-    return (_score_shard_wand if scorer == "wand" else _score_shard_dense)(*args)
+    if scorer == "wand":
+        return _score_shard_wand(*args)
+    return _score_shard_dense(*args, plan)
 
 
 def _score_group(
@@ -1786,12 +1637,7 @@ def _score_group(
         sub = grp[grp["term"].isin(plan.terms)]
         if sub.empty:
             continue
-        del_q = deleted
-        ps = [neg_docs[t] for t in plan.negs if t in neg_docs]
-        if ps:
-            excl = ps[0] if len(ps) == 1 else np.unique(np.concatenate(ps))
-            del_q = (excl if del_q is None or not del_q.size
-                     else np.union1d(del_q, excl))
+        del_q = _doc_union([deleted] + [neg_docs.get(t) for t in plan.negs])
         out = _score_query(sub, plan, gdf, n_docs, avgdl, k, base,
                            dl_bytes, del_q)
         if len(out):
@@ -1933,102 +1779,140 @@ def _phrase_freqs_slop(
     return cand[nz], pf[nz].astype(np.int64)
 
 
+def _evaluate(
+    postings: dict[str, tuple], plan: _QueryPlan,
+    weights: dict[str, float], phrase_idf: dict[str, float], avgdl: float,
+    excluded: np.ndarray | None, k: int, base: int | None = None,
+    size: int = 0,
+) -> pd.DataFrame:
+    """The one clause evaluator: ``postings`` maps terms to decoded
+    (docs, float tfs, dls, positions | None); returns the top-k (doc_id,
+    score) matches in (score desc, doc_id asc) order.
+
+    Accumulate, then select. The callers differ only in how a doc maps
+    to an accumulator slot. A shard passes ``base`` and ``size``: its
+    docs are a contiguous range, so slot = doc - base (a dense array).
+    The driver-local tier passes neither: slots index the sorted union
+    of the query's positive docs (a sparse accumulator for a candidate
+    set far smaller than the corpus). Both maps keep doc order, so slot
+    order breaks score ties by docID.
+
+    - Clause members add ``weights[t] * tf_term(tf, dl)``. A term that
+      appears only inside a phrase does not score, and a term shared by
+      several clauses scores ONCE with its folded max weight (the
+      ``_plan_clauses`` contract).
+    - A doc matches when at least ``max(msm, 1)`` clauses match it; a
+      clause (a prefix's expansions) counts once per doc however many
+      members match. The count decides, never the score, so a clause
+      weighted 0 (``term^0``) still matches.
+    - Each phrase adds ``boost * (Σ phrase_idf of its terms) *
+      tf_term(phrase_freq, dl)`` — Lucene's PhraseQuery weighting under
+      BM25 — and counts as one clause. ``phrase_idf`` is UNBOOSTED:
+      ``weights`` may carry fuzzy similarity boosts that must not leak
+      into a phrase sharing a term.
+    - Negative phrases, ``excluded`` (tombstones) and the docs of the
+      plan's must_not terms found in ``postings`` unmatch; then the
+      cursor ``plan.after`` drops every doc at or before it, before the
+      top-k cut."""
+    empty = np.zeros(0, dtype=np.int64)
+    scored = {t for cl in plan.clauses for t in cl}
+    terms = [t for t in sorted(scored & postings.keys())  # one summation order
+             if postings[t][0].size]
+    docs_t = [postings[t][0] for t in terms]
+    space = None
+    if base is None:
+        # a phrase's docs are among its first term's
+        space, s_all = np.unique(np.concatenate(
+            docs_t + [postings[ph[0]][0] for ph in plan.phrases
+                      if ph[0] in postings] + [empty]), return_inverse=True)
+        size = space.size
+    else:
+        s_all = np.concatenate(docs_t + [empty]) - base
+    s_all = s_all[:sum(d.size for d in docs_t)]  # term postings, term-major
+
+    def slot(docs: np.ndarray) -> np.ndarray:
+        return docs - base if space is None else np.searchsorted(space, docs)
+
+    def slots_in(docs: np.ndarray) -> np.ndarray:
+        # slots of the docs that have one (a must_not doc may not)
+        s = slot(docs)
+        ok = (s >= 0) & (s < size)
+        if space is not None:
+            ok[ok] = space[s[ok]] == docs[ok]
+        return s[ok]
+
+    # bincount adds in input order: each doc sums its terms in term order
+    # (and returns ints when there are no terms)
+    acc = np.bincount(s_all, minlength=size, weights=np.concatenate(
+        [weights[t] * bm25_tf_term(postings[t][1], postings[t][2], avgdl)
+         for t in terms] + [np.zeros(0)])).astype(np.float64, copy=False)
+    s_cnt = s_all  # under plain OR any clause posting matches
+    if plan.msm > 1:
+        slots = dict(zip(terms, np.split(
+            s_all, np.cumsum([d.size for d in docs_t])[:-1])))
+        per_clause = [[slots[t] for t in cl if t in slots]
+                      for cl in plan.clauses]
+        s_cnt = np.concatenate([
+            ss[0] if len(ss) == 1 else np.unique(np.concatenate(ss))
+            for ss in per_clause if ss] + [empty])
+    cnt = np.bincount(s_cnt, minlength=size)
+    # positive phrases first: a negative phrase's mask must win
+    for i, ph in enumerate(plan.phrases + plan.neg_phrases):
+        arrs = [postings.get(t) for t in ph]
+        if any(v is None or v[0].size == 0 for v in arrs):
+            continue
+        pdocs, pf = _phrase_freqs(
+            [(d, tf.astype(np.int64), pos) for d, tf, _, pos in arrs],
+            slop=getattr(ph, "slop", 0))
+        if i >= len(plan.phrases):
+            cnt[slots_in(pdocs)] = 0
+            continue
+        s = slot(pdocs)
+        d0, _, dl0, _ = arrs[0]
+        w = getattr(ph, "boost", 1.0) * sum(phrase_idf[t] for t in ph)
+        acc[s] += w * bm25_tf_term(pf, dl0[np.searchsorted(d0, pdocs)], avgdl)
+        cnt[s] += 1
+    for docs in [excluded] + [postings[t][0] for t in plan.negs if t in postings]:
+        if docs is not None and docs.size:
+            cnt[slots_in(docs)] = 0
+    hit = np.flatnonzero(cnt >= max(plan.msm, 1))
+    docs = hit + base if space is None else space[hit]
+    scores = acc[hit]
+    if plan.after is not None:
+        s_a, d_a = float(plan.after[0]), int(plan.after[1])
+        keep = (scores < s_a) | ((scores == s_a) & (docs > d_a))
+        docs, scores = docs[keep], scores[keep]
+    sel = np.lexsort((docs, -scores))[:k]
+    return pd.DataFrame({
+        "doc_id": docs[sel].astype("int64"),
+        "score": scores[sel],
+    })
+
+
 def _score_shard_dense(
     grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
     base: int, dl_bytes: bytes, deleted: np.ndarray | None = None,
-    dl_arr: np.ndarray | None = None, msm: int = 1,
-    clauses: list[list[str]] | None = None,
-    phrases: list[Phrase] | None = None,
-    neg_phrases: list[Phrase] | None = None,
+    plan: _QueryPlan | None = None,
     phrase_idf: dict[str, float] | None = None,
+    dl_arr: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """The exhaustive shard kernel every query shape can take: a dense
-    accumulator over the shard's contiguous docID range (shards ARE
-    docID ranges by construction), then one top-k selection.
-
-    - Term rows add idf-weighted BM25. With ``clauses`` given, only
-      clause members score — a term that appears only inside a phrase
-      does not — and a term shared by several clauses scores ONCE with
-      its folded max weight (the ``_plan_clauses`` contract).
-    - ``msm`` > 1 adds a match-count accumulator and zeroes docs below
-      it. Without ``clauses`` every term is its own clause (postings
-      are unique per (term, doc) after generation merge); a clause (a
-      prefix's expansions) counts once per doc however many matched.
-    - Each of ``phrases`` adds ``(Σ idf of its terms) *
-      tf_term(phrase_freq, dl)`` — Lucene's PhraseQuery weighting under
-      BM25 — and counts once toward ``msm``. ``phrase_idf`` supplies the
-      UNBOOSTED idf: ``idf_map`` may carry fuzzy similarity boosts that
-      must not leak into a phrase sharing a term. Callers passing
-      phrases pass ``clauses`` too.
-    - ``neg_phrases`` (must_not) and ``deleted`` zero their docs before
-      the top-k cut."""
-    phrases = phrases or []
-    neg_phrases = neg_phrases or []
+    """The exhaustive shard kernel every query shape can take: decode
+    the shard's rows and run :func:`_evaluate` over the shard's
+    contiguous docID range (shards ARE docID ranges by construction).
+    Without ``plan`` every term of ``idf_map`` is its own clause under
+    plain OR — the pruning kernels' fallback."""
+    if plan is None:
+        plan = _QueryPlan(sorted(idf_map), [], "dense", 1,
+                          [[t] for t in idf_map], [], [], {})
     postings = _decode_group(
-        grp, base, {t for ph in phrases + neg_phrases for t in ph})
+        grp, base, {t for ph in plan.phrases + plan.neg_phrases for t in ph})
     if dl_arr is None:
-        dl_arr = vbyte_decode(dl_bytes).astype(np.int64)
-    if not postings:
-        return _empty_topk()
-    acc = np.zeros(dl_arr.shape[0], dtype=np.float64)
-    cnt = np.zeros(dl_arr.shape[0], dtype=np.int32) if msm > 1 else None
-    scored = None if clauses is None else {t for cl in clauses for t in cl}
-    for term, (docs, tfs, _) in postings.items():
-        if docs.size == 0 or (scored is not None and term not in scored):
-            continue
-        off = docs - base
-        dl = dl_arr[off]
-        acc[off] += idf_map[term] * bm25_tf_term(
-            tfs.astype(np.float64), dl.astype(np.float64), avgdl
-        )
-        if cnt is not None and clauses is None:
-            cnt[off] += 1
-    if cnt is not None and clauses is not None:
-        for cl in clauses:
-            offs = [
-                postings[t][0] - base for t in cl
-                if t in postings and postings[t][0].size
-            ]
-            if not offs:
-                continue
-            u = offs[0] if len(offs) == 1 else np.unique(
-                np.concatenate(offs)
-            )
-            cnt[u] += 1
-    # positive phrases first: a negative phrase's mask must win
-    for i, ph in enumerate(phrases + neg_phrases):
-        if any(t not in postings or postings[t][0].size == 0 for t in ph):
-            continue
-        pdocs, pf = _phrase_freqs([postings[t] for t in ph],
-                                  slop=getattr(ph, "slop", 0))
-        off = pdocs - base
-        if i >= len(phrases):
-            acc[off] = 0.0
-            continue
-        w = getattr(ph, "boost", 1.0) * sum(
-            (phrase_idf or idf_map)[t] for t in ph
-        )
-        acc[off] += w * bm25_tf_term(
-            pf.astype(np.float64), dl_arr[off].astype(np.float64), avgdl
-        )
-        if cnt is not None:
-            cnt[off] += 1
-    if cnt is not None:
-        acc[cnt < msm] = 0.0
-    if deleted is not None and deleted.size:
-        # tombstone mask; clip to the shard's populated range — a stale or
-        # bogus tombstone id must not crash every query on this shard
-        off = deleted - base
-        acc[off[(off >= 0) & (off < acc.shape[0])]] = 0.0
-    nz = np.flatnonzero(acc)
-    if nz.size == 0:
-        return _empty_topk()
-    order = np.lexsort((nz, -acc[nz]))[:k]
-    sel = nz[order]
-    return pd.DataFrame({
-        "doc_id": (sel + base).astype("int64"),
-        "score": acc[sel],
-    })
+        dl_arr = vbyte_decode(dl_bytes).astype(np.float64)
+    return _evaluate(
+        {t: (docs, tfs.astype(np.float64), dl_arr[docs - base], pos)
+         for t, (docs, tfs, pos) in postings.items()},
+        plan, idf_map, phrase_idf or idf_map, avgdl, deleted, k, base,
+        dl_arr.shape[0])
 
 
 class _LazyTermPostings:
@@ -2321,8 +2205,8 @@ def _score_shard_wand(
 
 def _score_shard_msm(
     grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
-    base: int, dl_bytes: bytes, deleted: np.ndarray | None = None,
-    msm: int = 2, clauses: list[list[str]] | None = None,
+    base: int, dl_bytes: bytes, deleted: np.ndarray | None,
+    plan: _QueryPlan,
 ) -> pd.DataFrame:
     """Conjunctive / minimum-should-match shard scorer via PIGEONHOLE
     candidate generation: a doc matching >= msm of the query's n clauses
@@ -2334,10 +2218,9 @@ def _score_shard_msm(
     ``tf_at`` — an AND of a needle term with a stopword never
     bulk-decodes the stopword's postings. Scores are exact full BM25
     sums over every matched term; the count gate uses distinct matched
-    CLAUSES (``clauses=None``: every term is its own clause; a prefix
-    clause lists its expansions and counts once however many match —
-    clause rarity orders by the sum of member dfs, an upper bound of
-    the union size).
+    CLAUSES of ``plan`` (a prefix clause lists its expansions and counts
+    once however many match — clause rarity orders by the sum of member
+    dfs, an upper bound of the union size).
 
     Falls back to the dense counting accumulator when the candidate
     universe approaches the shard size (nothing left to skip) — same
@@ -2351,14 +2234,9 @@ def _score_shard_msm(
     df_by_term: dict[str, int] = {}
     for t, d in zip(term_arr, grp["df"].to_numpy()):
         df_by_term[t] = df_by_term.get(t, 0) + int(d)
-    if clauses is None:
-        groups = [[t] for t in df_by_term]
-    else:
-        groups = [
-            g for g in (
-                [t for t in cl if t in df_by_term] for cl in clauses
-            ) if g
-        ]
+    msm = plan.msm
+    groups = [g for g in ([t for t in cl if t in df_by_term]
+                          for cl in plan.clauses) if g]
     groups.sort(key=lambda g: (sum(df_by_term[t] for t in g), g[0]))
     if len(groups) < msm:
         return _empty_topk()  # shard lacks msm of the query's clauses
@@ -2366,8 +2244,7 @@ def _score_shard_msm(
     small, rest = groups[:n_small], groups[n_small:]
     if sum(df_by_term[t] for g in small for t in g) > 0.33 * dl_arr.size:
         return _score_shard_dense(grp, idf_map, avgdl, k, base, dl_bytes,
-                                  deleted, dl_arr=dl_arr, msm=msm,
-                                  clauses=clauses)
+                                  deleted, plan, dl_arr=dl_arr)
 
     lazies = _lazy_postings(grp, base)
 

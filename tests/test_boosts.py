@@ -63,6 +63,7 @@ def test_boosted_all_tiers_parity(spark, built_index, oracle_index):
         "needle0~1^2 import",             # boost composes with fuzzy
         '"import def"^2 sym1',            # boosted phrase
         "import^0 def",                   # boost 0: matches, scores 0
+        "import^0",                       # every match scores 0
     ]
     for q in queries:
         expected = oracle_index.query(q, 10)

@@ -137,7 +137,7 @@ def test_topk_local_fallback_guard(spark, built_index):
             for r in eng.topk("import def", 10).collect()]
     assert got == want
     # the guard kept the local caches empty
-    assert eng._local_flat == {}
+    assert eng._local_postings == {}
 
 
 def test_topk_local_parity_after_deletes(spark, tmp_root):
@@ -193,7 +193,7 @@ def test_topk_local_cache_eviction_keeps_current_query(spark, built_index):
     want = [(r["doc_id"], round(r["score"], 12))
             for r in eng.topk("import def", 10).collect()]
     assert got == want
-    assert set(eng._local_flat) == {"def", "import"}
+    assert set(eng._local_postings) == {"def", "import"}
 
 
 def test_engine_refresh_on_mutation_without_flush(spark, tmp_root):

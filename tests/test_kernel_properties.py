@@ -5,20 +5,26 @@ vocabulary and encodes it the way the index stores it: one row per
 (term, generation) through ``encode_posting_list`` / ``encode_positions``
 (with 4-posting blocks, so block-lazy decode crosses block edges), one
 term split across two generations, and some docs tombstoned. A random
-query — literals, a prefix group, msm, phrases with and without slop,
-``-term`` and ``-"phrase"`` — is planned by the engine's own
-``_query_plan`` over an in-memory dictionary, then scored by
+query — literals (some boosted to 0), a prefix group, msm, phrases with
+and without slop, ``-term`` and ``-"phrase"`` — is planned by the
+engine's own ``_query_plan`` over an in-memory dictionary, then scored by
 
 - the per-shard loop ``_score_group`` (scorer ``auto``),
 - the exhaustive ``_score_shard_dense`` kernel, on every shape,
+- the clause evaluator ``_evaluate`` in its driver-local form: flat
+  per-term arrays with the sparse slot mapping, must_not terms among
+  the postings,
 - ``_score_shard_wand`` on OR shapes and ``_score_shard_msm`` on msm
   shapes,
 
 and each must equal ``OracleIndex.query`` over the live docs on ranks,
-with scores within 1e-9. A second family of shards puts wand's early
-exit on the spot: docs the head term never reaches win only through the
-sum of two tail terms, each bounded below the pooled k-th score. Docs whose oracle scores lie within 1e-9 of
-each other may swap ranks: float sums in a different term order can
+with scores within 1e-9. The loop, the dense kernel and the local form
+also take an optional ``search_after`` cursor drawn from the oracle's
+own ranking, and must then return the oracle's ranking after it. A
+second family of shards puts wand's early exit on the spot: docs the
+head term never reaches win only through the sum of two tail terms,
+each bounded below the pooled k-th score. Docs whose oracle scores lie
+within 1e-9 of each other may swap ranks: float sums in a different term order can
 split an exact tie by an ulp.
 """
 
@@ -99,6 +105,9 @@ def queries(draw, texts: dict[int, str]):
         parts = [draw(st.sampled_from(RARE)), "the", "of"]
     elif draw(st.booleans()):
         parts.append(draw(st.sampled_from(STEMS)) + "*")
+    if parts and draw(st.integers(0, 3)) == 0:
+        # boost 0: the clause still matches, scoring nothing
+        parts[draw(st.integers(0, len(parts) - 1))] += "^0"
     if draw(st.booleans()):
         parts.append("-" + draw(st.sampled_from(WORDS)))
     msm = {"msm": draw(st.sampled_from([2, "all"])),
@@ -155,6 +164,17 @@ def _encode(texts: dict[int, str], deleted: list[int], split: str):
     return pd.DataFrame(rows), oracle
 
 
+def _local_postings(grp: pd.DataFrame, terms) -> dict[str, tuple]:
+    """The driver-local tier's cache form of ``terms``: flat (docs, float
+    tfs, dls, positions) per term, empty for a term the shard lacks."""
+    dl = postings.vbyte_decode(grp["dl_bytes"].iloc[0]).astype(np.float64)
+    dec = bm25._decode_group(grp, BASE, set(grp["term"]))
+    empty = np.zeros(0, np.int64)
+    return {t: (d, tf.astype(np.float64), dl[d - BASE], pos)
+            for t in terms
+            for d, tf, pos in [dec.get(t, (empty, empty, empty))]}
+
+
 def _assert_ranks(got: pd.DataFrame, full: list[tuple[int, float]], what):
     want = full[:K]
     ids, scores = got["doc_id"].tolist(), got["score"].tolist()
@@ -185,27 +205,35 @@ def test_kernels_match_oracle(shard, data):
         return
     n, avgdl = oracle.n_docs, oracle.avgdl
     gdf = {t: oracle.df[t] for t in plan.terms}
-    outs = list(bm25._score_group(grp, [plan], gdf, n, avgdl, K))
-    _assert_ranks(outs[0] if outs else bm25._empty_topk(), full, ("loop", q))
-
+    im, ir = bm25._term_weights(plan.terms, plan, gdf, n)
+    sub = grp[grp["term"].isin(plan.terms)]
     # the kernels directly: must_not docs join the tombstones
     excl = set(deleted).union(*(
         (d for d, _ in oracle.postings.get(t, [])) for t in plan.negs))
-    sub = grp[grp["term"].isin(plan.terms)]
-    ir = {t: bm25.idf(n, gdf[t]) for t in plan.terms}
-    im = {t: w * plan.boosts.get(t, 1.0) for t, w in ir.items()}
     args = (sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[0],
             np.array(sorted(excl), dtype=np.int64))
-    _assert_ranks(bm25._score_shard_dense(
-        *args, msm=plan.msm, clauses=plan.clauses, phrases=plan.phrases,
-        neg_phrases=plan.neg_phrases, phrase_idf=ir), full, ("dense", q))
+    local = _local_postings(grp, plan.terms + plan.negs)
+    cases = [(plan, full)]
+    j = data.draw(st.none() | st.integers(0, len(full) - 1),
+                  label="cursor") if full else None
+    if j is not None:
+        d, s = full[j]
+        cases.append((plan._replace(after=(s, d)), full[j + 1:]))
+    for p, want in cases:
+        outs = list(bm25._score_group(grp, [p], gdf, n, avgdl, K))
+        _assert_ranks(outs[0] if outs else bm25._empty_topk(), want,
+                      ("loop", p.after, q))
+        _assert_ranks(bm25._score_shard_dense(*args, p, ir), want,
+                      ("dense", p.after, q))
+        _assert_ranks(bm25._evaluate(local, p, im, ir, avgdl,
+                                     np.asarray(deleted, dtype=np.int64), K),
+                      want, ("local", p.after, q))
     if plan.phrases or plan.neg_phrases:
         return
     if plan.msm == 1:
         _assert_ranks(bm25._score_shard_wand(*args), full, ("wand", q))
     else:
-        _assert_ranks(bm25._score_shard_msm(
-            *args, msm=plan.msm, clauses=plan.clauses), full, ("msm", q))
+        _assert_ranks(bm25._score_shard_msm(*args, plan), full, ("msm", q))
 
 
 @st.composite

@@ -3,7 +3,7 @@ oracle parity on every serving tier, lifecycle (incremental add, merge,
 delete) preservation of positions, code-tokenizer position semantics,
 and the no-positions error path.
 
-Scoring semantics under test (bm25._score_shard_dense docstring): a
+Scoring semantics under test (bm25._evaluate docstring): a
 phrase clause contributes ``(Σ idf of its terms) * tf_term(phrase_freq,
 dl)`` — Lucene's PhraseQuery weighting under BM25 — counts once toward
 min_should_match, and ``-"..."`` excludes its matches (must_not).
