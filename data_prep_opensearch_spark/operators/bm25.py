@@ -1,4 +1,4 @@
-"""BM25 scoring + the top-k query engine (exhaustive and block-max WAND).
+"""BM25 scoring + the top-k query engine (exhaustive and block-max MaxScore).
 
 Scoring constants and formula live HERE and only here — oracle, engine,
 and SQL generator all import them, guaranteeing score parity
@@ -14,14 +14,15 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
   2. dictionary semi-join: segment scan FILTERED on term — Catalyst pushes
      ``term IN (...)`` into the parquet scan (term is the leading sort key
      of segment files, so row-group min/max stats prune aggressively).
-  3. global df per term: a warm engine reads it on the driver with a
-     row-group-pruned pyarrow point read of the segment files (the
-     dictionary step X10 in SURVEY.md §4); a cold one aggregates it in
-     the plan.
+  3. global df per term, read on the driver (warm or cold engine) with
+     a row-group-pruned pyarrow point read of the segment files (the
+     dictionary step X10 in SURVEY.md §4) — no Spark job.
   4. join the per-shard doclen sidecar (small, broadcast).
-  5. per-shard scoring in mapInPandas: decode + one exhaustive dense
-     kernel, or its exact pruning specializations (block-max WAND for
-     OR queries, pigeonhole for msm) -> local top-k per shard.
+  5. per-shard scoring in mapInPandas -> local top-k per shard: one
+     exhaustive evaluator (phrases, the search_after cursor, or
+     ``scorer="dense"``), else one exact pruning kernel — block-max
+     MaxScore whose count gate is pigeonhole msm — with one cost router
+     that hands a shard to the evaluator when nothing can be skipped.
   6. final top-k: orderBy(score desc, doc_id asc).limit(k) — Spark's
      TakeOrderedAndProject does the partial/final merge.
 """
@@ -69,11 +70,6 @@ def idf(n_docs: int, df: int) -> float:
 def bm25_tf_term(tf, dl, avgdl: float):
     """Vectorized tf normalization — works on numpy arrays or scalars."""
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * (dl / avgdl)))
-
-
-def bm25_upper_bound(idf_t: float, max_tf: int, min_dl: int, avgdl: float) -> float:
-    """Block upper bound: BM25 tf-term is increasing in tf, decreasing in dl."""
-    return idf_t * bm25_tf_term(float(max_tf), float(min_dl), avgdl)
 
 
 _PHRASE_RE = re.compile(r'(-?)"([^"]*)"(~\d+)?(\^\d+(?:\.\d+)?)?')
@@ -489,12 +485,12 @@ class BM25Engine:
     ``_shard_scored``. Per shard, every query runs the ONE clause
     evaluator (``_evaluate`` over a dense accumulator, via
     ``_score_shard_dense``: terms, phrases, msm, must_not, tombstones,
-    the cursor and the top-k cut) or one of its exact pruning
-    specializations — block-max WAND/MaxScore for OR queries
-    (``_score_shard_wand``) and pigeonhole candidates for msm
-    (``_score_shard_msm``); both fall back to the dense kernel when
-    nothing is skippable. ``topk_local`` runs the same evaluator on the
-    driver over a sparse accumulator.
+    the cursor and the top-k cut) or, without phrases or a cursor, the
+    ONE exact pruning kernel (``_score_shard_pruned``: block-max
+    MaxScore with a pigeonhole count gate for msm), whose one cost
+    router (``_route``) hands the shard to the evaluator when nothing
+    is skippable. ``topk_local`` runs the same evaluator on the driver
+    over a sparse accumulator.
     """
 
     def __init__(
@@ -838,7 +834,6 @@ class BM25Engine:
     def _plan_clauses(
         self, query: str, max_expansions: int | None = None,
         synonyms: dict[str, list[str]] | None = None,
-        resolve: bool = True,
     ) -> tuple[list[list[str]], int, list[str],
                list[list[str]], list[list[str]], dict[str, float]]:
         """Parse a query into CLAUSES: each literal term is one clause;
@@ -959,18 +954,6 @@ class BM25Engine:
                 negs.update(t for t, _ in
                             self.expand_prefix(stem, max_expansions))
         n_clauses = len(clauses) + len(phrases)
-        if not resolve and not syn_map:
-            # df-free planning (the caller resolves idf IN the query plan
-            # via a broadcast gdf join — see _shard_scored): clauses keep
-            # their df=0 members, which is result-identical — an absent
-            # term has no postings in any shard, so it never scores and
-            # never satisfies a clause count; only synonym blending
-            # genuinely needs driver-side dfs.
-            boosts = {t: w for t, w in weights.items() if w != 1.0}
-            return (
-                [cl for cl in clauses if cl], n_clauses, sorted(negs),
-                list(phrases), list(neg_phrases), boosts,
-            )
         flat = sorted(
             {t for cl in clauses for t in cl} | negs
             | {t for ph in phrases for t in ph}
@@ -1117,7 +1100,7 @@ class BM25Engine:
         that roughly doubles warm latency; values are identical)."""
         self._maybe_refresh()
         plan = self._query_plan(query, scorer, min_should_match,
-                                max_expansions, synonyms, True, search_after)
+                                max_expansions, synonyms, search_after)
         if plan is None:
             res = _empty_topk()
         else:
@@ -1155,11 +1138,15 @@ class BM25Engine:
         — expanded against the dictionary (df-ranked, capped at
         ``max_expansions``), scored as a scoring-boolean (each expansion
         contributes its own idf-weighted BM25), and counting ONCE toward
-        the clause gate however many expansions match. Conjunctive
-        queries route to the pigeonhole scorer — candidates come from
-        the rarest (n-msm+1) clause groups, hot lists are only probed
-        at candidate positions (block-lazy) — with a dense counting
-        fallback when nothing is skippable.
+        the clause gate however many expansions match.
+
+        ``scorer``: ``"auto"`` and ``"wand"`` run the pruning kernel —
+        candidates come from the rarest clauses, the rest are probed
+        only at candidate docs (block-lazy), and a candidate drops once
+        its bound falls below the k-th score or its clause count cannot
+        reach msm — which falls back to the exhaustive evaluator when
+        nothing is skippable; ``"dense"`` forces the evaluator. Results
+        are identical either way.
 
         ``search_after=(score, doc_id)`` is OpenSearch deep pagination:
         return the next k results STRICTLY AFTER the cursor in the
@@ -1389,7 +1376,7 @@ class BM25Engine:
     def _query_plan(
         self, query: str, scorer: str,
         min_should_match: int | str | None, max_expansions: int | None,
-        synonyms: dict[str, list[str]] | None, resolve: bool,
+        synonyms: dict[str, list[str]] | None,
         search_after: tuple[float, int] | None = None,
     ) -> _QueryPlan | None:
         """Plan one query's clauses once, on the driver. None when no doc
@@ -1398,8 +1385,7 @@ class BM25Engine:
         which has no positive clause to generate candidates (Lucene bool
         with only must_not)."""
         clauses, n_clauses, negs, phrases, neg_phrases, boosts = (
-            self._plan_clauses(query, max_expansions, synonyms,
-                               resolve=resolve)
+            self._plan_clauses(query, max_expansions, synonyms)
         )
         msm = resolve_msm(min_should_match, n_clauses)
         terms = {t for cl in clauses for t in cl}
@@ -1426,17 +1412,11 @@ class BM25Engine:
         whole shard anyway, so 'all matches' costs the same pass). None
         when no query can match.
 
-        Global df: a warm engine resolves it on the driver (cached). A
-        cold one computes it INSIDE the job — a broadcast gdf aggregate
-        joined onto the filtered rows — so one-shot queries and batches
-        skip the resolve_df job; results are identical (gdf = the same
-        Σ df over shards/gens). Synonym blending needs driver-side dfs,
-        so synonym queries always resolve."""
+        Global df comes from ``resolve_df``, a driver-side point read
+        that runs no Spark job, for warm and cold engines alike."""
         self._maybe_refresh()
-        inplan = not self._shard_partitioned and synonyms is None
         plans = [self._query_plan(q, scorer, min_should_match,
-                                  max_expansions, synonyms, not inplan,
-                                  search_after)
+                                  max_expansions, synonyms, search_after)
                  for q in queries]
         live = [p for p in plans if p is not None]
         if not live:
@@ -1448,12 +1428,7 @@ class BM25Engine:
         seg_src = self._seg_positional() if positional else self.seg
         seg = seg_src.filter(F.col("term").isin(
             sorted(terms.union(*(p.negs for p in live)))))
-        if inplan:
-            df_map = None
-            gdf = seg.groupBy("term").agg(F.sum("df").alias("gdf"))
-            seg = seg.join(F.broadcast(gdf), "term")
-        else:
-            df_map = self.resolve_df(sorted(terms))
+        df_map = self.resolve_df(sorted(terms))
         if not self._shard_partitioned:
             # cold path: co-locate each shard's rows (the filtered set is
             # tiny — <= |terms| rows per shard — so this shuffle is cheap)
@@ -1475,11 +1450,7 @@ class BM25Engine:
                 return
             pdf = pd.concat(chunks, ignore_index=True)
             for _, grp in pdf.groupby("shard"):
-                gdf_of = df_map if df_map is not None else {
-                    t: int(g) for t, g in zip(grp["term"].to_numpy(),
-                                              grp["gdf"].to_numpy())
-                }
-                yield from _score_group(grp, plans, gdf_of, n_docs, avgdl,
+                yield from _score_group(grp, plans, df_map, n_docs, avgdl,
                                         keff)
 
         return seg.mapInPandas(score_partition, BATCH_TOPK_SCHEMA)
@@ -1591,25 +1562,17 @@ def _score_query(
 ) -> pd.DataFrame:
     """Kernel wrapper: one query's rows of one shard -> its top-k.
 
-    Phrase and cursored queries take the exhaustive kernel, msm > 1 the
-    pigeonhole specialization, and OR queries wand or dense.
-    ``scorer="auto"`` picks over the terms this shard holds: dense for a
-    single term or when any df exceeds 10% of the corpus (every posting
-    gets scored either way, so the plain accumulator wins), else wand.
-    Every kernel is exact, so the pick never changes results."""
+    Phrase and cursored plans, and ``scorer="dense"``, take the
+    exhaustive evaluator; every other plan (``"auto"`` or ``"wand"``)
+    takes the one pruning kernel, whose router falls back to the
+    evaluator when nothing in the shard can be skipped. Both are exact,
+    so the path never changes results."""
     im, ir = _term_weights(grp["term"].unique(), plan, gdf, n_docs)
-    args = (grp, im, avgdl, k, base, dl_bytes, deleted)
-    if plan.phrases or plan.neg_phrases or plan.after is not None:
-        return _score_shard_dense(*args, plan, ir)
-    if plan.msm > 1:
-        return _score_shard_msm(*args, plan)
-    scorer = plan.scorer
-    if scorer == "auto":
-        hot = max(gdf[t] for t in ir) > 0.1 * n_docs
-        scorer = "dense" if len(ir) == 1 or hot else "wand"
-    if scorer == "wand":
-        return _score_shard_wand(*args)
-    return _score_shard_dense(*args, plan)
+    args = (grp, im, avgdl, k, base, dl_bytes, deleted, plan)
+    if (plan.phrases or plan.neg_phrases or plan.after is not None
+            or plan.scorer == "dense"):
+        return _score_shard_dense(*args, ir)
+    return _score_shard_pruned(*args)
 
 
 def _score_group(
@@ -1891,23 +1854,15 @@ def _evaluate(
 
 def _score_shard_dense(
     grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
-    base: int, dl_bytes: bytes, deleted: np.ndarray | None = None,
-    plan: _QueryPlan | None = None,
-    phrase_idf: dict[str, float] | None = None,
-    dl_arr: np.ndarray | None = None,
+    base: int, dl_bytes: bytes, deleted: np.ndarray | None,
+    plan: _QueryPlan, phrase_idf: dict[str, float] | None = None,
 ) -> pd.DataFrame:
     """The exhaustive shard kernel every query shape can take: decode
     the shard's rows and run :func:`_evaluate` over the shard's
-    contiguous docID range (shards ARE docID ranges by construction).
-    Without ``plan`` every term of ``idf_map`` is its own clause under
-    plain OR — the pruning kernels' fallback."""
-    if plan is None:
-        plan = _QueryPlan(sorted(idf_map), [], "dense", 1,
-                          [[t] for t in idf_map], [], [], {})
+    contiguous docID range (shards ARE docID ranges by construction)."""
     postings = _decode_group(
         grp, base, {t for ph in plan.phrases + plan.neg_phrases for t in ph})
-    if dl_arr is None:
-        dl_arr = vbyte_decode(dl_bytes).astype(np.float64)
+    dl_arr = vbyte_decode(dl_bytes).astype(np.float64)
     return _evaluate(
         {t: (docs, tfs.astype(np.float64), dl_arr[docs - base], pos)
          for t, (docs, tfs, pos) in postings.items()},
@@ -1923,23 +1878,17 @@ class _LazyTermPostings:
     rows (transient, pre-merge) falls back to eager decode+merge so
     last-wins semantics stay exact."""
 
-    __slots__ = ("base", "first", "last", "max_tf", "min_dl",
-                 "doc_off", "tf_off", "doc_bytes", "tf_bytes",
-                 "_full", "_blocks", "rows", "df")
+    __slots__ = ("base", "first", "last", "doc_off", "tf_off",
+                 "doc_bytes", "tf_bytes", "_full", "_blocks")
 
     def __init__(self, rows: list[dict], base: int) -> None:
         self.base = base
-        self.rows = rows
         self._blocks: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._full: tuple[np.ndarray, np.ndarray] | None = None
-        self.df = sum(int(r["df"]) for r in rows)
         r = rows[0]
-        lazy = len(rows) == 1 and r.get("block_doc_off") is not None
-        self.first = np.asarray(r["block_first"], dtype=np.int64)
-        self.last = np.asarray(r["block_last"], dtype=np.int64)
-        self.max_tf = np.asarray(r["block_max_tf"], dtype=np.float64)
-        self.min_dl = np.asarray(r["block_min_dl"], dtype=np.float64)
-        if lazy:
+        if len(rows) == 1 and r.get("block_doc_off") is not None:
+            self.first = np.asarray(r["block_first"], dtype=np.int64)
+            self.last = np.asarray(r["block_last"], dtype=np.int64)
             self.doc_bytes = bytes(r["doc_bytes"])
             self.tf_bytes = bytes(r["tf_bytes"])
             self.doc_off = np.asarray(r["block_doc_off"], dtype=np.int64)
@@ -1951,16 +1900,6 @@ class _LazyTermPostings:
                 for row in sorted(rows, key=lambda x: x["gen"])
             ]
             self._full = merge_posting_runs(runs)
-
-    def upper_bound(self, idf_t: float, avgdl: float) -> float:
-        best = 0.0
-        for row in self.rows:
-            mt = np.asarray(row["block_max_tf"], dtype=np.float64)
-            if mt.size == 0:
-                return idf_t * (K1 + 1.0)  # universal bound: tf-term < k1+1
-            md = np.maximum(np.asarray(row["block_min_dl"], dtype=np.float64), 1.0)
-            best = max(best, float(np.max(bm25_tf_term(mt, md, avgdl))))
-        return idf_t * best
 
     def full(self) -> tuple[np.ndarray, np.ndarray]:
         if self._full is None:
@@ -2013,8 +1952,7 @@ def _lazy_postings(grp: pd.DataFrame, base: int) -> dict[str, _LazyTermPostings]
     """A shard group's rows as block-lazy postings per term (one row
     per generation; column-array access, as in :func:`_decode_group`)."""
     cols = {c: grp[c].to_numpy() for c in (
-        "gen", "df", "doc_bytes", "tf_bytes", "block_first",
-        "block_last", "block_max_tf", "block_min_dl")}
+        "gen", "doc_bytes", "tf_bytes", "block_first", "block_last")}
     has_offs = "block_doc_off" in grp.columns
     if has_offs:
         cols["block_doc_off"] = grp["block_doc_off"].to_numpy()
@@ -2028,300 +1966,175 @@ def _lazy_postings(grp: pd.DataFrame, base: int) -> dict[str, _LazyTermPostings]
     return {t: _LazyTermPostings(rows, base) for t, rows in by_term.items()}
 
 
-def _score_shard_wand(
-    grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
-    base: int, dl_bytes: bytes, deleted: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Vectorized block-max MaxScore within one shard (Turtle & Flood '95
-    term-at-a-time pruning, Ding & Suel SIGIR'11 block bounds), with
-    block-level LAZY DECODE — the round-2 replacement for both the
-    round-1 per-posting Python walk and its decode-everything cost:
-
-      1. per-term upper bound from block metadata alone (no decode);
-      2. terms processed in descending-bound order; a term is fully
-         decoded ONLY if an unseen doc of that term could still enter the
-         top-k (ub[t] + tail[t] vs the kth score, strict `<` so ties stay
-         exact). A hot stopword-ish term whose bound is dominated is
-         never bulk-decoded;
-      3. candidates get EXACT full scores: the other terms' tf values are
-         gathered via per-block lazy decode of exactly the blocks the
-         candidates fall in (vectorized searchsorted, no per-doc loop).
-
-    Exactness: every emitted score sums all query terms; pruning only
-    skips docs provably below (never equal to) the kth score under the
-    (score desc, docID asc) order. Parity-tested vs the exhaustive
-    oracle; topk-agreement with the dense scorer checked at 500k docs.
-
-    COST ROUTER: exact per-shard top-k cannot prune when (a) the terms
-    other than the heaviest cannot even fill the k-pool that defines the
-    threshold, or (b) no prefix of the ub-sorted terms dominates the
-    rest strongly enough to pay for the candidate bookkeeping (the
-    8x df-margin below). In those regimes this function delegates to
-    the dense kernel, so the pruned scorer never loses to it; the lazy
-    path engages exactly where skipping can pay — including stopword-
-    heavy TAILS behind a needle head (total df alone is deliberately
-    not a dense-trigger).
-    """
-    if len(grp) == 0:
-        return _empty_topk()
-    dl_arr = vbyte_decode(dl_bytes).astype(np.int64)
-    # cost router FIRST, from metadata columns only (no posting decode).
-    # Two gates (total-df alone is NOT one — see the prunable comment):
-    #   - df shape: the terms besides the heaviest must be able to fill
-    #     the k-pool, else no threshold ever activates;
-    #   - BOUND SPREAD + DF MARGIN: pruning pays only when some prefix
-    #     of the ub-sorted terms dominates the tail's bounds (Σub_tail
-    #     < 0.5·Σub_head) AND the tail's posting mass dwarfs the head's
-    #     candidate bookkeeping (Σdf_tail > 8·Σdf_head). Flat-spread
-    #     term sets give the threshold nothing to beat.
-    term_arr = grp["term"].to_numpy()
-    df_arr = grp["df"].to_numpy()
-    df_by_term: dict[str, int] = {}
-    for t, d in zip(term_arr, df_arr):
-        df_by_term[t] = df_by_term.get(t, 0) + int(d)
-    dfs = sorted(df_by_term.values(), reverse=True)
-
-    bmax_arr = grp["block_max_tf"].to_numpy()
-    bmin_arr = grp["block_min_dl"].to_numpy()
-    ub_by_term: dict[str, float] = {}
-    for i in range(len(grp)):
-        t = term_arr[i]
-        mt = np.asarray(bmax_arr[i], dtype=np.float64)
-        if mt.size == 0:
-            b = idf_map[t] * (K1 + 1.0)
-        else:
-            md = np.maximum(np.asarray(bmin_arr[i], dtype=np.float64), 1.0)
-            b = idf_map[t] * float(np.max(bm25_tf_term(mt, md, avgdl)))
-        ub_by_term[t] = max(ub_by_term.get(t, 0.0), b)
-    # prunable iff, for some prefix of the ub-sorted terms, (a) the tail
-    # bounds are dominated (Σub_tail < 0.5·Σub_head → the threshold the
-    # head establishes will beat the tail) AND (b) the tail's posting
-    # mass — what actually gets skipped — dwarfs the head's candidate
-    # bookkeeping. The candidate path pays O(Σdf_head) decode+score PLUS
-    # per-candidate tf_at lookups, so the tail must outweigh the head by
-    # a wide margin (8x, measured): at 2x an 8-term mid-df query ran the
-    # candidate path 2.2x SLOWER than the dense accumulator. A
-    # stopword-heavy TAIL behind a needle head is exactly where pruning
-    # pays (the hot postings are never bulk-decoded) — total-df is
-    # deliberately NOT a dense-trigger on its own.
-    pairs = sorted(
-        ((ub_by_term[t], df_by_term[t]) for t in ub_by_term),
-        key=lambda x: -x[0],
-    )
-    head_ub = head_df = 0.0
-    tail_ub = sum(u for u, _ in pairs)
-    tail_df = sum(d for _, d in pairs)
-    prunable = False
-    for u, d in pairs[:-1]:
-        head_ub += u
-        tail_ub -= u
-        head_df += d
-        tail_df -= d
-        if tail_ub < 0.5 * head_ub and tail_df > 8.0 * head_df:
-            prunable = True
-            break
-    if sum(dfs[1:]) < k or not prunable:
-        return _score_shard_dense(grp, idf_map, avgdl, k, base, dl_bytes,
-                                  deleted, dl_arr=dl_arr)
-
-    lazies = _lazy_postings(grp, base)
-    terms = list(lazies)
-    ub = ub_by_term  # computed in the router, no decode
-    order = sorted(terms, key=lambda t: (-ub[t], t))
-    ubs = np.array([ub[t] for t in order], dtype=np.float64)
-    tail = np.concatenate((np.cumsum(ubs[::-1])[::-1][1:], [0.0]))
-
-    pool_docs = np.zeros(0, dtype=np.int64)     # unique, sorted, scored
-    pool_scores = np.zeros(0, dtype=np.float64)
-    # docs proven strictly below the threshold: excluded from future
-    # candidacy (the threshold only rises, so a kill is final). Keeping
-    # them out of the pool is what lets the per-candidate bound kills
-    # below stay exact — a killed doc can never re-enter half-scored.
-    killed = np.zeros(0, dtype=np.int64)        # unique, sorted
-    threshold = -math.inf
-    for i, t in enumerate(order):
-        # an unseen doc introduced here scores at most ub[t] + tail[i]
-        if pool_docs.size >= k and (ubs[i] + tail[i]) < threshold:
-            break
-        cand, ctf = lazies[t].full()
-        if pool_docs.size:
-            keep = ~np.isin(cand, pool_docs, assume_unique=True)
-            cand, ctf = cand[keep], ctf[keep]
-        if killed.size:
-            keep = ~np.isin(cand, killed, assume_unique=True)
-            cand, ctf = cand[keep], ctf[keep]
-        if deleted is not None and deleted.size:
-            keep = ~np.isin(cand, deleted)
-            cand, ctf = cand[keep], ctf[keep]
-        if cand.size:
-            dl = dl_arr[cand - base].astype(np.float64)
-            sc = idf_map[t] * bm25_tf_term(ctf.astype(np.float64), dl, avgdl)
-            # MAXSCORE SPLIT: a doc introduced at term i contains NO
-            # earlier-ordered term (their full postings all went to
-            # pool∪killed), so exact scoring needs lookups only against
-            # the LATER terms — and between lookups each candidate's
-            # optimistic bound (sc + Σub of still-unvisited terms) gates
-            # the next lookup: strictly-below-threshold candidates are
-            # killed before they cost another tf_at. Strict `<` keeps
-            # ties exact (an equal-bound doc could still win on docID).
-            rest = order[i + 1:]
-            rest_ubs = np.array([ub[u] for u in rest], dtype=np.float64)
-            rem = np.concatenate((np.cumsum(rest_ubs[::-1])[::-1], [0.0]))
-            for j, u in enumerate(rest):
-                if threshold > -math.inf and rem[j] > 0.0:
-                    alive = sc + rem[j] >= threshold
-                    if not alive.all():
-                        killed = np.union1d(killed, cand[~alive])
-                        cand, ctf = cand[alive], ctf[alive]
-                        sc, dl = sc[alive], dl[alive]
-                        if cand.size == 0:
-                            break
-                vals, hit = lazies[u].tf_at(cand)
-                if hit.any():
-                    sc[hit] += idf_map[u] * bm25_tf_term(vals[hit], dl[hit], avgdl)
-            if cand.size and threshold > -math.inf:
-                alive = sc >= threshold
-                if not alive.all():
-                    killed = np.union1d(killed, cand[~alive])
-                    cand, sc = cand[alive], sc[alive]
-            if cand.size:
-                pool_docs = np.concatenate((pool_docs, cand))
-                pool_scores = np.concatenate((pool_scores, sc))
-                o = np.argsort(pool_docs)
-                pool_docs, pool_scores = pool_docs[o], pool_scores[o]
-                if pool_docs.size >= k:
-                    threshold = float(
-                        np.partition(pool_scores, pool_scores.size - k)[pool_scores.size - k]
-                    )
-
-    if pool_docs.size == 0:
-        return _empty_topk()
-    sel = np.lexsort((pool_docs, -pool_scores))[:k]
-    return pd.DataFrame({
-        "doc_id": pool_docs[sel].astype("int64"),
-        "score": pool_scores[sel],
-    })
+def _shard_bounds(
+    grp: pd.DataFrame, weights: dict[str, float], avgdl: float,
+) -> tuple[dict[str, int], dict[str, float]]:
+    """Per term, from block metadata alone (no posting decode): its df
+    in the shard, summed over generations, and an upper bound of its
+    contribution to any doc's score — ``weights[t]`` times the largest
+    block ``tf_term(block max tf, block min dl)`` (tf_term rises with tf
+    and falls with dl). A row without block metadata is bounded by
+    tf_term's supremum, k1 + 1."""
+    df: dict[str, int] = {}
+    ub: dict[str, float] = {}
+    for t, d, mt, md in zip(grp["term"].to_numpy(), grp["df"].to_numpy(),
+                            grp["block_max_tf"].to_numpy(),
+                            grp["block_min_dl"].to_numpy()):
+        mt = np.asarray(mt, dtype=np.float64)
+        b = K1 + 1.0 if mt.size == 0 else float(np.max(bm25_tf_term(
+            mt, np.maximum(np.asarray(md, dtype=np.float64), 1.0), avgdl)))
+        df[t] = df.get(t, 0) + int(d)
+        ub[t] = max(ub.get(t, 0.0), weights[t] * b)
+    return df, ub
 
 
-def _score_shard_msm(
-    grp: pd.DataFrame, idf_map: dict[str, float], avgdl: float, k: int,
+# Pruning pays for its per-candidate block probes only when the postings
+# it skips outweigh the ones it decodes by this factor (measured: at 2x,
+# an 8-term mid-df OR query ran the candidate path 2.2x slower than the
+# dense accumulator).
+_SKIP_MARGIN = 8.0
+# Bounds and running candidate sums add in another order than the
+# canonical (term-sorted) scores, so they may differ from them by a few
+# ulps: a doc is dropped only when its bound is below the pooled k-th
+# score by more than this relative margin.
+_BOUND_SLACK = 1e-9
+
+
+def _route(
+    clauses: list[list[str]], df: dict[str, int], ub: dict[str, float],
+    msm: int, k: int,
+) -> tuple[list[tuple[list[str], int, float]], bool]:
+    """The pruning kernel's ONE COST ROUTER, run before any decode on
+    the shard's df and block bounds alone. Returns the visit of
+    ``clauses`` (in order) as steps — (the terms first decoded there,
+    the clauses still open, the bound of the unvisited terms) — and
+    whether pruning pays.
+
+    It replays the visit up to the first clause where the kernel must
+    stop (fewer open clauses than msm) or is expected to (a prefix of k
+    or more docs whose bounds are over twice the unvisited ones'), and
+    prunes only when the postings past that clause outweigh those before
+    it by ``_SKIP_MARGIN``; otherwise nothing is worth skipping."""
+    steps: list[tuple[list[str], int, float]] = []
+    visited: set[str] = set()
+    total_ub, decoded, stop = sum(ub.values()), 0, None
+    for i, cl in enumerate(clauses):
+        n_open = sum(not visited.issuperset(c) for c in clauses[i:])
+        bound = sum(u for t, u in ub.items() if t not in visited)
+        if stop is None and (n_open < msm or (
+                decoded >= k and bound < 0.5 * (total_ub - bound))):
+            stop = decoded
+        new = [t for t in cl if t not in visited]
+        steps.append((new, n_open, bound))
+        visited.update(new)
+        decoded += sum(df[t] for t in new)
+    return steps, stop is not None and decoded - stop > _SKIP_MARGIN * stop
+
+
+def _score_shard_pruned(
+    grp: pd.DataFrame, weights: dict[str, float], avgdl: float, k: int,
     base: int, dl_bytes: bytes, deleted: np.ndarray | None,
     plan: _QueryPlan,
 ) -> pd.DataFrame:
-    """Conjunctive / minimum-should-match shard scorer via PIGEONHOLE
-    candidate generation: a doc matching >= msm of the query's n clauses
-    present in this shard must appear in at least one of the
-    (n - msm + 1) RAREST clause groups (if it missed all of them it
-    could match at most msm-1 of the remaining). Those groups' member
-    lists are decoded fully as the candidate universe; the remaining
-    (hot) groups are probed only at candidate positions via block-lazy
-    ``tf_at`` — an AND of a needle term with a stopword never
-    bulk-decodes the stopword's postings. Scores are exact full BM25
-    sums over every matched term; the count gate uses distinct matched
-    CLAUSES of ``plan`` (a prefix clause lists its expansions and counts
-    once however many match — clause rarity orders by the sum of member
-    dfs, an upper bound of the union size).
+    """The one pruning kernel, for every phrase-free uncursored query:
+    exact top-k by an essential / non-essential clause split with
+    block-level lazy decode (MaxScore, Turtle & Flood '95, over the block
+    bounds of Ding & Suel, SIGIR '11; its count gate is pigeonhole msm).
 
-    Falls back to the dense counting accumulator when the candidate
-    universe approaches the shard size (nothing left to skip) — same
-    cost-router philosophy as ``_score_shard_wand``.
-    """
-    if len(grp) == 0:
-        return _empty_topk()
-    dl_arr = vbyte_decode(dl_bytes).astype(np.int64)
+    Clauses are visited rarest first (under OR every term is its own
+    clause). A visited clause is ESSENTIAL: its postings are fully
+    decoded, and its docs no earlier clause held are the new candidates.
+    Each candidate probes only the terms of later clauses, through
+    ``_LazyTermPostings.tf_at`` (decoding just the blocks it falls in),
+    and is dropped as soon as it provably cannot make the result:
+      - MaxScore: its score plus the bounds of its unprobed terms is
+        below the pooled k-th score;
+      - pigeonhole: its matched clauses plus the clauses with a member
+        still unprobed are fewer than msm.
+    The visit stops at the first clause from which no unseen doc can
+    make the result, by the same two tests: the unvisited terms' bounds
+    sum below the k-th score, or fewer than msm clauses keep an
+    unvisited member (a doc outside the first n - msm + 1 clauses can
+    match at most msm - 1). Those clauses are NON-ESSENTIAL: never bulk-
+    decoded, so a needle under AND or OR with stopwords decodes only
+    the stopwords' blocks its candidates fall in.
 
-    term_arr = grp["term"].to_numpy()
-    df_by_term: dict[str, int] = {}
-    for t, d in zip(term_arr, grp["df"].to_numpy()):
-        df_by_term[t] = df_by_term.get(t, 0) + int(d)
-    msm = plan.msm
-    groups = [g for g in ([t for t in cl if t in df_by_term]
-                          for cl in plan.clauses) if g]
-    groups.sort(key=lambda g: (sum(df_by_term[t] for t in g), g[0]))
-    if len(groups) < msm:
-        return _empty_topk()  # shard lacks msm of the query's clauses
-    n_small = len(groups) - msm + 1
-    small, rest = groups[:n_small], groups[n_small:]
-    if sum(df_by_term[t] for g in small for t in g) > 0.33 * dl_arr.size:
-        return _score_shard_dense(grp, idf_map, avgdl, k, base, dl_bytes,
-                                  deleted, plan, dl_arr=dl_arr)
+    Matching is the per-clause count ``_evaluate`` uses — a clause counts
+    once however many members match, and a term shared by clauses
+    scores once — and each result's score is re-added in sorted term
+    order, so results are bit-identical to ``_score_shard_dense``, which
+    takes the shard when :func:`_route` finds nothing worth skipping."""
+    msm = max(plan.msm, 1)
+    df, ub = _shard_bounds(grp, weights, avgdl)
+    clauses = [[t] for t in df] if msm == 1 else [
+        m for m in ([t for t in cl if t in df] for cl in plan.clauses) if m]
+    clauses.sort(key=lambda cl: (sum(df[t] for t in cl), cl))
+    steps, prune = _route(clauses, df, ub, msm, k)
+    if not prune:
+        return _score_shard_dense(grp, weights, avgdl, k, base, dl_bytes,
+                                  deleted, plan)
 
     lazies = _lazy_postings(grp, base)
-
-    parts_d, parts_c = [], []
-    small_docs: list[np.ndarray] = []  # per small CLAUSE: unique doc union
-    # a term shared by several clauses scores ONCE with its folded max
-    # weight (_plan_clauses contract); clause membership below feeds only
-    # the msm count
-    scored: set[str] = set()
-    for g in small:
-        g_docs: list[np.ndarray] = []
-        for t in g:
-            docs, tfs = lazies[t].full()
-            if docs.size:
-                if t not in scored:
-                    scored.add(t)
-                    parts_d.append(docs)
-                    parts_c.append(
-                        idf_map[t] * bm25_tf_term(
-                            tfs.astype(np.float64),
-                            dl_arr[docs - base].astype(np.float64), avgdl,
-                        )
-                    )
-                g_docs.append(docs)
-        small_docs.append(
-            g_docs[0] if len(g_docs) == 1
-            else np.unique(np.concatenate(g_docs)) if g_docs
-            else np.zeros(0, dtype=np.int64)
-        )
-    if not parts_d:
-        return _empty_topk()
-    docs = np.concatenate(parts_d)
-    contrib = np.concatenate(parts_c)
-    order = np.argsort(docs, kind="stable")
-    docs, contrib = docs[order], contrib[order]
-    cands, starts = np.unique(docs, return_index=True)
-    sc = np.add.reduceat(contrib, starts)
-    cnt = np.zeros(cands.size, dtype=np.int64)
-    for dcl in small_docs:
-        if dcl.size:
-            cnt[np.searchsorted(cands, dcl)] += 1
-    dl_c = dl_arr[cands - base].astype(np.float64)
-    hit_cache: dict[str, np.ndarray] = {}
-    for g in rest:
-        g_hit = np.zeros(cands.size, dtype=bool)
-        for t in g:
-            hit = hit_cache.get(t)
-            if hit is None:
-                if t in scored:
-                    # already fully decoded+scored via a small clause:
-                    # membership probe only, no second contribution
-                    docs_t = lazies[t].full()[0]
-                    if docs_t.size:
-                        pos = np.searchsorted(docs_t, cands)
-                        safe = np.minimum(pos, docs_t.size - 1)
-                        hit = (pos < docs_t.size) & (docs_t[safe] == cands)
-                    else:
-                        hit = np.zeros(cands.size, dtype=bool)
-                else:
-                    vals, hit = lazies[t].tf_at(cands)
-                    if hit.any():
-                        sc[hit] += idf_map[t] * bm25_tf_term(
-                            vals[hit], dl_c[hit], avgdl
-                        )
-                    scored.add(t)
-                hit_cache[t] = hit
-            g_hit |= hit
-        if g_hit.any():
-            cnt[g_hit] += 1
-    keep = cnt >= msm
-    if deleted is not None and deleted.size:
-        keep &= ~np.isin(cands, deleted)
-    cands, sc = cands[keep], sc[keep]
-    if cands.size == 0:
-        return _empty_topk()
-    sel = np.lexsort((cands, -sc))[:k]
-    return pd.DataFrame({
-        "doc_id": cands[sel].astype("int64"),
-        "score": sc[sel],
-    })
+    dl_arr = vbyte_decode(dl_bytes).astype(np.float64)
+    pool_d = seen = np.zeros(0, dtype=np.int64)
+    pool_s = np.zeros(0)
+    cut = -math.inf  # the pooled k-th score, less the slack
+    visited: set[str] = set()
+    for i, (new, n_open, bound) in enumerate(steps):
+        if n_open < msm or bound < cut:
+            break
+        docs_i = _doc_union([lazies[t].full()[0] for t in new])
+        cand = docs_i[~np.isin(docs_i, seen, assume_unique=True)] \
+            if seen.size else docs_i
+        seen = _doc_union([seen, docs_i])
+        if deleted is not None and deleted.size:
+            cand = cand[~np.isin(cand, deleted)]
+        # the later clauses a candidate can still match, as their members
+        # outside the visited clauses (a candidate holds none of those)
+        later = [m for m in ([t for t in c if t not in visited]
+                             for c in clauses[i + 1:]) if m]
+        visited.update(new)
+        probe = list(dict.fromkeys(
+            t for c in later for t in c if t not in visited))
+        if not cand.size:
+            continue
+        order = new + probe
+        rem = np.append(np.cumsum([ub[t] for t in order][::-1])[::-1], 0.0)
+        # under OR a candidate's own clause already matches it
+        pend = later if msm > 1 else []
+        todo = np.array([len(c) for c in pend], dtype=int)  # members unread
+        m0 = cand.size
+        idx, sc, dl = np.arange(m0), np.zeros(m0), dl_arr[cand - base]
+        matched = np.zeros((len(pend), m0), dtype=bool)
+        parts = []  # (term, batch positions, contributions)
+        for j in range(len(order) + 1):
+            if j >= len(new):  # new terms read: gate before each probe
+                alive = sc + rem[j] >= cut
+                alive &= 1 + (matched | (todo > 0)[:, None]).sum(0) >= msm
+                if not alive.all():
+                    cand, idx, sc, dl = cand[alive], idx[alive], sc[alive], dl[alive]
+                    matched = matched[:, alive]
+                if j == len(order) or not cand.size:
+                    break
+            t = order[j]
+            vals, hit = lazies[t].tf_at(cand)
+            c = weights[t] * bm25_tf_term(vals[hit], dl[hit], avgdl)
+            sc[hit] += c
+            parts.append((t, idx[hit], c))
+            for r, cl in enumerate(pend):
+                if t in cl:
+                    matched[r] |= hit
+                    todo[r] -= 1
+        if cand.size:
+            acc = np.zeros(m0)
+            for _, pos, c in sorted(parts, key=lambda p: p[0]):
+                acc[pos] += c
+            pool_d = np.concatenate((pool_d, cand))
+            pool_s = np.concatenate((pool_s, acc[idx]))
+            if 0 < k <= pool_s.size:
+                kth = np.partition(pool_s, pool_s.size - k)[pool_s.size - k]
+                keep = pool_s >= kth
+                pool_d, pool_s = pool_d[keep], pool_s[keep]
+                cut = kth - _BOUND_SLACK * kth
+    sel = np.lexsort((pool_d, -pool_s))[:k]
+    return pd.DataFrame({"doc_id": pool_d[sel], "score": pool_s[sel]})

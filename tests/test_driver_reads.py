@@ -173,6 +173,18 @@ def test_warm_lookups_run_no_spark_job(spark, indexes):
         eng.unpersist()
 
 
+def test_cold_topk_resolves_df_on_the_driver(spark, indexes):
+    """An uncached engine's ``topk`` resolves global df with the driver
+    point read too, so no df aggregate and no broadcast of it join the
+    query plan: on the delta index (whose sidecar joins the tombstone
+    mask) every query shape runs the same 6 Spark jobs, against 8 with
+    the in-plan aggregate."""
+    idx, _ = indexes["uncached"]
+    eng = BM25Engine(spark, idx, cache=False)
+    for q in QUERIES:
+        assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 6, q
+
+
 def test_merge_between_check_and_read_reloads_once(spark, indexes, tmp_root,
                                                    monkeypatch):
     """A merge that retires the engine's segment dirs (grace 0) after its

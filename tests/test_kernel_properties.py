@@ -14,16 +14,17 @@ engine's own ``_query_plan`` over an in-memory dictionary, then scored by
 - the clause evaluator ``_evaluate`` in its driver-local form: flat
   per-term arrays with the sparse slot mapping, must_not terms among
   the postings,
-- ``_score_shard_wand`` on OR shapes and ``_score_shard_msm`` on msm
-  shapes,
+- the pruning kernel ``_score_shard_pruned`` on every shape without
+  phrases or a cursor, OR and msm alike,
 
 and each must equal ``OracleIndex.query`` over the live docs on ranks,
 with scores within 1e-9. The loop, the dense kernel and the local form
 also take an optional ``search_after`` cursor drawn from the oracle's
 own ranking, and must then return the oracle's ranking after it. A
-second family of shards puts wand's early exit on the spot: docs the
-head term never reaches win only through the sum of two tail terms,
-each bounded below the pooled k-th score. Docs whose oracle scores lie
+second family of shards puts the pruning kernel's early exit on the
+spot: docs the head term never reaches win only through the sum of two
+tail terms, each bounded below the pooled k-th score. A fixed needle-
+over-stopwords shard checks that the router prunes it. Docs whose oracle scores lie
 within 1e-9 of each other may swap ranks: float sums in a different term order can
 split an exact tie by an ulp.
 """
@@ -34,6 +35,7 @@ from unittest import mock
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from data_prep_opensearch_spark.functions.tokenize import tokenize_simple
@@ -45,9 +47,9 @@ from data_prep_opensearch_spark.operators.postings import (
 )
 from data_prep_opensearch_spark.oracle import OracleIndex
 
-# hot words fill most docs and rare ones few, so wand meets both its
-# pruned path (a rare head over a hot tail) and its dense fallback, and
-# msm both its pigeonhole path and its dense fallback
+# hot words fill most docs and rare ones few, so the pruning kernel
+# meets both its pruned path (a rare head over a hot tail, or a rare
+# clause under msm) and its dense fallback
 VOCAB = {"the": 30, "of": 24, "and": 18, "alpha": 4, "alps": 4, "beta": 4,
          "bet": 3, "gamma": 3, "delta": 1, "deep": 1, "omega": 1, "zeta": 1}
 POOL = [w for w, n in VOCAB.items() for _ in range(n)]
@@ -80,7 +82,7 @@ def shards(draw):
     docs = draw(st.lists(st.lists(st.sampled_from(POOL), max_size=20),
                          min_size=12, max_size=60))
     # two true stopwords, in every doc: their bounds shrink to nothing
-    # beside a rare term's, the regime wand's pruning is built for
+    # beside a rare term's, the regime MaxScore pruning is built for
     texts = {BASE + i: " ".join(["the", "of"] + ws)
              for i, ws in enumerate(docs)}
     deleted = draw(st.sets(st.sampled_from(sorted(texts)), max_size=4))
@@ -90,18 +92,19 @@ def shards(draw):
 
 @st.composite
 def queries(draw, texts: dict[int, str]):
-    """(query, min_should_match) of one of four shapes: OR, a rare
-    needle over hot words (OR), msm, or phrase-bearing; literals lean
+    """(query, min_should_match) of one of five shapes: OR, a rare
+    needle over hot words (OR, or msm so that pigeonhole candidates
+    come from the needle alone), msm, or phrase-bearing; literals lean
     towards rare words."""
     toks = [t for t in (tokenize_simple(x) for x in texts.values())
             if len(t) >= 2]
-    shape = draw(st.sampled_from(["or", "needle", "msm", "phrase"] if toks
-                                 else ["or", "needle", "msm"]))
+    shapes = ["or", "needle", "needle_msm", "msm"]
+    shape = draw(st.sampled_from(shapes + ["phrase"] if toks else shapes))
     word = st.sampled_from(RARE) | st.sampled_from(WORDS)
-    n_lit = draw(st.integers(*{"or": (1, 4), "needle": (0, 0),
-                               "msm": (2, 4), "phrase": (0, 2)}[shape]))
+    n_lit = draw(st.integers(*{"or": (1, 4), "msm": (2, 4),
+                               "phrase": (0, 2)}.get(shape, (0, 0))))
     parts = [draw(word) for _ in range(n_lit)]
-    if shape == "needle":
+    if shape.startswith("needle"):
         parts = [draw(st.sampled_from(RARE)), "the", "of"]
     elif draw(st.booleans()):
         parts.append(draw(st.sampled_from(STEMS)) + "*")
@@ -111,6 +114,7 @@ def queries(draw, texts: dict[int, str]):
     if draw(st.booleans()):
         parts.append("-" + draw(st.sampled_from(WORDS)))
     msm = {"msm": draw(st.sampled_from([2, "all"])),
+           "needle_msm": draw(st.sampled_from([2, "all"])),
            "phrase": draw(st.sampled_from([None, 2, "all"]))}.get(shape)
     if shape != "phrase":
         return " ".join(parts), msm
@@ -199,7 +203,7 @@ def test_kernels_match_oracle(shard, data):
     full = [(d, s) for d, s in oracle.query(q, k=len(texts),
                                             min_should_match=msm)
             if d not in set(deleted)]
-    plan = _MemEngine(oracle)._query_plan(q, "auto", msm, None, None, True)
+    plan = _MemEngine(oracle)._query_plan(q, "auto", msm, None, None)
     if plan is None:
         assert full == [], q
         return
@@ -230,10 +234,15 @@ def test_kernels_match_oracle(shard, data):
                       want, ("local", p.after, q))
     if plan.phrases or plan.neg_phrases:
         return
-    if plan.msm == 1:
-        _assert_ranks(bm25._score_shard_wand(*args), full, ("wand", q))
-    else:
-        _assert_ranks(bm25._score_shard_msm(*args, plan), full, ("msm", q))
+    _assert_ranks(bm25._score_shard_pruned(*args, plan), full, ("pruned", q))
+    # pruning forced past the router: still bit-identical to the dense
+    # kernel, which sums every doc's terms in the same order
+    route = bm25._route
+    with mock.patch.object(bm25, "_route", lambda *a: (route(*a)[0], True)):
+        forced = bm25._score_shard_pruned(*args, plan)
+    pd.testing.assert_frame_equal(
+        forced.reset_index(drop=True),
+        bm25._score_shard_dense(*args, plan, ir).reset_index(drop=True))
 
 
 @st.composite
@@ -265,15 +274,38 @@ def tail_shards(draw):
           suppress_health_check=[HealthCheck.too_slow])
 @given(shard=tail_shards())
 def test_wand_early_exit_keeps_tail_bound(shard):
+    """Under OR and under msm 2 alike."""
     texts, q = shard
     grp, oracle = _encode(texts, [], "")
-    full = oracle.query(q, k=len(texts))
-    plan = _MemEngine(oracle)._query_plan(q, "wand", None, None, None, True)
     n, avgdl = oracle.n_docs, oracle.avgdl
+    for msm in (None, 2):
+        full = oracle.query(q, k=len(texts), min_should_match=msm)
+        plan = _MemEngine(oracle)._query_plan(q, "wand", msm, None, None)
+        gdf = {t: oracle.df[t] for t in plan.terms}
+        sub = grp[grp["term"].isin(plan.terms)]
+        im = {t: bm25.idf(n, gdf[t]) for t in plan.terms}
+        _assert_ranks(bm25._score_shard_pruned(
+            sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[0], None, plan),
+            full, ("pruned", msm, q))
+        outs = list(bm25._score_group(grp, [plan], gdf, n, avgdl, K))
+        _assert_ranks(outs[0], full, ("loop", msm, q))
+
+
+@pytest.mark.parametrize("msm", [None, "all"])
+def test_router_prunes_needle_over_stopwords(msm):
+    """``deep the of`` over a shard where the two stopwords fill every
+    doc and the needle ten: ``auto`` scores it without the dense
+    evaluator, under OR and under msm alike."""
+    texts = {BASE + i: "the of" + (" deep" if i % 20 == 0 else "")
+             + " and" * (i % 7) for i in range(200)}
+    grp, oracle = _encode(texts, [], "")
+    q = "deep the of"
+    plan = _MemEngine(oracle)._query_plan(q, "auto", msm, None, None)
     gdf = {t: oracle.df[t] for t in plan.terms}
-    sub = grp[grp["term"].isin(plan.terms)]
-    im = {t: bm25.idf(n, gdf[t]) for t in plan.terms}
-    _assert_ranks(bm25._score_shard_wand(
-        sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[0]), full, ("wand", q))
-    outs = list(bm25._score_group(grp, [plan], gdf, n, avgdl, K))
-    _assert_ranks(outs[0], full, ("loop", q))
+    with mock.patch.object(bm25, "_score_shard_dense",
+                           wraps=bm25._score_shard_dense) as dense:
+        outs = list(bm25._score_group(grp, [plan], gdf, oracle.n_docs,
+                                      oracle.avgdl, K))
+    assert dense.call_count == 0
+    _assert_ranks(outs[0], oracle.query(q, k=len(texts),
+                                        min_should_match=msm), ("loop", q))

@@ -1,7 +1,7 @@
 """Focused tests for the round-6 optimization internals: the bucket
 combination pair generator, capped-vs-join pair-path parity, the columnar
 LSH band hashes, the columnar declarative BM25 twin, and warm-vs-cold
-(driver-resolved vs in-plan idf) engine parity."""
+(cached vs uncached segments) engine parity."""
 
 from __future__ import annotations
 
@@ -150,9 +150,11 @@ def test_columnar_bm25_matches_explode_twin(spark, docs_df):
 
 
 def test_warm_vs_cold_engine_parity(spark, tmp_path, docs_df):
-    """cache=True (driver-resolved idf) and cache=False (in-plan gdf)
-    engines must be rank- and score-identical across clause shapes, on
-    every distributed entry point: topk, topk_batch and match_scores."""
+    """cache=True (segments cached co-partitioned by shard) and
+    cache=False (a cold scan, shuffled by shard per query) engines must
+    be rank- and score-identical across clause shapes, on every
+    distributed entry point: topk, topk_batch and match_scores. Both
+    resolve global df with the same driver-side point read."""
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
     from data_prep_opensearch_spark.operators.index_build import build_index
 
