@@ -17,7 +17,7 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
   3. global df per term, read on the driver (warm or cold engine) with
      a row-group-pruned pyarrow point read of the segment files (the
      dictionary step X10 in SURVEY.md §4) — no Spark job.
-  4. join the per-shard doclen sidecar (small, broadcast).
+  4. the same filter keeps each touched shard's sidecar row (term NULL).
   5. per-shard scoring in mapInPandas -> local top-k per shard: one
      exhaustive evaluator (phrases, the search_after cursor, or
      ``scorer="dense"``), else one exact pruning kernel — block-max
@@ -355,17 +355,16 @@ BATCH_TOPK_SCHEMA = T.StructType([
 ])
 
 
-def _sidecar_of(grp: pd.DataFrame) -> tuple[int, bytes, np.ndarray | None]:
-    """(base, dl_bytes, deleted) from a shard group's joined sidecar
-    columns (identical on every row of the group — read once)."""
-    first = grp.iloc[0]
-    del_val = first["deleted"]
-    deleted = (
-        None
-        if del_val is None or (isinstance(del_val, float) and pd.isna(del_val))
-        else np.asarray(del_val, dtype=np.int64)
-    )
-    return int(first["base"]), bytes(first["dl_bytes"]), deleted
+def _sidecar_of(grp: pd.DataFrame, shard: int) -> tuple[int, bytes, np.ndarray | None]:
+    """(base, dl_bytes, deleted) from the sidecar row (``term`` NULL)
+    among ``shard``'s rows."""
+    side = grp[grp["term"].isna()]
+    if side.empty:
+        raise ValueError(f"shard {shard} has segment rows but no doclens "
+                         "row; the doclens must hold one row per shard")
+    base, dl_bytes, deleted = side.iloc[0][["base", "dl_bytes", "deleted"]]
+    return int(base), bytes(dl_bytes), (
+        None if deleted is None else np.asarray(deleted, dtype=np.int64))
 
 
 def load_meta(index_dir: str) -> dict:
@@ -436,9 +435,9 @@ class _SegmentReader:
             raise SegmentsRetired(str(exc)) from exc
 
     def dfs(self, cond: pc.Expression) -> pa.Table:
-        """(term, df) with df summed over shards and generations."""
-        return self.read(cond, ["term", "df"]).group_by("term").aggregate(
-            [("df", "sum")]).rename_columns(["term", "df"])
+        """(term, df, shards): df summed over shards and generations."""
+        return self.read(cond, ["term", "shard", "df"]).group_by("term").aggregate(
+            [("df", "sum"), ("shard", "distinct")]).rename_columns(["term", "df", "shards"])
 
 
 def _one_snapshot(method):
@@ -470,16 +469,15 @@ class BM25Engine:
         term dictionary step X10 of SURVEY.md §4): df resolution, prefix
         expansion and the driver-local tier's posting fetches are
         row-group-pruned point reads on the term-sorted files, with no
-        Spark job; resolved dfs are cached per term,
-      - segments CACHED pre-partitioned by shard (so a query is filter +
-        mapInPandas with NO shuffle),
-      - the per-shard (doclen, masked-ids) sidecar as a one-row-per-shard
-        DataFrame cached CO-PARTITIONED with the segments — queries join
-        it by shard with no exchange and no driver transit.
-    A warm ``topk`` then runs 2 Spark jobs: the scoring job
-      filter(term IN ...) -> sidecar join -> per-shard top-k ->
-      TakeOrderedAndProject,
-    and the per-query broadcast of the cached sidecar it joins.
+        Spark job; resolved dfs are cached per term with the shards
+        that hold it,
+      - ONE scan frame CACHED pre-partitioned by shard: the segment
+        rows plus, per shard, one sidecar row (term NULL) carrying its
+        doclens and masked ids.
+    A warm ``topk`` then runs 1 Spark job:
+      filter(term IN ... OR term IS NULL, shard IN touched) ->
+      mapInPandas (per-shard top-k) -> TakeOrderedAndProject,
+    with no join, no broadcast and no shuffle.
 
     ``topk``, ``match_scores`` and ``topk_batch`` plan through one
     ``_shard_scored``. Per shard, every query runs the ONE clause
@@ -505,14 +503,14 @@ class BM25Engine:
         full-corpus stats; superseded docs are excluded from results).
 
         Sidecar discipline (round-2 review item): the per-shard doclen
-        bytes and masked-id arrays NEVER transit the driver. They form a
-        one-row-per-shard DataFrame, cached co-partitioned with the
-        segment table on ``shard``, and joined onto the filtered segment
-        rows at query time — a colocated join (both sides hash-
-        partitioned on shard, no exchange). At 10^12 docs (thousands of
-        shards × ~MB of dl_bytes each) the round-2 collect+broadcast was
-        GBs through the driver; this path is one shuffle at init and
-        zero at query time.
+        bytes and masked-id arrays NEVER transit the driver. Each shard's
+        are one row (term NULL) of the scan frame, partitioned on
+        ``shard`` with its segment rows, and a query keeps only the rows
+        of the shards holding its terms (shard sets come with the df
+        read) — no join, no exchange. At 10^12 docs (thousands of shards
+        × ~MB of dl_bytes each) the round-2 collect+broadcast was GBs
+        through the driver; this path is one shuffle at init and zero
+        at query time.
 
         Staleness discipline (round-4 review item): every public query
         entry point stats the index's commit artifacts first
@@ -588,17 +586,19 @@ class BM25Engine:
             sidecar = sidecar.withColumn(
                 "deleted", F.lit(None).cast(T.ArrayType(T.LongType()))
             )
+        # one scan frame: each shard's sidecar row rides with its rows
+        scan = seg.unionByName(sidecar, allowMissingColumns=True)
 
         # the warm cache stays position-free: pos_bytes would roughly
         # double the cached footprint and only phrase queries read it.
-        # A positional twin (self._seg_pos) is cached lazily on the
+        # A positional twin (self._scan_pos) is cached lazily on the
         # first phrase query.
         if "pos_bytes" in seg.columns:
-            self._seg_all = seg
-            seg = seg.drop("pos_bytes")
+            self._scan_all = scan
+            scan = scan.drop("pos_bytes")
         else:
-            self._seg_all = None
-        self._seg_pos = None
+            self._scan_all = None
+        self._scan_pos = None
 
         self._shard_partitioned = cache
         if cache:
@@ -607,26 +607,23 @@ class BM25Engine:
             # tasks (128-shard index on 32 cores = 4 waves of pure
             # scheduling overhead — measured 3x the warm p50). Multiple
             # shards hash into one partition; score_partition already
-            # groups by shard within a partition. Sidecar uses the SAME
-            # partitioner, so the per-query join stays exchange-free.
+            # groups by shard within a partition.
             n_part = min(
                 max(spark.sparkContext.defaultParallelism, 1),
                 self.meta["n_shards"],
             )
             self._n_part = n_part
-            self.seg = seg.repartition(n_part, "shard").cache()
-            self.seg.count()
-            self.sidecar = sidecar.repartition(n_part, "shard").cache()
-            self.sidecar.count()
-        else:
-            self.seg = seg
-            self.sidecar = sidecar
+            scan = scan.repartition(n_part, "shard").cache()
+            scan.count()
+        self._scan = scan
+        # the term rows alone, for the dictionary readers
+        self.seg = scan.filter(F.col("term").isNotNull()).drop("base", "dl_bytes", "deleted")
         # term dictionary: resolved LAZILY per query by a driver-side
         # point read of the (term-sorted) segment files, pruned on term
         # min/max stats — never a full-vocabulary collect (the round-1
         # toPandas() pulled the whole vocab to the driver, which cannot
-        # exist at 10^12 docs). Warm terms are cached.
-        self._df_cache: dict[str, int] = {}
+        # exist at 10^12 docs). Warm terms are cached with their shards.
+        self._df_cache: dict[str, tuple[int, frozenset[int]]] = {}
         # prefix-expansion cache: (stem, cap) -> [(term, df), ...]
         self._prefix_cache: dict[tuple[str, int], list[tuple[str, int]]] = {}
         # driver-local latency tier (topk_local): per term, fully decoded
@@ -641,17 +638,16 @@ class BM25Engine:
         self._local_bytes = 0
 
     def unpersist(self) -> None:
-        """Release the cached segment + sidecar partitions (blocking).
+        """Release the cached scan partitions (blocking).
         A long-lived session that retires an engine must call this, or
         the storage-memory occupancy taxes every later job's GC — the
         r3 bench measured 3x walls on unrelated aggregation queries run
         after a 500k-doc engine was left cached in-session."""
         if self._shard_partitioned:
-            self.seg.unpersist(blocking=True)
-            self.sidecar.unpersist(blocking=True)
-            if self._seg_pos is not None:
-                self._seg_pos.unpersist(blocking=True)
-        self._seg_pos = None
+            self._scan.unpersist(blocking=True)
+            if self._scan_pos is not None:
+                self._scan_pos.unpersist(blocking=True)
+        self._scan_pos = None
         self._df_cache.clear()
         self._prefix_cache.clear()
         self._local_postings.clear()
@@ -659,23 +655,22 @@ class BM25Engine:
         self._local_deleted = np.zeros(0, dtype=np.int64)
         self._local_bytes = 0
 
-    def _seg_positional(self) -> DataFrame:
-        """Segment scan INCLUDING pos_bytes, for phrase queries — cached
-        lazily with the same shard partitioning as ``self.seg`` so its
-        sidecar join stays exchange-free. Kept separate from the warm
-        cache: positions roughly double the bytes and only phrase
-        queries read them."""
+    def _scan_positional(self) -> DataFrame:
+        """The scan frame INCLUDING pos_bytes, sidecar rows and all, for
+        phrase queries — cached lazily with the same shard partitioning
+        as ``self._scan``. Kept separate from the warm cache: positions
+        roughly double the bytes and only phrase queries read them."""
         self._require_positions()
-        if self._seg_pos is None:
-            sp = self._seg_all
+        if self._scan_pos is None:
+            sp = self._scan_all
             if self._shard_partitioned:
                 sp = sp.repartition(self._n_part, "shard").cache()
                 sp.count()
-            self._seg_pos = sp
-        return self._seg_pos
+            self._scan_pos = sp
+        return self._scan_pos
 
     def _require_positions(self) -> None:
-        if not self.meta.get("positions") or self._seg_all is None:
+        if not self.meta.get("positions") or self._scan_all is None:
             raise ValueError(
                 "phrase query requires an index built with positions=True "
                 f"({self.index_dir} has none)"
@@ -685,16 +680,22 @@ class BM25Engine:
     def resolve_df(self, terms: list[str]) -> dict[str, int]:
         """Global df per term (summed over shards/generations) via one
         driver-side point read for cache misses; absent terms resolve
-        to 0."""
-        missing = [t for t in terms if t not in self._df_cache]
+        to 0. The read also caches each term's shard set."""
+        cache = self._df_cache
+        if len(cache) > 4_000_000:  # bound driver memory
+            cache.clear()
+        missing = [t for t in terms if t not in cache]
         if missing:
             got = self._segments.dfs(term_point_filter(missing))
-            found = dict(zip(got["term"].to_pylist(), got["df"].to_pylist()))
-            if len(self._df_cache) > 4_000_000:  # bound driver memory
-                self._df_cache.clear()
+            self._seed_dfs(zip(*(c.to_pylist() for c in got.columns)))
             for t in missing:
-                self._df_cache[t] = found.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+                cache.setdefault(t, (0, frozenset()))
+        return {t: cache[t][0] for t in terms}
+
+    def _seed_dfs(self, rows) -> None:
+        """Cache the (term, df, shards, ...) rows of a dictionary read."""
+        for t, d, shards, *_ in rows:
+            self._df_cache.setdefault(t, (int(d), frozenset(shards)))
 
     # Lucene-style default cap on multi-term expansion
     MAX_EXPANSIONS = 50
@@ -719,10 +720,9 @@ class BM25Engine:
         if key not in self._prefix_cache:
             got = self._segments.dfs(term_prefix_filter(stem)).sort_by(
                 [("df", "descending"), ("term", "ascending")]).slice(0, cap)
-            exp = list(zip(got["term"].to_pylist(), got["df"].to_pylist()))
-            self._prefix_cache[key] = exp
-            for t, d in exp:  # expansion dfs seed the term-df cache
-                self._df_cache.setdefault(t, d)
+            rows = list(zip(*(c.to_pylist() for c in got.columns)))
+            self._prefix_cache[key] = [(t, d) for t, d, _ in rows]
+            self._seed_dfs(rows)  # expansions seed the term-df cache
         return self._prefix_cache[key]
 
     def expand_fuzzy(
@@ -764,7 +764,8 @@ class BM25Engine:
             rows = (
                 self.seg.filter(cond)
                 .groupBy("term")
-                .agg(F.sum("df").alias("df"))
+                .agg(F.sum("df").alias("df"),
+                     F.collect_set("shard").alias("shards"))
                 .withColumn(
                     "dist",
                     F.levenshtein(F.col("term"), F.lit(stem), max_edits),
@@ -776,8 +777,7 @@ class BM25Engine:
             )
             exp = [(r["term"], int(r["df"]), int(r["dist"])) for r in rows]
             self._prefix_cache[key] = exp
-            for t, d, _ in exp:
-                self._df_cache.setdefault(t, d)
+            self._seed_dfs(rows)
         return self._prefix_cache[key]
 
     def expand_wildcard(
@@ -809,21 +809,21 @@ class BM25Engine:
                 re.compile(rx)
             except re.error as exc:
                 raise ValueError(f"bad pattern {pattern!r}: {exc}") from None
-            sc = self.seg.select("term", "df")
+            sc = self.seg.select("term", "shard", "df")
             if lit:
                 sc = sc.filter(F.col("term").startswith(lit))
             rows = (
                 sc.filter(F.col("term").rlike(f"^(?:{rx})$"))
                 .groupBy("term")
-                .agg(F.sum("df").alias("df"))
+                .agg(F.sum("df").alias("df"),
+                     F.collect_set("shard").alias("shards"))
                 .orderBy(F.desc("df"), F.asc("term"))
                 .limit(cap)
                 .collect()
             )
             exp = [(r["term"], int(r["df"])) for r in rows]
             self._prefix_cache[key] = exp
-            for t, d in exp:
-                self._df_cache.setdefault(t, d)
+            self._seed_dfs(rows)
         return self._prefix_cache[key]
 
     @staticmethod
@@ -987,6 +987,13 @@ class BM25Engine:
     LOCAL_MAX_POSTINGS = 2_000_000
     LOCAL_CACHE_BYTES = 256 << 20
 
+    def _sidecar_frame(self, shards: list[int]) -> pd.DataFrame:
+        """The listed shards' sidecar rows — the scan frame's NULL-term
+        rows — on the driver: one Spark job."""
+        return self._scan.filter(
+            F.col("term").isNull() & F.col("shard").isin(shards)
+        ).select("term", "shard", "base", "dl_bytes", "deleted").toPandas()
+
     def _load_local_sidecars(self, s_missing: list[int]) -> None:
         """Pull the listed shards' doclen/tombstone sidecars to the driver
         and refresh the merged tombstone union. Sidecar arrays count
@@ -995,16 +1002,11 @@ class BM25Engine:
         cache would make LOCAL_CACHE_BYTES a fiction."""
         if not s_missing:
             return
-        for r in self.sidecar.filter(F.col("shard").isin(s_missing)).collect():
-            dd = r.asDict()
-            deleted = (
-                None if dd["deleted"] is None
-                else np.asarray(dd["deleted"], dtype=np.int64)
-            )
-            dl_arr = vbyte_decode(bytes(dd["dl_bytes"])).astype(np.float64)
-            side = (int(dd["base"]), dl_arr, deleted)
-            self._local_side[int(dd["shard"])] = side
-            self._local_bytes += _nbytes(side)
+        side = self._sidecar_frame(s_missing)
+        for shard in s_missing:
+            base, dl, deleted = _sidecar_of(side[side["shard"] == shard], shard)
+            self._local_side[shard] = (base, vbyte_decode(dl).astype(np.float64), deleted)
+            self._local_bytes += _nbytes(self._local_side[shard])
         self._local_deleted = _doc_union(
             d for _, _, d in self._local_side.values())
 
@@ -1202,14 +1204,13 @@ class BM25Engine:
         df_map = self.resolve_df(terms + pterms)
         n_docs, avgdl = int(self.meta["n_docs"]), float(self.meta["avgdl"])
 
-        side = self.sidecar.filter(F.col("shard") == shard).collect()
-        if not side:
+        side = self._sidecar_frame([shard])
+        if side.empty:
             return empty
-        sd = side[0].asDict()
-        base = int(sd["base"])
-        if sd["deleted"] is not None and doc_id in set(sd["deleted"]):
+        base, dl_bytes, deleted = _sidecar_of(side, shard)
+        if deleted is not None and doc_id in deleted:
             return empty
-        dl_arr = vbyte_decode(bytes(sd["dl_bytes"]))
+        dl_arr = vbyte_decode(dl_bytes)
         off = doc_id - base
         if not 0 <= off < dl_arr.shape[0]:
             return empty
@@ -1424,22 +1425,19 @@ class BM25Engine:
         n_docs, avgdl = int(self.meta["n_docs"]), float(self.meta["avgdl"])
         keff = (1 << 31) if k is None else k
         terms = {t for p in live for t in p.terms}
-        positional = any(p.phrases or p.neg_phrases for p in live)
-        seg_src = self._seg_positional() if positional else self.seg
-        seg = seg_src.filter(F.col("term").isin(
-            sorted(terms.union(*(p.negs for p in live)))))
-        df_map = self.resolve_df(sorted(terms))
+        rows = sorted(terms.union(*(p.negs for p in live)))
+        df_map = self.resolve_df(rows)
+        # only shards holding a positive term can score: only their rows
+        # and sidecar rows cross into the workers
+        touched = sorted(set().union(*(self._df_cache[t][1] for t in terms)))
+        scan = (self._scan_positional() if any(p.phrases or p.neg_phrases
+                                               for p in live) else self._scan)
+        seg = scan.filter(F.col("shard").isin(touched) & (
+            F.col("term").isin(rows) | F.col("term").isNull()))
         if not self._shard_partitioned:
-            # cold path: co-locate each shard's rows (the filtered set is
-            # tiny — <= |terms| rows per shard — so this shuffle is cheap)
+            # cold path: co-locate each shard's rows and sidecar row (the
+            # filtered set is tiny, so this one exchange is cheap)
             seg = seg.repartition(F.col("shard"))
-        # per-shard sidecar join: no full-corpus shuffle on any path.
-        # At sandbox scale Catalyst broadcasts the (tiny, cached) sidecar
-        # per query (PLANS.md §warm: InMemoryTableScan -> BHJ -> mapInPandas
-        # -> TakeOrdered, zero data shuffles); past the broadcast threshold
-        # (thousands of shards x ~MB dl_bytes) it falls back to a join on
-        # the two caches' SHARED hash partitioning — still exchange-free.
-        seg = seg.join(self.sidecar, "shard", "inner")
 
         def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # a shard's rows can span Arrow batches: consume the WHOLE
@@ -1465,9 +1463,9 @@ class BM25Engine:
         (query_id, doc_id, score); query_id = position in ``queries``).
 
         Warm single-query latency on a small index is planning and
-        job-scheduling bound: a warm ``topk`` (2 jobs, ~0.25s wall on
-        local[2]) spends ~200ms of CPU in the JVM against ~25ms in the
-        Python workers and ~15ms on the driver — batching amortizes the
+        job-scheduling bound: a warm ``topk`` (1 job) spends most of its
+        CPU in the JVM, against ~25ms in the Python workers and ~15ms on
+        the driver — batching amortizes the
         planning and scheduling: all queries' terms union into one
         segment filter, every (shard, query) pair scores inside the same
         mapInPandas pass (``_shard_scored``, the plan ``topk`` uses),
@@ -1579,14 +1577,14 @@ def _score_group(
     grp: pd.DataFrame, plans: list[_QueryPlan | None], gdf: dict[str, int],
     n_docs: int, avgdl: float, k: int,
 ) -> Iterator[pd.DataFrame]:
-    """One shard's rows (joined with its sidecar) -> (query_id, doc_id,
+    """One shard's rows (its sidecar row among them) -> (query_id, doc_id,
     score) per planned query; query_id = position in ``plans``.
 
     must_not docs ARE per-query tombstones, and every kernel honors
     ``deleted`` — so exclusion happens BEFORE top-k (a masked doc is
     replaced by the next-best, never dropped from a shorter result).
     The shard's exclusion postings are decoded ONCE for every query."""
-    base, dl_bytes, deleted = _sidecar_of(grp)
+    base, dl_bytes, deleted = _sidecar_of(grp, grp["shard"].iloc[0])
     all_negs = {t for p in plans if p is not None for t in p.negs}
     neg_docs: dict[str, np.ndarray] = {}
     if all_negs:

@@ -225,7 +225,7 @@ def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
 def write_doclens(frame: DataFrame, path: str) -> None:
     """Write a doclen sidecar dir for publishing and assert it holds one
     row per shard: ``read_doclens``' single-dir fast path and the
-    engine's per-shard sidecar join rely on it. The check reads the
+    engine's one sidecar row per shard rely on it. The check reads the
     written files' ``shard`` column on the driver (no Spark job)."""
     frame.write.mode("overwrite").parquet(path)
     shards = pads.dataset(path, format="parquet").to_table(

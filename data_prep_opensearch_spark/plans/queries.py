@@ -400,8 +400,11 @@ def _engine_topk_to_external(topk: DataFrame, spark: SparkSession,
 )
 def ft_bm25_engine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL engine under the oracle: build the segment index from the
-    documents table, answer with block-max WAND, map internal docIDs back.
-    Same oracle SQL as ft_bm25_topk — the engine is rank-identical."""
+    documents table, answer with the pruning kernel
+    (``_score_shard_pruned``: block-max MaxScore, which ``_route`` hands
+    to the exhaustive evaluator on shards where nothing is skippable),
+    map internal docIDs back. Same oracle SQL as ft_bm25_topk — the
+    engine is rank-identical."""
     from data_prep_opensearch_spark.operators.bm25 import query_topk
 
     index_dir = _ensure_docs_index(spark, sf_dir)
@@ -433,10 +436,13 @@ def ft_bm25_msm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ft_bm25_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure-AND top-k on the SEGMENT ENGINE (min_should_match="all"):
-    candidates come from the pigeonhole scorer — the rarest posting list
-    is decoded fully, every other term is probed block-lazily at
-    candidate positions only. Oracle: same BM25 SQL with a
-    HAVING count(*) = n clause gate."""
+    the pruning kernel (``_score_shard_pruned``) decodes the rarest
+    clause fully for the candidates and probes every other term
+    block-lazily at candidate docs only; its pigeonhole count gate drops
+    a candidate once the clauses still unprobed cannot complete it, and
+    ``_route`` hands a shard to the exhaustive evaluator when nothing is
+    skippable. Oracle: same BM25 SQL with a HAVING count(*) = n clause
+    gate."""
     from data_prep_opensearch_spark.operators.bm25 import query_topk
 
     index_dir = _ensure_docs_index(spark, sf_dir)
@@ -857,8 +863,11 @@ def ft_bm25_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ft_bm25_prefix_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`key s*` with min_should_match="all": a doc must contain `key` AND
     at least one capped expansion of `s*` — the prefix clause counts once
-    however many expansions match. Routed to the clause-general pigeonhole
-    scorer (candidates from the rarer clause group's union)."""
+    however many expansions match. Scored by the pruning kernel
+    (``_score_shard_pruned``), whose two clauses are `key` and the whole
+    expansion group: the rarer clause's union gives the candidates and
+    the pigeonhole count gate needs both; ``_route`` hands a shard to the
+    exhaustive evaluator when nothing is skippable."""
     from data_prep_opensearch_spark.operators.bm25 import query_topk
 
     index_dir = _ensure_docs_index(spark, sf_dir)

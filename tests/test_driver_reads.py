@@ -1,12 +1,14 @@
 """The engine's driver-side segment reads (``resolve_df``,
 ``expand_prefix``, the local tier's posting fetch) against the Spark
-aggregates they replace, their Spark job counts, and their behaviour
-when a concurrent merge retires the files they read.
+aggregates they replace, their Spark job counts (and the engine
+query's), and their behaviour when a concurrent merge retires the files
+they read.
 
-Four indexes: a base build plus a delta generation with tombstones; the
-same base in the legacy layout (no manifest, a ``segments/`` dir); the
-delta index after ``merge_segments(apply_deletes=True)``; and the delta
-index opened with ``cache=False``.
+Indexes: a clean base build; the base plus a delta generation with
+tombstones; the same base in the legacy layout (no manifest, a
+``segments/`` dir); the delta index after
+``merge_segments(apply_deletes=True)``; and the delta index opened with
+``cache=False``.
 """
 
 from __future__ import annotations
@@ -15,6 +17,9 @@ import itertools
 import os
 import shutil
 
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,7 +76,7 @@ def indexes(spark, tmp_root):
     assert len(mf.load_manifest(delta)["segments"]) == 2
     shutil.copytree(delta, merged)
     merge_segments(spark, merged, apply_deletes=True)
-    return {"delta": (delta, True), "legacy": (legacy, True),
+    return {"base": (base, True), "delta": (delta, True), "legacy": (legacy, True),
             "merged": (merged, True), "uncached": (delta, False)}
 
 
@@ -176,13 +181,85 @@ def test_warm_lookups_run_no_spark_job(spark, indexes):
 def test_cold_topk_resolves_df_on_the_driver(spark, indexes):
     """An uncached engine's ``topk`` resolves global df with the driver
     point read too, so no df aggregate and no broadcast of it join the
-    query plan: on the delta index (whose sidecar joins the tombstone
-    mask) every query shape runs the same 6 Spark jobs, against 8 with
-    the in-plan aggregate."""
+    query plan, and the sidecar rows are unioned in rather than joined:
+    on the delta index every query shape runs the same 5 Spark jobs —
+    the doclens override window's exchange, the tombstone aggregate's
+    exchange and its broadcast onto the doclens rows, the
+    ``repartition(shard)`` exchange, and the scoring stage."""
     idx, _ = indexes["uncached"]
     eng = BM25Engine(spark, idx, cache=False)
     for q in QUERIES:
-        assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 6, q
+        assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 5, q
+
+
+@pytest.mark.parametrize("name", ["base", "delta"])
+def test_warm_topk_runs_one_spark_job(spark, indexes, name):
+    """Each shard's sidecar row rides in the cached scan frame, so a warm
+    ``topk`` is one job (filter -> mapInPandas -> TakeOrderedAndProject)
+    on the clean index and on the tombstoned delta index alike. A
+    shape's first use may run more: its prefix expansion, or the
+    positional twin's cache."""
+    idx, _ = indexes[name]
+    eng = BM25Engine(spark, idx, cache=True)
+    try:
+        for q in QUERIES:
+            eng.topk(q, 10).collect()
+            assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 1, q
+    finally:
+        eng.unpersist()
+
+
+def test_needle_query_reads_one_sidecar_row(spark, indexes, monkeypatch):
+    """A query whose terms sit in one shard sends the scorer that shard's
+    sidecar row alone, not one per shard of the index."""
+    idx, _ = indexes["delta"]
+    eng = BM25Engine(spark, idx, cache=True)
+    try:
+        needle = "needle0"  # one live doc (needle1's is tombstoned)
+        got = eng._segments.dfs(term_point_filter([needle]))
+        assert len(got["shards"][0]) == 1 < eng.meta["n_shards"]
+        frames = []
+        real = type(eng._scan).mapInPandas
+
+        def capture(frame, *args, **kwargs):
+            frames.append(frame)
+            return real(frame, *args, **kwargs)
+        monkeypatch.setattr(type(eng._scan), "mapInPandas", capture)
+        assert eng.topk(needle, 10).collect()
+        (frame,) = frames
+        assert frame.filter(F.col("term").isNull()).count() == 1
+        assert frame.select("shard").distinct().count() == 1
+    finally:
+        eng.unpersist()
+
+
+def test_shard_without_doclens_row_raises(spark, indexes, tmp_root):
+    """A shard that has segment rows but no doclens row fails the query
+    with an error naming the shard, on every tier; its docs are never
+    dropped from the results silently."""
+    idx = os.path.join(tmp_root, "driver_reads", "no_doclens_row")
+    shutil.copytree(indexes["base"][0], idx)
+    (rel,) = mf.load_manifest(idx)["doclens"]
+    path = os.path.join(idx, rel)
+    table = pads.dataset(path, format="parquet").to_table()
+    for f in os.listdir(path):
+        if f.endswith(".parquet"):
+            os.remove(os.path.join(path, f))
+    victim = 2
+    pq.write_table(table.filter(pc.field("shard") != victim),
+                   os.path.join(path, "part-0.parquet"))
+    msg = f"shard {victim} has segment rows but no doclens row"
+    for cache in (True, False):
+        eng = BM25Engine(spark, idx, cache=cache)
+        try:
+            with pytest.raises(Exception, match=f"ValueError: {msg}"):
+                eng.topk("import", 10).collect()
+            assert eng.topk("zzz_absent", 10).collect() == []
+        finally:
+            eng.unpersist()
+    eng = BM25Engine(spark, idx, cache=False)
+    with pytest.raises(ValueError, match=msg):
+        eng.topk_local("import", 10, as_pandas=True)
 
 
 def test_merge_between_check_and_read_reloads_once(spark, indexes, tmp_root,

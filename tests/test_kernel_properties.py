@@ -35,6 +35,7 @@ from unittest import mock
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -138,8 +139,8 @@ def queries(draw, texts: dict[int, str]):
 
 
 def _encode(texts: dict[int, str], deleted: list[int], split: str):
-    """The shard's segment rows joined with its sidecar, as the query
-    job's per-shard group sees them."""
+    """The shard's segment rows followed by its sidecar row (term NULL),
+    as the query job's per-shard group sees them."""
     oracle = OracleIndex(texts)
     dl = np.array([oracle.doclen[d] for d in sorted(texts)], dtype=np.int64)
     side = {"shard": 3, "base": BASE,
@@ -163,15 +164,18 @@ def _encode(texts: dict[int, str], deleted: list[int], split: str):
                     "block_first": meta.first, "block_last": meta.last,
                     "block_max_tf": meta.max_tf, "block_min_dl": meta.min_dl,
                     "block_doc_off": meta.doc_off, "block_tf_off": meta.tf_off,
-                    **side,
+                    "shard": 3,
                 })
-    return pd.DataFrame(rows), oracle
+    rows.append(side)
+    cols = dict.fromkeys(c for r in rows for c in r)  # Arrow's null forms
+    return pa.table({c: [r.get(c) for r in rows] for c in cols}).to_pandas(), oracle
 
 
 def _local_postings(grp: pd.DataFrame, terms) -> dict[str, tuple]:
     """The driver-local tier's cache form of ``terms``: flat (docs, float
     tfs, dls, positions) per term, empty for a term the shard lacks."""
-    dl = postings.vbyte_decode(grp["dl_bytes"].iloc[0]).astype(np.float64)
+    dl = postings.vbyte_decode(grp["dl_bytes"].iloc[-1]).astype(np.float64)
+    grp = grp[grp["term"].notna()]
     dec = bm25._decode_group(grp, BASE, set(grp["term"]))
     empty = np.zeros(0, np.int64)
     return {t: (d, tf.astype(np.float64), dl[d - BASE], pos)
@@ -214,7 +218,7 @@ def test_kernels_match_oracle(shard, data):
     # the kernels directly: must_not docs join the tombstones
     excl = set(deleted).union(*(
         (d for d, _ in oracle.postings.get(t, [])) for t in plan.negs))
-    args = (sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[0],
+    args = (sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[-1],
             np.array(sorted(excl), dtype=np.int64))
     local = _local_postings(grp, plan.terms + plan.negs)
     cases = [(plan, full)]
@@ -285,7 +289,7 @@ def test_wand_early_exit_keeps_tail_bound(shard):
         sub = grp[grp["term"].isin(plan.terms)]
         im = {t: bm25.idf(n, gdf[t]) for t in plan.terms}
         _assert_ranks(bm25._score_shard_pruned(
-            sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[0], None, plan),
+            sub, im, avgdl, K, BASE, grp["dl_bytes"].iloc[-1], None, plan),
             full, ("pruned", msm, q))
         outs = list(bm25._score_group(grp, [plan], gdf, n, avgdl, K))
         _assert_ranks(outs[0], full, ("loop", msm, q))

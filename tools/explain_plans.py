@@ -83,11 +83,12 @@ def main() -> None:
     topk = eng.topk("import def needle0", 10)
     out.append(f"\n## bm25_engine_topk (cold: segment scan + shard repartition)\n\n```\n{_plan_text(topk)}\n```\n")
 
-    # warm engine: cached co-partitioned seg + sidecar -> the per-query
-    # join must show NO Exchange above the InMemoryTableScans
+    # warm engine: one cached scan frame (segment rows + per-shard
+    # sidecar rows) -> the plan must show NO Exchange and no join above
+    # the InMemoryTableScan
     eng_w = BM25Engine(spark, idx, cache=True)
     topk_w = eng_w.topk("import def needle0", 10)
-    out.append(f"\n## bm25_engine_topk (warm: cached seg + colocated sidecar join)\n\n```\n{_plan_text(topk_w)}\n```\n")
+    out.append(f"\n## bm25_engine_topk (warm: cached scan frame, sidecar rows inline)\n\n```\n{_plan_text(topk_w)}\n```\n")
 
     # IVF scale path: the probe over a cluster-partitioned table must
     # show the _cluster predicate in PartitionFilters (directory-level

@@ -91,13 +91,8 @@ def main() -> int:
 
     eng = bm25.BM25Engine(spark, idx, cache=True)
     n, avgdl = int(eng.meta["n_docs"]), float(eng.meta["avgdl"])
-    side = {
-        int(r["shard"]): (
-            int(r["base"]), bytes(r["dl_bytes"]),
-            None if r["deleted"] is None else np.asarray(r["deleted"], dtype="int64"),
-        )
-        for r in eng.sidecar.collect()
-    }
+    side = {int(s): bm25._sidecar_of(g, s) for s, g in eng._sidecar_frame(
+        list(range(int(eng.meta["n_shards"])))).groupby("shard")}
     ref = [(q["query"], None) for q in reference_query_set()
            if len(set(TOKENIZERS["simple"](q["query"]))) >= 2]
     queries = ([("ref", q, m) for q, m in ref]
