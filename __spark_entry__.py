@@ -18,7 +18,8 @@ from data_prep_opensearch_spark.plans.queries import REGISTRY
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the inverted index over sf0.001 documents and
-    answer a BM25 top-k query with the block-max WAND scorer."""
+    answer a BM25 top-k query with the block-max MaxScore pruning
+    kernel."""
     fn = REGISTRY["ft_bm25_engine_topk"].fn
     return fn(spark, "/root/testdata/sf0.001")
 

@@ -1,8 +1,10 @@
 """BM25 scoring + the top-k query engine (exhaustive and block-max MaxScore).
 
-Scoring constants and formula live HERE and only here — oracle, engine,
-and SQL generator all import them, guaranteeing score parity
-(SURVEY.md §7.3 "Rank-identical BM25").
+The engine owns the scoring constants ``K1``/``B`` and the formula
+(``idf``, ``bm25_tf_term``); the exhaustive reference (``oracle.py``)
+imports both. The catalog's DuckDB oracle SQL (``plans/queries.py``)
+imports only the two constants and spells the formula out itself, so it
+checks the engine independently (SURVEY.md §7.3 "Rank-identical BM25").
 
   idf(t)   = ln( (N - df + 0.5) / (df + 0.5) + 1 )           (Lucene form)
   score(d) = Σ_t idf(t) * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
@@ -333,14 +335,6 @@ def resolve_msm(msm, n_terms: int) -> int:
     if m < 0:
         raise ValueError(f"min_should_match must be >= 0, got {msm}")
     return max(m, 1)
-
-
-def bm25_sql_score_expr(tf: str, dl: str, df: str, n: str, avgdl: str) -> str:
-    """ANSI-SQL BM25 fragment, valid in both Spark SQL and DuckDB."""
-    return (
-        f"ln(({n} - {df} + 0.5) / ({df} + 0.5) + 1.0) * "
-        f"({tf} * ({K1} + 1.0)) / ({tf} + {K1} * (1.0 - {B} + {B} * ({dl} / {avgdl})))"
-    )
 
 
 TOPK_SCHEMA = T.StructType([

@@ -181,6 +181,16 @@ def ngram_jaccard_pairs(
     )
 
 
+def _minhash_wide(sh: DataFrame, key: str, n_hashes: int) -> DataFrame:
+    """One row per key with the ``n_hashes`` signature columns
+    ``_m0..``: ``_m{s}`` is the min over the key's shingles of
+    md5(concat(s, ':', shingle)), all seeds aggregated in ONE pass."""
+    return sh.groupBy(key).agg(*[
+        F.min(F.md5(F.concat_ws(":", F.lit(s), F.col("shingle")))).alias(f"_m{s}")
+        for s in range(n_hashes)
+    ])
+
+
 def minhash_signatures(
     df: DataFrame, text: str = "text", key: str = "doc_id", n_hashes: int = N_MINHASH
 ) -> DataFrame:
@@ -193,12 +203,7 @@ def minhash_signatures(
     dimension as n_hashes parallel min-aggregates over ONE shingle pass
     (map-side partial mins), unpivoted after the shuffle — 16× fewer
     shuffled rows, identical md5 count, oracle unchanged."""
-    sh = shingle_rows(df, text, key)
-    aggs = [
-        F.min(F.md5(F.concat_ws(":", F.lit(s), F.col("shingle")))).alias(f"_m{s}")
-        for s in range(n_hashes)
-    ]
-    wide = sh.groupBy(key).agg(*aggs)
+    wide = _minhash_wide(shingle_rows(df, text, key), key, n_hashes)
     pairs = F.array(*[
         F.struct(
             F.lit(s).cast("int").alias("seed"),
@@ -250,11 +255,7 @@ def minhash_lsh_pairs(
     # explode -> groupBy(key, band) -> collect_list path shuffled
     # (docs x seeds) rows to recompute what the wide row already holds.
     # Values are IDENTICAL (same strings, same array_sort, same md5).
-    sh = shingle_rows(df, text, key)
-    wide = sh.groupBy(key).agg(*[
-        F.min(F.md5(F.concat_ws(":", F.lit(s), F.col("shingle")))).alias(f"_m{s}")
-        for s in range(n_hashes)
-    ])
+    wide = _minhash_wide(shingle_rows(df, text, key), key, n_hashes)
     band_structs = F.array(*[
         F.struct(
             F.lit(b).cast("int").alias("band"),

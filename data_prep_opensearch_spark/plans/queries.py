@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from data_prep_opensearch_spark.operators.bm25 import B, K1
+
 TOKEN_PATTERN = "([a-z0-9_]+)"
 BM25_QUERY_TERMS = ["key", "merge", "sort", "batch"]
 BM25_K = 10
@@ -73,6 +75,89 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Oracle SQL fragments: the one spelling of the BM25 formula (k1 and b
+# from the engine, Lucene idf) that every BM25 oracle composes. Each
+# returns text whose first line continues the caller's line and whose
+# later lines carry their own indent, so the composed SQL reads as if
+# written out by hand.
+# ---------------------------------------------------------------------------
+
+def _sql_list(terms: list[str]) -> str:
+    return ", ".join(f"'{t}'" for t in sorted(set(terms)))
+
+
+def _tok_cte(relation: str, sfx: str = "") -> str:
+    """The tokenizer as a CTE: one (doc_id, term) row per token."""
+    return f"""tok{sfx} AS (
+      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
+      FROM {relation}
+    )"""
+
+
+def _bm25_stat_ctes(sfx: str = "") -> str:
+    """tf, dl, stats (n, avgdl) and dft over the ``tok`` CTE."""
+    return f"""tf{sfx} AS (SELECT doc_id, term, count(*) AS tf FROM tok{sfx} GROUP BY doc_id, term),
+    dl{sfx} AS (SELECT doc_id, count(*) AS dl FROM tok{sfx} GROUP BY doc_id),
+    stats{sfx} AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl{sfx}),
+    dft{sfx} AS (SELECT term, count(*) AS df FROM tf{sfx} GROUP BY term)"""
+
+
+def _bm25_ctes(relation: str, sfx: str = "") -> str:
+    return f"{_tok_cte(relation, sfx)},\n    {_bm25_stat_ctes(sfx)}"
+
+
+def _idf_sql(sfx: str = "", df: str | None = None) -> str:
+    df = df or f"dft{sfx}.df"
+    return f"ln((stats{sfx}.n - {df} + 0.5) / ({df} + 0.5) + 1.0)"
+
+
+def _tf_norm_sql(tf: str, indent: int | None = None, sfx: str = "") -> str:
+    """``tf``'s BM25 tf-norm on one line, or broken before the divide
+    onto a line at ``indent``."""
+    sep = " " if indent is None else "\n" + " " * indent
+    return (f"({tf} * ({K1} + 1.0)){sep}/ ({tf} + {K1} * "
+            f"(1.0 - {B} + {B} * (dl{sfx}.dl / stats{sfx}.avgdl)))")
+
+
+def _bm25_score_sql(indent: int, weight: str = "", sfx: str = "") -> str:
+    """One term's contribution, idf (times ``weight``) times tf-norm,
+    over three lines."""
+    return (f"{_idf_sql(sfx)}{weight}\n{' ' * indent}"
+            f"* {_tf_norm_sql(f'tf{sfx}.tf', indent, sfx)}")
+
+
+def _bm25_scored_sql(indent: int, q: str = "q", terms: list[str] | None = None,
+                     weight: str = "", raw: bool = False, where: str = "",
+                     sfx: str = "") -> str:
+    """Per-doc BM25 sum over the tf rows whose term is in ``q`` (an
+    inline list of ``terms`` when given): ``(doc_id, score)`` rounded to
+    4 places, or ``(doc_id, raw)``, grouped by doc."""
+    p, tf = " " * indent, f"tf{sfx}"
+    src = f"(SELECT unnest([{_sql_list(terms)}]) AS term) {q}" if terms else q
+    head, tail = ("sum(", ") AS raw") if raw else ("round(sum(", "), 4) AS score")
+    where = f"\n{p}WHERE {where}" if where else ""
+    return f"""SELECT {tf}.doc_id AS doc_id,
+{p}       {head}
+{p}         {_bm25_score_sql(indent + 9, weight, sfx)}
+{p}       {tail}
+{p}FROM {tf}
+{p}JOIN {src} ON {tf}.term = {q}.term
+{p}JOIN dft{sfx} ON {tf}.term = dft{sfx}.term
+{p}JOIN dl{sfx} ON {tf}.doc_id = dl{sfx}.doc_id
+{p}CROSS JOIN stats{sfx}{where}
+{p}GROUP BY {tf}.doc_id"""
+
+
+def _capped_expansion_sql(name: str, match: str, cap: int) -> str:
+    """CTE ``name``: the ``cap`` dictionary terms matching ``match``
+    with the highest df, ties term-asc (the engine's expansion rule)."""
+    return f"""{name} AS (
+      SELECT term FROM dft WHERE {match}
+      ORDER BY df DESC, term ASC LIMIT {cap}
+    )"""
+
+
+# ---------------------------------------------------------------------------
 # Fulltext core
 # ---------------------------------------------------------------------------
 
@@ -97,11 +182,8 @@ def ft_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ft_term_stats",
-    """
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    )
+    f"""
+    WITH {_tok_cte("documents")}
     SELECT term,
            count(DISTINCT doc_id) AS df,
            count(*) AS cf
@@ -118,34 +200,13 @@ def ft_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_sql(relation: str, terms: list[str], k: int, msm: int = 1) -> str:
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
     # tf is one row per (doc, term), so count(*) in the per-doc group IS
     # the distinct matched-term count — the minimum-should-match gate
     having = f"HAVING count(*) >= {msm}" if msm > 1 else ""
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM ({relation})
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    q AS (SELECT unnest([{term_list}]) AS term)
-    SELECT tf.doc_id AS doc_id,
-           round(sum(
-             ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-             * (tf.tf * ({K1} + 1.0))
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-           ), 4) AS score
-    FROM tf
-    JOIN q ON tf.term = q.term
-    JOIN dft ON tf.term = dft.term
-    JOIN dl ON tf.doc_id = dl.doc_id
-    CROSS JOIN stats
-    GROUP BY tf.doc_id
+    WITH {_bm25_ctes(f"({relation})")},
+    q AS (SELECT unnest([{_sql_list(terms)}]) AS term)
+    {_bm25_scored_sql(4)}
     {having}
     ORDER BY score DESC, doc_id ASC
     LIMIT {k}
@@ -159,33 +220,16 @@ def _bm25_highlight_sql(terms: list[str], k: int, window: int) -> str:
     engine's ``highlight.best_window`` rule. The fragment is the
     window's lowercase tokens joined by spaces (the canonical form both
     sides share)."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
     return f"""
     WITH toks AS (
       SELECT doc_id, regexp_extract_all(lower(text), '([a-z0-9_]+)', 1) AS toks
       FROM documents
     ),
     tok AS (SELECT doc_id, unnest(toks) AS term FROM toks),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    q AS (SELECT unnest([{term_list}]) AS term),
+    {_bm25_stat_ctes()},
+    q AS (SELECT unnest([{_sql_list(terms)}]) AS term),
     topk AS (
-      SELECT tf.doc_id AS doc_id,
-             round(sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ), 4) AS score
-      FROM tf
-      JOIN q ON tf.term = q.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6)}
       ORDER BY score DESC, doc_id ASC
       LIMIT {k}
     ),
@@ -270,8 +314,6 @@ def _idf_col(df_col: "F.Column") -> "F.Column":
 
 
 def _tf_norm(tf_col: "F.Column") -> "F.Column":
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
     return (tf_col * (K1 + 1.0)) / (
         tf_col + K1 * (1.0 - B + B * (F.col("dl") / F.col("avgdl")))
     )
@@ -339,57 +381,75 @@ def _sorted_seg_files(index_dir: str) -> int:
     return max(1, total // (64 << 20) + (1 if total % (64 << 20) else 0))
 
 
-def _ensure_docs_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir + package/index-format version) the segment
-    index over the documents table; return its directory. Shared by every
-    engine-backed catalog entry so the build cost is paid once. The
-    publish pass (sort_segments) rewrites the segments term-sorted into
-    size-adaptive files: query-time ``term IN`` filters then prune whole
-    files/row-groups instead of opening one tiny file per build task."""
+def _ensure_index(spark: SparkSession, sf_dir: str, key: str,
+                  build: Callable[[DataFrame, str], object]) -> str:
+    """Build (once per ``key``, sf_dir and package/index-format version)
+    a segment index with ``build(documents, index_dir)``; return its
+    directory. The documents table is read only when building. The
+    version in the cache key keeps a stale on-disk index of an older
+    format from being reused. The publish pass (sort_segments) rewrites
+    the segments term-sorted into size-adaptive files: query-time
+    ``term IN`` filters then prune whole files/row-groups instead of
+    opening one tiny file per build task."""
     import hashlib
     import os
 
-    from data_prep_opensearch_spark.operators.index_build import (
-        build_index,
-        sort_segments,
-    )
+    from data_prep_opensearch_spark.operators.index_build import sort_segments
 
     import data_prep_opensearch_spark as pkg
 
-    # cache key includes the package version so a stale on-disk index from
-    # an older format is never reused across rounds
     tag = hashlib.sha256(
-        f"{sf_dir}@{pkg.__version__}+fmt{pkg.INDEX_FORMAT_VERSION}+pub2".encode()
+        f"{key}:{sf_dir}@{pkg.__version__}+fmt{pkg.INDEX_FORMAT_VERSION}".encode()
     ).hexdigest()[:12]
     index_dir = f"/tmp/dposs_idx_{tag}"
     if not os.path.exists(os.path.join(index_dir, "meta.json")):
-        src = load(spark, sf_dir, "documents").select(
-            F.col("source").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.sha2(F.col("text"), 256).substr(1, 40).alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-        build_index(spark, src, index_dir, n_shards=4, n_groups=1)
+        build(load(spark, sf_dir, "documents"), index_dir)
         sort_segments(spark, index_dir, n_files=_sorted_seg_files(index_dir))
     return index_dir
 
 
-def _engine_topk_to_external(topk: DataFrame, spark: SparkSession,
-                             index_dir: str) -> DataFrame:
-    """Map internal engine docIDs back to the external doc_id (stored as
-    the `path` field at index time)."""
+def _index_source(docs: DataFrame, content: "F.Column") -> DataFrame:
+    """The engine's (repo, path, commit, lang, content) input over
+    documents rows: ``path`` carries the external doc_id and ``commit``
+    fingerprints the row's text, so two indexes built over the same rows
+    assign the same docIDs whatever their content."""
+    return docs.select(
+        F.col("source").alias("repo"),
+        F.col("doc_id").cast("string").alias("path"),
+        F.sha2(F.col("text"), 256).substr(1, 40).alias("commit"),
+        F.col("lang").alias("lang"),
+        content.alias("content"),
+    )
+
+
+def _ensure_docs_index(spark: SparkSession, sf_dir: str) -> str:
+    """The segment index over the documents table, shared by every
+    engine-backed catalog entry so the build cost is paid once."""
+    from data_prep_opensearch_spark.operators.index_build import build_index
+
+    return _ensure_index(spark, sf_dir, "docs", lambda docs, d: build_index(
+        spark, _index_source(docs, F.col("text")), d, n_shards=4, n_groups=1))
+
+
+def _doc_id_map(spark: SparkSession, index_dir: str) -> DataFrame:
+    """(engine_doc_id, ext_id): the engine docID of each indexed doc and
+    its external doc_id (stored as the `path` field at index time)."""
     from data_prep_opensearch_spark.operators.manifest import read_doc_stats
 
-    stats = read_doc_stats(spark, index_dir).select(
-        F.col("doc_id").alias("engine_doc_id"), F.col("path")
+    return read_doc_stats(spark, index_dir).select(
+        F.col("doc_id").alias("engine_doc_id"),
+        F.col("path").cast("long").alias("ext_id"),
     )
-    return (
-        topk.join(stats, topk["doc_id"] == stats["engine_doc_id"])
-        .select(
-            F.col("path").cast("long").alias("doc_id"),
-            F.round(F.col("score"), 4).alias("score"),
-        )
+
+
+def _engine_topk_to_external(topk: DataFrame, spark: SparkSession,
+                             index_dir: str) -> DataFrame:
+    """Map an engine result's docIDs back to the external doc_id, its
+    score columns rounded to 4 places."""
+    ids = _doc_id_map(spark, index_dir)
+    return topk.join(ids, topk["doc_id"] == ids["engine_doc_id"]).select(
+        F.col("ext_id").alias("doc_id"),
+        *[F.round(c, 4).alias(c) for c in topk.columns if c != "doc_id"],
     )
 
 
@@ -460,25 +520,12 @@ def _bm25_prefix_sql(literals: list[str], stem: str, cap: int, k: int,
     ``expand_prefix`` rule — scored as a scoring-boolean. The msm gate
     counts CLAUSES: every literal is its own clause, the whole
     expansion set is one (count(DISTINCT clause))."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    lit_list = ", ".join(f"'{t}'" for t in sorted(set(literals)))
     gate = f"WHERE nclause.nc >= {msm}" if msm > 1 else ""
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    exp AS (
-      SELECT term FROM dft WHERE term LIKE '{stem}%'
-      ORDER BY df DESC, term ASC LIMIT {cap}
-    ),
+    WITH {_bm25_ctes("documents")},
+    {_capped_expansion_sql("exp", f"term LIKE '{stem}%'", cap)},
     q AS (
-      SELECT term, term AS clause FROM (SELECT unnest([{lit_list}]) AS term)
+      SELECT term, term AS clause FROM (SELECT unnest([{_sql_list(literals)}]) AS term)
       UNION ALL
       SELECT term, 'prefix:{stem}' AS clause FROM exp
     ),
@@ -488,18 +535,7 @@ def _bm25_prefix_sql(literals: list[str], stem: str, cap: int, k: int,
       FROM tf JOIN q ON tf.term = q.term GROUP BY tf.doc_id
     ),
     scored AS (
-      SELECT tf.doc_id AS doc_id,
-             round(sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ), 4) AS score
-      FROM tf
-      JOIN qd ON tf.term = qd.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6, "qd")}
     )
     SELECT scored.doc_id AS doc_id, scored.score AS score
     FROM scored JOIN nclause ON scored.doc_id = nclause.doc_id
@@ -518,22 +554,12 @@ def _bm25_fuzzy_sql(literals: list[str], stem: str, max_edits: int,
     ``1 - dist/min(len(term), len(stem))``; a term reachable through
     several clauses takes its MAX weight (a literal counts 1.0). The
     msm gate counts clauses, the whole expansion set being one."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    lit_list = ", ".join(f"'{t}'" for t in sorted(set(literals)))
     slen = len(stem)
     boost = (f"1.0 - levenshtein(term, '{stem}') / "
              f"least(length(term), {slen})")
     gate = f"WHERE nclause.nc >= {msm}" if msm > 1 else ""
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    WITH {_bm25_ctes("documents")},
     exp AS (
       SELECT term, {boost} AS boost
       FROM dft
@@ -545,7 +571,7 @@ def _bm25_fuzzy_sql(literals: list[str], stem: str, max_edits: int,
     ),
     q AS (
       SELECT term, 1.0 AS boost, term AS clause
-      FROM (SELECT unnest([{lit_list}]) AS term)
+      FROM (SELECT unnest([{_sql_list(literals)}]) AS term)
       UNION ALL
       SELECT term, boost, 'fuzzy:{stem}' AS clause FROM exp
     ),
@@ -555,18 +581,7 @@ def _bm25_fuzzy_sql(literals: list[str], stem: str, max_edits: int,
       FROM tf JOIN q ON tf.term = q.term GROUP BY tf.doc_id
     ),
     scored AS (
-      SELECT tf.doc_id AS doc_id,
-             round(sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0) * qw.w
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ), 4) AS score
-      FROM tf
-      JOIN qw ON tf.term = qw.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6, "qw", weight=" * qw.w")}
     )
     SELECT scored.doc_id AS doc_id, scored.score AS score
     FROM scored JOIN nclause ON scored.doc_id = nclause.doc_id
@@ -581,37 +596,12 @@ def _bm25_not_sql(literals: list[str], neg_stem: str, cap: int,
     """BM25 with a MUST_NOT prefix clause: positives score normally; any
     doc matching one of the negated stem's (df-ranked, capped)
     expansions is excluded BEFORE the top-k cut."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    lit_list = ", ".join(f"'{t}'" for t in sorted(set(literals)))
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    negexp AS (
-      SELECT term FROM dft WHERE term LIKE '{neg_stem}%'
-      ORDER BY df DESC, term ASC LIMIT {cap}
-    ),
+    WITH {_bm25_ctes("documents")},
+    {_capped_expansion_sql("negexp", f"term LIKE '{neg_stem}%'", cap)},
     excl AS (SELECT DISTINCT tf.doc_id FROM tf JOIN negexp ON tf.term = negexp.term),
-    q AS (SELECT unnest([{lit_list}]) AS term)
-    SELECT tf.doc_id AS doc_id,
-           round(sum(
-             ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-             * (tf.tf * ({K1} + 1.0))
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-           ), 4) AS score
-    FROM tf
-    JOIN q ON tf.term = q.term
-    JOIN dft ON tf.term = dft.term
-    JOIN dl ON tf.doc_id = dl.doc_id
-    CROSS JOIN stats
-    WHERE tf.doc_id NOT IN (SELECT doc_id FROM excl)
-    GROUP BY tf.doc_id
+    q AS (SELECT unnest([{_sql_list(literals)}]) AS term)
+    {_bm25_scored_sql(4, where="tf.doc_id NOT IN (SELECT doc_id FROM excl)")}
     ORDER BY score DESC, doc_id ASC
     LIMIT {k}
     """
@@ -650,10 +640,6 @@ def _bm25_phrase_sql(phrase: list[str], literals: list[str], k: int,
     where toks[i..i+len-1] equals the phrase. ``slop > 0`` (bigrams
     only) switches to the engine's ordered-proximity window: start i
     matches when the second term occurs at some j in (i, i+1+slop]."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    lit_list = ", ".join(f"'{t}'" for t in sorted(set(literals)))
-    ph_list = ", ".join(f"'{t}'" for t in sorted(set(phrase)))
     if slop > 0:
         if len(phrase) != 2:
             raise ValueError("slop oracle SQL supports bigrams only")
@@ -672,25 +658,20 @@ def _bm25_phrase_sql(phrase: list[str], literals: list[str], k: int,
       FROM documents
     ),
     tok AS (SELECT doc_id, unnest(toks) AS term FROM base),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    {_bm25_stat_ctes()},
     pf AS (
       SELECT doc_id,
              len(list_filter(range(1, len(toks)), i -> {cond})) AS pf
       FROM base
     ),
     phw AS (
-      SELECT sum(ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)) AS w
-      FROM dft CROSS JOIN stats WHERE dft.term IN ({ph_list})
+      SELECT sum({_idf_sql()}) AS w
+      FROM dft CROSS JOIN stats WHERE dft.term IN ({_sql_list(phrase)})
     ),
-    q AS (SELECT unnest([{lit_list}]) AS term),
+    q AS (SELECT unnest([{_sql_list(literals)}]) AS term),
     contrib AS (
       SELECT tf.doc_id AS doc_id,
-             ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-             * (tf.tf * ({K1} + 1.0))
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl))) AS c
+             {_bm25_score_sql(13)} AS c
       FROM tf
       JOIN q ON tf.term = q.term
       JOIN dft ON tf.term = dft.term
@@ -698,8 +679,7 @@ def _bm25_phrase_sql(phrase: list[str], literals: list[str], k: int,
       CROSS JOIN stats
       UNION ALL
       SELECT pf.doc_id AS doc_id,
-             phw.w * (pf.pf * ({K1} + 1.0))
-             / (pf.pf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl))) AS c
+             phw.w * {_tf_norm_sql("pf.pf", 13)} AS c
       FROM pf
       JOIN dl ON pf.doc_id = dl.doc_id
       CROSS JOIN stats CROSS JOIN phw
@@ -882,32 +862,11 @@ def _bm25_page_sql(terms: list[str], k: int, page: int) -> str:
     N's last row is definitionally OFFSET N*k. Ordered by the RAW score
     (rounding only in the projection) so the page boundary is cut in
     the same total order the engine uses."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    q AS (SELECT unnest([{term_list}]) AS term),
+    WITH {_bm25_ctes("documents")},
+    q AS (SELECT unnest([{_sql_list(terms)}]) AS term),
     scored AS (
-      SELECT tf.doc_id AS doc_id,
-             sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ) AS raw
-      FROM tf
-      JOIN q ON tf.term = q.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6, raw=True)}
     )
     SELECT doc_id, round(raw, 4) AS score FROM scored
     ORDER BY raw DESC, doc_id ASC
@@ -945,33 +904,13 @@ def _bm25_boosted_sql(term_weights: dict[str, float], k: int) -> str:
     """BM25 with per-term query boosts (`term^B`): each term's
     contribution scales by its weight (a term in several clauses takes
     the MAX weight — here the weights are already resolved)."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
     vals = ", ".join(
         f"('{t}', {w!r})" for t, w in sorted(term_weights.items())
     )
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    WITH {_bm25_ctes("documents")},
     q(term, w) AS (VALUES {vals})
-    SELECT tf.doc_id AS doc_id,
-           round(sum(
-             ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0) * q.w
-             * (tf.tf * ({K1} + 1.0))
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-           ), 4) AS score
-    FROM tf
-    JOIN q ON tf.term = q.term
-    JOIN dft ON tf.term = dft.term
-    JOIN dl ON tf.doc_id = dl.doc_id
-    CROSS JOIN stats
-    GROUP BY tf.doc_id
+    {_bm25_scored_sql(4, weight=" * q.w")}
     ORDER BY score DESC, doc_id ASC
     LIMIT {k}
     """
@@ -1001,22 +940,10 @@ def _bm25_explain_sql(terms: list[str]) -> str:
     """Explain oracle: the per-term breakdown of the top-1 doc of the
     OR ranking — (clause, kind, tf, df, idf, weight, tf_norm,
     contribution), contribution summing to the doc's BM25 score."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
-    tfn = (f"(tf.tf * ({K1} + 1.0)) / (tf.tf + {K1} * "
-           f"(1.0 - {B} + {B} * (dl.dl / stats.avgdl)))")
-    idf_expr = "ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)"
+    tfn, idf_expr = _tf_norm_sql("tf.tf"), _idf_sql()
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    q AS (SELECT unnest([{term_list}]) AS term),
+    WITH {_bm25_ctes("documents")},
+    q AS (SELECT unnest([{_sql_list(terms)}]) AS term),
     ranked AS (
       SELECT tf.doc_id AS doc_id,
              sum({idf_expr} * {tfn}) AS raw
@@ -1085,20 +1012,11 @@ def _mlt_sql(src_doc: int, k: int, mq: int, mtf: int, mdf: int) -> str:
     (tf >= mtf, df >= mdf, top-mq by weight desc / term asc — Lucene
     MoreLikeThis selection) and BM25-rank the corpus on them, excluding
     the source doc."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    WITH {_bm25_ctes("documents")},
     cand AS (
       SELECT tf.term,
-             tf.tf * ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0) AS w
+             tf.tf * {_idf_sql()} AS w
       FROM tf
       JOIN dft ON tf.term = dft.term
       CROSS JOIN stats
@@ -1106,18 +1024,7 @@ def _mlt_sql(src_doc: int, k: int, mq: int, mtf: int, mdf: int) -> str:
     ),
     q AS (SELECT term FROM cand ORDER BY w DESC, term ASC LIMIT {mq}),
     scored AS (
-      SELECT tf.doc_id AS doc_id,
-             sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ) AS raw
-      FROM tf
-      JOIN q ON tf.term = q.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6, raw=True)}
     )
     SELECT doc_id, round(raw, 4) AS score FROM scored
     WHERE doc_id != {src_doc}
@@ -1138,9 +1045,6 @@ def ft_bm25_mlt(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap at 25 (Lucene MoreLikeThis defaults), BM25-search the OR of the
     selected terms, and drop the source doc from the hits."""
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
-    from data_prep_opensearch_spark.operators.manifest import (
-        read_doc_stats,
-    )
 
     index_dir = _ensure_docs_index(spark, sf_dir)
     eng = BM25Engine(spark, index_dir, cache=False)
@@ -1150,9 +1054,9 @@ def ft_bm25_mlt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("text").collect()[0]["text"]
     )
     src_internal = int(
-        read_doc_stats(spark, index_dir)
-        .filter(F.col("path") == str(MLT_DOC))
-        .select("doc_id").collect()[0]["doc_id"]
+        _doc_id_map(spark, index_dir)
+        .filter(F.col("ext_id") == MLT_DOC)
+        .collect()[0]["engine_doc_id"]
     )
     out = eng.more_like_this(
         text, BM25_K, exclude_doc_id=src_internal,
@@ -1165,13 +1069,9 @@ def _search_facets_sql(terms: list[str], size: int, bin_w: int) -> str:
     """Facet buckets over the FULL match set of an OR query: one terms
     facet per attribute column plus a fixed-width histogram facet over
     n_chars — count desc, ties value asc, top ``size`` per facet."""
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    m AS (SELECT DISTINCT doc_id FROM tok WHERE term IN ({term_list})),
+    WITH {_tok_cte("documents")},
+    m AS (SELECT DISTINCT doc_id FROM tok WHERE term IN ({_sql_list(terms)})),
     j AS (
       SELECT d.lang, d.source, d.n_chars
       FROM documents d JOIN m ON d.doc_id = m.doc_id
@@ -1205,6 +1105,14 @@ FACET_SIZE = 10
 FACET_BIN = 256
 
 
+def _match_ext_ids(eng, spark: SparkSession, index_dir: str) -> DataFrame:
+    """External doc_ids of every doc matching the OR query."""
+    matches = eng.match_ids(" ".join(BM25_QUERY_TERMS))
+    ids = _doc_id_map(spark, index_dir)
+    return matches.join(ids, matches["doc_id"] == ids["engine_doc_id"]).select(
+        F.col("ext_id").alias("doc_id"))
+
+
 @register(
     "ft_search_facets",
     _search_facets_sql(BM25_QUERY_TERMS, FACET_SIZE, FACET_BIN),
@@ -1220,20 +1128,10 @@ def ft_search_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
     desc, ties value asc)."""
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
     from data_prep_opensearch_spark.operators.facets import facet_counts
-    from data_prep_opensearch_spark.operators.manifest import (
-        read_doc_stats,
-    )
 
     index_dir = _ensure_docs_index(spark, sf_dir)
     eng = BM25Engine(spark, index_dir, cache=False)
-    matches = eng.match_ids(" ".join(BM25_QUERY_TERMS))
-    stats = read_doc_stats(spark, index_dir).select(
-        F.col("doc_id").alias("engine_doc_id"),
-        F.col("path").cast("long").alias("doc_id"),
-    )
-    ext = matches.join(
-        stats, matches["doc_id"] == stats["engine_doc_id"]
-    ).select(stats["doc_id"])
+    ext = _match_ext_ids(eng, spark, index_dir)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -1252,13 +1150,9 @@ def ft_search_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _search_stats_sql(terms: list[str]) -> str:
     """stats aggregation over the OR query's full match set."""
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    m AS (SELECT DISTINCT doc_id FROM tok WHERE term IN ({term_list})),
+    WITH {_tok_cte("documents")},
+    m AS (SELECT DISTINCT doc_id FROM tok WHERE term IN ({_sql_list(terms)})),
     j AS (SELECT d.n_chars FROM documents d JOIN m ON d.doc_id = m.doc_id)
     SELECT 'n_chars' AS field,
            count(n_chars) AS n_docs,
@@ -1283,20 +1177,10 @@ def ft_search_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the postings into one aggregation."""
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
     from data_prep_opensearch_spark.operators.facets import stats_counts
-    from data_prep_opensearch_spark.operators.manifest import (
-        read_doc_stats,
-    )
 
     index_dir = _ensure_docs_index(spark, sf_dir)
     eng = BM25Engine(spark, index_dir, cache=False)
-    matches = eng.match_ids(" ".join(BM25_QUERY_TERMS))
-    stats = read_doc_stats(spark, index_dir).select(
-        F.col("doc_id").alias("engine_doc_id"),
-        F.col("path").cast("long").alias("doc_id"),
-    )
-    ext = matches.join(
-        stats, matches["doc_id"] == stats["engine_doc_id"]
-    ).select(stats["doc_id"])
+    ext = _match_ext_ids(eng, spark, index_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     agg = stats_counts(ext.join(docs, "doc_id"), ["n_chars"])
     return agg.select(
@@ -1370,9 +1254,6 @@ def ft_bm25_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _latest_prune_sql(terms: list[str], k: int) -> str:
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
     return f"""
     WITH base AS (
       SELECT doc_id, text,
@@ -1388,20 +1269,11 @@ def _latest_prune_sql(terms: list[str], k: int) -> str:
       FROM documents WHERE doc_id % 5 = 0
     ),
     corpus AS (SELECT * FROM base UNION ALL SELECT * FROM delta),
-    tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM corpus
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    q AS (SELECT unnest([{term_list}]) AS term)
+    {_bm25_ctes("corpus")},
+    q AS (SELECT unnest([{_sql_list(terms)}]) AS term)
     SELECT c.label AS doc_label,
            round(sum(
-             ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-             * (tf.tf * ({K1} + 1.0))
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
+             {_bm25_score_sql(13)}
            ), 4) AS score
     FROM tf
     JOIN q ON tf.term = q.term
@@ -1430,45 +1302,23 @@ def ft_engine_latest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantics the oracle mirrors with its ``superseded`` flag). The
     reference analogue is the latest-pointer resolve of pipeline/io.py:36-76
     applied per document key."""
-    import hashlib
-    import os
-
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
     from data_prep_opensearch_spark.operators.incremental import add_documents
     from data_prep_opensearch_spark.operators.index_build import build_index
     from data_prep_opensearch_spark.operators.manifest import read_doc_stats
 
-    import data_prep_opensearch_spark as pkg
+    def build(docs: DataFrame, index_dir: str) -> None:
+        build_index(spark, _index_source(docs, F.col("text")), index_dir,
+                    n_shards=4, n_groups=2)
+        # the delta re-sends every 5th doc with changed text: same (repo,
+        # path), new commit. The publish pass runs after it; the gen
+        # column survives the rewrite, so superseded masking (gen-ranked)
+        # is unchanged
+        delta = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
+            "text", F.concat(F.col("text"), F.lit(" updated")))
+        add_documents(spark, index_dir, _index_source(delta, F.col("text")))
 
-    tag = hashlib.sha256(
-        f"latest:{sf_dir}@{pkg.__version__}+fmt{pkg.INDEX_FORMAT_VERSION}+pub2".encode()
-    ).hexdigest()[:12]
-    index_dir = f"/tmp/dposs_idx_{tag}"
-    if not os.path.exists(os.path.join(index_dir, "meta.json")):
-        from data_prep_opensearch_spark.operators.index_build import (
-            sort_segments,
-        )
-
-        d = load(spark, sf_dir, "documents")
-        base = d.select(
-            F.col("source").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.sha2(F.col("text"), 256).substr(1, 40).alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-        build_index(spark, base, index_dir, n_shards=4, n_groups=2)
-        delta = d.filter(F.col("doc_id") % 5 == 0).select(
-            F.col("source").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.col("lang").alias("lang"),
-            F.concat(F.col("text"), F.lit(" updated")).alias("content"),
-        ).withColumn("commit", F.sha2(F.col("content"), 256).substr(1, 40))
-        add_documents(spark, index_dir, delta)
-        # publish pass AFTER the delta: gen column survives the rewrite,
-        # so superseded masking (gen-ranked) is unchanged — queries get
-        # term-sorted, size-adaptive segment files (guide §6)
-        sort_segments(spark, index_dir, n_files=_sorted_seg_files(index_dir))
+    index_dir = _ensure_index(spark, sf_dir, "latest", build)
     eng = BM25Engine(spark, index_dir, cache=False, prune_superseded=True)
     topk = eng.topk(" ".join(BM25_QUERY_TERMS), BM25_K, scorer="wand")
     stats = read_doc_stats(spark, index_dir).select(
@@ -1494,8 +1344,6 @@ def _bm25_code_sql(k: int) -> str:
     matching classes), so rounded scores are strictly distinct and the
     top-k rank is forced without relying on tie-break order (engine
     internal docIDs are hash-ordered, not doc_id-ordered)."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
     return rf"""
     WITH src AS (
       SELECT doc_id,
@@ -1528,23 +1376,9 @@ def _bm25_code_sql(k: int) -> str:
       UNION ALL
       SELECT doc_id, unnest(subs) AS term FROM pieces WHERE len(subs) > 1
     ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    {_bm25_stat_ctes()},
     q AS (SELECT unnest(['json', 'parse']) AS term)
-    SELECT tf.doc_id AS doc_id,
-           round(sum(
-             ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-             * (tf.tf * ({K1} + 1.0))
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-           ), 4) AS score
-    FROM tf
-    JOIN q ON tf.term = q.term
-    JOIN dft ON tf.term = dft.term
-    JOIN dl ON tf.doc_id = dl.doc_id
-    CROSS JOIN stats
-    GROUP BY tf.doc_id
+    {_bm25_scored_sql(4)}
     ORDER BY score DESC, doc_id ASC
     LIMIT {k}
     """
@@ -1566,54 +1400,24 @@ def ft_bm25_code_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     split JSONParser -> json+parser), class 3 must match NOTHING
     ('parsed'/'jsonify' are single-piece identifiers — whole-ident
     lowering is not stemming)."""
-    import hashlib
-    import os
-
     from data_prep_opensearch_spark.operators.bm25 import query_topk
     from data_prep_opensearch_spark.operators.index_build import build_index
-    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
 
-    import data_prep_opensearch_spark as pkg
-
-    tag = hashlib.sha256(
-        f"code:{sf_dir}@{pkg.__version__}+fmt{pkg.INDEX_FORMAT_VERSION}+pub2".encode()
-    ).hexdigest()[:12]
-    index_dir = f"/tmp/dposs_idx_{tag}"
-    if not os.path.exists(os.path.join(index_dir, "meta.json")):
-        d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+    def build(docs: DataFrame, index_dir: str) -> None:
         c = F.col("doc_id") % 4
-        text = F.concat(
+        docs = docs.filter(F.col("doc_id") < 64).withColumn("text", F.concat(
             F.expr("repeat('pad ', 5 + cast(doc_id as int))"),
             F.when(c == 0, F.lit("parseJson handleInput"))
             .when(c == 1, F.lit("parse_json writeBuffer"))
             .when(c == 2, F.lit("JSONParser reset"))
             .otherwise(F.lit("parsed jsonify cleanup")),
-        )
-        src = d.select(
-            F.col("source").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.sha2(text, 256).substr(1, 40).alias("commit"),
-            F.col("lang").alias("lang"),
-            text.alias("content"),
-        )
-        build_index(spark, src, index_dir, n_shards=4, n_groups=1,
-                    tokenizer="code")
-        from data_prep_opensearch_spark.operators.index_build import (
-            sort_segments,
-        )
+        ))
+        build_index(spark, _index_source(docs, F.col("text")), index_dir,
+                    n_shards=4, n_groups=1, tokenizer="code")
 
-        sort_segments(spark, index_dir, n_files=_sorted_seg_files(index_dir))
+    index_dir = _ensure_index(spark, sf_dir, "code", build)
     topk = query_topk(spark, index_dir, "parse json", BM25_K, scorer="wand")
-    stats = read_doc_stats(spark, index_dir).select(
-        F.col("doc_id").alias("engine_doc_id"), F.col("path")
-    )
-    return (
-        topk.join(stats, topk["doc_id"] == stats["engine_doc_id"])
-        .select(
-            F.col("path").cast("long").alias("doc_id"),
-            F.round(F.col("score"), 4).alias("score"),
-        )
-    )
+    return _engine_topk_to_external(topk, spark, index_dir)
 
 
 @register(
@@ -3318,10 +3122,7 @@ def _term_suggest_sql(text: str, size: int, max_edits: int,
     + levenshtein budget, FuzzyTermsEnum similarity, score/df/term
     ranking, per-token size cap."""
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
+    WITH {_tok_cte("documents")},
     dict AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY term),
     inp AS (
       SELECT DISTINCT token FROM (
@@ -3379,11 +3180,8 @@ def ft_suggest_term(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ft_suggest_complete",
-    """
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
+    f"""
+    WITH {_tok_cte("documents")},
     dict AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY term)
     SELECT term AS suggestion, CAST(df AS BIGINT) AS df
     FROM dict WHERE term LIKE 's%'
@@ -3409,54 +3207,26 @@ def ft_suggest_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Search body: filter context / sort-by-field / function_score
 # ---------------------------------------------------------------------------
 
-_MATCH_SCORES_CTE = """
-    tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    q AS (SELECT unnest([{terms}]) AS term),
+def _match_scores_cte(terms: list[str]) -> str:
+    """The OR query's full match set with raw BM25 scores, as CTE
+    ``scored(doc_id, raw)``."""
+    return f"""
+    {_bm25_ctes("documents")},
+    q AS (SELECT unnest([{_sql_list(terms)}]) AS term),
     scored AS (
-      SELECT tf.doc_id AS doc_id,
-             sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ) AS raw
-      FROM tf
-      JOIN q ON tf.term = q.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6, raw=True)}
     )
 """
-
-
-def _match_scores_cte(terms: list[str]) -> str:
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
-    return _MATCH_SCORES_CTE.format(terms=term_list, K1=K1, B=B)
 
 
 def _attrs_engine_keyed(spark: SparkSession, sf_dir: str,
                         index_dir: str) -> DataFrame:
     """documents attributes re-keyed by ENGINE doc_id (the doc_stats
     `path` column carries the external id — broadcast-shaped map)."""
-    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
-
-    stats = read_doc_stats(spark, index_dir).select(
-        F.col("doc_id").alias("engine_doc_id"),
-        F.col("path").cast("long").alias("ext_id"),
-    )
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("ext_id"), "lang", "source", "n_chars"
     )
-    return stats.join(docs, "ext_id").select(
+    return _doc_id_map(spark, index_dir).join(docs, "ext_id").select(
         F.col("engine_doc_id").alias("doc_id"),
         "ext_id", "lang", "source", "n_chars",
     )
@@ -3622,17 +3392,12 @@ def ft_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     significant in its own match set)."""
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
     from data_prep_opensearch_spark.operators.facets import significant_terms
-    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
 
     index_dir = _ensure_docs_index(spark, sf_dir)
     eng = BM25Engine(spark, index_dir, cache=True)
-    stats = read_doc_stats(spark, index_dir).select(
-        F.col("doc_id").alias("engine_doc_id"),
-        F.col("path").cast("long").alias("ext_id"),
-    )
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("ext_id"), "text"
-    ).join(stats, "ext_id").select(
+    ).join(_doc_id_map(spark, index_dir), "ext_id").select(
         F.col("engine_doc_id").alias("doc_id"), "text"
     )
     out = significant_terms(
@@ -3657,65 +3422,21 @@ def _ensure_title_index(spark: SparkSession, sf_dir: str) -> str:
     and n_shards as the text index, so assign_doc_ids (a pure function
     of keys) puts every doc at the same docID in both — the alignment
     multi_match combines on."""
-    import hashlib
-    import os
-
     from data_prep_opensearch_spark.operators.index_build import build_index
 
-    import data_prep_opensearch_spark as pkg
-
-    tag = hashlib.sha256(
-        f"{sf_dir}@{pkg.__version__}+fmt{pkg.INDEX_FORMAT_VERSION}+pub2+title{TITLE_TOKENS}".encode()
-    ).hexdigest()[:12]
-    index_dir = f"/tmp/dposs_idx_{tag}"
-    if not os.path.exists(os.path.join(index_dir, "meta.json")):
-        from data_prep_opensearch_spark.operators.index_build import (
-            sort_segments,
-        )
-
-        src = load(spark, sf_dir, "documents").select(
-            F.col("source").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.sha2(F.col("text"), 256).substr(1, 40).alias("commit"),
-            F.col("lang").alias("lang"),
-            F.array_join(
-                F.slice(_tokens(F.col("text")), 1, TITLE_TOKENS), " "
-            ).alias("content"),
-        )
-        build_index(spark, src, index_dir, n_shards=4, n_groups=1)
-        sort_segments(spark, index_dir, n_files=_sorted_seg_files(index_dir))
-    return index_dir
+    title = F.array_join(F.slice(_tokens(F.col("text")), 1, TITLE_TOKENS), " ")
+    return _ensure_index(spark, sf_dir, f"title{TITLE_TOKENS}", lambda docs, d: (
+        build_index(spark, _index_source(docs, title), d, n_shards=4, n_groups=1)))
 
 
 def _field_scored_cte(rel: str, alias: str, terms: list[str]) -> str:
     """One field's BM25 scored-match CTE block (per-field statistics —
     best_fields semantics), emitting `scored_{alias}(doc_id, raw)`."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
-    a = alias
+    a = f"_{alias}"
     return f"""
-    tok_{a} AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM {rel}
-    ),
-    tf_{a} AS (SELECT doc_id, term, count(*) AS tf FROM tok_{a} GROUP BY doc_id, term),
-    dl_{a} AS (SELECT doc_id, count(*) AS dl FROM tok_{a} GROUP BY doc_id),
-    stats_{a} AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl_{a}),
-    dft_{a} AS (SELECT term, count(*) AS df FROM tf_{a} GROUP BY term),
-    scored_{a} AS (
-      SELECT tf_{a}.doc_id AS doc_id,
-             sum(
-               ln((stats_{a}.n - dft_{a}.df + 0.5) / (dft_{a}.df + 0.5) + 1.0)
-               * (tf_{a}.tf * ({K1} + 1.0))
-               / (tf_{a}.tf + {K1} * (1.0 - {B} + {B} * (dl_{a}.dl / stats_{a}.avgdl)))
-             ) AS raw
-      FROM tf_{a}
-      JOIN (SELECT unnest([{term_list}]) AS term) q_{a} ON tf_{a}.term = q_{a}.term
-      JOIN dft_{a} ON tf_{a}.term = dft_{a}.term
-      JOIN dl_{a} ON tf_{a}.doc_id = dl_{a}.doc_id
-      CROSS JOIN stats_{a}
-      GROUP BY tf_{a}.doc_id
+    {_bm25_ctes(rel, a)},
+    scored{a} AS (
+      {_bm25_scored_sql(6, f"q{a}", terms, raw=True, sfx=a)}
     )
 """
 
@@ -3812,34 +3533,22 @@ def _bm25_synonyms_sql(group: list[str], lit: str, k: int) -> str:
     blended statistics: every group member scores with idf(max df over
     the group) and its OWN tf_norm; the group is ONE clause under
     min_should_match=2 next to the literal clause."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    grp_list = ", ".join(f"'{t}'" for t in sorted(group))
-    all_list = ", ".join(f"'{t}'" for t in sorted(set(group) | {lit}))
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    bdf AS (SELECT max(df) AS bdf FROM dft WHERE term IN ({grp_list})),
+    WITH {_bm25_ctes("documents")},
+    bdf AS (SELECT max(df) AS bdf FROM dft WHERE term IN ({_sql_list(group)})),
     contrib AS (
       SELECT tf.doc_id,
              CASE WHEN tf.term = '{lit}'
-                  THEN ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-                  ELSE ln((stats.n - bdf.bdf + 0.5) / (bdf.bdf + 0.5) + 1.0)
+                  THEN {_idf_sql()}
+                  ELSE {_idf_sql(df="bdf.bdf")}
              END
-             * (tf.tf * ({K1} + 1.0))
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl))) AS c,
+             * {_tf_norm_sql("tf.tf", 13)} AS c,
              CASE WHEN tf.term = '{lit}' THEN 'lit' ELSE 'grp' END AS clause
       FROM tf
       JOIN dft ON tf.term = dft.term
       JOIN dl ON tf.doc_id = dl.doc_id
       CROSS JOIN stats CROSS JOIN bdf
-      WHERE tf.term IN ({all_list})
+      WHERE tf.term IN ({_sql_list([*group, lit])})
     ),
     agg AS (
       SELECT doc_id, sum(c) AS raw, count(DISTINCT clause) AS n_clauses
@@ -3889,10 +3598,6 @@ def _rescore_sql(terms: list[str], phrase: list[str], window: int, k: int,
     new_score = qw*primary + rw*phrase_score for window docs the phrase
     matches (phrase scored (Σ idf) * tf_norm(phrase_freq, dl) — the
     engine's match_phrase weighting), primary-only otherwise."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
-    term_list = ", ".join(f"'{t}'" for t in sorted(set(terms)))
-    ph_list = ", ".join(f"'{t}'" for t in sorted(set(phrase)))
     cond = " AND ".join(
         f"toks[i+{j}] = '{t}'" for j, t in enumerate(phrase)
     )
@@ -3902,23 +3607,9 @@ def _rescore_sql(terms: list[str], phrase: list[str], window: int, k: int,
       FROM documents
     ),
     tok AS (SELECT doc_id, unnest(toks) AS term FROM base),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    {_bm25_stat_ctes()},
     prim AS (
-      SELECT tf.doc_id AS doc_id,
-             sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ) AS raw
-      FROM tf
-      JOIN (SELECT unnest([{term_list}]) AS term) q ON tf.term = q.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6, terms=terms, raw=True)}
     ),
     win AS (
       SELECT doc_id, raw FROM prim
@@ -3930,13 +3621,12 @@ def _rescore_sql(terms: list[str], phrase: list[str], window: int, k: int,
       FROM base
     ),
     phw AS (
-      SELECT sum(ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)) AS w
-      FROM dft CROSS JOIN stats WHERE dft.term IN ({ph_list})
+      SELECT sum({_idf_sql()}) AS w
+      FROM dft CROSS JOIN stats WHERE dft.term IN ({_sql_list(phrase)})
     ),
     sec AS (
       SELECT pf.doc_id,
-             phw.w * (pf.pf * ({K1} + 1.0))
-             / (pf.pf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl))) AS s
+             phw.w * {_tf_norm_sql("pf.pf", 13)} AS s
       FROM pf
       JOIN dl ON pf.doc_id = dl.doc_id
       CROSS JOIN stats CROSS JOIN phw
@@ -3983,21 +3673,7 @@ def ft_bm25_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_weight=RESCORE_QW, rescore_weight=RESCORE_RW,
         score_mode="total",
     )
-    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
-
-    stats = read_doc_stats(spark, index_dir).select(
-        F.col("doc_id").alias("engine_doc_id"),
-        F.col("path").cast("long").alias("ext_id"),
-    )
-    return (
-        out.join(stats, out["doc_id"] == stats["engine_doc_id"])
-        .select(
-            F.col("ext_id").alias("doc_id"),
-            F.round("score", 4).alias("score"),
-            F.round("rescore_score", 4).alias("rescore_score"),
-            F.round("new_score", 4).alias("new_score"),
-        )
-    )
+    return _engine_topk_to_external(out, spark, index_dir)
 
 
 @register(
@@ -4051,25 +3727,10 @@ def _bm25_wildcard_sql(lit: str, rx: str, wild_rx: str, cap: int, k: int,
     literal: each pattern expands to its top-``cap`` dictionary matches
     by df (term-asc ties) — the engine's ``expand_wildcard`` rule —
     scores as a scoring-boolean, and counts ONCE toward msm."""
-    from data_prep_opensearch_spark.operators.bm25 import B, K1
-
     return f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z0-9_]+)', 1)) AS term
-      FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-    dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (SELECT count(*) AS n, avg(1.0 * dl) AS avgdl FROM dl),
-    dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    exp_re AS (
-      SELECT term FROM dft WHERE regexp_full_match(term, '{rx}')
-      ORDER BY df DESC, term ASC LIMIT {cap}
-    ),
-    exp_w AS (
-      SELECT term FROM dft WHERE regexp_full_match(term, '{wild_rx}')
-      ORDER BY df DESC, term ASC LIMIT {cap}
-    ),
+    WITH {_bm25_ctes("documents")},
+    {_capped_expansion_sql("exp_re", f"regexp_full_match(term, '{rx}')", cap)},
+    {_capped_expansion_sql("exp_w", f"regexp_full_match(term, '{wild_rx}')", cap)},
     q AS (
       SELECT '{lit}' AS term, 'lit' AS clause
       UNION ALL SELECT term, 're' AS clause FROM exp_re
@@ -4081,18 +3742,7 @@ def _bm25_wildcard_sql(lit: str, rx: str, wild_rx: str, cap: int, k: int,
       FROM tf JOIN q ON tf.term = q.term GROUP BY tf.doc_id
     ),
     scored AS (
-      SELECT tf.doc_id AS doc_id,
-             round(sum(
-               ln((stats.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * (tf.tf * ({K1} + 1.0))
-               / (tf.tf + {K1} * (1.0 - {B} + {B} * (dl.dl / stats.avgdl)))
-             ), 4) AS score
-      FROM tf
-      JOIN qd ON tf.term = qd.term
-      JOIN dft ON tf.term = dft.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
+      {_bm25_scored_sql(6, "qd")}
     )
     SELECT s.doc_id, s.score
     FROM scored s JOIN nclause ON s.doc_id = nclause.doc_id

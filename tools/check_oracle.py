@@ -1,7 +1,7 @@
 """Local stand-in for the driver's correctness gate: run each queries()
 entry on Spark and its oracle_sql() on DuckDB over the same parquet
 tables, compare row count, column names, and an order-insensitive value
-hash (columns sorted by name, rows sorted, floats rounded to 9 sig
+hash (columns sorted by name, rows sorted, floats rounded to 9 decimal
 places before hashing — a slightly STRICTER check than the driver's).
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
@@ -61,7 +61,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from data_prep_opensearch_spark.session import get_spark
 
-    spark = get_spark(cores=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

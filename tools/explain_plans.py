@@ -59,7 +59,7 @@ def main() -> None:
     from data_prep_opensearch_spark.plans.queries import REGISTRY
     from data_prep_opensearch_spark.session import get_spark
 
-    spark = get_spark(cores=8)
+    spark = get_spark()
     out = ["# PLANS — physical plan evidence (generated by tools/explain_plans.py)\n"]
     out.append(f"Scale dir: `{sf_dir}`. Things to check per plan: `PushedFilters`"
                " reaching the parquet scan, `ReadSchema` pruned to used columns,"
