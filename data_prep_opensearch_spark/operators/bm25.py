@@ -32,7 +32,6 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
 from __future__ import annotations
 
 import functools
-import json
 import math
 import os
 import re
@@ -51,6 +50,7 @@ from data_prep_opensearch_spark.functions.tokenize import (
     PHRASE_TOKENIZERS,
     TOKENIZERS,
 )
+from data_prep_opensearch_spark.operators.manifest import load_meta
 from data_prep_opensearch_spark.operators.postings import (
     decode_positions,
     decode_posting_block,
@@ -359,11 +359,6 @@ def _sidecar_of(grp: pd.DataFrame, shard: int) -> tuple[int, bytes, np.ndarray |
     base, dl_bytes, deleted = side.iloc[0][["base", "dl_bytes", "deleted"]]
     return int(base), bytes(dl_bytes), (
         None if deleted is None else np.asarray(deleted, dtype=np.int64))
-
-
-def load_meta(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        return json.load(f)
 
 
 def _successor(stem: str) -> str | None:

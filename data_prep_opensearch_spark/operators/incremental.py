@@ -3,7 +3,9 @@
 
   - add_documents: index a DELTA corpus as a new segment generation.
     New docs get docIDs continuing each shard's dense rank; unchanged
-    docs are skipped by content fingerprint (the P12-P14 anti-join).
+    docs are skipped by key (the P12-P14 anti-join). The generation is
+    committed by ``index_build.commit_generation``, the same write path a
+    build group takes.
   - delete_documents: tombstone docIDs (append-only side table); queries
     mask tombstoned docs; merge physically drops them and clears the
     tombstones (the history-suppressing MERGE of api/mysql_store.py:951-999).
@@ -11,38 +13,27 @@
     consolidates after appends.
 
 Everything is deterministic and resumable: adds append a lineage row per
-batch; re-running an identical add is a no-op (input fingerprint match).
+batch; re-running an identical add is a no-op (every key already indexed).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
+import shutil
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
+from data_prep_opensearch_spark.operators import manifest as mf
+from data_prep_opensearch_spark.operators.cancellation import cancel_requested, consume_cancel
 from data_prep_opensearch_spark.operators.index_build import (
     SHARD_WIDTH,
-    encode_doclens,
-    map_runs_and_stats,
-    segments_from_runs,
+    assign_doc_ids,
+    commit_generation,
 )
-
-
-def _load_meta(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        return json.load(f)
-
-
-def _save_meta(index_dir: str, meta: dict) -> None:
-    tmp = os.path.join(index_dir, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=2)
-    os.replace(tmp, os.path.join(index_dir, "meta.json"))
+from data_prep_opensearch_spark.operators.locks import index_lock
 
 
 def add_documents(
@@ -57,18 +48,12 @@ def add_documents(
     policy (latest_doc_ids / BM25Engine(prune='latest')) filters at query
     time.
 
-    Commit protocol (manifest.py): the delta's segments/doclens/stats go
-    to deterministic per-generation dirs (mode overwrite — a crashed add
-    re-runs idempotently, no duplicate appends), published by one atomic
-    manifest swap. Serialized by the per-index writer lock.
+    Commit protocol (``commit_generation``, manifest.py): the delta's
+    segments/doclens/stats go to deterministic per-generation dirs (mode
+    overwrite — a crashed add re-runs idempotently, no duplicate appends),
+    published by one atomic manifest swap; meta.json is refreshed after.
+    Serialized by the per-index writer lock.
     """
-    from data_prep_opensearch_spark.operators import manifest as mf
-    from data_prep_opensearch_spark.operators.cancellation import (
-        cancel_requested,
-        consume_cancel,
-    )
-    from data_prep_opensearch_spark.operators.locks import index_lock
-
     with index_lock(index_dir, purpose="add_documents"):
         # cooperative cancel (I5): an add is ONE commit group, so entry is
         # its only safe point
@@ -76,19 +61,15 @@ def add_documents(
             consume_cancel(index_dir)
             return {"status": "interrupted", "cancelled": True,
                     "generation": None, "docs_added": 0}
-        return _add_documents_locked(spark, index_dir, new_docs, mf)
+        return _add_documents_locked(spark, index_dir, new_docs)
 
 
 def _add_documents_locked(
-    spark: SparkSession, index_dir: str, new_docs: DataFrame, mf
+    spark: SparkSession, index_dir: str, new_docs: DataFrame
 ) -> dict:
-    import shutil
-
-    meta = _load_meta(index_dir)
+    meta = mf.load_meta(index_dir)
     n_shards = int(meta["n_shards"])
-    man = mf.load_manifest(index_dir)
-    if man is None:
-        man = mf.adopt_legacy(spark, index_dir)
+    man = mf.load_manifest(index_dir) or mf.adopt_legacy(spark, index_dir)
 
     # --- crash recovery (round-2 ADVICE, high): a prior add may have died
     # between the manifest publish and the meta.json refresh. The manifest
@@ -105,14 +86,9 @@ def _add_documents_locked(
         g for g in published if g > 0 and g not in meta["generations"]
     )
     if orphans:
-        stats0 = mf.read_doc_stats(spark, index_dir)
-        agg0 = stats0.select(
-            F.count("*").alias("n"), F.avg("doclen").alias("a")
-        ).collect()[0]
-        meta["n_docs"] = int(agg0["n"])
-        meta["avgdl"] = float(agg0["a"] or 0.0)
+        mf.refresh_corpus_stats(spark, index_dir, meta)
         meta["generations"] = sorted(set(meta["generations"]) | set(orphans))
-        _save_meta(index_dir, meta)
+        mf.save_meta(index_dir, meta)
         for g in orphans:  # posting runs a completed add would have removed
             shutil.rmtree(
                 os.path.join(index_dir, "staged", f"delta_gen={g}", "kind=0"),
@@ -140,82 +116,23 @@ def _add_documents_locked(
         int(r["shard"]): int(r["m"]) - int(r["shard"]) * SHARD_WIDTH + 1
         for r in old_stats.groupBy("shard").agg(F.max("doc_id").alias("m")).collect()
     }
-    offs = F.create_map(*[
-        x for s in range(n_shards) for x in (F.lit(s), F.lit(offsets.get(s, 0)))
-    ])
-    keyed = fresh.withColumn(
-        "key_hash", F.xxhash64(F.col("repo"), F.col("path"), F.col("commit"))
-    ).withColumn("shard", F.pmod(F.col("key_hash"), F.lit(n_shards)).cast("int"))
-    w = Window.partitionBy("shard").orderBy("key_hash", "repo", "path", "commit")
-    docs = keyed.withColumn(
-        "doc_id",
-        F.col("shard").cast("long") * F.lit(SHARD_WIDTH)
-        + offs[F.col("shard")].cast("long")
-        + F.row_number().over(w).cast("long") - F.lit(1),
-    ).drop("key_hash").withColumn("sha256", F.sha2(F.col("content"), 256))
+    docs = assign_doc_ids(fresh, n_shards, offsets).withColumn(
+        "sha256", F.sha2(F.col("content"), 256))
 
-    t0 = time.monotonic()
-    staged_dir = os.path.join(index_dir, "staged", f"delta_gen={gen}")
     # new generations inherit the index's position setting — a mixed
     # index (some generations positional, some not) would silently break
     # phrase queries after a merge
-    positions = bool(meta.get("positions", False))
-    map_runs_and_stats(docs, meta["tokenizer"], positions).write.partitionBy(
-        "kind"
-    ).mode("overwrite").parquet(staged_dir)
-    run_cols = ["term", "shard", "df", "cf", "doc_bytes", "tf_bytes",
-                "dl_bytes", "pos_bytes"]
-    kind0 = os.path.join(staged_dir, "kind=0")
-    kind1 = os.path.join(staged_dir, "kind=1")
-    n_new = 0
-    seg_rel = f"seg_delta_g{gen}"
-    dl_rel = f"dl_delta_g{gen}"
-    stats_rel = f"staged/delta_gen={gen}/kind=1"
-    if os.path.exists(kind0):
-        runs = spark.read.parquet(kind0).select(*run_cols)
-        segments_from_runs(runs, gen=gen, positions=positions).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_dir, seg_rel))
-    has_stats = os.path.exists(kind1)
-    if has_stats:
-        g_stats = spark.read.parquet(kind1)
-        n_new = g_stats.count()
-        # doclen sidecar: re-encode ONLY the shards this delta touched,
-        # over their full (old + new) stats; the manifest's ordered
-        # doclens list makes the new entry override the old one per shard
-        shards_touched = [
-            int(r["shard"]) for r in g_stats.select("shard").distinct().collect()
-        ]
-        all_stats = old_stats.filter(F.col("shard").isin(shards_touched)).select(
-            *g_stats.columns
-        ).unionByName(g_stats)
-        mf.write_doclens(encode_doclens(all_stats),
-                         os.path.join(index_dir, dl_rel))
+    n_new = commit_generation(
+        spark, index_dir, docs,
+        (f"staged/delta_gen={gen}", f"seg_delta_g{gen}", f"dl_delta_g{gen}"),
+        ("add_documents", -1, gen), meta["tokenizer"],
+        bool(meta.get("positions", False)), old_stats=old_stats,
+    )["n_docs"]
 
-    def _mut(m):
-        if os.path.exists(kind0):
-            mf.add_segment_entry(m, seg_rel, [gen])
-        if has_stats:
-            mf.add_unique(m["doclens"], dl_rel)
-            mf.add_unique(m["doc_stats"], stats_rel)
-    mf.update_manifest(index_dir, _mut)
-    shutil.rmtree(kind0, ignore_errors=True)
-
-    # refresh global stats + lineage
-    stats = mf.read_doc_stats(spark, index_dir)
-    agg = stats.select(F.count("*").alias("n"), F.avg("doclen").alias("a")).collect()[0]
-    meta["n_docs"] = int(agg["n"])
-    meta["avgdl"] = float(agg["a"])
+    mf.refresh_corpus_stats(spark, index_dir, meta)
     if n_new > 0:  # an all-skipped delta must not mint a phantom generation
         meta["generations"] = sorted(set(meta["generations"]) | {gen})
-    _save_meta(index_dir, meta)
-    from data_prep_opensearch_spark.operators.index_build import append_lineage_row
-
-    append_lineage_row(
-        index_dir,
-        ("add_documents", -1, gen, n_new, 0, 0,
-         int((time.monotonic() - t0) * 1000), "complete"),
-    )
+    mf.save_meta(index_dir, meta)
     return {"generation": gen, "docs_added": n_new, "n_docs": meta["n_docs"]}
 
 
@@ -243,11 +160,13 @@ def superseded_doc_ids(spark: SparkSession, index_dir: str) -> DataFrame:
 
 def delete_documents(spark: SparkSession, index_dir: str, doc_ids: DataFrame) -> int:
     """Tombstone docIDs (column ``doc_id``). Queries mask them immediately;
-    merge_segments with apply_deletes=True drops them physically."""
-    tomb_dir = os.path.join(index_dir, "tombstones")
-    rows = doc_ids.select(F.col("doc_id").cast("long")).distinct()
-    rows.write.mode("append").parquet(tomb_dir)
-    return rows.count()
+    merge_segments with apply_deletes=True drops them physically. Returns
+    the number of distinct ids written, counted during the write."""
+    obs = Observation("tombstones")
+    doc_ids.select(F.col("doc_id").cast("long")).distinct().observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).write.mode("append").parquet(os.path.join(index_dir, "tombstones"))
+    return int(obs.get["n"])
 
 
 def load_tombstones(spark: SparkSession, index_dir: str) -> dict[int, np.ndarray]:

@@ -17,33 +17,39 @@ Shard/salting design (the skew strategy, SURVEY.md §4 X8):
 docID assignment (deterministic under ANY parallelism):
   * key_hash = xxhash64(repo, path, commit)  — pure row function
   * shard    = pmod(key_hash, n_shards)
-  * doc_id   = shard * SHARD_WIDTH + (row_number within shard ordered by
-               (key_hash, repo, path, commit) - 1)
+  * doc_id   = shard * SHARD_WIDTH + offset[shard] + (row_number within
+               shard ordered by (key_hash, repo, path, commit) - 1)
   The window partitions by shard (a real shuffle, scales out); ordering is
   total, so ids never depend on partition layout. Dense per-shard ids give
-  small deltas -> tight VByte compression.
+  small deltas -> tight VByte compression. ``offset`` is 0 for a build;
+  an add continues each shard above its highest live id.
+
+One write path: a build group and an added generation are both committed
+by ``commit_generation`` — one tokenize pass stages posting runs and doc
+stats, the segment and doclen writes run as concurrent Spark jobs, one
+manifest publish makes them live, then the lineage row. Segment rows are
+encoded by ``postings.encode_flat``, the same encoder the merge uses.
 
 Checkpoint / resume (SURVEY.md §2.10 I3/I4): shards are processed in
 ``n_groups`` commit groups; each group appends segments + doclens +
-doc_stats and then a lineage row (phase, group, shard count, rows, fp,
+doc_stats and then a lineage row (phase, group, gen, rows, postings, fp,
 wall_ms, status) — the Spark analogue of the reference's per-page
 checkpoint writes (stages/downloader/service.py:60-94). A resumed build
-anti-joins the lineage table and re-runs only incomplete groups
-(the fingerprint-gated skip of stages/enricher/utils.py:1152-1172).
+reads the lineage table and re-runs only incomplete groups (the
+fingerprint-gated skip of stages/enricher/utils.py:1152-1172).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import threading
 import time
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
+from pyspark import InheritableThread
 from pyspark.sql import (
     DataFrame,
     Observation,
@@ -53,20 +59,16 @@ from pyspark.sql import (
     types as T,
 )
 
-
-def _tick(label: str, t0: float) -> float:
-    """Env-gated phase timing (``DPOSS_BUILD_TIMINGS=1``): the scaling
-    bench reads these lines to attribute N-vs-4N inefficiency to a
-    specific build phase rather than guessing."""
-    now = time.monotonic()
-    if os.environ.get("DPOSS_BUILD_TIMINGS") == "1":
-        print(f"PHASE {label} {now - t0:.2f}", flush=True)
-    return now
-
-from data_prep_opensearch_spark.operators.postings import vbyte_encode
-
-SHARD_WIDTH = 1 << 20  # docID capacity per shard; ids are dense so actual
-                       # shard population just has to stay below this
+from data_prep_opensearch_spark.operators import manifest as mf
+from data_prep_opensearch_spark.operators.cancellation import cancel_requested, consume_cancel
+from data_prep_opensearch_spark.operators.locks import index_lock
+from data_prep_opensearch_spark.operators.postings import (
+    SHARD_WIDTH,
+    decode_flat,
+    encode_flat,
+    vbyte_decode,
+    vbyte_encode,
+)
 
 POSTING_ROW_SCHEMA = T.StructType([
     T.StructField("term", T.StringType(), False),
@@ -145,17 +147,21 @@ def append_lineage_row(index_dir: str, row: tuple) -> None:
     os.replace(tmp, os.path.join(lineage_dir, f"part-{uuid.uuid4().hex}.parquet"))
 
 
-def assign_doc_ids(df: DataFrame, n_shards: int) -> DataFrame:
-    """Deterministic dense-per-shard docIDs (see module docstring)."""
+def assign_doc_ids(df: DataFrame, n_shards: int,
+                   offsets: dict[int, int] | None = None) -> DataFrame:
+    """Deterministic dense-per-shard docIDs (see module docstring).
+    ``offsets``: {shard: first free offset}; shards it omits start at 0."""
     keyed = df.withColumn(
         "key_hash", F.xxhash64(F.col("repo"), F.col("path"), F.col("commit"))
     ).withColumn("shard", F.pmod(F.col("key_hash"), F.lit(n_shards)).cast("int"))
     w = Window.partitionBy("shard").orderBy("key_hash", "repo", "path", "commit")
+    base = F.col("shard").cast("long") * F.lit(SHARD_WIDTH)
+    if offsets is not None:
+        base = base + F.create_map(*[
+            x for s in range(n_shards) for x in (F.lit(s), F.lit(offsets.get(s, 0)))
+        ])[F.col("shard")].cast("long")
     return keyed.withColumn(
-        "doc_id",
-        F.col("shard").cast("long") * F.lit(SHARD_WIDTH)
-        + F.row_number().over(w).cast("long")
-        - F.lit(1),
+        "doc_id", base + F.row_number().over(w).cast("long") - F.lit(1),
     ).drop("key_hash")
 
 
@@ -386,217 +392,33 @@ def _flatten_tokens(
     )
 
 
-def _encode_flat(terms, docs, shards, tfs, dls, gen: int, with_blocks: bool,
-                 pos: np.ndarray | None = None) -> pd.DataFrame:
-    """Whole-partition vectorized posting encode: one lexsort, ONE VByte
-    pass per stream, per-group byte slicing — no per-group numpy dispatch.
-    Returns SEGMENT_SCHEMA rows (with_blocks) or RUN_SCHEMA rows (runs also
-    carry dl_bytes so the reducer can rebuild block_min_dl).
-
-    ``pos``: optional token-level position stream aligned with the INPUT
-    posting order (len == tfs.sum(), ascending within each posting); when
-    given, a ``pos_bytes`` stream rides each group (phrase support), else
-    the column is null."""
-    from data_prep_opensearch_spark.operators.postings import (
-        BLOCK,
-        gather_token_runs,
-        vbyte_encode_with_lengths,
-    )
-
-    if isinstance(terms, tuple):  # pre-factorized (codes, uniques)
-        codes, uniq_terms = terms
-    else:
-        codes, uniq_terms = pd.factorize(pd.Series(terms), sort=False)
-    uniq_terms = np.asarray(uniq_terms, dtype=object)
-    order = np.lexsort((docs, shards, codes))
-    if pos is not None:
-        # token-level gather follows the posting permutation
-        pos = pos[gather_token_runs(order, tfs)]
-    codes, shards, docs = codes[order], shards[order], docs[order]
-    tfs, dls = tfs[order], dls[order]
-    n = docs.shape[0]
-
-    change = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
-    starts = np.concatenate(([0], np.flatnonzero(change) + 1))
-    ends = np.concatenate((starts[1:], [n]))
-    glen = ends - starts
-
-    deltas = np.empty_like(docs)
-    deltas[1:] = docs[1:] - docs[:-1]
-    deltas[starts] = docs[starts] - shards[starts] * SHARD_WIDTH
-    if (deltas < 0).any():
-        raise ValueError("doc_ids not sorted within a (term, shard) group")
-    doc_buf, doc_nb = vbyte_encode_with_lengths(deltas.astype(np.uint64))
-    tf_buf, tf_nb = vbyte_encode_with_lengths(tfs.astype(np.uint64))
-    dbo = np.concatenate(([0], np.cumsum(np.add.reduceat(doc_nb, starts))))
-    tbo = np.concatenate(([0], np.cumsum(np.add.reduceat(tf_nb, starts))))
-    cf = np.add.reduceat(tfs, starts)
-    g_terms = uniq_terms.take(codes[starts])
-    g_shards = shards[starts].astype(np.int32)
-
-    pos_col: list | None = None
-    if pos is not None:
-        # one VByte pass over the whole token stream; per-posting resets
-        # (first occurrence absolute) make per-group slices self-contained
-        tok_starts = np.cumsum(tfs) - tfs
-        pdeltas = pos.copy()
-        pdeltas[1:] -= pos[:-1]
-        pdeltas[tok_starts] = pos[tok_starts]
-        pos_buf, pos_nb = vbyte_encode_with_lengths(pdeltas.astype(np.uint64))
-        pos_cum = np.concatenate(([0], np.cumsum(pos_nb)))
-        pbo = np.concatenate((pos_cum[tok_starts[starts]], [len(pos_buf)]))
-        pos_col = [pos_buf[a:b] for a, b in zip(pbo[:-1], pbo[1:])]
-
-    if not with_blocks:
-        dl_buf, dl_nb = vbyte_encode_with_lengths(dls.astype(np.uint64))
-        lbo = np.concatenate(([0], np.cumsum(np.add.reduceat(dl_nb, starts))))
-        # columnar construction: no per-row tuple/from-records inference
-        return pd.DataFrame({
-            "term": g_terms,
-            "shard": g_shards,
-            "df": glen,
-            "cf": cf,
-            "doc_bytes": [doc_buf[a:b] for a, b in zip(dbo[:-1], dbo[1:])],
-            "tf_bytes": [tf_buf[a:b] for a, b in zip(tbo[:-1], tbo[1:])],
-            "dl_bytes": [dl_buf[a:b] for a, b in zip(lbo[:-1], lbo[1:])],
-            "pos_bytes": pos_col if pos_col is not None
-            else [None] * starts.shape[0],
-        })
-
-    # block metadata for ALL groups in one reduceat sweep: blocks are
-    # contiguous BLOCK-sized ranges inside each group, so the global list
-    # of block starts is strictly increasing
-    nblocks = (glen + BLOCK - 1) // BLOCK
-    rep_gstart = np.repeat(starts, nblocks)
-    rep_gend = np.repeat(ends, nblocks)
-    boff = np.concatenate(([0], np.cumsum(nblocks)))
-    within = np.arange(int(nblocks.sum()), dtype=np.int64) - np.repeat(boff[:-1], nblocks)
-    bstart = rep_gstart + BLOCK * within
-    bend = np.minimum(bstart + BLOCK, rep_gend)
-    bfirst = docs[bstart]
-    blast = docs[bend - 1]
-    bmax_tf = np.maximum.reduceat(tfs, bstart).astype(np.int32)
-    bmin_dl = np.minimum.reduceat(dls, bstart).astype(np.int32)
-    # per-block byte offsets, relative to each group's byte slice
-    doc_cum = np.concatenate(([0], np.cumsum(doc_nb)))
-    tf_cum = np.concatenate(([0], np.cumsum(tf_nb)))
-    bdoc_off = doc_cum[bstart] - np.repeat(dbo[:-1], nblocks)
-    btf_off = tf_cum[bstart] - np.repeat(tbo[:-1], nblocks)
-    bpairs = list(zip(boff[:-1], boff[1:]))
-    return pd.DataFrame({
-        "term": g_terms,
-        "shard": g_shards,
-        "gen": np.full(starts.shape[0], gen, dtype=np.int32),
-        "df": glen,
-        "cf": cf,
-        "doc_bytes": [doc_buf[a:b] for a, b in zip(dbo[:-1], dbo[1:])],
-        "tf_bytes": [tf_buf[a:b] for a, b in zip(tbo[:-1], tbo[1:])],
-        "pos_bytes": pos_col if pos_col is not None
-        else [None] * starts.shape[0],
-        "block_first": [bfirst[a:b] for a, b in bpairs],
-        "block_last": [blast[a:b] for a, b in bpairs],
-        "block_max_tf": [bmax_tf[a:b] for a, b in bpairs],
-        "block_min_dl": [bmin_dl[a:b] for a, b in bpairs],
-        "block_doc_off": [bdoc_off[a:b] for a, b in bpairs],
-        "block_tf_off": [btf_off[a:b] for a, b in bpairs],
-    })
-
-
-RUN_SCHEMA = T.StructType([
-    T.StructField("term", T.StringType(), False),
-    T.StructField("shard", T.IntegerType(), False),
-    T.StructField("df", T.LongType(), False),
-    T.StructField("cf", T.LongType(), False),
-    T.StructField("doc_bytes", T.BinaryType(), False),
-    T.StructField("tf_bytes", T.BinaryType(), False),
-    T.StructField("dl_bytes", T.BinaryType(), False),
-    T.StructField("pos_bytes", T.BinaryType(), True),
-])
-
-
-def map_posting_runs(docs: DataFrame, tokenizer: str = "simple",
-                     positions: bool = False) -> DataFrame:
-    """MAP-SIDE COMBINE (the partial aggregation of SURVEY.md §4 X6, done
-    explicitly because posting encode isn't a builtin agg): each input
-    partition tokenizes its docs and emits already-encoded sorted posting
-    RUNS per (term, shard). The shuffle then moves ~vocab×partitions small
-    binary rows instead of one row per posting — at 240k docs that is
-    ~0.6M rows instead of 20M, which is what keeps the (term, shard)
-    shuffle from dominating the build at scale."""
-    def run_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        fl = _flatten_tokens(pdf, tokenizer, positions=positions)
-        if fl.doc_ids.shape[0] == 0:
-            return
-        yield _encode_flat((fl.codes, fl.uniques), fl.doc_ids, fl.shards,
-                           fl.tfs, fl.dls, gen=0, with_blocks=False,
-                           pos=fl.pos)
-
-    return docs.select("doc_id", "shard", "content").mapInPandas(run_map, RUN_SCHEMA)
-
-
 def segments_from_runs(runs: DataFrame, gen: int, n_partitions: int | None = None,
                        positions: bool = False) -> DataFrame:
     """REDUCE: hash-repartition runs by (term, shard); per partition,
-    decode ALL runs with three concatenated VByte passes, rebuild the flat
-    posting columns, and re-encode with block-max metadata. Runs of one
-    group come from disjoint doc partitions, so the lexsort inside
-    _encode_flat is a k-way merge, never a re-sort of overlapping data."""
+    decode ALL runs with one concatenated VByte pass per stream, and
+    re-encode with block-max metadata. Runs of one group come from
+    disjoint doc partitions, so the lexsort inside encode_flat is a k-way
+    merge, never a re-sort of overlapping data."""
     if n_partitions is None:
         n_partitions = runs.sparkSession.sparkContext.defaultParallelism * 2
 
     def reduce_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from data_prep_opensearch_spark.operators.postings import (
-            decode_positions,
-            vbyte_decode,
-        )
-
         chunks = list(batches)
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
         if pdf.empty:
             return
+        docs, tfs, pos = decode_flat(pdf, positions)
         dfs = pdf["df"].to_numpy(dtype=np.int64)
-        # one decode per stream over the concatenated buffers
-        deltas = vbyte_decode(b"".join(pdf["doc_bytes"])).astype(np.int64)
-        tfs = vbyte_decode(b"".join(pdf["tf_bytes"])).astype(np.int64)
         dls = vbyte_decode(b"".join(pdf["dl_bytes"])).astype(np.int64)
-        pos = None
-        if positions:
-            # position resets land exactly at posting boundaries, so the
-            # concatenated streams decode in ONE pass against the flat tf
-            # array — run boundaries need no special casing
-            pos = decode_positions(b"".join(pdf["pos_bytes"]), tfs)
-        # re-anchor docIDs: groupwise cumsum over the flat delta array
-        ends = np.cumsum(dfs)
-        starts = ends - dfs
-        total = np.cumsum(deltas)
-        before = np.where(starts > 0, total[starts - 1], 0)
-        shards_row = pdf["shard"].to_numpy(dtype=np.int64)
-        base_rep = np.repeat(shards_row * SHARD_WIDTH, dfs)
-        docs = total - np.repeat(before, dfs) + base_rep
-        terms = np.repeat(pdf["term"].to_numpy(), dfs)
-        shards = np.repeat(shards_row, dfs)
-        yield _encode_flat(terms, docs, shards, tfs, dls, gen=gen,
-                           with_blocks=True, pos=pos)
+        yield encode_flat(np.repeat(pdf["term"].to_numpy(), dfs), docs,
+                          np.repeat(pdf["shard"].to_numpy(dtype=np.int64), dfs),
+                          tfs, dls, gen=gen, with_blocks=True, pos=pos)
 
     return runs.repartition(n_partitions, "term", "shard").mapInPandas(
         reduce_runs, SEGMENT_SCHEMA
     )
-
-
-def build_segments(docs: DataFrame, tokenizer: str = "simple", gen: int = 0,
-                   n_partitions: int | None = None,
-                   positions: bool = False) -> DataFrame:
-    """tokenize -> map-side partial runs -> shuffle -> merged segments."""
-    return segments_from_runs(map_posting_runs(docs, tokenizer, positions),
-                              gen, n_partitions, positions)
 
 
 STAGED_SCHEMA = T.StructType([
@@ -640,9 +462,9 @@ def map_runs_and_stats(docs: DataFrame, tokenizer: str = "simple",
         fl = _flatten_tokens(pdf, tokenizer, positions=positions)
         cols = [f.name for f in STAGED_SCHEMA.fields]
         if fl.doc_ids.shape[0]:
-            runs = _encode_flat((fl.codes, fl.uniques), fl.doc_ids, fl.shards,
-                                fl.tfs, fl.dls, gen=0, with_blocks=False,
-                                pos=fl.pos)
+            runs = encode_flat((fl.codes, fl.uniques), fl.doc_ids, fl.shards,
+                               fl.tfs, fl.dls, gen=0, with_blocks=False,
+                               pos=fl.pos)
             runs.insert(0, "kind", 0)
             for c in ("doc_id", "repo", "path", "commit", "lang", "sha256",
                       "doclen", "n_terms"):
@@ -665,8 +487,8 @@ def map_runs_and_stats(docs: DataFrame, tokenizer: str = "simple",
 
 def encode_segments(postings: DataFrame, gen: int, n_partitions: int | None = None) -> DataFrame:
     """Encode explicit (term, doc_id, shard, tf, dl) rows into segments —
-    the un-combined path, kept for tests and ad-hoc use; build_index uses
-    build_segments (map-side combine) instead."""
+    the un-combined path, kept for tests and ad-hoc use; build_index
+    stages map-side combined runs (map_runs_and_stats) instead."""
     if n_partitions is None:
         n_partitions = postings.sparkSession.sparkContext.defaultParallelism * 2
 
@@ -677,7 +499,7 @@ def encode_segments(postings: DataFrame, gen: int, n_partitions: int | None = No
         pdf = pd.concat(chunks, ignore_index=True)
         if pdf.empty:
             return
-        yield _encode_flat(
+        yield encode_flat(
             pdf["term"].to_numpy(),
             pdf["doc_id"].to_numpy(dtype=np.int64),
             pdf["shard"].to_numpy(dtype=np.int64),
@@ -690,38 +512,6 @@ def encode_segments(postings: DataFrame, gen: int, n_partitions: int | None = No
     return postings.repartition(n_partitions, "term", "shard").mapInPandas(
         encode, SEGMENT_SCHEMA
     )
-
-
-def doc_stats_map(docs: DataFrame, tokenizer: str = "simple") -> DataFrame:
-    """Per-doc stats WITHOUT any shuffle or join: doclen and distinct-term
-    count are partition-local facts (a doc lives in exactly one partition),
-    so they ride along with the metadata columns in one Arrow pass."""
-    out_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("shard", T.IntegerType(), False),
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("commit", T.StringType(), False),
-        T.StructField("lang", T.StringType(), False),
-        T.StructField("sha256", T.StringType(), False),
-        T.StructField("doclen", T.LongType(), False),
-        T.StructField("n_terms", T.LongType(), False),
-    ])
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            fl = _flatten_tokens(pdf, tokenizer)
-            out = pdf[["doc_id", "shard", "repo", "path", "commit", "lang", "sha256"]].copy()
-            out["doclen"] = fl.doc_lens
-            out["n_terms"] = fl.doc_n_terms
-            out["shard"] = out["shard"].astype("int32")
-            yield out
-
-    return docs.select(
-        "doc_id", "shard", "repo", "path", "commit", "lang", "sha256", "content"
-    ).mapInPandas(stats, out_schema)
 
 
 def encode_doclens(doc_stats: DataFrame) -> DataFrame:
@@ -751,17 +541,6 @@ def encode_doclens(doc_stats: DataFrame) -> DataFrame:
     return doc_stats.groupBy("shard").applyInPandas(enc, DOCLEN_SCHEMA)
 
 
-def _group_fp(docs: DataFrame) -> tuple[int, int]:
-    """(order-independent input fingerprint, row count) in ONE job — the
-    idempotent-export identity pattern, api/control_plane.py:698-704."""
-    row = docs.select(
-        F.expr("bit_xor(xxhash64(repo, path, commit, content))").alias("fp"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    n = int(row["n"])
-    return (int(row["fp"] or 0) ^ n, n)
-
-
 def build_index(
     spark: SparkSession,
     source: DataFrame,
@@ -784,20 +563,147 @@ def build_index(
     (FIXTURES.md §F6). Returns the meta dict (also persisted to meta.json
     once ALL groups are complete).
 
-    Commit protocol (manifest.py): each group's segments/doclens go to
-    deterministic per-group dirs written with mode("overwrite"), then the
-    manifest is published, then the lineage row — so a crash anywhere in
-    the window re-runs the group IDEMPOTENTLY (no duplicate appends; the
-    round-1 df-doubling window is closed). Writers are serialized by the
-    per-index lock (locks.py; reference pipeline/locks.py:35-121).
+    Commit protocol (``commit_generation``, manifest.py): each group's
+    segments/doclens go to deterministic per-group dirs written with
+    mode("overwrite"), then the manifest is published, then the lineage
+    row — so a crash before the publish re-runs the group IDEMPOTENTLY (no
+    duplicate appends; the round-1 df-doubling window is closed), and a
+    crash after it is finished from the committed stats. Writers are
+    serialized by the per-index lock (locks.py; reference
+    pipeline/locks.py:35-121).
     """
-    from data_prep_opensearch_spark.operators.locks import index_lock
-
     with index_lock(index_dir, purpose="build_index"):
         return _build_index_locked(
             spark, source, index_dir, n_shards, tokenizer, n_groups,
             resume, stop_after_groups, positions,
         )
+
+
+def _group_counters(is_doc) -> list:
+    """Aggregates over a group's doc-stats rows (``is_doc`` selects
+    them). sha256 is the content identity, so bit_xor over the keyed
+    hashes is the order-independent group fingerprint WITHOUT another
+    pass over content (idempotent-export identity,
+    api/control_plane.py:698-704)."""
+    return [
+        F.bit_xor(F.when(is_doc, F.xxhash64("repo", "path", "commit", "sha256"))
+                  ).alias("fp"),
+        F.count(F.when(is_doc, 1)).alias("n"),
+        F.sum("n_terms").alias("s"),
+        F.sum("doclen").alias("dl"),
+    ]
+
+
+def _counters(row) -> dict:
+    n = int(row["n"])
+    return {"n_docs": n, "n_postings": int(row["s"] or 0),
+            "fp": int(row["fp"] or 0) ^ n, "sum_dl": int(row["dl"] or 0)}
+
+
+def _append_lineage(index_dir: str, key: tuple[str, int, int], c: dict,
+                    t0: float) -> None:
+    append_lineage_row(index_dir, (
+        *key, c["n_docs"], c["n_postings"], c["fp"],
+        int((time.monotonic() - t0) * 1000), "complete"))
+
+
+def commit_generation(
+    spark: SparkSession,
+    index_dir: str,
+    docs: DataFrame,
+    names: tuple[str, str, str],
+    lineage: tuple[str, int, int],
+    tokenizer: str,
+    positions: bool,
+    old_stats: DataFrame | None = None,
+) -> dict:
+    """Stage, encode and publish ONE commit group: a build group or an
+    added generation. ``docs`` carries doc_id, shard and sha256;
+    ``names`` = (staged dir, segment dir, doclens dir), relative to
+    ``index_dir``; ``lineage`` = (phase, group_id, gen).
+
+      1. ONE tokenize pass stages posting runs (kind=0) and doc stats
+         (kind=1); the group's counters and touched shards are observed
+         during that write, so no later job recounts them.
+      2. The segment write (kind=0 -> segments_from_runs) and the doclen
+         write (kind=1 -> encode_doclens) read DISJOINT staged partitions
+         and run as concurrent Spark jobs.
+      3. One manifest publish makes both live; kind=1 is referenced in
+         place as the group's doc_stats (no rename, no second write).
+      4. The lineage row, then the posting runs are removed.
+
+    ``old_stats``: the doc_stats already live (an add). The doclens of
+    every shard the group touches are re-encoded over those rows plus the
+    new ones; the manifest's ordered doclens list makes the new entry
+    override the old one per shard. Returns the observed counters
+    (n_docs, n_postings, fp, sum_dl)."""
+    t0 = time.monotonic()
+    staged_rel, seg_rel, dl_rel = names
+    gen = lineage[2]
+    staged = os.path.join(index_dir, staged_rel)
+    kind0, kind1 = os.path.join(staged, "kind=0"), os.path.join(staged, "kind=1")
+    is_doc = F.col("kind") == 1
+    obs = Observation(f"commit_{seg_rel}")
+    map_runs_and_stats(docs, tokenizer, positions).observe(
+        obs, *_group_counters(is_doc),
+        F.collect_set(F.when(is_doc, F.col("shard"))).alias("shards"),
+    ).write.partitionBy("kind").mode("overwrite").parquet(staged)
+    got = obs.get
+    # a group can be empty (n_docs < n_shards, or empty shards): guard
+    # both kinds and still commit the lineage row so resume skips it
+    has_runs, has_stats = os.path.exists(kind0), os.path.exists(kind1)
+
+    seg_err: list[BaseException] = []
+
+    def _write_segments():
+        try:
+            runs = spark.read.parquet(kind0).select(
+                "term", "shard", "df", "cf", "doc_bytes", "tf_bytes",
+                "dl_bytes", "pos_bytes")
+            segments_from_runs(runs, gen=gen, positions=positions).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(index_dir, seg_rel))
+        except BaseException as e:  # re-raised on the main thread
+            seg_err.append(e)
+
+    seg_thread = None
+    if has_runs:
+        # inherits the caller's job group and tags
+        seg_thread = InheritableThread(target=_write_segments)
+        seg_thread.start()
+    try:
+        if has_stats:
+            stats = spark.read.parquet(kind1)
+            if old_stats is not None:
+                touched = sorted(int(x) for x in got["shards"])
+                stats = old_stats.filter(F.col("shard").isin(touched)).select(
+                    *stats.columns
+                ).unionByName(stats)
+            mf.write_doclens(encode_doclens(stats), os.path.join(index_dir, dl_rel))
+    finally:
+        # ALWAYS reap the segment writer before any exception can leave
+        # the locked region: an unjoined thread would keep writing into
+        # the index dir after the lock is released
+        if seg_thread is not None:
+            seg_thread.join()
+    if seg_err:
+        raise seg_err[0]
+
+    # publish BEFORE the lineage row: a crash in between leaves a
+    # committed group whose lineage the caller's recovery completes
+    def _mut(m):
+        if has_runs:
+            mf.add_segment_entry(m, seg_rel, [gen])
+        if has_stats:
+            mf.add_unique(m["doclens"], dl_rel)
+            mf.add_unique(m["doc_stats"], f"{staged_rel}/kind=1")
+    mf.update_manifest(index_dir, _mut)
+    counters = _counters(got)
+    _append_lineage(index_dir, lineage, counters, t0)
+    # posting runs served their purpose; the kind=1 stats stay (the
+    # manifest references them in place)
+    shutil.rmtree(kind0, ignore_errors=True)
+    return counters
 
 
 def _build_index_locked(
@@ -811,8 +717,6 @@ def _build_index_locked(
     stop_after_groups: int | None,
     positions: bool,
 ) -> dict:
-    from data_prep_opensearch_spark.operators import manifest as mf
-
     os.makedirs(index_dir, exist_ok=True)
     lineage_dir = os.path.join(index_dir, "lineage")
 
@@ -849,11 +753,6 @@ def _build_index_locked(
     prev_coalesce = spark.conf.get(coalesce_key, "true")
     spark.conf.set(coalesce_key, "false")
 
-    from data_prep_opensearch_spark.operators.cancellation import (
-        cancel_requested,
-        consume_cancel,
-    )
-
     done_this_run: list[int] = []
     try:
         for g in todo:
@@ -868,14 +767,8 @@ def _build_index_locked(
                     "cancelled": True,
                     "groups_done": sorted(done_groups | set(done_this_run)),
                 }
-            t0 = time.monotonic()
-            runs_dir = os.path.join(index_dir, "staged", f"group={g}")
-            run_cols = ["term", "shard", "df", "cf", "doc_bytes", "tf_bytes",
-                        "dl_bytes", "pos_bytes"]
-            kind0 = os.path.join(runs_dir, "kind=0")
-            kind1 = os.path.join(runs_dir, "kind=1")
+            staged_rel = f"staged/group={g}"
             seg_rel, dl_rel = f"seg_b0_g{g}", f"dl_b0_g{g}"
-            stats_rel = f"staged/group={g}/kind=1"
 
             # crash-window recovery (round-2 ADVICE): the manifest publishes
             # only AFTER every one of the group's writes completed, so a
@@ -888,159 +781,43 @@ def _build_index_locked(
             # tiny scan) and skip the writes entirely.
             man_now = mf.load_manifest(index_dir)
             committed = bool(man_now) and (
-                stats_rel in man_now["doc_stats"]
+                f"{staged_rel}/kind=1" in man_now["doc_stats"]
                 or any(e["path"] == seg_rel for e in man_now["segments"])
             )
             if committed:
-                n_docs, n_postings, fp = 0, 0, 0
-                if os.path.exists(kind1):
-                    g_stats = spark.read.parquet(kind1)
-                    agg_row = g_stats.select(
-                        F.expr(
-                            "bit_xor(xxhash64(repo, path, commit, sha256))"
-                        ).alias("fp"),
-                        F.count("*").alias("n"),
-                        F.sum("n_terms").alias("s"),
-                        F.sum("doclen").alias("dl"),
-                    ).collect()[0]
-                    n_docs = int(agg_row["n"])
-                    fp = int(agg_row["fp"] or 0) ^ n_docs
-                    n_postings = int(agg_row["s"] or 0)
-                    group_totals.append((n_docs, int(agg_row["dl"] or 0)))
-                append_lineage_row(
-                    index_dir,
-                    ("postings", g, 0, n_docs, n_postings, fp,
-                     int((time.monotonic() - t0) * 1000), "complete"),
+                t0 = time.monotonic()
+                kind1 = os.path.join(index_dir, staged_rel, "kind=1")
+                c = _counters(
+                    spark.read.parquet(kind1).select(
+                        *_group_counters(F.lit(True))).collect()[0]
+                    if os.path.exists(kind1)
+                    else {"n": 0, "s": 0, "fp": 0, "dl": 0})
+                _append_lineage(index_dir, ("postings", g, 0), c, t0)
+                shutil.rmtree(os.path.join(index_dir, staged_rel, "kind=0"),
+                              ignore_errors=True)
+            else:
+                c = commit_generation(
+                    spark, index_dir, docs.filter(F.col("group_id") == g),
+                    (staged_rel, seg_rel, dl_rel), ("postings", g, 0),
+                    tokenizer, positions,
                 )
-                shutil.rmtree(kind0, ignore_errors=True)
-                done_this_run.append(g)
-                continue
-
-            gdocs = docs.filter(F.col("group_id") == g)
-            # ONE tokenize pass stages posting runs + doc stats together
-            # (map-side combine: the (term, shard) shuffle then moves ~vocab ×
-            # partitions small binary rows, not one row per posting — measured
-            # 20M rows -> 0.6M rows at 240k docs). partitionBy("kind") splits
-            # the two row kinds into separate parquet dirs in the SAME job;
-            # the kind=1 (doc stats) partition is then simply REFERENCED from
-            # the manifest — no rename, no second write.
-            tmark = time.monotonic()
-            map_runs_and_stats(gdocs, tokenizer, positions).write.partitionBy(
-                "kind"
-            ).mode("overwrite").parquet(runs_dir)
-            tmark = _tick("staged_write", tmark)
-            # a group can be empty (n_docs < n_shards, or empty shards): guard
-            # both kinds and still commit the lineage row so resume skips it
-            has_runs, has_stats = os.path.exists(kind0), os.path.exists(kind1)
-
-            # the segment write (kind=0) and the doclen write + commit agg
-            # (kind=1) read DISJOINT staged partitions — run them as
-            # concurrent Spark jobs (threads; Spark's FIFO scheduler
-            # interleaves their tasks across the same slots). The commit
-            # agg rides the doclen job via Observation instead of being
-            # its own scan — two job boundaries removed from the serial
-            # per-group window (the north rule's scaling criterion is
-            # Amdahl-bound by exactly this window).
-            seg_err: list[BaseException] = []
-
-            def _write_segments():
-                try:
-                    runs = spark.read.parquet(kind0).select(*run_cols)
-                    segments_from_runs(runs, gen=0, positions=positions).write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(index_dir, seg_rel))
-                except BaseException as e:  # re-raised on the main thread
-                    seg_err.append(e)
-
-            seg_thread = None
-            if has_runs:
-                seg_thread = threading.Thread(target=_write_segments)
-                seg_thread.start()
-            n_docs, n_postings, fp = 0, 0, 0
-            try:
-                if has_stats:
-                    g_stats = spark.read.parquet(kind1)
-                    # group identity + counters observed DURING the doclen
-                    # write (one job, no second scan) — sha256 is the content
-                    # identity, so this is the order-independent corpus
-                    # fingerprint WITHOUT another pass over content
-                    # (idempotent-export identity, api/control_plane.py:698-704).
-                    # sum(doclen) rides along so a fresh build's finalize
-                    # needs NO extra Spark job.
-                    obs = Observation(f"commit_g{g}")
-                    observed = g_stats.observe(
-                        obs,
-                        F.expr("bit_xor(xxhash64(repo, path, commit, sha256))").alias("fp"),
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum("n_terms").alias("s"),
-                        F.sum("doclen").alias("dl"),
-                    )
-                    mf.write_doclens(encode_doclens(observed),
-                                     os.path.join(index_dir, dl_rel))
-                    agg_row = obs.get
-                    n_docs = int(agg_row["n"])
-                    fp = int(agg_row["fp"] or 0) ^ n_docs
-                    n_postings = int(agg_row["s"] or 0)
-                    group_totals.append((n_docs, int(agg_row["dl"] or 0)))
-            finally:
-                # ALWAYS reap the segment writer before any exception can
-                # leave the locked region: an unjoined thread would keep
-                # writing into the index dir after the lock is released
-                if seg_thread is not None:
-                    seg_thread.join()
-            if seg_err:
-                raise seg_err[0]
-            tmark = _tick("seg_dl_commit", tmark)
-
-            # publish BEFORE the lineage row: a crash in between re-runs the
-            # group, overwrites the same dirs, republishes the same entries
-            def _mut(m, _seg=seg_rel, _dl=dl_rel, _st=stats_rel,
-                     _runs=has_runs, _stats=has_stats):
-                if _runs:
-                    mf.add_segment_entry(m, _seg, [0])
-                if _stats:
-                    mf.add_unique(m["doclens"], _dl)
-                    mf.add_unique(m["doc_stats"], _st)
-            mf.update_manifest(index_dir, _mut)
-
-            wall = int((time.monotonic() - t0) * 1000)
-            append_lineage_row(
-                index_dir, ("postings", g, 0, n_docs, n_postings, fp, wall, "complete")
-            )
-            # posting runs served their purpose; the kind=1 stats stay (the
-            # manifest references them in place)
-            shutil.rmtree(kind0, ignore_errors=True)
+            group_totals.append((c["n_docs"], c["sum_dl"]))
             done_this_run.append(g)
     finally:
         spark.conf.set(coalesce_key, prev_coalesce)
 
-
     if stop_after_groups is not None and len(todo) < n_groups - len(done_groups):
         return {"status": "interrupted", "groups_done": sorted(done_groups | set(todo))}
 
-    # finalize: global stats -> meta.json (atomic tmp+rename — the
-    # reference's atomic_write_json, pipeline/io.py:28-33). A fresh build
-    # already has every group's (n, Σdoclen) from its commit agg — no
-    # extra Spark job; a RESUMED build re-aggregates (the earlier groups'
-    # totals live only in their lineage rows).
-    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
-
-    man = mf.load_manifest(index_dir)
-    if not (man and man["doc_stats"]):  # fully empty corpus
-        total_docs, avgdl = 0, 0.0
-    elif not done_groups:
-        total_docs = sum(n for n, _ in group_totals)
-        total_dl = sum(dl for _, dl in group_totals)
-        avgdl = (total_dl / total_docs) if total_docs else 0.0
-    else:
-        stats = read_doc_stats(spark, index_dir)
-        agg = stats.select(
-            F.count("*").alias("n"), F.avg("doclen").alias("avgdl")
-        ).collect()[0]
-        total_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
+    # finalize: global stats -> meta.json. A fresh build already has every
+    # group's (n, Σdoclen) from its commit observation — no extra Spark
+    # job; a RESUMED build re-aggregates (the earlier groups' totals live
+    # only in their lineage rows).
+    total_docs = sum(n for n, _ in group_totals)
+    total_dl = sum(dl for _, dl in group_totals)
     meta = {
         "n_docs": total_docs,
-        "avgdl": avgdl,
+        "avgdl": (total_dl / total_docs) if total_docs else 0.0,
         "n_shards": n_shards,
         "shard_width": SHARD_WIDTH,
         "tokenizer": tokenizer,
@@ -1048,10 +825,10 @@ def _build_index_locked(
         "generations": [0],
         "status": "complete",
     }
-    tmp = os.path.join(index_dir, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=2)
-    os.replace(tmp, os.path.join(index_dir, "meta.json"))
+    man = mf.load_manifest(index_dir)
+    if done_groups and man and man["doc_stats"]:
+        mf.refresh_corpus_stats(spark, index_dir, meta)
+    mf.save_meta(index_dir, meta)
     return meta
 
 
@@ -1064,9 +841,6 @@ def sort_segments(spark: SparkSession, index_dir: str, n_files: int | None = Non
 
     Commit = write a NEW sorted dir, swap the manifest pointer (one
     small-file atomic replace — object-store safe), GC the old dirs."""
-    from data_prep_opensearch_spark.operators import manifest as mf
-    from data_prep_opensearch_spark.operators.locks import index_lock
-
     with index_lock(index_dir, purpose="sort_segments"):
         m = mf.load_manifest(index_dir) or mf.adopt_legacy(spark, index_dir)
         if n_files is None:

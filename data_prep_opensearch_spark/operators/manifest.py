@@ -27,6 +27,10 @@ Semantics:
     shard (delta adds re-encode only the shards they touched).
   - ``doc_stats``: unioned; vacuum replaces the whole list.
 
+``meta.json`` (load_meta/save_meta, the same atomic replace) caches what
+readers need up front: n_docs and avgdl (``refresh_corpus_stats``), the
+shard count, tokenizer, positions flag and live generations.
+
 Writers that re-run after a crash write to the SAME deterministic dir
 name with mode("overwrite") and re-publish the same manifest entry —
 commits are idempotent (the duplicate-append window flagged in round 1
@@ -52,9 +56,19 @@ import time
 
 import numpy as np
 import pyarrow.dataset as pads
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST = "manifest.json"
+META = "meta.json"
+
+
+def _save_json(index_dir: str, name: str, obj: dict) -> None:
+    """Atomic tmp+rename of one small JSON file (single-file atomic — the
+    reference's atomic_write_json, pipeline/io.py:28-33)."""
+    tmp = os.path.join(index_dir, name + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2)
+    os.replace(tmp, os.path.join(index_dir, name))
 
 
 def load_manifest(index_dir: str) -> dict | None:
@@ -66,10 +80,29 @@ def load_manifest(index_dir: str) -> dict | None:
 
 
 def save_manifest(index_dir: str, m: dict) -> None:
-    tmp = os.path.join(index_dir, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=2)
-    os.replace(tmp, os.path.join(index_dir, MANIFEST))  # single-file atomic
+    _save_json(index_dir, MANIFEST, m)
+
+
+def load_meta(index_dir: str) -> dict:
+    """meta.json: n_docs, avgdl, n_shards, tokenizer, positions and live
+    generations — a cache of the manifest and doc_stats."""
+    with open(os.path.join(index_dir, META)) as f:
+        return json.load(f)
+
+
+def save_meta(index_dir: str, meta: dict) -> None:
+    _save_json(index_dir, META, meta)
+
+
+def refresh_corpus_stats(spark: SparkSession, index_dir: str, meta: dict) -> dict:
+    """Set ``meta``'s n_docs and avgdl from the live doc_stats (one Spark
+    job) and return it."""
+    row = read_doc_stats(spark, index_dir).select(
+        F.count("*").alias("n"), F.avg("doclen").alias("a")
+    ).collect()[0]
+    meta["n_docs"] = int(row["n"])
+    meta["avgdl"] = float(row["a"] or 0.0)
+    return meta
 
 
 def new_manifest() -> dict:
@@ -150,20 +183,28 @@ def segment_files(index_dir: str, m: dict | None) -> list[str]:
     )
 
 
-def read_doc_stats(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Union of live doc_stats dirs; per-path reads + unionByName so dirs
-    written at different times (e.g. a vacuumed dir carrying _gen next to
-    fresh delta dirs without it) merge safely."""
+def _doc_stats_parts(spark: SparkSession, index_dir: str) -> list:
+    """(rel, frame) per live doc_stats dir."""
     m = load_manifest(index_dir)
     if m is None:
-        return spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+        return [("doc_stats", spark.read.parquet(_abs(index_dir, "doc_stats")))]
     if not m["doc_stats"]:
         raise FileNotFoundError(f"no live doc_stats in {index_dir}/{MANIFEST}")
-    parts = [spark.read.parquet(_abs(index_dir, p)) for p in m["doc_stats"]]
+    return [(p, spark.read.parquet(_abs(index_dir, p))) for p in m["doc_stats"]]
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p, allowMissingColumns=True)
     return df
+
+
+def read_doc_stats(spark: SparkSession, index_dir: str) -> DataFrame:
+    """Union of live doc_stats dirs; per-path reads + unionByName so dirs
+    written at different times (e.g. a vacuumed dir carrying _gen next to
+    fresh delta dirs without it) merge safely."""
+    return _union([df for _, df in _doc_stats_parts(spark, index_dir)])
 
 
 _DELTA_GEN = re.compile(r"delta_gen=(\d+)")
@@ -175,62 +216,53 @@ def read_doc_stats_with_gen(spark: SparkSession, index_dir: str) -> DataFrame:
     from the manifest entry's path (staged/delta_gen=K/kind=1); a
     vacuumed dir already carries ``_gen`` as a real column and keeps it.
     Used by the latest-version pruning policy (superseded_doc_ids)."""
-    m = load_manifest(index_dir)
-    if m is None:
-        df = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-        return df if "_gen" in df.columns else df.withColumn("_gen", F.lit(0))
-    if not m["doc_stats"]:
-        raise FileNotFoundError(f"no live doc_stats in {index_dir}/{MANIFEST}")
     parts = []
-    for p in m["doc_stats"]:
-        df = spark.read.parquet(_abs(index_dir, p))
+    for rel, df in _doc_stats_parts(spark, index_dir):
         if "_gen" not in df.columns:
-            mm = _DELTA_GEN.search(p)
+            mm = _DELTA_GEN.search(rel)
             df = df.withColumn("_gen", F.lit(int(mm.group(1)) if mm else 0))
         parts.append(df)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    return _union(parts)
 
 
 def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
     """Live per-shard doclen sidecar: later manifest entries override
-    earlier ones per shard (delta adds re-encode touched shards only)."""
+    earlier ones per shard (delta adds re-encode touched shards only).
+    The override is resolved on the driver from each dir's ``shard``
+    column (no Spark job, no ``dl_bytes`` read): each shard goes to the
+    last dir that holds it, and each dir contributes only the shards it
+    won."""
     m = load_manifest(index_dir)
     if m is None:
         return spark.read.parquet(os.path.join(index_dir, "doclens"))
     if not m["doclens"]:
         raise FileNotFoundError(f"no live doclens in {index_dir}/{MANIFEST}")
-    if len(m["doclens"]) == 1:
-        # single live dir (fresh build / post-merge steady state): no
-        # override ranking to compute — skip the window's shuffle, which
-        # costs every query an extra exchange round
-        return spark.read.parquet(_abs(index_dir, m["doclens"][0]))
-    parts = [
-        spark.read.parquet(_abs(index_dir, p)).withColumn("_ord", F.lit(i))
-        for i, p in enumerate(m["doclens"])
-    ]
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    w = Window.partitionBy("shard").orderBy(F.desc("_ord"))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_ord")
-    )
+    parts, taken = [], set()
+    for rel in reversed(m["doclens"]):
+        path = _abs(index_dir, rel)
+        held = set(_shards(path).tolist())
+        won = held - taken
+        taken |= held
+        if won:
+            df = spark.read.parquet(path)
+            parts.append(df if won == held
+                         else df.filter(F.col("shard").isin(sorted(won))))
+    return _union(parts[::-1])
+
+
+def _shards(path: str) -> np.ndarray:
+    """The ``shard`` column of a doclens dir, read on the driver."""
+    return pads.dataset(path, format="parquet").to_table(
+        columns=["shard"])["shard"].to_numpy()
 
 
 def write_doclens(frame: DataFrame, path: str) -> None:
     """Write a doclen sidecar dir for publishing and assert it holds one
-    row per shard: ``read_doclens``' single-dir fast path and the
-    engine's one sidecar row per shard rely on it. The check reads the
-    written files' ``shard`` column on the driver (no Spark job)."""
+    row per shard: ``read_doclens``' per-shard override and the engine's
+    one sidecar row per shard rely on it. The check reads the written
+    files' ``shard`` column on the driver (no Spark job)."""
     frame.write.mode("overwrite").parquet(path)
-    shards = pads.dataset(path, format="parquet").to_table(
-        columns=["shard"])["shard"].to_numpy()
-    vals, counts = np.unique(shards, return_counts=True)
+    vals, counts = np.unique(_shards(path), return_counts=True)
     if (counts > 1).any():
         raise ValueError(
             f"doclens {path} has several rows for shard(s) "
@@ -354,7 +386,3 @@ def gc_retired(index_dir: str, grace_sec: float | None = None) -> list[str]:
     update_manifest(index_dir, _mut)
     return sorted(due)
 
-
-def gc_paths(index_dir: str, rels: list[str]) -> None:
-    """Back-compat shim: retire + drain under the configured grace."""
-    retire_paths(index_dir, rels)

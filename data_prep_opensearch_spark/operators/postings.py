@@ -7,8 +7,8 @@ path) so it runs Arrow-vectorized inside pandas UDFs — the mandated
 
 Wire format for one posting list (one (term, shard) group):
   - ``doc_bytes``: VByte of [docID_0 - shard_base, delta_1, delta_2, ...]
-    where delta_i = docID_i - docID_{i-1} (strictly positive — docIDs are
-    unique and sorted).
+    where shard_base = shard * SHARD_WIDTH and delta_i = docID_i -
+    docID_{i-1} (strictly positive — docIDs are unique and sorted).
   - ``tf_bytes``: VByte of [tf_0, tf_1, ...] (tf >= 1).
   - Block metadata, one entry per block of ``BLOCK`` postings:
       block_first[i], block_last[i]  — docID bounds (for skipping)
@@ -17,6 +17,13 @@ Wire format for one posting list (one (term, shard) group):
     The (max_tf, min_dl) pair yields a monotone upper bound on the BM25
     contribution of any posting in the block, because BM25's tf-term is
     increasing in tf and decreasing in doclen.
+  - ``pos_bytes`` (positional indexes): VByte of each posting's token
+    positions, the first absolute and the rest as deltas.
+
+Every writer (build, add, merge) goes through one whole-partition pair,
+``decode_flat``/``encode_flat``; ``encode_posting_list`` and
+``encode_positions`` encode one group, the reference codec the tests
+hold ``encode_flat`` to.
 
 Behavioral note: the reference stores content fingerprints and defers
 pathologically large items (api/mysql_store.py:841-865); our analogue of
@@ -30,8 +37,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 
 BLOCK = 128  # postings per block-max block
+SHARD_WIDTH = 1 << 20  # docID capacity per shard; ids are dense so actual
+                       # shard population just has to stay below this
 
 
 # ---------------------------------------------------------------------------
@@ -294,3 +304,143 @@ def merge_posting_runs_with_pos(
     else:
         idx = order
     return docs[idx], tfs[idx], pos[gather_token_runs(idx, tfs)]
+
+
+# ---------------------------------------------------------------------------
+# Whole-partition codec: many (term, shard) groups per call
+# ---------------------------------------------------------------------------
+
+def decode_flat(pdf: pd.DataFrame, positions: bool = False
+                ) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """Flat (docs, tfs, pos) of a frame of encoded group rows: one VByte
+    decode per stream over the concatenated buffers, docIDs re-anchored
+    by a groupwise cumsum. Postings come out row-major, so
+    ``np.repeat(col, df)`` aligns any per-row column with them. Position
+    resets land at posting boundaries, so the position stream decodes in
+    one pass against the flat tf array."""
+    dfs = pdf["df"].to_numpy(dtype=np.int64)
+    deltas = vbyte_decode(b"".join(pdf["doc_bytes"])).astype(np.int64)
+    tfs = vbyte_decode(b"".join(pdf["tf_bytes"])).astype(np.int64)
+    pos = (decode_positions(b"".join(pdf["pos_bytes"]), tfs)
+           if positions else None)
+    ends = np.cumsum(dfs)
+    starts = ends - dfs
+    total = np.cumsum(deltas)
+    before = np.where(starts > 0, total[starts - 1], 0)
+    base = pdf["shard"].to_numpy(dtype=np.int64) * SHARD_WIDTH
+    docs = total - np.repeat(before - base, dfs)
+    return docs, tfs, pos
+
+
+def encode_flat(terms, docs, shards, tfs, dls, gen: int, with_blocks: bool,
+                pos: np.ndarray | None = None) -> pd.DataFrame:
+    """Whole-partition vectorized posting encode: one lexsort, ONE VByte
+    pass per stream, per-group byte slicing — no per-group numpy dispatch.
+    Groups are (term, shard); a group's rows must hold distinct docIDs.
+    Returns segment rows (``with_blocks``: gen plus the six block arrays)
+    or posting-run rows (``dl_bytes`` instead, so the reducer can rebuild
+    block_min_dl).
+
+    ``terms``: one term per posting, or a pre-factorized ``(codes,
+    uniques)`` pair; groups come out in code order, then shard order.
+    ``pos``: optional token-level position stream aligned with the INPUT
+    posting order (len == tfs.sum(), ascending within each posting); when
+    given, a ``pos_bytes`` stream rides each group (phrase support), else
+    the column is null."""
+    if isinstance(terms, tuple):  # pre-factorized (codes, uniques)
+        codes, uniq_terms = terms
+    else:
+        codes, uniq_terms = pd.factorize(pd.Series(terms), sort=False)
+    uniq_terms = np.asarray(uniq_terms, dtype=object)
+    order = np.lexsort((docs, shards, codes))
+    if pos is not None:
+        # token-level gather follows the posting permutation
+        pos = pos[gather_token_runs(order, tfs)]
+    codes, shards, docs = codes[order], shards[order], docs[order]
+    tfs, dls = tfs[order], dls[order]
+    n = docs.shape[0]
+
+    change = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
+    starts = np.concatenate(([0], np.flatnonzero(change) + 1))
+    ends = np.concatenate((starts[1:], [n]))
+    glen = ends - starts
+
+    deltas = np.empty_like(docs)
+    deltas[1:] = docs[1:] - docs[:-1]
+    deltas[starts] = docs[starts] - shards[starts] * SHARD_WIDTH
+    if (deltas < 0).any():
+        raise ValueError("doc_ids not sorted within a (term, shard) group")
+    doc_buf, doc_nb = vbyte_encode_with_lengths(deltas.astype(np.uint64))
+    tf_buf, tf_nb = vbyte_encode_with_lengths(tfs.astype(np.uint64))
+    dbo = np.concatenate(([0], np.cumsum(np.add.reduceat(doc_nb, starts))))
+    tbo = np.concatenate(([0], np.cumsum(np.add.reduceat(tf_nb, starts))))
+    cf = np.add.reduceat(tfs, starts)
+    g_terms = uniq_terms.take(codes[starts])
+    g_shards = shards[starts].astype(np.int32)
+
+    pos_col: list | None = None
+    if pos is not None:
+        # one VByte pass over the whole token stream; per-posting resets
+        # (first occurrence absolute) make per-group slices self-contained
+        tok_starts = np.cumsum(tfs) - tfs
+        pdeltas = pos.copy()
+        pdeltas[1:] -= pos[:-1]
+        pdeltas[tok_starts] = pos[tok_starts]
+        pos_buf, pos_nb = vbyte_encode_with_lengths(pdeltas.astype(np.uint64))
+        pos_cum = np.concatenate(([0], np.cumsum(pos_nb)))
+        pbo = np.concatenate((pos_cum[tok_starts[starts]], [len(pos_buf)]))
+        pos_col = [pos_buf[a:b] for a, b in zip(pbo[:-1], pbo[1:])]
+
+    if not with_blocks:
+        dl_buf, dl_nb = vbyte_encode_with_lengths(dls.astype(np.uint64))
+        lbo = np.concatenate(([0], np.cumsum(np.add.reduceat(dl_nb, starts))))
+        # columnar construction: no per-row tuple/from-records inference
+        return pd.DataFrame({
+            "term": g_terms,
+            "shard": g_shards,
+            "df": glen,
+            "cf": cf,
+            "doc_bytes": [doc_buf[a:b] for a, b in zip(dbo[:-1], dbo[1:])],
+            "tf_bytes": [tf_buf[a:b] for a, b in zip(tbo[:-1], tbo[1:])],
+            "dl_bytes": [dl_buf[a:b] for a, b in zip(lbo[:-1], lbo[1:])],
+            "pos_bytes": pos_col if pos_col is not None
+            else [None] * starts.shape[0],
+        })
+
+    # block metadata for ALL groups in one reduceat sweep: blocks are
+    # contiguous BLOCK-sized ranges inside each group, so the global list
+    # of block starts is strictly increasing
+    nblocks = (glen + BLOCK - 1) // BLOCK
+    rep_gstart = np.repeat(starts, nblocks)
+    rep_gend = np.repeat(ends, nblocks)
+    boff = np.concatenate(([0], np.cumsum(nblocks)))
+    within = np.arange(int(nblocks.sum()), dtype=np.int64) - np.repeat(boff[:-1], nblocks)
+    bstart = rep_gstart + BLOCK * within
+    bend = np.minimum(bstart + BLOCK, rep_gend)
+    bfirst = docs[bstart]
+    blast = docs[bend - 1]
+    bmax_tf = np.maximum.reduceat(tfs, bstart).astype(np.int32)
+    bmin_dl = np.minimum.reduceat(dls, bstart).astype(np.int32)
+    # per-block byte offsets, relative to each group's byte slice
+    doc_cum = np.concatenate(([0], np.cumsum(doc_nb)))
+    tf_cum = np.concatenate(([0], np.cumsum(tf_nb)))
+    bdoc_off = doc_cum[bstart] - np.repeat(dbo[:-1], nblocks)
+    btf_off = tf_cum[bstart] - np.repeat(tbo[:-1], nblocks)
+    bpairs = list(zip(boff[:-1], boff[1:]))
+    return pd.DataFrame({
+        "term": g_terms,
+        "shard": g_shards,
+        "gen": np.full(starts.shape[0], gen, dtype=np.int32),
+        "df": glen,
+        "cf": cf,
+        "doc_bytes": [doc_buf[a:b] for a, b in zip(dbo[:-1], dbo[1:])],
+        "tf_bytes": [tf_buf[a:b] for a, b in zip(tbo[:-1], tbo[1:])],
+        "pos_bytes": pos_col if pos_col is not None
+        else [None] * starts.shape[0],
+        "block_first": [bfirst[a:b] for a, b in bpairs],
+        "block_last": [blast[a:b] for a, b in bpairs],
+        "block_max_tf": [bmax_tf[a:b] for a, b in bpairs],
+        "block_min_dl": [bmin_dl[a:b] for a, b in bpairs],
+        "block_doc_off": [bdoc_off[a:b] for a, b in bpairs],
+        "block_tf_off": [btf_off[a:b] for a, b in bpairs],
+    })

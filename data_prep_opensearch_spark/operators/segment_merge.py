@@ -5,11 +5,16 @@ this job consolidates them k-way per pass until one generation remains —
 the tree-reduce shape of the reference's chunk-summary fan-in
 (stages/enricher/vision.py:469-512), applied to postings.
 
-Merging a (term, shard) group is a concat-of-sorted-runs with last-wins
-dedup on docID (MERGE upsert semantics) — never a global re-sort, because
-every run is already docID-sorted and the shard bounds group size.
-Idempotency: the merged index's logical fingerprint equals the input's
-(verified by tests), so re-running a merge is a no-op semantically.
+Merging is a concat-of-sorted-runs with last-wins dedup on docID (MERGE
+upsert semantics) — never a global re-sort, because every run is already
+docID-sorted and the shard bounds group size. Each partition of
+(term, shard)-hashed segment rows is decoded into flat posting arrays in
+one pass (``postings.decode_flat``); the last-wins dedup across
+generations and the tombstone drop are array ops over the whole
+partition, and the survivors are re-encoded by ``postings.encode_flat``,
+the build's encoder. Idempotency: the merged index's logical fingerprint
+equals the input's (verified by tests), so re-running a merge is a no-op
+semantically.
 
 Commit protocol: every pass writes a NEW immutable segment dir and
 publishes it by atomically rewriting manifest.json (manifest.py) — no
@@ -21,7 +26,6 @@ BM25 *scores*, not just retrieval, match a fresh build of the survivors.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from collections.abc import Iterator
@@ -32,16 +36,17 @@ import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from data_prep_opensearch_spark.operators import manifest as mf
-from data_prep_opensearch_spark.operators.index_build import SEGMENT_SCHEMA, SHARD_WIDTH
+from data_prep_opensearch_spark.operators.cancellation import cancel_requested, consume_cancel
+from data_prep_opensearch_spark.operators.index_build import (
+    SEGMENT_SCHEMA,
+    SHARD_WIDTH,
+    encode_doclens,
+)
 from data_prep_opensearch_spark.operators.locks import index_lock
 from data_prep_opensearch_spark.operators.postings import (
-    decode_positions,
-    decode_posting_list,
-    encode_positions,
-    encode_posting_list,
+    decode_flat,
+    encode_flat,
     gather_token_runs,
-    merge_posting_runs,
-    merge_posting_runs_with_pos,
     vbyte_decode,
 )
 
@@ -65,9 +70,7 @@ def merge_segments(
 def _merge_locked(
     spark: SparkSession, index_dir: str, fan_in: int, apply_deletes: bool
 ) -> dict:
-    meta_path = os.path.join(index_dir, "meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
+    meta = mf.load_meta(index_dir)
     m = mf.load_manifest(index_dir) or mf.adopt_legacy(spark, index_dir)
 
     dl = mf.read_doclens(spark, index_dir).select("shard", "dl_bytes")
@@ -84,11 +87,6 @@ def _merge_locked(
         masked = masked_doc_ids_per_shard(spark, index_dir)
         if masked is not None and masked.isEmpty():
             masked = None
-
-    from data_prep_opensearch_spark.operators.cancellation import (
-        cancel_requested,
-        consume_cancel,
-    )
 
     passes = 0
     force_full_pass = masked is not None  # deletes must touch every row
@@ -153,11 +151,8 @@ def _merge_locked(
         if os.path.exists(tomb_dir):
             shutil.rmtree(tomb_dir)
 
-    m = mf.load_manifest(index_dir)
-    meta["generations"] = mf.live_gens(m)
-    with open(meta_path + ".tmp", "w") as f:
-        json.dump(meta, f, indent=2)
-    os.replace(meta_path + ".tmp", meta_path)
+    meta["generations"] = mf.live_gens(mf.load_manifest(index_dir))
+    mf.save_meta(index_dir, meta)
     return {"passes": passes, "generations": meta["generations"]}
 
 
@@ -184,8 +179,6 @@ def _vacuum_doc_stats(spark: SparkSession, index_dir: str, meta: dict) -> None:
     # re-encode the doclen sidecar for every shard that lost docs (holes
     # encode dl=0; no surviving posting references them)
     alive_new = spark.read.parquet(os.path.join(index_dir, rel))
-    from data_prep_opensearch_spark.operators.index_build import encode_doclens
-
     dl_rel = f"dl_vacuum_v{int(m.get('version', 0)) + 1}"
     mf.write_doclens(encode_doclens(alive_new),
                      os.path.join(index_dir, dl_rel))
@@ -198,25 +191,19 @@ def _vacuum_doc_stats(spark: SparkSession, index_dir: str, meta: dict) -> None:
     mf.update_manifest(index_dir, _mut)
     mf.retire_paths(index_dir, [p for p in old_stats if p != rel])
     mf.retire_paths(index_dir, [p for p in old_dls if p != dl_rel])
-    agg = alive_new.select(
-        F.count("*").alias("n"), F.avg("doclen").alias("a")
-    ).collect()[0]
-    meta["n_docs"] = int(agg["n"])
-    meta["avgdl"] = float(agg["a"] or 0.0)
+    mf.refresh_corpus_stats(spark, index_dir, meta)
 
 
 def _merge_generation_df(to_merge, doclens, next_gen: int, masked=None,
                          positions: bool = False):
-    """Decode -> last-wins merge [-> drop tombstoned docs] -> re-encode
-    each (term, shard) group.
+    """Decode -> last-wins merge [-> drop tombstoned docs] -> re-encode,
+    one whole partition at a time.
 
-    Needs per-shard doclens to rebuild block_min_dl for merged blocks, so
-    the doclen sidecar is joined in by shard; the masked-id sidecar (when
-    deletes apply) rides the same join — both are one row per shard, so
-    the shuffle the repartition below already pays covers them. The
-    broadcast hint is a sandbox-scale optimization, not a correctness
-    dependency; thousands-of-shards deployments drop it and the join
-    co-partitions with the repartition.
+    Each segment row carries its shard's doclen sidecar row (to rebuild
+    block_min_dl) and, when deletes apply, its masked ids: both are one
+    row per shard, broadcast-joined by shard ahead of the repartition. The
+    broadcast hint is a sandbox-scale optimization; thousands-of-shards
+    deployments drop it and the join co-partitions with the repartition.
     """
     joined = to_merge.join(F.broadcast(doclens), "shard")
     if masked is not None:
@@ -229,53 +216,39 @@ def _merge_generation_df(to_merge, doclens, next_gen: int, masked=None,
         pdf = pd.concat(chunks, ignore_index=True)
         if pdf.empty:
             return
-        has_masked = "deleted" in pdf.columns
-        rows = []
-        for (term, shard), grp in pdf.groupby(["term", "shard"], sort=False):
-            base = int(shard) * SHARD_WIDTH
-            runs = []
-            for row in grp.sort_values("gen").itertuples(index=False):
-                d_r, t_r = decode_posting_list(
-                    bytes(row.doc_bytes), bytes(row.tf_bytes), base=base
-                )
-                if positions:
-                    p_r = decode_positions(bytes(row.pos_bytes), t_r)
-                    runs.append((d_r, t_r, p_r))
-                else:
-                    runs.append((d_r, t_r))
-            if positions:
-                docs, tfs, pos = merge_posting_runs_with_pos(runs)
-            else:
-                docs, tfs = merge_posting_runs(runs)
-                pos = None
-            if has_masked:
-                dval = grp.iloc[0]["deleted"]
-                if dval is not None and not (
-                    isinstance(dval, float) and pd.isna(dval)
-                ):
-                    dead = np.asarray(dval, dtype=np.int64)
-                    if dead.size:
-                        alive = ~np.isin(docs, dead, assume_unique=False)
-                        if pos is not None:
-                            pos = pos[gather_token_runs(
-                                np.flatnonzero(alive), tfs
-                            )]
-                        docs, tfs = docs[alive], tfs[alive]
-            if docs.shape[0] == 0:
-                continue
-            dl_arr = vbyte_decode(bytes(grp.iloc[0].dl_bytes)).astype(np.int64)
-            dls = dl_arr[docs - base]
-            doc_b, tf_b, blk = encode_posting_list(docs, tfs, dls, base=base)
-            pos_b = encode_positions(pos, tfs) if pos is not None else None
-            rows.append((
-                term, int(shard), next_gen, int(docs.shape[0]), int(tfs.sum()),
-                doc_b, tf_b, pos_b,
-                blk.first.tolist(), blk.last.tolist(),
-                blk.max_tf.tolist(), blk.min_dl.tolist(),
-                blk.doc_off.tolist(), blk.tf_off.tolist(),
-            ))
-        if rows:
-            yield pd.DataFrame(rows, columns=[f.name for f in SEGMENT_SCHEMA.fields])
+        docs, tfs, pos = decode_flat(pdf, positions)
+        dfs = pdf["df"].to_numpy(dtype=np.int64)
+        # one code per (term, shard) group, numbered in order of first
+        # appearance — encode_flat emits groups in code order
+        group = pdf.groupby(["term", "shard"], sort=False).ngroup().to_numpy()
+        terms = pdf["term"].to_numpy()[np.unique(group, return_index=True)[1]]
+        codes = np.repeat(group, dfs)
+        shards = np.repeat(pdf["shard"].to_numpy(dtype=np.int64), dfs)
+        # last-wins across generations: per (group, doc) keep the posting
+        # of the highest generation
+        order = np.lexsort((np.repeat(pdf["gen"].to_numpy(), dfs), docs, codes))
+        c, d = codes[order], docs[order]
+        keep = order[np.concatenate(((c[1:] != c[:-1]) | (d[1:] != d[:-1]), [True]))]
+        # one row per shard carries the shard's sidecars
+        side = pdf.drop_duplicates("shard").sort_values("shard")
+        if "deleted" in side.columns:
+            dead = side["deleted"].dropna().tolist()
+            if dead:
+                dead = np.concatenate(dead).astype(np.int64)
+                keep = keep[~np.isin(docs[keep], dead)]
+        if keep.shape[0] == 0:
+            return
+        if pos is not None:
+            pos = pos[gather_token_runs(keep, tfs)]
+        docs, tfs, codes, shards = docs[keep], tfs[keep], codes[keep], shards[keep]
+        # each shard's doclen array decoded once; a posting's dl sits at
+        # its shard's start + (doc_id - shard base)
+        dl_arrs = [vbyte_decode(bytes(b)).astype(np.int64) for b in side["dl_bytes"]]
+        dl_start = np.cumsum([0] + [a.shape[0] for a in dl_arrs])
+        row = np.searchsorted(side["shard"].to_numpy(dtype=np.int64), shards)
+        dls = np.concatenate(dl_arrs)[dl_start[row] + docs - shards * SHARD_WIDTH]
+        yield encode_flat((codes, terms), docs, shards, tfs, dls, gen=next_gen,
+                          with_blocks=True, pos=pos)
 
     spark = to_merge.sparkSession
     return joined.repartition(

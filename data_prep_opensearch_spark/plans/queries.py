@@ -985,7 +985,7 @@ def ft_bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine
 
     index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=True)
+    eng = BM25Engine(spark, index_dir, cache=False)
     q = " ".join(BM25_QUERY_TERMS)
     top = eng.topk(q, 1).collect()[0]
     pdf = eng.explain(q, int(top["doc_id"]))
@@ -3331,7 +3331,7 @@ def ft_function_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=True)
+    eng = BM25Engine(spark, index_dir, cache=False)
     attrs = _attrs_engine_keyed(spark, sf_dir, index_dir)
     out = function_score_topk(
         eng, " ".join(BM25_QUERY_TERMS), attrs,
@@ -3394,7 +3394,7 @@ def ft_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_prep_opensearch_spark.operators.facets import significant_terms
 
     index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=True)
+    eng = BM25Engine(spark, index_dir, cache=False)
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("ext_id"), "text"
     ).join(_doc_id_map(spark, index_dir), "ext_id").select(

@@ -56,3 +56,16 @@ def test_entry_matches_oracle(spark, duck, monkeypatch, name):
     sql = spec.sql() if callable(spec.sql) else spec.sql
     issues = compare(name, got, duck.execute(sql).fetchdf())
     assert not issues, issues
+
+
+@pytest.mark.parametrize(
+    "name", ["ft_bm25_explain", "ft_function_score", "ft_significant_terms"])
+def test_engine_entry_leaves_no_cached_data(spark, name):
+    """An entry that opens its own BM25 engine persists nothing: after two
+    runs the session holds as many persisted RDDs as before."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        REGISTRY[name].fn(spark, SF).toPandas()
+    assert sc._jsc.getPersistentRDDs().size() == before

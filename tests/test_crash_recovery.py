@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from data_prep_opensearch_spark.operators import incremental as incr
 from data_prep_opensearch_spark.operators import index_build as ib
 from data_prep_opensearch_spark.operators import locks as locks_mod
+from data_prep_opensearch_spark.operators import manifest as mf
 from data_prep_opensearch_spark.operators.bm25 import BM25Engine
 from data_prep_opensearch_spark.operators.index_build import (
     build_index,
@@ -46,18 +47,18 @@ def test_add_documents_crash_between_manifest_and_meta(spark, tmp_root, monkeypa
     n_base = read_doc_stats(spark, idx).count()
     n_delta = delta.count()
 
-    real_save = incr._save_meta
+    real_save = mf.save_meta
     calls = {"n": 0}
 
     def crashing_save(index_dir, meta):
         calls["n"] += 1
         raise RuntimeError("simulated crash after manifest publish")
 
-    monkeypatch.setattr(incr, "_save_meta", crashing_save)
+    monkeypatch.setattr(mf, "save_meta", crashing_save)
     with pytest.raises(RuntimeError, match="simulated crash"):
         incr.add_documents(spark, idx, delta)
     assert calls["n"] == 1
-    monkeypatch.setattr(incr, "_save_meta", real_save)
+    monkeypatch.setattr(mf, "save_meta", real_save)
 
     # the commit IS published (manifest references delta stats) but meta
     # is stale — the exact round-2 corruption window

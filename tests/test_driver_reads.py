@@ -181,15 +181,16 @@ def test_warm_lookups_run_no_spark_job(spark, indexes):
 def test_cold_topk_resolves_df_on_the_driver(spark, indexes):
     """An uncached engine's ``topk`` resolves global df with the driver
     point read too, so no df aggregate and no broadcast of it join the
-    query plan, and the sidecar rows are unioned in rather than joined:
-    on the delta index every query shape runs the same 5 Spark jobs —
-    the doclens override window's exchange, the tombstone aggregate's
-    exchange and its broadcast onto the doclens rows, the
-    ``repartition(shard)`` exchange, and the scoring stage."""
+    query plan, and the sidecar rows are unioned in rather than joined.
+    The doclens override across the two doclens dirs is resolved on the
+    driver from their shard columns, so no window joins the plan either:
+    on the delta index every query shape runs the same 4 Spark jobs —
+    the tombstone aggregate's exchange and its broadcast onto the doclens
+    rows, the ``repartition(shard)`` exchange, and the scoring stage."""
     idx, _ = indexes["uncached"]
     eng = BM25Engine(spark, idx, cache=False)
     for q in QUERIES:
-        assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 5, q
+        assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 4, q
 
 
 @pytest.mark.parametrize("name", ["base", "delta"])

@@ -155,3 +155,69 @@ def test_merge_with_pos_last_wins():
     assert docs.tolist() == [1, 5]
     assert tfs.tolist() == [2, 2]
     assert pos.tolist() == [0, 7, 4, 9]
+
+
+# ---------------------------------------------------------------------------
+# Whole-partition codec (encode_flat / decode_flat) vs the per-group
+# reference codec
+# ---------------------------------------------------------------------------
+
+from data_prep_opensearch_spark.operators.postings import (  # noqa: E402
+    SHARD_WIDTH,
+    decode_flat,
+    encode_flat,
+)
+
+
+def _random_partition(rng):
+    """Postings of several (term, shard) groups in shuffled order: unique
+    docIDs per group, tfs, doc lengths and per-posting position runs."""
+    groups = {}
+    for _ in range(int(rng.integers(1, 8))):
+        key = (f"t{int(rng.integers(0, 4))}", int(rng.integers(0, 4)))
+        n = int(rng.choice([1, 2, 127, 128, 129, int(rng.integers(1, 400))]))
+        docs = np.sort(rng.choice(5000, size=n, replace=False)) + key[1] * SHARD_WIDTH
+        tfs = rng.integers(1, 6, size=n)
+        dls = rng.integers(1, 3000, size=n)
+        pos = [np.sort(rng.integers(0, 2000, size=t)) for t in tfs]
+        groups[key] = (docs.astype(np.int64), tfs.astype(np.int64),
+                       dls.astype(np.int64), pos)
+    rows = [(term, shard, d, t, dl, p) for (term, shard), g in groups.items()
+            for d, t, dl, p in zip(*g)]
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    terms = np.array([r[0] for r in rows], dtype=object)
+    cols = [np.array([r[i] for r in rows], dtype=np.int64) for i in (2, 1, 3, 4)]
+    pos = np.concatenate([r[5] for r in rows]).astype(np.int64)
+    return groups, terms, cols, pos
+
+
+@given(st.integers(min_value=0, max_value=2**32 - 1))
+@settings(max_examples=60, deadline=None)
+def test_encode_flat_matches_reference_codec(seed):
+    """Every group row ``encode_flat`` emits, from postings in any order,
+    equals ``encode_posting_list`` + ``encode_positions`` on that group:
+    doc, tf and position bytes, df, cf and all six block arrays; the
+    posting-run form carries the group's doc lengths as VByte; and
+    ``decode_flat`` reads the rows back to the sorted postings."""
+    rng = np.random.default_rng(seed)
+    groups, terms, (docs, shards, tfs, dls), pos = _random_partition(rng)
+    seg = encode_flat(terms, docs, shards, tfs, dls, gen=3, with_blocks=True, pos=pos)
+    runs = encode_flat(terms, docs, shards, tfs, dls, gen=0, with_blocks=False, pos=pos)
+    assert len(seg) == len(runs) == len(groups)
+    for row, run in zip(seg.itertuples(index=False), runs.itertuples(index=False)):
+        d, t, dl, p = groups[(row.term, int(row.shard))]
+        doc_b, tf_b, blk = encode_posting_list(d, t, dl, base=int(row.shard) * SHARD_WIDTH)
+        assert (row.gen, row.df, row.cf) == (3, len(d), int(t.sum()))
+        assert (row.doc_bytes, row.tf_bytes) == (doc_b, tf_b)
+        assert row.pos_bytes == encode_positions(np.concatenate(p), t)
+        for name in ("first", "last", "max_tf", "min_dl", "doc_off", "tf_off"):
+            assert np.array_equal(getattr(row, f"block_{name}"), getattr(blk, name)), name
+        assert (run.term, run.shard, run.df, run.cf) == (row.term, row.shard, row.df, row.cf)
+        assert (run.doc_bytes, run.tf_bytes, run.pos_bytes) == (
+            row.doc_bytes, row.tf_bytes, row.pos_bytes)
+        assert run.dl_bytes == vbyte_encode(dl.astype(np.uint64))
+    d2, t2, p2 = decode_flat(seg, positions=True)
+    want = [groups[(r.term, int(r.shard))] for r in seg.itertuples(index=False)]
+    assert np.array_equal(d2, np.concatenate([g[0] for g in want]))
+    assert np.array_equal(t2, np.concatenate([g[1] for g in want]))
+    assert np.array_equal(p2, np.concatenate([np.concatenate(g[3]) for g in want]))

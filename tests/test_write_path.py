@@ -1,0 +1,146 @@
+"""The shared write path: build, add and merge commit through one
+generation commit and encode through one segment encoder.
+
+A positional index with three generations (a build and two adds) and
+tombstones is merged with ``apply_deletes=True``; every merged row must
+be the reference codec's encoding of its postings. The Spark job counts
+of one small add and one merge are pinned, as are delete_documents'
+counts.
+"""
+
+from __future__ import annotations
+
+import itertools
+import os
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from data_prep_opensearch_spark.operators import manifest as mf
+from data_prep_opensearch_spark.operators.incremental import (
+    add_documents,
+    delete_documents,
+)
+from data_prep_opensearch_spark.operators.index_build import build_index
+from data_prep_opensearch_spark.operators.postings import (
+    SHARD_WIDTH,
+    decode_positions,
+    decode_posting_list,
+    encode_positions,
+    encode_posting_list,
+    merge_posting_runs_with_pos,
+    vbyte_decode,
+)
+from data_prep_opensearch_spark.operators.segment_merge import merge_segments
+from data_prep_opensearch_spark.sources.corpus import corpus_df
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(Spark jobs ``fn`` launches, counted through its job group, and
+    its result). Jobs from threads ``fn`` starts inherit the group."""
+    sc = spark.sparkContext
+    group = f"write-path-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _postings(rows):
+    """{(term, shard): (docs, tfs, pos)} of segment rows, generations
+    merged last-wins by the reference run merge."""
+    runs = {}
+    for r in sorted(rows, key=lambda r: r["gen"]):
+        d, t = decode_posting_list(bytes(r["doc_bytes"]), bytes(r["tf_bytes"]),
+                                   base=r["shard"] * SHARD_WIDTH)
+        p = decode_positions(bytes(r["pos_bytes"]), t)
+        runs.setdefault((r["term"], r["shard"]), []).append((d, t, p))
+    return {k: merge_posting_runs_with_pos(v) for k, v in runs.items()}
+
+
+@pytest.fixture(scope="module")
+def three_gens(spark, tmp_root):
+    idx = os.path.join(tmp_root, "write_path_three_gens")
+    full = corpus_df(spark, 270)
+    key = F.xxhash64("repo", "path", "commit") % 3
+    build_index(spark, full.filter(key == 0), idx, n_shards=4, n_groups=2,
+                positions=True)
+    for g in (1, 2):
+        assert add_documents(spark, idx, full.filter(key == g))["generation"] == g
+    stats = mf.read_doc_stats(spark, idx)
+    victims = stats.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+    dead = {int(r["doc_id"]) for r in victims.collect()}
+    assert delete_documents(spark, idx, victims) == len(dead)
+    return idx, dead
+
+
+def test_merged_rows_equal_reference_encoding(spark, three_gens):
+    idx, dead = three_gens
+    before = _postings(mf.read_segments(spark, idx).collect())
+    assert {g for r in mf.read_segments(spark, idx).select("gen").collect()
+            for g in r} == {0, 1, 2}
+    merge_segments(spark, idx, apply_deletes=True)
+    dls = {int(r["shard"]): vbyte_decode(bytes(r["dl_bytes"])).astype(np.int64)
+           for r in mf.read_doclens(spark, idx).collect()}
+    rows = mf.read_segments(spark, idx).collect()
+    assert {r["gen"] for r in rows} == {3}
+    want = {}
+    for k, (d, t, p) in before.items():
+        alive = ~np.isin(d, list(dead))
+        if alive.any():
+            starts = np.cumsum(t) - t
+            tok = np.concatenate([np.arange(s, s + n) for s, n in
+                                  zip(starts[alive], t[alive])])
+            want[k] = (d[alive], t[alive], p[tok])
+    assert len(rows) == len(want)
+    for r in rows:
+        shard = r["shard"]
+        base = shard * SHARD_WIDTH
+        d, t = decode_posting_list(bytes(r["doc_bytes"]), bytes(r["tf_bytes"]), base=base)
+        p = decode_positions(bytes(r["pos_bytes"]), t)
+        wd, wt, wp = want[(r["term"], shard)]
+        assert np.array_equal(d, wd) and np.array_equal(t, wt) and np.array_equal(p, wp)
+        doc_b, tf_b, blk = encode_posting_list(d, t, dls[shard][d - base], base=base)
+        assert (r["df"], r["cf"]) == (len(d), int(t.sum()))
+        assert (bytes(r["doc_bytes"]), bytes(r["tf_bytes"])) == (doc_b, tf_b)
+        assert bytes(r["pos_bytes"]) == encode_positions(p, t)
+        for name in ("first", "last", "max_tf", "min_dl", "doc_off", "tf_off"):
+            assert list(r[f"block_{name}"]) == getattr(blk, name).tolist(), name
+
+
+def test_add_and_merge_job_counts(spark, tmp_root):
+    """One small add runs 18 Spark jobs and a merge that applies deletes
+    25 (AQE runs each query stage as its own job, and every parquet read
+    infers its schema in one). The add's counters and touched shards are
+    observed during its staging write, so no job recounts the new rows
+    or collects their shards; its segment writer's jobs inherit the job
+    group and are counted here."""
+    idx = os.path.join(tmp_root, "write_path_jobs")
+    full = corpus_df(spark, 120)
+    key = F.xxhash64("repo", "path", "commit") % 4
+    build_index(spark, full.filter(key != 0), idx, n_shards=4, n_groups=1)
+    n, out = _jobs(spark, lambda: add_documents(spark, idx, full.filter(key == 0)))
+    assert out["docs_added"] > 0
+    assert n == 18
+    delete_documents(spark, idx, spark.createDataFrame([(1,), (SHARD_WIDTH + 2,)], "doc_id long"))
+    n, out = _jobs(spark, lambda: merge_segments(spark, idx, apply_deletes=True))
+    assert out["generations"] == [2]
+    assert n == 25
+
+
+def test_delete_documents_counts_distinct_ids(spark, tmp_root):
+    """The returned count is observed during the tombstone write: an
+    empty frame writes and counts 0, duplicates count once."""
+    idx = os.path.join(tmp_root, "write_path_delete")
+    build_index(spark, corpus_df(spark, 40), idx, n_shards=2, n_groups=1)
+    tomb = os.path.join(idx, "tombstones")
+    assert delete_documents(spark, idx, spark.createDataFrame([], "doc_id long")) == 0
+    ids = [(3,), (3,), (SHARD_WIDTH + 1,), (3,), (SHARD_WIDTH + 1,)]
+    assert delete_documents(spark, idx, spark.createDataFrame(ids, "doc_id long")) == 2
+    assert sorted(r["doc_id"] for r in spark.read.parquet(tomb).collect()) == [
+        3, SHARD_WIDTH + 1]
