@@ -133,11 +133,6 @@ def clean_content_udf(s: pd.Series) -> pd.Series:
     return s.map(clean_content_py, na_action="ignore")
 
 
-@pandas_udf(T.StringType())
-def dedup_lines_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: dedup_lines_py(x), na_action="ignore")
-
-
 def dedup_chunks_by_prefix_py(chunks, prefix_len: int = 500) -> str:
     """D5: drop chunks whose first ``prefix_len`` chars repeat an earlier
     chunk's, keep-first, join with blank lines (reference

@@ -57,11 +57,6 @@ def strip_html_py(s: str | None) -> str | None:
     return _WS.sub(" ", s).strip()
 
 
-@pandas_udf(T.StringType())
-def strip_html_udf(s: pd.Series) -> pd.Series:
-    return s.map(strip_html_py, na_action="ignore")
-
-
 # ---------------------------------------------------------------------------
 # canonical_url — reference semantics: common/utils.py:59-84 (default scheme
 # https, lowercase scheme+host, strip fragment)
@@ -256,11 +251,6 @@ def normalize_date_udf(s: pd.Series) -> pd.Series:
 def norm_ws(col: Column) -> Column:
     """Collapse whitespace + trim, JVM-side (the SQL-parity normalizer)."""
     return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
-def is_blank(col: Column) -> Column:
-    """Reference's blankness predicate (stages/downloader/utils.py:95-104)."""
-    return col.isNull() | (F.trim(col) == "")
 
 
 def tokens_col(col: Column) -> Column:

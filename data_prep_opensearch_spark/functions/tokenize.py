@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from collections.abc import Iterable
 
 SIMPLE_TOKEN_RE = re.compile(r"[a-z0-9_]+")
 # on the raw (pre-lowercase) text, for identifier splitting
@@ -103,8 +102,3 @@ def term_frequencies(text: str, mode: str = "simple") -> Counter:
 
 def doc_length(text: str, mode: str = "simple") -> int:
     return len(TOKENIZERS[mode](text))
-
-
-def tokenize_batch(texts: Iterable[str], mode: str = "simple") -> list[Counter]:
-    tok = TOKENIZERS[mode]
-    return [Counter(tok(t or "")) for t in texts]

@@ -16,9 +16,10 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
   2. dictionary semi-join: segment scan FILTERED on term — Catalyst pushes
      ``term IN (...)`` into the parquet scan (term is the leading sort key
      of segment files, so row-group min/max stats prune aggressively).
-  3. global df per term, read on the driver (warm or cold engine) with
-     a row-group-pruned pyarrow point read of the segment files (the
-     dictionary step X10 in SURVEY.md §4) — no Spark job.
+  3. global df per term, read on the driver (warm or cold engine) by a
+     point read of the segment files that reads only the row groups
+     whose term min/max can hold a query term (the dictionary step X10
+     in SURVEY.md §4) — no Spark job.
   4. the same filter keeps each touched shard's sidecar row (term NULL).
   5. per-shard scoring in mapInPandas -> local top-k per shard: one
      exhaustive evaluator (phrases, the search_after cursor, or
@@ -31,6 +32,7 @@ Query plan shape (the engine's second entry point, SURVEY.md §3.3):
 
 from __future__ import annotations
 
+import bisect
 import functools
 import math
 import os
@@ -42,7 +44,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -375,25 +377,38 @@ def _successor(stem: str) -> str | None:
     return None
 
 
-def term_point_filter(terms) -> pc.Expression:
-    """Rows of any of ``terms``, as an OR of equalities. pyarrow 16 tests
-    each equality against row-group min/max statistics but not ``isin``,
-    which reads every row group. The OR is built as a balanced tree."""
-    exprs = [pc.field("term") == t for t in sorted(set(terms))]
-    while len(exprs) > 1:
-        exprs = [a | b for a, b in zip(exprs[::2], exprs[1::2])] + (
-            exprs[-1:] if len(exprs) % 2 else [])
-    return exprs[0]
+class TermKeys(NamedTuple):
+    """The term rows a segment read wants: the sorted point set
+    ``points``, or, when ``stem`` is set, every term that starts with
+    it — the ``[stem, upper)`` range (``upper`` None: unbounded)."""
+    points: tuple[str, ...] = ()
+    stem: str | None = None
+    upper: str | None = None
+
+    def can_hold(self, lo: str, hi: str) -> bool:
+        """Whether a row group whose terms span ``[lo, hi]`` can hold a
+        wanted term."""
+        if self.stem is not None:
+            return hi >= self.stem and (self.upper is None or lo < self.upper)
+        i = bisect.bisect_left(self.points, lo)
+        return i < len(self.points) and self.points[i] <= hi
+
+    def mask(self, terms: pa.ChunkedArray) -> pa.ChunkedArray:
+        """The wanted rows among the rows of the row groups read."""
+        if self.stem is not None:
+            return pc.starts_with(terms, self.stem)
+        return pc.is_in(terms, value_set=pa.array(self.points, pa.string()))
 
 
-def term_prefix_filter(stem: str) -> pc.Expression:
+def term_point_filter(terms) -> TermKeys:
+    """Rows of any of ``terms``."""
+    return TermKeys(points=tuple(sorted(set(terms))))
+
+
+def term_prefix_filter(stem: str) -> TermKeys:
     """Rows whose term starts with ``stem``: the ``[stem, successor)``
-    range prunes row groups on both sides; ``starts_with`` alone prunes
-    none."""
-    term = pc.field("term")
-    cond = (term >= stem) & pc.starts_with(term, stem)
-    hi = _successor(stem)
-    return cond if hi is None else cond & (term < hi)
+    range prunes row groups on both sides."""
+    return TermKeys(stem=stem, upper=_successor(stem))
 
 
 class SegmentsRetired(FileNotFoundError):
@@ -401,32 +416,89 @@ class SegmentsRetired(FileNotFoundError):
     merge retired it after the engine's staleness check."""
 
 
+class _SegmentFile(NamedTuple):
+    path: str
+    meta: pq.FileMetaData
+    columns: frozenset[str]
+    # per row group, the [min, max] of ``term``; None when some row
+    # group has no such statistics, and the file is read whole
+    ranges: list[tuple[str, str]] | None
+
+    @classmethod
+    def open(cls, path: str) -> "_SegmentFile":
+        meta = pq.read_metadata(path)
+        names = [meta.schema.column(j).path for j in range(meta.num_columns)]
+        ranges: list[tuple[str, str]] | None = []
+        j = names.index("term")
+        for i in range(meta.num_row_groups):
+            st = meta.row_group(i).column(j).statistics
+            if st is None or not st.has_min_max or not isinstance(st.min, str):
+                ranges = None
+                break
+            ranges.append((st.min, st.max))
+        return cls(path, meta, frozenset(meta.schema.to_arrow_schema().names),
+                   ranges)
+
+    def groups(self, keys: TermKeys) -> list[int]:
+        if self.ranges is None:
+            return list(range(self.meta.num_row_groups))
+        return [i for i, (lo, hi) in enumerate(self.ranges)
+                if keys.can_hold(lo, hi)]
+
+
 class _SegmentReader:
-    """Driver-side reads of the live segment files with pyarrow. The
-    files are term-sorted after ``sort_segments``, so a term-bounded
-    filter reads only the row groups whose min/max range can hold it —
+    """Driver-side point reads of the live segment files with pyarrow:
     the term-dictionary lookup a search node answers in-process, with
-    no Spark job."""
+    no Spark job. Each file's footer, with its row groups' ``term``
+    min/max, is read once when the engine loads. A read then opens the
+    files again, reads only the row groups whose term range can hold a
+    wanted term (on the term-sorted files of ``sort_segments``, the few
+    groups that do) and filters their rows in memory. No file handle
+    outlives a read, so a file a merge retired raises
+    ``SegmentsRetired``."""
 
     def __init__(self, files: list[str]) -> None:
-        dset = pads.dataset(files, format="parquet")
-        frags = list(dset.get_fragments())
-        for f in frags:  # keep row-group statistics for every read
-            f.ensure_complete_metadata()
+        self._files = [_SegmentFile.open(p) for p in files]
         # files from different writers can differ in optional columns
-        self._dset = dset.replace_schema(
-            pa.unify_schemas([f.physical_schema for f in frags]))
+        self._schema = pa.unify_schemas(
+            [f.meta.schema.to_arrow_schema() for f in self._files])
 
-    def read(self, cond: pc.Expression, columns: list[str]) -> pa.Table:
-        try:
-            return self._dset.to_table(columns=columns, filter=cond)
-        except FileNotFoundError as exc:
-            raise SegmentsRetired(str(exc)) from exc
+    def read(self, keys: TermKeys, columns: list[str]) -> pa.Table:
+        """``columns`` of the rows ``keys`` wants. A column some file
+        holds reads as nulls from the files that lack it."""
+        schema = pa.schema([self._schema.field(c) for c in columns])
+        parts = []
+        for f in self._files:
+            groups = f.groups(keys)
+            if not groups:
+                continue
+            try:
+                with pq.ParquetFile(f.path, metadata=f.meta) as pf:
+                    t = pf.read_row_groups(
+                        groups, use_threads=False, columns=[
+                            c for c in dict.fromkeys(["term", *columns])
+                            if c in f.columns])
+            except FileNotFoundError as exc:
+                raise SegmentsRetired(str(exc)) from exc
+            t = t.filter(keys.mask(t["term"]))
+            parts.append(pa.table(
+                [t[c] if c in f.columns else pa.nulls(len(t), schema.field(c).type)
+                 for c in columns], schema=schema))
+        return pa.concat_tables(parts) if parts else schema.empty_table()
 
-    def dfs(self, cond: pc.Expression) -> pa.Table:
-        """(term, df, shards): df summed over shards and generations."""
-        return self.read(cond, ["term", "shard", "df"]).group_by("term").aggregate(
-            [("df", "sum"), ("shard", "distinct")]).rename_columns(["term", "df", "shards"])
+    def dfs(self, keys: TermKeys) -> pa.Table:
+        """(term, df, shards) per term read: df summed over shards and
+        generations, shards ascending."""
+        t = self.read(keys, ["term", "shard", "df"])
+        enc = t["term"].combine_chunks().dictionary_encode()
+        idx = enc.indices.to_numpy().astype(np.int64)
+        df = np.zeros(len(enc.dictionary), np.int64)
+        np.add.at(df, idx, t["df"].to_numpy())
+        pairs = np.unique(idx << 32 | t["shard"].to_numpy())
+        offsets = np.searchsorted(pairs >> 32, np.arange(len(df) + 1))
+        shards = pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), pa.array(pairs & 0xFFFFFFFF, pa.int32()))
+        return pa.table({"term": enc.dictionary, "df": df, "shards": shards})
 
 
 def _one_snapshot(method):
@@ -454,12 +526,13 @@ def _one_snapshot(method):
 
 class BM25Engine:
     """Warm query engine. Init loads, once:
-      - a driver-side pyarrow reader over the live segment files (the
-        term dictionary step X10 of SURVEY.md §4): df resolution, prefix
-        expansion and the driver-local tier's posting fetches are
-        row-group-pruned point reads on the term-sorted files, with no
-        Spark job; resolved dfs are cached per term with the shards
-        that hold it,
+      - a driver-side reader over the live segment files (the term
+        dictionary step X10 of SURVEY.md §4), holding each file's footer
+        and per-row-group term min/max: df resolution, prefix expansion
+        and the driver-local tier's posting fetches read only the row
+        groups of the term-sorted files that can hold a wanted term,
+        with no Spark job; resolved dfs are cached per term with the
+        shards that hold it,
       - ONE scan frame CACHED pre-partitioned by shard: the segment
         rows plus, per shard, one sidecar row (term NULL) carrying its
         doclens and masked ids.
@@ -730,9 +803,9 @@ class BM25Engine:
         length). The cap keeps the clause bounded: distance-asc first
         (Lucene's closest-first rewrite), df desc, term asc.
 
-        Scale note: unlike ``expand_prefix`` (whose StringStartsWith
-        prunes row groups), a 0-prefix fuzzy scan reads the whole
-        dictionary column — the same cost Lucene accepts for
+        Scale note: unlike ``expand_prefix`` (whose [stem, successor)
+        point read prunes row groups), a 0-prefix fuzzy scan reads the
+        whole dictionary column — the same cost Lucene accepts for
         ``prefix_length=0``. Pass ``prefix_length >= 1`` to pin the
         first chars and restore min/max row-group pruning (the exact
         knob Lucene/ES expose for the same reason).
@@ -1017,13 +1090,19 @@ class BM25Engine:
         if pos_terms:
             self._require_positions()
             cols.append("pos_bytes")
-        rows = self._segments.read(term_point_filter(missing), cols).to_pandas()
+        rows = self._segments.read(term_point_filter(missing), cols)
+        shard = rows["shard"].to_numpy()
         self._load_local_sidecars(sorted(
-            set(rows["shard"].tolist()) - self._local_side.keys()))
+            set(shard.tolist()) - self._local_side.keys()))
+        arrays = _posting_arrays(rows, bool(pos_terms))
         parts: dict[str, list] = {t: [] for t in missing}
-        for shard, grp in rows.groupby("shard"):  # shard order: deterministic
-            base, dl_arr, _ = self._local_side[int(shard)]
-            for t, (docs, tfs, pos) in _decode_group(grp, base, pos_terms).items():
+        order = np.argsort(shard, kind="stable")  # shard order: deterministic
+        cuts = np.flatnonzero(np.diff(shard[order])) + 1
+        for sel in np.split(order, cuts) if order.size else ():
+            base, dl_arr, _ = self._local_side[int(shard[sel[0]])]
+            for t, (docs, tfs, pos) in _decode_group(
+                    *(a if a is None else a[sel] for a in arrays), base,
+                    pos_terms).items():
                 parts[t].append((docs, tfs.astype(np.float64),
                                  dl_arr[docs - base], pos))
         empty = np.zeros(0, np.int64)
@@ -1076,9 +1155,12 @@ class BM25Engine:
         distributed path — at 10^12 docs a stopword's postings are GBs
         and belong on executors; the selective queries a latency tier
         exists for stay MBs. A new term costs two driver-side point
-        reads of the segment files (its df, then its rows) and no Spark
-        job; only a shard whose sidecar is not yet cached adds one, and
-        a fuzzy clause's first expansion is a Spark scan.
+        reads of the segment files and no Spark job: its df first, so
+        the guard runs before any posting bytes are read, then its rows.
+        Each reads only the row groups whose term range holds the term
+        and decodes straight from the Arrow columns. Only a shard whose
+        sidecar is not yet cached adds a Spark job, and a fuzzy clause's
+        first expansion is a Spark scan.
 
         Under the cap the evaluator scores EXHAUSTIVELY over the cached
         flat per-term arrays, with a sparse accumulator: one slot per
@@ -1167,11 +1249,11 @@ class BM25Engine:
         "doesn't match" explanation).
 
         Cost: one Spark job collects the doc's shard sidecar, and one
-        driver-side point read fetches the shard's rows for the query's
-        terms (a shard's per-term posting list is bounded by the shard
-        width, the same driver budget the local tier already accepts) —
-        explain is a debugging surface for single documents, never a
-        bulk path."""
+        driver-side point read fetches the query's terms' rows, of
+        which only the doc's shard's are decoded (a shard's per-term
+        posting list is bounded by the shard width, the same driver
+        budget the local tier already accepts) — explain is a debugging
+        surface for single documents, never a bulk path."""
         self._maybe_refresh()
         clauses, n_clauses, negs, phrases, neg_phrases, boosts = (
             self._plan_clauses(query, max_expansions, synonyms)
@@ -1205,15 +1287,15 @@ class BM25Engine:
             return empty
         dl = float(dl_arr[off])
 
-        read_cols = ["term", "gen", "doc_bytes", "tf_bytes"]
-        if phrases or neg_phrases:
+        read_cols = ["term", "shard", "gen", "doc_bytes", "tf_bytes"]
+        if pterms:
             self._require_positions()
             read_cols.append("pos_bytes")
-        postings = _decode_group(self._segments.read(
-            term_point_filter(set(terms) | set(negs) | set(pterms))
-            & (pc.field("shard") == shard),
-            read_cols,
-        ).to_pandas(), base, set(pterms))
+        rows = self._segments.read(
+            term_point_filter(set(terms) | set(negs) | set(pterms)), read_cols)
+        postings = _decode_group(*_posting_arrays(
+            rows.filter(pc.equal(rows["shard"], shard)), bool(pterms)),
+            base, set(pterms))
         tf_of: dict[str, int] = {}
         for t, (docs, tfs, _) in postings.items():
             i = np.searchsorted(docs, doc_id)
@@ -1580,7 +1662,8 @@ def _score_group(
         neg_rows = grp[grp["term"].isin(all_negs)]
         if len(neg_rows):
             neg_docs = {t: d for t, (d, _, _) in
-                        _decode_group(neg_rows, base).items() if d.size}
+                        _decode_group(*_posting_arrays(neg_rows, False), base).items()
+                        if d.size}
     for qi, plan in enumerate(plans):
         if plan is None:
             continue
@@ -1595,22 +1678,26 @@ def _score_group(
             yield out
 
 
+def _posting_arrays(frame, pos: bool) -> tuple:
+    """:func:`_decode_group`'s column arrays from a pandas frame or an
+    Arrow table; ``pos_bytes`` only when ``pos``."""
+    return (*(frame[c].to_numpy() for c in ("term", "gen", "doc_bytes", "tf_bytes")),
+            frame["pos_bytes"].to_numpy() if pos else None)
+
+
 def _decode_group(
-    grp: pd.DataFrame, base: int, pos_terms: set[str] | frozenset = frozenset(),
+    terms: np.ndarray, gens: np.ndarray, docs_b: np.ndarray,
+    tfs_b: np.ndarray, pos_b: np.ndarray | None, base: int,
+    pos_terms: set[str] | frozenset = frozenset(),
 ) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray | None]]:
     """Decode (and merge across generations) each term's postings into
-    (docs, tfs, positions); positions are decoded only for ``pos_terms``
-    (phrase terms — the generation merge keeps them aligned via the
-    token-run gather) and are None otherwise.
-    Column-array access, not itertuples: materializing wide rows (two
-    byte buffers + six block arrays) through pandas row objects measured
+    (docs, tfs, positions), from one shard's rows as column arrays (see
+    :func:`_posting_arrays`); positions are decoded only for
+    ``pos_terms`` (phrase terms — the generation merge keeps them
+    aligned via the token-run gather) and are None otherwise.
+    Column arrays, not itertuples: materializing wide rows (two byte
+    buffers + six block arrays) through pandas row objects measured
     ~0.7 ms per shard-group call — comparable to the scoring itself."""
-    terms = grp["term"].to_numpy()
-    gens = grp["gen"].to_numpy()
-    docs_b = grp["doc_bytes"].to_numpy()
-    tfs_b = grp["tf_bytes"].to_numpy()
-    pos_b = (grp["pos_bytes"].to_numpy()
-             if pos_terms and "pos_bytes" in grp.columns else None)
     out: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray | None]] = {}
     for i in np.argsort(gens, kind="stable"):
         t = terms[i]
@@ -1847,8 +1934,9 @@ def _score_shard_dense(
     """The exhaustive shard kernel every query shape can take: decode
     the shard's rows and run :func:`_evaluate` over the shard's
     contiguous docID range (shards ARE docID ranges by construction)."""
-    postings = _decode_group(
-        grp, base, {t for ph in plan.phrases + plan.neg_phrases for t in ph})
+    pos_terms = {t for ph in plan.phrases + plan.neg_phrases for t in ph}
+    postings = _decode_group(*_posting_arrays(
+        grp, bool(pos_terms) and "pos_bytes" in grp.columns), base, pos_terms)
     dl_arr = vbyte_decode(dl_bytes).astype(np.float64)
     return _evaluate(
         {t: (docs, tfs.astype(np.float64), dl_arr[docs - base], pos)

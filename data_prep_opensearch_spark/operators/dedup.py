@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from data_prep_opensearch_spark.functions.text import tokens_col
+from data_prep_opensearch_spark.session import _materialize
 
 N_MINHASH = 16           # signature length
 LSH_BANDS = 4            # bands of 4 rows each
@@ -120,9 +121,9 @@ def ngram_jaccard_pairs(
     # (optional) drop-count job, the size agg and the pair pass all read
     # the same rows — checkpointing after the anti-join (round-5 shape)
     # made the drop-count and the suppression scan each re-run the whole
-    # tokenize->shingle DAG. At persistent scale this table is written to
-    # storage instead.
-    sh = shingle_rows(df, text, key).localCheckpoint(eager=True)
+    # tokenize->shingle DAG. With a checkpoint dir set, this table is
+    # written to storage.
+    sh = _materialize(shingle_rows(df, text, key))
     if max_shingle_df is not None:
         sdf = sh.groupBy("shingle").agg(F.count("*").alias("_sdf"))
         hot = sdf.filter(F.col("_sdf") > max_shingle_df).select("shingle")
@@ -272,9 +273,9 @@ def minhash_lsh_pairs(
              F.col("_bh.band_hash").alias("band_hash"))
     # materialize before the bucket passes: without this, the size gate
     # and the pair generation would each recompute the whole
-    # shingle->minhash DAG (measured 25x slower). At persistent scale
-    # the signature table is written to storage instead.
-    band_hashes = band_hashes.localCheckpoint(eager=True)
+    # shingle->minhash DAG (measured 25x slower). With a checkpoint dir
+    # set, the signature table is written to storage.
+    band_hashes = _materialize(band_hashes)
     if max_bucket_size is not None:
         bsz = band_hashes.groupBy("band", "band_hash").agg(
             F.count("*").alias("_bsz")

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
+from data_prep_opensearch_spark.session import _materialize
+
 DIM = 64  # testdata embedding dimensionality (asserted at runtime)
 
 
@@ -402,7 +404,7 @@ def ivf_refresh(
         # race). The churn set is bounded by the affected partitions;
         # at warehouse scale the same two-phase shape applies — stage
         # the affected partitions to a temp prefix, then commit
-        out = out.localCheckpoint(eager=True)
+        out = _materialize(out)
         nonempty = {
             int(r["_cluster"])
             for r in out.select("_cluster").distinct().collect()
@@ -498,9 +500,8 @@ def embedding_near_dup_pairs(
     for adversarial/degenerate inputs, not the sizing mechanism."""
     # materialize bucket assignment before the self-join (both sides would
     # otherwise recompute the n_planes dot products per row)
-    withb = df.withColumn(
-        "_bucket", lsh_bucket_col(F.col(vec_col), n_planes)
-    ).localCheckpoint(eager=True)
+    withb = _materialize(df.withColumn(
+        "_bucket", lsh_bucket_col(F.col(vec_col), n_planes)))
     if max_bucket_size is not None:
         hot = (
             withb.groupBy("_bucket")

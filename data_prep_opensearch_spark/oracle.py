@@ -8,7 +8,6 @@ engine must be rank-identical with scores equal within 1e-9.
 
 from __future__ import annotations
 
-import math
 import re
 from collections import Counter
 
@@ -273,7 +272,3 @@ def reference_query_set() -> list[dict]:
     qs.append({"qid": qid, "query": "zzz_absent_term", "k": 10}); qid += 1
     qs.append({"qid": qid, "query": "zzz_absent needle2", "k": 10}); qid += 1
     return qs
-
-
-def score_close(a: float, b: float, tol: float = 1e-9) -> bool:
-    return math.isclose(a, b, rel_tol=0.0, abs_tol=tol)

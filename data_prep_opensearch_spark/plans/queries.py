@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from data_prep_opensearch_spark.operators.bm25 import B, K1
+from data_prep_opensearch_spark.session import _materialize
 
 TOKEN_PATTERN = "([a-z0-9_]+)"
 BM25_QUERY_TERMS = ["key", "merge", "sort", "batch"]
@@ -269,7 +270,7 @@ def _bm25_features(docs: DataFrame, terms: list[str],
     """Per-doc BM25 feature table: (doc_id, dl, tf_0..tf_{n-1}[, extras])
     computed as ARRAY EXPRESSIONS in one corpus scan — per-term tf is an
     array filter over the token array, dl its size — then eagerly
-    materialized (localCheckpoint). This is the guide-§8 'decide with
+    materialized (``_materialize``). This is the guide-§8 'decide with
     small rows' shape: every downstream aggregate/join touches a few
     longs per doc, never the token stream, and the corpus is tokenized
     exactly ONCE (the round-5 explode→groupBy twin re-tokenized it once
@@ -291,7 +292,7 @@ def _bm25_features(docs: DataFrame, terms: list[str],
     ]
     for name, expr in (extra or {}).items():
         cols.append(expr.alias(name))
-    return toks.select(*cols).localCheckpoint(eager=True)
+    return _materialize(toks.select(*cols))
 
 
 def _bm25_stats_row(feats: DataFrame, n_terms: int,
@@ -822,11 +823,12 @@ def ft_bm25_phrase_slop_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ft_bm25_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix clause on the SEGMENT ENGINE: `key s*` expands `s*` against
-    the term dictionary (one filtered aggregate over the term-sorted
-    segment files — StringStartsWith pushes to the parquet scan), keeps
-    the top-4 expansions by df (ties term-asc; sort/spark are dropped at
-    this corpus), and scores the union as a scoring-boolean. Oracle
-    mirrors the expansion rule with LIKE + ORDER BY df DESC LIMIT."""
+    the term dictionary (a driver-side point read of the term-sorted
+    segment files: only the row groups whose term range meets
+    [`s`, `t`) are read, with no Spark job), keeps the top-4 expansions
+    by df (ties term-asc; sort/spark are dropped at this corpus), and
+    scores the union as a scoring-boolean. Oracle mirrors the expansion
+    rule with LIKE + ORDER BY df DESC LIMIT."""
     from data_prep_opensearch_spark.operators.bm25 import query_topk
 
     index_dir = _ensure_docs_index(spark, sf_dir)

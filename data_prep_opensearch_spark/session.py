@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # the directory holding this package, which Python workers must import:
 # the daemon module and every UDF the package ships live in it
@@ -112,3 +112,14 @@ def stop_spark() -> None:
         active.stop()
     # Spark caches the JVM-side session; clear so a new master takes effect.
     SparkSession.builder._options = {}
+
+
+def _materialize(df: DataFrame) -> DataFrame:
+    """``df`` computed once, with its lineage cut. With a checkpoint dir
+    set on the SparkContext this is a reliable ``checkpoint()`` (a lost
+    executor's blocks are re-read from the dir); otherwise a
+    ``localCheckpoint()`` in executor storage, which a lost executor
+    recomputes from scratch."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

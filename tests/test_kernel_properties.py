@@ -176,7 +176,8 @@ def _local_postings(grp: pd.DataFrame, terms) -> dict[str, tuple]:
     tfs, dls, positions) per term, empty for a term the shard lacks."""
     dl = postings.vbyte_decode(grp["dl_bytes"].iloc[-1]).astype(np.float64)
     grp = grp[grp["term"].notna()]
-    dec = bm25._decode_group(grp, BASE, set(grp["term"]))
+    dec = bm25._decode_group(*bm25._posting_arrays(grp, True), BASE,
+                             set(grp["term"]))
     empty = np.zeros(0, np.int64)
     return {t: (d, tf.astype(np.float64), dl[d - BASE], pos)
             for t in terms

@@ -1,24 +1,23 @@
-"""The engine's driver-side segment predicates prune parquet row groups on
+"""The engine's driver-side segment reads prune parquet row groups on
 both sides, run without Spark.
 
 A term-sorted file with many small row groups is written the way
 ``sort_segments`` lays segments out (each term on several rows). For
-point reads and prefix ranges, the row groups that
-``fragment.split_by_row_group(filter=...)`` keeps must be exactly those
-whose [min, max] term range can hold a wanted term. ``isin`` keeps every
-row group under pyarrow 16, and a one-sided ``term >= stem`` keeps every
-row group past the stem, so either regression fails here.
+point reads and prefix ranges, the row groups the reader chooses to
+read must be exactly those whose [min, max] term range can hold a
+wanted term. A one-sided ``term >= stem`` range keeps every row group
+past the stem, so that regression fails here.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
 
 from data_prep_opensearch_spark.operators.bm25 import (
+    TermKeys,
+    _SegmentFile,
     _SegmentReader,
     _successor,
     term_point_filter,
@@ -46,15 +45,11 @@ def segment_file(tmp_path_factory):
         "shard": [s for _, s in rows],
         "df": [len(t) + s for t, s in rows],
     }), path, row_group_size=ROWS_PER_GROUP)
-    frag = next(pads.dataset(path, format="parquet").get_fragments())
+    seg = _SegmentFile.open(path)
     groups = [rows[i:i + ROWS_PER_GROUP]
               for i in range(0, len(rows), ROWS_PER_GROUP)]
-    assert frag.num_row_groups == len(groups) > 40
-    return path, frag, [(g[0][0], g[-1][0]) for g in groups]
-
-
-def _kept(frag, cond) -> list[int]:
-    return [f.row_groups[0].id for f in frag.split_by_row_group(filter=cond)]
+    assert seg.meta.num_row_groups == len(groups) > 40
+    return path, seg, [(g[0][0], g[-1][0]) for g in groups]
 
 
 def _overlapping(ranges, lo: str, hi: str | None) -> list[int]:
@@ -63,26 +58,26 @@ def _overlapping(ranges, lo: str, hi: str | None) -> list[int]:
             if mx >= lo and (hi is None or mn < hi)]
 
 
-def _terms_read(path, cond) -> set[str]:
-    return set(_SegmentReader([path]).dfs(cond)["term"].to_pylist())
+def _terms_read(path, keys) -> set[str]:
+    return set(_SegmentReader([path]).dfs(keys)["term"].to_pylist())
 
 
 @pytest.mark.parametrize("terms", [
     ["t007"], ["t007", "t099"], ["t15", "v059"], ["u" + MAX], ["t000", "v000"],
 ])
 def test_point_read_prunes_to_holding_groups(segment_file, terms):
-    path, frag, ranges = segment_file
+    path, seg, ranges = segment_file
     want = sorted({i for t in terms for i in _overlapping(ranges, t, t + "\0")})
-    assert _kept(frag, term_point_filter(terms)) == want
+    assert seg.groups(term_point_filter(terms)) == want
     assert len(want) <= 2 * len(terms) < len(ranges)
     assert _terms_read(path, term_point_filter(terms)) == set(terms)
 
 
 @pytest.mark.parametrize("stem", ["t15", "t150", "t0", "u" + MAX, "u", "v02"])
 def test_prefix_range_prunes_both_sides(segment_file, stem):
-    path, frag, ranges = segment_file
+    path, seg, ranges = segment_file
     want = _overlapping(ranges, stem, _successor(stem))
-    assert _kept(frag, term_prefix_filter(stem)) == want
+    assert seg.groups(term_prefix_filter(stem)) == want
     # a one-sided bound would keep every group past the stem
     assert len(want) < len(_overlapping(ranges, stem, None))
     got = _terms_read(path, term_prefix_filter(stem))
@@ -91,24 +86,22 @@ def test_prefix_range_prunes_both_sides(segment_file, stem):
 
 
 def test_empty_results_read_no_row_group(segment_file):
-    path, frag, ranges = segment_file
+    path, seg, ranges = segment_file
     # strings inside the gap between two adjacent row groups
     (_, mx), (mn, _) = ranges[10], ranges[11]
     assert mx < mx + "\0" < mn
     gap = mx + "\0"
-    assert _kept(frag, term_point_filter([gap])) == []
-    assert _kept(frag, term_prefix_filter(gap)) == []
+    assert seg.groups(term_point_filter([gap])) == []
+    assert seg.groups(term_prefix_filter(gap)) == []
     assert _terms_read(path, term_point_filter(["absent", gap])) == set()
     assert _terms_read(path, term_prefix_filter("zz")) == set()
 
 
-def test_isin_and_one_sided_bounds_would_fail(segment_file):
-    """The predicates this guard protects against keep far more groups."""
-    _, frag, ranges = segment_file
-    term = pads.field("term")
-    assert len(_kept(frag, term.isin(["t007"]))) == len(ranges)
-    one_sided = (term >= "t15") & pc.starts_with(term, "t15")
-    assert len(_kept(frag, one_sided)) > len(_kept(frag, term_prefix_filter("t15")))
+def test_one_sided_bound_would_fail(segment_file):
+    """The range this guard protects against keeps far more groups."""
+    _, seg, _ = segment_file
+    one_sided = TermKeys(stem="t15", upper=None)
+    assert len(seg.groups(one_sided)) > len(seg.groups(term_prefix_filter("t15")))
 
 
 def test_successor():
