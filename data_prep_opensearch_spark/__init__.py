@@ -27,6 +27,6 @@ __version__ = "0.6.0"
 # manifest/meta FORMAT changes (not on every package release). Cache
 # keys for built indexes include this, so a layout change invalidates
 # stale /tmp caches even if a package version were ever reused.
-INDEX_FORMAT_VERSION = 4  # 4: positional postings (pos_bytes)
+INDEX_FORMAT_VERSION = 5  # 5: deletes as doclens `deleted` masks; 4: pos_bytes
 
 from data_prep_opensearch_spark.session import get_spark  # noqa: F401

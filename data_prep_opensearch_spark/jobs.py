@@ -207,7 +207,7 @@ def main(argv: list[str] | None = None) -> int:
     st = sub.add_parser(
         "stats",
         description="index stats (_stats analogue): doc counts, "
-                    "segment/doclen layout and bytes, tombstones, "
+                    "segment/doclen layout and bytes, deleted docs, "
                     "GC-ledger state — no Spark session needed.",
     )
     st.add_argument("--index", required=True)
@@ -224,6 +224,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from data_prep_opensearch_spark.operators.bm25 import load_meta
         from data_prep_opensearch_spark.operators.manifest import (
+            deleted_count,
             load_manifest,
         )
 
@@ -248,11 +249,6 @@ def main(argv: list[str] | None = None) -> int:
             seg_files += f
         dl_bytes = sum(du(d)[0] for d in man.get("doclens", []))
         ds_bytes = sum(du(d)[0] for d in man.get("doc_stats", []))
-        tomb_dir = os.path.join(args.index, "tombstones")
-        n_tomb_files = (
-            sum(len(ns) for _, _, ns in os.walk(tomb_dir))
-            if os.path.isdir(tomb_dir) else 0
-        )
         print(json.dumps({
             "n_docs": meta.get("n_docs"),
             "avgdl": meta.get("avgdl"),
@@ -266,7 +262,7 @@ def main(argv: list[str] | None = None) -> int:
             "segment_files": seg_files,
             "doclen_bytes": dl_bytes,
             "doc_stats_bytes": ds_bytes,
-            "tombstone_files": n_tomb_files,
+            "deleted_docs": deleted_count(args.index),
             "retired_pending_gc": len(man.get("retired", [])),
         }))
         return 0

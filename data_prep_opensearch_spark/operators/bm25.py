@@ -576,12 +576,12 @@ class BM25Engine:
 
         Staleness discipline (round-4 review item): every public query
         entry point stats the index's commit artifacts first
-        (_index_token: manifest.json + meta.json + tombstones dir) and
-        on ANY change unpersists and reloads — so an engine held across
-        an add/delete/merge by the same or another process serves
+        (_index_token: manifest.json + meta.json) and on ANY change
+        unpersists and reloads — so an engine held across an
+        add/delete/merge by the same or another process serves
         post-mutation results from every tier (distributed, batch, and
         the driver-local cache) without a manual flush. Cost per query:
-        three os.stat calls."""
+        two os.stat calls."""
         self.spark = spark
         self.index_dir = index_dir
         self._cache_req = cache
@@ -598,14 +598,13 @@ class BM25Engine:
 
     def _index_token(self) -> tuple:
         """Cheap change signature of the index's commit artifacts. Every
-        mutation path lands in at least one of these: add/merge/vacuum
-        publish manifest.json (and refresh meta.json); delete_documents
-        appends a file under tombstones/ (bumping the dir mtime)."""
+        mutation path lands in at least one of these: add, delete, merge
+        and vacuum publish manifest.json, and add and merge refresh
+        meta.json."""
         d = self.index_dir
         return (
             self._stat_sig(os.path.join(d, "manifest.json")),
             self._stat_sig(os.path.join(d, "meta.json")),
-            self._stat_sig(os.path.join(d, "tombstones")),
         )
 
     def _maybe_refresh(self) -> None:
@@ -616,9 +615,7 @@ class BM25Engine:
     _entered = False  # inside an _one_snapshot entry point
 
     def _load(self) -> None:
-        from data_prep_opensearch_spark.operators.incremental import (
-            masked_doc_ids_per_shard,
-        )
+        from data_prep_opensearch_spark.operators.incremental import with_superseded
         from data_prep_opensearch_spark.operators.manifest import (
             load_manifest,
             read_doclens,
@@ -638,16 +635,11 @@ class BM25Engine:
         seg = read_segments(spark, index_dir, m)
         self._segments = _SegmentReader(segment_files(index_dir, m))
 
-        sidecar = read_doclens(spark, index_dir).select("shard", "base", "dl_bytes")
-        masked = masked_doc_ids_per_shard(
-            spark, index_dir, include_superseded=prune_superseded
-        )
-        if masked is not None:
-            sidecar = sidecar.join(masked, "shard", "left")
-        else:
-            sidecar = sidecar.withColumn(
-                "deleted", F.lit(None).cast(T.ArrayType(T.LongType()))
-            )
+        # the doclens rows ARE the sidecar rows, deletes included
+        sidecar = read_doclens(spark, index_dir).select(
+            "shard", "base", "dl_bytes", "deleted")
+        if prune_superseded:
+            sidecar = with_superseded(spark, index_dir, sidecar)
         # one scan frame: each shard's sidecar row rides with its rows
         scan = seg.unionByName(sidecar, allowMissingColumns=True)
 
@@ -1057,9 +1049,9 @@ class BM25Engine:
         ).select("term", "shard", "base", "dl_bytes", "deleted").toPandas()
 
     def _load_local_sidecars(self, s_missing: list[int]) -> None:
-        """Pull the listed shards' doclen/tombstone sidecars to the driver
-        and refresh the merged tombstone union. Sidecar arrays count
-        against the SAME budget as the postings: at 10^12 docs the
+        """Pull the listed shards' sidecars (doclens and deleted ids) to
+        the driver and refresh the merged deleted-id union. Sidecar arrays
+        count against the SAME budget as the postings: at 10^12 docs the
         per-shard doclen arrays alone are GBs — an unaccounted sidecar
         cache would make LOCAL_CACHE_BYTES a fiction."""
         if not s_missing:

@@ -6,9 +6,12 @@
     docs are skipped by key (the P12-P14 anti-join). The generation is
     committed by ``index_build.commit_generation``, the same write path a
     build group takes.
-  - delete_documents: tombstone docIDs (append-only side table); queries
-    mask tombstoned docs; merge physically drops them and clears the
-    tombstones (the history-suppressing MERGE of api/mysql_store.py:951-999).
+  - delete_documents: one manifest commit under the writer lock that
+    unions the docIDs into the ``deleted`` mask of each touched shard's
+    doclens row; queries mask them from that row, and
+    merge_segments(apply_deletes=True) drops them physically and clears
+    the masks in the same publish (the history-suppressing MERGE of
+    api/mysql_store.py:951-999).
   - The log-structured generation merge (segment_merge.merge_segments)
     consolidates after appends.
 
@@ -20,9 +23,6 @@ from __future__ import annotations
 
 import os
 import shutil
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
@@ -141,8 +141,8 @@ def superseded_doc_ids(spark: SparkSession, index_dir: str) -> DataFrame:
     reference's latest-pointer resolve, pipeline/io.py:36-76, applied per
     document key): for each (repo, path), every version OTHER than the one
     from the highest generation (ties by highest docID) is superseded.
-    Returns their doc_ids. Superseded docs are masked from results exactly
-    like tombstones — corpus statistics (N, avgdl, df) still count them
+    Returns their (shard, doc_id). Superseded docs are masked from results exactly
+    like deleted ones — corpus statistics (N, avgdl, df) still count them
     until a delete+merge physically retires them; that masking semantics
     is what the paired oracle checks."""
     from data_prep_opensearch_spark.operators.manifest import read_doc_stats_with_gen
@@ -154,72 +154,52 @@ def superseded_doc_ids(spark: SparkSession, index_dir: str) -> DataFrame:
     return (
         stats.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") > 1)
-        .select("doc_id")
+        .select("shard", "doc_id")
     )
 
 
 def delete_documents(spark: SparkSession, index_dir: str, doc_ids: DataFrame) -> int:
-    """Tombstone docIDs (column ``doc_id``). Queries mask them immediately;
-    merge_segments with apply_deletes=True drops them physically. Returns
-    the number of distinct ids written, counted during the write."""
-    obs = Observation("tombstones")
-    doc_ids.select(F.col("doc_id").cast("long")).distinct().observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).write.mode("append").parquet(os.path.join(index_dir, "tombstones"))
-    return int(obs.get["n"])
+    """Delete docIDs (column ``doc_id``) in one manifest commit under the
+    writer lock: the ids are unioned into the sorted ``deleted`` of each
+    touched shard's doclens row, published like an add's doclens. The
+    dir is named by the next manifest version, so a re-run after a crash
+    before the publish rewrites the same dir. Returns the number of
+    distinct ids, counted during the write (0 commits nothing); an id
+    whose shard has no doclens row raises a ValueError naming the shard
+    and commits nothing."""
+    with index_lock(index_dir, purpose="delete_documents"):
+        m = mf.load_manifest(index_dir) or mf.adopt_legacy(spark, index_dir)
+        new = doc_ids.select(F.col("doc_id").cast("long")).groupBy(F.shiftright(
+            "doc_id", SHARD_WIDTH.bit_length() - 1).cast("int").alias("shard")
+        ).agg(F.collect_set("doc_id").alias("new"))
+        obs = Observation("delete_documents")
+        rows = new.join(mf.read_doclens(spark, index_dir), "shard", "left").observe(
+            obs, F.sum(F.size("new")).alias("n"),
+            F.collect_set(F.when(F.col("base").isNull(), F.col("shard"))).alias("orphans"),
+        ).select("shard", "base", "n_docs", "dl_bytes", F.array_sort(F.array_union(
+            F.coalesce("deleted", F.array().cast("array<long>")), "new")).alias("deleted"))
+        rel = f"dl_delete_v{int(m['version']) + 1}"
+        path = os.path.join(index_dir, rel)
+        mf.write_doclens(rows, path)
+        n, orphans = int(obs.get["n"] or 0), sorted(obs.get["orphans"])
+        if orphans or not n:
+            shutil.rmtree(path)
+        if orphans:
+            raise ValueError(f"delete_documents: shard(s) {orphans} of {index_dir} "
+                             "have no doclens row; nothing was deleted")
+        if n:
+            mf.update_manifest(index_dir, lambda mm: mf.add_unique(mm["doclens"], rel))
+        return n
 
 
-def load_tombstones(spark: SparkSession, index_dir: str) -> dict[int, np.ndarray]:
-    """{shard: sorted int64 docIDs} — empty dict if none.
-
-    DRIVER-SIDED by design: a small-scale diagnostic/test helper. The
-    engine and merge paths use ``masked_doc_ids_per_shard`` (a per-shard
-    DataFrame joined by shard) so masked ids never funnel through the
-    driver — at 10^12 docs the tombstone set alone can be GBs."""
-    tomb_dir = os.path.join(index_dir, "tombstones")
-    if not os.path.exists(tomb_dir):
-        return {}
-    pdf = spark.read.parquet(tomb_dir).toPandas()
-    if pdf.empty:
-        return {}
-    ids = np.unique(pdf["doc_id"].to_numpy(dtype=np.int64))
-    out: dict[int, np.ndarray] = {}
-    for shard, grp in pd.Series(ids).groupby(ids // SHARD_WIDTH):
-        out[int(shard)] = grp.to_numpy(dtype=np.int64)
-    return out
-
-
-def masked_doc_ids_per_shard(
-    spark: SparkSession, index_dir: str, include_superseded: bool = False
-) -> DataFrame | None:
-    """Distributed masked-id sidecar: one row per shard with a SORTED
-    distinct ``deleted: array<long>`` of docIDs to mask (tombstones,
-    plus superseded versions when ``include_superseded``). Returns None
-    when no masking source exists.
-
-    This is the scale path the round-2 review asked for: the id set is
-    grouped per shard WORKER-side and joined onto the segment rows by
-    shard — it never transits the driver, so thousands of shards with
-    large tombstone sets cost one shuffle, not driver memory."""
-    parts: list[DataFrame] = []
-    tomb_dir = os.path.join(index_dir, "tombstones")
-    if os.path.exists(tomb_dir):
-        parts.append(
-            spark.read.parquet(tomb_dir).select(F.col("doc_id").cast("long"))
-        )
-    if include_superseded:
-        parts.append(
-            superseded_doc_ids(spark, index_dir).select(
-                F.col("doc_id").cast("long")
-            )
-        )
-    if not parts:
-        return None
-    ids = parts[0]
-    for p in parts[1:]:
-        ids = ids.unionByName(p)
-    return (
-        ids.withColumn("shard", F.shiftright("doc_id", SHARD_WIDTH.bit_length() - 1).cast("int"))
-        .groupBy("shard")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("deleted"))
-    )
+def with_superseded(spark: SparkSession, index_dir: str, sidecar: DataFrame) -> DataFrame:
+    """``sidecar`` (doclens rows) with each shard's superseded versions
+    unioned into its ``deleted``: the ``prune_superseded=True`` mask,
+    grouped per shard worker-side."""
+    sup = superseded_doc_ids(spark, index_dir).groupBy("shard").agg(
+        F.collect_set("doc_id").alias("sup"))
+    none = F.array().cast("array<long>")
+    return sidecar.join(sup, "shard", "left").withColumn(
+        "deleted", F.array_sort(F.array_union(
+            F.coalesce("deleted", none), F.coalesce("sup", none)))
+    ).drop("sup")

@@ -105,6 +105,8 @@ DOCLEN_SCHEMA = T.StructType([
     T.StructField("base", T.LongType(), False),
     T.StructField("n_docs", T.LongType(), False),
     T.StructField("dl_bytes", T.BinaryType(), False),
+    # the shard's deleted doc ids, sorted; null when none are masked
+    T.StructField("deleted", T.ArrayType(T.LongType()), True),
 ])
 
 LINEAGE_SCHEMA = T.StructType([
@@ -514,15 +516,28 @@ def encode_segments(postings: DataFrame, gen: int, n_partitions: int | None = No
     )
 
 
-def encode_doclens(doc_stats: DataFrame) -> DataFrame:
+def encode_doclens(doc_stats: DataFrame, masks: DataFrame | None = None) -> DataFrame:
     """Per-shard positional doclen sidecar: dl_bytes = VByte of dl at
     offset (doc_id - base), scatter-written so the encoding stays correct
     when a vacuum has punched holes in the docID space (holes encode 0 —
     no posting references them). Guards shard population: a shard past
-    SHARD_WIDTH would silently bleed docIDs into its neighbour's range."""
+    SHARD_WIDTH would silently bleed docIDs into its neighbour's range.
+
+    ``masks``: live doclens rows whose ``deleted`` the new rows keep,
+    unioned into the same ``groupBy("shard")`` (no join, no extra job)."""
+    rows = doc_stats.select("shard", "doc_id", "doclen", F.lit(None).cast(
+        DOCLEN_SCHEMA["deleted"].dataType).alias("deleted"))
+    if masks is not None:
+        rows = rows.unionByName(masks.filter(F.col("deleted").isNotNull()).select(
+            "shard", "deleted"), allowMissingColumns=True)
+
     def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         base = shard * SHARD_WIDTH
+        deleted = next(iter(pdf["deleted"].dropna()), None)
+        # a mask row's null doc_id makes the id column float64 (exact
+        # below 2**53); the doc rows are those without a mask
+        pdf = pdf[pdf["deleted"].isna()]
         offs = pdf["doc_id"].to_numpy(dtype=np.int64) - base
         if offs.size and (int(offs.max()) >= SHARD_WIDTH or int(offs.min()) < 0):
             raise ValueError(
@@ -536,9 +551,10 @@ def encode_doclens(doc_stats: DataFrame) -> DataFrame:
             "base": [base],
             "n_docs": [len(pdf)],
             "dl_bytes": [vbyte_encode(arr.astype(np.uint64))],
+            "deleted": [deleted],
         })
 
-    return doc_stats.groupBy("shard").applyInPandas(enc, DOCLEN_SCHEMA)
+    return rows.groupBy("shard").applyInPandas(enc, DOCLEN_SCHEMA)
 
 
 def build_index(
@@ -634,9 +650,9 @@ def commit_generation(
 
     ``old_stats``: the doc_stats already live (an add). The doclens of
     every shard the group touches are re-encoded over those rows plus the
-    new ones; the manifest's ordered doclens list makes the new entry
-    override the old one per shard. Returns the observed counters
-    (n_docs, n_postings, fp, sum_dl)."""
+    new ones, keeping their ``deleted``; the manifest's ordered doclens
+    list makes the new entry override the old one per shard. Returns the
+    observed counters (n_docs, n_postings, fp, sum_dl)."""
     t0 = time.monotonic()
     staged_rel, seg_rel, dl_rel = names
     gen = lineage[2]
@@ -673,13 +689,14 @@ def commit_generation(
         seg_thread.start()
     try:
         if has_stats:
-            stats = spark.read.parquet(kind1)
+            stats, masks = spark.read.parquet(kind1), None
             if old_stats is not None:
-                touched = sorted(int(x) for x in got["shards"])
-                stats = old_stats.filter(F.col("shard").isin(touched)).select(
+                touched = F.col("shard").isin(sorted(int(x) for x in got["shards"]))
+                stats = old_stats.filter(touched).select(
                     *stats.columns
                 ).unionByName(stats)
-            mf.write_doclens(encode_doclens(stats), os.path.join(index_dir, dl_rel))
+                masks = mf.read_doclens(spark, index_dir).filter(touched)
+            mf.write_doclens(encode_doclens(stats, masks), os.path.join(index_dir, dl_rel))
     finally:
         # ALWAYS reap the segment writer before any exception can leave
         # the locked region: an unjoined thread would keep writing into

@@ -15,7 +15,7 @@ Manifest format (all paths relative to index_dir):
     {
       "version": 3,
       "segments": [{"path": "seg_b0_g0", "gens": [0]}, ...],
-      "doclens":  ["dl_b0_g0", "dl_delta_g1", ...],
+      "doclens":  ["dl_b0_g0", "dl_delta_g1", "dl_delete_v5", ...],
       "doc_stats": ["staged/group=0/kind=1", ...]
     }
 
@@ -24,7 +24,9 @@ Semantics:
     ``gens`` records which posting generations a dir holds so the
     log-structured merge can retire exactly the dirs it consumed.
   - ``doclens``: ordered; a LATER entry overrides an EARLIER one per
-    shard (delta adds re-encode only the shards they touched).
+    shard (delta adds and deletes re-encode only the shards they
+    touched). Each shard's row carries its doc lengths and its deleted
+    doc ids, so a delete is one more doclens publish.
   - ``doc_stats``: unioned; vacuum replaces the whole list.
 
 ``meta.json`` (load_meta/save_meta, the same atomic replace) caches what
@@ -55,6 +57,8 @@ import shutil
 import time
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -225,29 +229,49 @@ def read_doc_stats_with_gen(spark: SparkSession, index_dir: str) -> DataFrame:
     return _union(parts)
 
 
-def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Live per-shard doclen sidecar: later manifest entries override
-    earlier ones per shard (delta adds re-encode touched shards only).
-    The override is resolved on the driver from each dir's ``shard``
-    column (no Spark job, no ``dl_bytes`` read): each shard goes to the
-    last dir that holds it, and each dir contributes only the shards it
-    won."""
+def _live_doclens(index_dir: str) -> list[tuple[str, list[int]]]:
+    """(path, shards it wins) per live doclens dir. A later manifest entry
+    overrides an earlier one per shard; the override is resolved on the
+    driver from each dir's ``shard`` column (no Spark job). An index that
+    keeps its deletes in a format-4 ``tombstones`` table is refused:
+    reading it without them would bring the deleted docs back."""
+    tomb = os.path.join(index_dir, "tombstones")
+    if os.path.exists(tomb):
+        raise ValueError(f"{tomb}: deletes in the index format 4 layout are "
+                         "not read by this version; rebuild the index")
     m = load_manifest(index_dir)
-    if m is None:
-        return spark.read.parquet(os.path.join(index_dir, "doclens"))
-    if not m["doclens"]:
+    rels = ["doclens"] if m is None else m["doclens"]
+    if not rels:
         raise FileNotFoundError(f"no live doclens in {index_dir}/{MANIFEST}")
-    parts, taken = [], set()
-    for rel in reversed(m["doclens"]):
+    out, taken = [], set()
+    for rel in reversed(rels):
         path = _abs(index_dir, rel)
         held = set(_shards(path).tolist())
-        won = held - taken
+        if held - taken:
+            out.append((path, sorted(held - taken)))
         taken |= held
-        if won:
-            df = spark.read.parquet(path)
-            parts.append(df if won == held
-                         else df.filter(F.col("shard").isin(sorted(won))))
-    return _union(parts[::-1])
+    return out[::-1]
+
+
+def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
+    """Live per-shard doclen sidecar, one row per shard with its masked
+    ids in ``deleted``, read with the declared ``DOCLEN_SCHEMA`` (no
+    schema-inference job)."""
+    from data_prep_opensearch_spark.operators.index_build import DOCLEN_SCHEMA
+
+    return _union([spark.read.schema(DOCLEN_SCHEMA).parquet(path).filter(
+        F.col("shard").isin(won)) for path, won in _live_doclens(index_dir)])
+
+
+def deleted_count(index_dir: str) -> int:
+    """How many doc ids the live doclens rows mask, read on the driver
+    (no Spark job)."""
+    n, schema = 0, pa.schema([("shard", pa.int32()), ("deleted", pa.list_(pa.int64()))])
+    for path, won in _live_doclens(index_dir):
+        t = pads.dataset(path, format="parquet", schema=schema).to_table(
+            filter=pads.field("shard").isin(won))
+        n += pc.sum(pc.list_value_length(t["deleted"])).as_py() or 0
+    return n
 
 
 def _shards(path: str) -> np.ndarray:

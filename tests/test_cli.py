@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -96,7 +97,7 @@ def test_cli_search_body_paths(cli_index, capsys):
         assert h["score"] == pytest.approx(2.5 * b["score"], rel=1e-9)
 
 
-def test_cli_suggest_and_stats(cli_index, capsys):
+def test_cli_suggest_and_stats(spark, tmp_root, cli_index, capsys):
     idx, _ = cli_index
     sug = _run(capsys, ["suggest", "--index", idx, "--text", "imprt"])
     assert any(s["suggestion"] == "import" for s in sug)
@@ -105,7 +106,17 @@ def test_cli_suggest_and_stats(cli_index, capsys):
     assert comp and all(c["suggestion"].startswith("im") for c in comp)
     st = _run(capsys, ["stats", "--index", idx])
     assert st["n_docs"] == 150 and st["segment_bytes"] > 0
-    assert st["retired_pending_gc"] == 0
+    assert st["retired_pending_gc"] == 0 and st["deleted_docs"] == 0
+    # a delete on a copy shows up as deleted_docs, read without a session
+    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
+
+    copy, ids = (os.path.join(tmp_root, n) for n in ("cli_idx_del", "cli_del_ids"))
+    shutil.copytree(idx, copy)
+    read_doc_stats(spark, copy).select("doc_id").orderBy("doc_id").limit(7) \
+        .write.mode("overwrite").parquet(ids)
+    assert _run(capsys, ["delete", "--index", copy, "--ids", ids]) == {"tombstoned": 7}
+    st = _run(capsys, ["stats", "--index", copy])
+    assert st["deleted_docs"] == 7 and st["n_docs"] == 150
 
 
 def test_cli_explain_and_mlt(cli_index, capsys):

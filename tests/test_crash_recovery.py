@@ -14,12 +14,16 @@ re-run converges to the same logical index a crash-free run produces.
    in place on resume.
 3. index_lock losing a stale-takeover re-acquire race must raise
    IndexLockHeld, not rmtree the winner's fresh lock.
+4. delete_documents dying between its doclens write and the manifest
+   publish must leave the index answering as before the delete, and
+   its re-run must answer as a crash-free delete does.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,6 +85,43 @@ def test_add_documents_crash_between_manifest_and_meta(spark, tmp_root, monkeypa
     # delta docs retrievable; a FURTHER genuine delta gets a fresh gen
     eng = BM25Engine(spark, idx, cache=False)
     assert len(eng.topk("import return", 5).collect()) == 5
+
+
+def test_delete_documents_crash_before_manifest_publish(spark, tmp_root, monkeypatch):
+    idx = os.path.join(tmp_root, "idx_crash_delete")
+    ref = os.path.join(tmp_root, "idx_crash_delete_ref")
+    build_index(spark, corpus_df(spark, 200), idx, n_shards=4, n_groups=1)
+    shutil.copytree(idx, ref)
+    queries = ("needle0 import", "import def", "sym1 fn3 return")
+
+    def answers(d):
+        eng = BM25Engine(spark, d, cache=False)
+        return {q: [(r["doc_id"], round(r["score"], 12))
+                    for r in eng.topk(q, 10).collect()] for q in queries}
+
+    before = answers(idx)
+    victims = sorted({d for q in queries for d, _ in before[q][:3]})
+    frame = spark.createDataFrame([(d,) for d in victims], "doc_id long")
+
+    def crashing_update(index_dir, mutate):
+        raise RuntimeError("simulated crash before the manifest publish")
+
+    monkeypatch.setattr(mf, "update_manifest", crashing_update)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        incr.delete_documents(spark, idx, frame)
+    monkeypatch.undo()
+    # the doclens rows were written but never published
+    assert any(p.startswith("dl_delete_v") for p in os.listdir(idx))
+    assert not any(p.startswith("dl_delete_v")
+                   for p in mf.load_manifest(idx)["doclens"])
+    assert answers(idx) == before
+
+    # the re-run commits what a crash-free delete commits
+    assert incr.delete_documents(spark, idx, frame) == len(victims)
+    assert incr.delete_documents(spark, ref, frame) == len(victims)
+    after = answers(idx)
+    assert after == answers(ref) != before
+    assert not {d for q in queries for d, _ in after[q]} & set(victims)
 
 
 def test_build_index_group_crash_between_manifest_and_lineage(spark, tmp_root, monkeypatch):

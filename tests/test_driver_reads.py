@@ -4,8 +4,8 @@ aggregates they replace, their Spark job counts (and the engine
 query's), and their behaviour when a concurrent merge retires the files
 they read.
 
-Indexes: a clean base build; the base plus a delta generation with
-tombstones; the same base in the legacy layout (no manifest, a
+Indexes: a clean base build; the base plus a delta generation and a
+delete; the same base in the legacy layout (no manifest, a
 ``segments/`` dir); the delta index after
 ``merge_segments(apply_deletes=True)``; and the delta index opened with
 ``cache=False``.
@@ -182,22 +182,23 @@ def test_cold_topk_resolves_df_on_the_driver(spark, indexes):
     """An uncached engine's ``topk`` resolves global df with the driver
     point read too, so no df aggregate and no broadcast of it join the
     query plan, and the sidecar rows are unioned in rather than joined.
-    The doclens override across the two doclens dirs is resolved on the
-    driver from their shard columns, so no window joins the plan either:
-    on the delta index every query shape runs the same 4 Spark jobs —
-    the tombstone aggregate's exchange and its broadcast onto the doclens
-    rows, the ``repartition(shard)`` exchange, and the scoring stage."""
+    The doclens override across the doclens dirs is resolved on the
+    driver from their shard columns, so no window joins the plan either,
+    and the deleted ids ride in the doclens rows, so no aggregate or
+    broadcast of them does: on the delta index every query shape runs
+    the same 2 Spark jobs — the ``repartition(shard)`` exchange and the
+    scoring stage."""
     idx, _ = indexes["uncached"]
     eng = BM25Engine(spark, idx, cache=False)
     for q in QUERIES:
-        assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 4, q
+        assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 2, q
 
 
 @pytest.mark.parametrize("name", ["base", "delta"])
 def test_warm_topk_runs_one_spark_job(spark, indexes, name):
     """Each shard's sidecar row rides in the cached scan frame, so a warm
     ``topk`` is one job (filter -> mapInPandas -> TakeOrderedAndProject)
-    on the clean index and on the tombstoned delta index alike. A
+    on the clean index and on the delta index with deletes alike. A
     shape's first use may run more: its prefix expansion, or the
     positional twin's cache."""
     idx, _ = indexes[name]
@@ -216,7 +217,7 @@ def test_needle_query_reads_one_sidecar_row(spark, indexes, monkeypatch):
     idx, _ = indexes["delta"]
     eng = BM25Engine(spark, idx, cache=True)
     try:
-        needle = "needle0"  # one live doc (needle1's is tombstoned)
+        needle = "needle0"  # one live doc (needle1's is deleted)
         got = eng._segments.dfs(term_point_filter([needle]))
         assert len(got["shards"][0]) == 1 < eng.meta["n_shards"]
         frames = []
@@ -305,8 +306,8 @@ def test_merge_between_check_and_read_reloads_once(spark, indexes, tmp_root,
 def test_doclens_publish_rejects_duplicate_shard(spark, tmp_root):
     from data_prep_opensearch_spark.operators.index_build import DOCLEN_SCHEMA
 
-    rows = [(0, 0, 3, b"\x01\x02\x03"), (1, 1 << 20, 1, b"\x05"),
-            (1, 1 << 20, 1, b"\x05")]
+    rows = [(0, 0, 3, b"\x01\x02\x03", None), (1, 1 << 20, 1, b"\x05", None),
+            (1, 1 << 20, 1, b"\x05", [1 << 20])]
     frame = spark.createDataFrame(rows, DOCLEN_SCHEMA)
     path = os.path.join(tmp_root, "dup_doclens")
     with pytest.raises(ValueError, match=r"shard\(s\) \[1\]"):

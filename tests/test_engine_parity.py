@@ -141,7 +141,7 @@ def test_topk_local_fallback_guard(spark, built_index):
 
 
 def test_topk_local_parity_after_deletes(spark, tmp_root):
-    """The local tier's flat-path tombstone masking must agree with the
+    """The local tier's flat-path masking of deleted docs must agree with the
     distributed scorers after deletes: same survivors, same scores, no
     deleted doc in the top-k."""
     import os
@@ -200,10 +200,11 @@ def test_engine_refresh_on_mutation_without_flush(spark, tmp_root):
     """Round-4 review item: an engine held across index mutations must
     serve POST-mutation results from every tier without a manual
     unpersist. The engine keys its caches (cached seg/sidecar DataFrames,
-    df dictionary, local-tier flat arrays) on a stat token of the commit
-    artifacts (manifest.json / meta.json / tombstones dir) and reloads on
-    change — checked here across a delete AND a subsequent delta add,
-    with cache=True so the cached distributed path is exercised too."""
+    df dictionary, local-tier flat arrays) on a stat token of 2 commit
+    artifacts (manifest.json, which every commit publishes, and
+    meta.json) and reloads on change — checked here across a delete AND a
+    subsequent delta add, with cache=True so the cached distributed path
+    is exercised too."""
     import os
 
     from data_prep_opensearch_spark.operators.bm25 import BM25Engine

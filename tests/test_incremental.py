@@ -1,5 +1,6 @@
 """Incremental maintenance: delta adds as new generations, unchanged-key
-skip, tombstoned deletes (masked at query time, dropped at merge)."""
+skip, deletes (masked from the doclens rows at query time, dropped at
+merge)."""
 
 from __future__ import annotations
 
@@ -8,13 +9,16 @@ import os
 from pyspark.sql import functions as F
 
 from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+from data_prep_opensearch_spark.operators import manifest as mf
 from data_prep_opensearch_spark.operators.incremental import (
     add_documents,
     delete_documents,
-    load_tombstones,
 )
-from data_prep_opensearch_spark.operators.index_build import build_index, index_fingerprint
-from data_prep_opensearch_spark.operators.manifest import read_segments
+from data_prep_opensearch_spark.operators.index_build import (
+    SHARD_WIDTH,
+    build_index,
+    index_fingerprint,
+)
 from data_prep_opensearch_spark.operators.segment_merge import merge_segments
 from data_prep_opensearch_spark.sources.corpus import corpus_df
 
@@ -49,6 +53,10 @@ def test_add_documents_generation(spark, tmp_root):
 
 
 def test_delete_documents_masked_and_purged(spark, tmp_root):
+    """A delete masks its docs at once on every tier. An add that
+    re-encodes the victims' shards keeps them masked. A merge with
+    apply_deletes drops them from doc_stats and n_docs and clears the
+    masks, and they stay out of every result."""
     idx = os.path.join(tmp_root, "idx_incr_del")
     build_index(spark, corpus_df(spark, 200), idx, n_shards=4, n_groups=1)
     eng = BM25Engine(spark, idx, cache=False)
@@ -58,19 +66,36 @@ def test_delete_documents_masked_and_purged(spark, tmp_root):
     victims = spark.createDataFrame([(d,) for d in before], ["doc_id"])
     n = delete_documents(spark, idx, victims)
     assert n == len(before)
-    assert load_tombstones(spark, idx)
+    assert sorted(d for r in mf.read_doclens(spark, idx).collect()
+                  for d in r["deleted"] or ()) == sorted(before)
 
-    # masked immediately, for both scorers
-    eng2 = BM25Engine(spark, idx, cache=False)
-    for scorer in ("wand", "dense"):
-        after = [r["doc_id"] for r in eng2.topk("needle0", 10, scorer=scorer).collect()]
-        assert not set(after) & set(before)
+    def assert_masked():
+        eng = BM25Engine(spark, idx, cache=False)
+        q = "needle0 import"  # the victims rank first when unmasked
+        for scorer in ("wand", "dense"):
+            after = [r["doc_id"] for r in eng.topk(q, 10, scorer=scorer).collect()]
+            assert after and not set(after) & set(before)
+        local = eng.topk_local(q, 10, as_pandas=True)["doc_id"].tolist()
+        batch = [r["doc_id"] for r in eng.topk_batch(["needle0", q], 10).collect()]
+        assert local and batch and not (set(local) | set(batch)) & set(before)
 
-    # physically purged at merge; tombstones cleared; still masked after
+    # masked immediately, on every tier
+    assert_masked()
+
+    # an add that re-encodes the victims' shards carries their masks (the
+    # 240-doc corpus holds the 200 indexed docs and 40 new ones)
+    assert add_documents(spark, idx, corpus_df(spark, 240))["docs_added"] == 40
+    rel = mf.load_manifest(idx)["doclens"][-1]
+    assert rel == "dl_delta_g1"
+    added = spark.read.parquet(os.path.join(idx, rel)).collect()
+    assert {d // SHARD_WIDTH for d in before} <= {r["shard"] for r in added}
+    assert_masked()
+
+    # physically purged at merge; masks cleared; still out of results
     merge_segments(spark, idx, apply_deletes=True)
-    assert not load_tombstones(spark, idx)
-    eng3 = BM25Engine(spark, idx, cache=False)
-    final = [r["doc_id"] for r in eng3.topk("needle0", 10).collect()]
-    assert not set(final) & set(before)
-    seg = read_segments(spark, idx)
-    assert seg.filter(F.col("term") == "needle0").count() == 0 or True  # postings may remain for other docs
+    assert mf.deleted_count(idx) == 0
+    ids = {r["doc_id"] for r in mf.read_doc_stats(spark, idx).select("doc_id").collect()}
+    assert not ids & set(before)
+    assert mf.load_meta(idx)["n_docs"] == len(ids) == 240 - len(before)
+    assert_masked()
+    assert eng._local_postings == {}

@@ -2,16 +2,17 @@
 generation commit and encode through one segment encoder.
 
 A positional index with three generations (a build and two adds) and
-tombstones is merged with ``apply_deletes=True``; every merged row must
-be the reference codec's encoding of its postings. The Spark job counts
-of one small add and one merge are pinned, as are delete_documents'
-counts.
+deleted docs is merged with ``apply_deletes=True``; every merged row
+must be the reference codec's encoding of its postings. The Spark job
+counts of one small add, one delete and one merge are pinned, as are
+delete_documents' counts, its refusals and its lock.
 """
 
 from __future__ import annotations
 
 import itertools
 import os
+import shutil
 
 import numpy as np
 import pytest
@@ -23,6 +24,7 @@ from data_prep_opensearch_spark.operators.incremental import (
     delete_documents,
 )
 from data_prep_opensearch_spark.operators.index_build import build_index
+from data_prep_opensearch_spark.operators.locks import IndexLockHeld, index_lock
 from data_prep_opensearch_spark.operators.postings import (
     SHARD_WIDTH,
     decode_positions,
@@ -114,12 +116,15 @@ def test_merged_rows_equal_reference_encoding(spark, three_gens):
 
 
 def test_add_and_merge_job_counts(spark, tmp_root):
-    """One small add runs 18 Spark jobs and a merge that applies deletes
-    25 (AQE runs each query stage as its own job, and every parquet read
-    infers its schema in one). The add's counters and touched shards are
-    observed during its staging write, so no job recounts the new rows
-    or collects their shards; its segment writer's jobs inherit the job
-    group and are counted here."""
+    """One small add runs 18 Spark jobs, a delete of two ids 3 and a
+    merge that applies deletes 14 (AQE runs each query stage as its own
+    job, and a parquet read without a declared schema infers it in one).
+    The add's counters and touched shards are observed during its staging
+    write, so no job recounts the new rows or collects their shards; its
+    segment writer's jobs inherit the job group and are counted here.
+    The live doclens rows are read with their declared schema, and the
+    masks ride in them, so neither the add nor the merge reads a mask
+    table of its own."""
     idx = os.path.join(tmp_root, "write_path_jobs")
     full = corpus_df(spark, 120)
     key = F.xxhash64("repo", "path", "commit") % 4
@@ -127,20 +132,69 @@ def test_add_and_merge_job_counts(spark, tmp_root):
     n, out = _jobs(spark, lambda: add_documents(spark, idx, full.filter(key == 0)))
     assert out["docs_added"] > 0
     assert n == 18
-    delete_documents(spark, idx, spark.createDataFrame([(1,), (SHARD_WIDTH + 2,)], "doc_id long"))
+    victims = spark.createDataFrame([(1,), (SHARD_WIDTH + 2,)], "doc_id long")
+    n, out = _jobs(spark, lambda: delete_documents(spark, idx, victims))
+    assert out == 2
+    assert n == 3
     n, out = _jobs(spark, lambda: merge_segments(spark, idx, apply_deletes=True))
     assert out["generations"] == [2]
-    assert n == 25
+    assert n == 14
 
 
-def test_delete_documents_counts_distinct_ids(spark, tmp_root):
-    """The returned count is observed during the tombstone write: an
-    empty frame writes and counts 0, duplicates count once."""
+@pytest.fixture(scope="module")
+def small_index(spark, tmp_root):
     idx = os.path.join(tmp_root, "write_path_delete")
     build_index(spark, corpus_df(spark, 40), idx, n_shards=2, n_groups=1)
-    tomb = os.path.join(idx, "tombstones")
+    return idx
+
+
+def _masks(spark, idx):
+    return sorted(d for r in mf.read_doclens(spark, idx).collect()
+                  for d in r["deleted"] or ())
+
+
+def test_delete_documents_counts_distinct_ids(spark, small_index):
+    """The returned count is observed during the doclens write: an
+    empty frame commits nothing and counts 0, duplicates count once."""
+    idx = small_index
+    version = mf.load_manifest(idx)["version"]
     assert delete_documents(spark, idx, spark.createDataFrame([], "doc_id long")) == 0
+    assert mf.load_manifest(idx)["version"] == version
     ids = [(3,), (3,), (SHARD_WIDTH + 1,), (3,), (SHARD_WIDTH + 1,)]
     assert delete_documents(spark, idx, spark.createDataFrame(ids, "doc_id long")) == 2
-    assert sorted(r["doc_id"] for r in spark.read.parquet(tomb).collect()) == [
-        3, SHARD_WIDTH + 1]
+    assert _masks(spark, idx) == [3, SHARD_WIDTH + 1]
+
+
+def test_delete_documents_rejects_ids_outside_the_index(spark, small_index):
+    """An id whose shard has no doclens row fails the delete with an
+    error naming the shard, and nothing is committed."""
+    idx = small_index
+    before = (mf.load_manifest(idx), _masks(spark, idx))
+    ids = spark.createDataFrame([(5,), (7 * SHARD_WIDTH + 2,)], "doc_id long")
+    with pytest.raises(ValueError, match=r"shard\(s\) \[7\]"):
+        delete_documents(spark, idx, ids)
+    assert (mf.load_manifest(idx), _masks(spark, idx)) == before
+
+
+def test_delete_documents_takes_the_writer_lock(spark, small_index):
+    """A delete is a commit like any other: behind a merge (or any
+    writer) it raises IndexLockHeld instead of landing mid-merge."""
+    idx = small_index
+    ids = spark.createDataFrame([(4,)], "doc_id long")
+    with index_lock(idx, purpose="merge_segments"):
+        with pytest.raises(IndexLockHeld):
+            delete_documents(spark, idx, ids)
+    assert 4 not in _masks(spark, idx)
+
+
+def test_index_with_tombstones_table_is_refused(spark, small_index, tmp_root):
+    """An index written in the format-4 layout keeps its deletes in a
+    ``tombstones`` table; reading it without them would bring the
+    deleted docs back, so every doclens read refuses it by name."""
+    idx = os.path.join(tmp_root, "write_path_format4")
+    shutil.copytree(small_index, idx)
+    os.makedirs(os.path.join(idx, "tombstones"))
+    for read in (lambda: mf.read_doclens(spark, idx),
+                 lambda: mf.deleted_count(idx)):
+        with pytest.raises(ValueError, match="tombstones"):
+            read()
