@@ -452,8 +452,11 @@ class _SegmentReader:
     no Spark job. Each file's footer, with its row groups' ``term``
     min/max, is read once when the engine loads. A read then opens the
     files again, reads only the row groups whose term range can hold a
-    wanted term (on the term-sorted files of ``sort_segments``, the few
-    groups that do) and filters their rows in memory. No file handle
+    wanted term and filters their rows in memory. Every writer lays a
+    segment dir out in term ranges, term-sorted within each file
+    (``index_build.term_ranges``), so a point read opens about one file
+    per dir and a few row groups of it; a file of an older layout spans
+    the whole dictionary and is read whole. No file handle
     outlives a read, so a file a merge retired raises
     ``SegmentsRetired``."""
 

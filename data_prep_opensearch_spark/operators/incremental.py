@@ -109,14 +109,10 @@ def _add_documents_locked(
             "n_docs": int(meta["n_docs"]),
         }
 
-    # per-shard NEXT docID offset = max existing offset + 1 (NOT the row
-    # count: a vacuum leaves holes, and count-based allocation would hand
-    # a new doc a surviving doc's id)
-    offsets = {
-        int(r["shard"]): int(r["m"]) - int(r["shard"]) * SHARD_WIDTH + 1
-        for r in old_stats.groupBy("shard").agg(F.max("doc_id").alias("m")).collect()
-    }
-    docs = assign_doc_ids(fresh, n_shards, offsets).withColumn(
+    # per-shard NEXT docID offset = the slots the shard's doclens row
+    # allocates, max offset + 1 (NOT the doc count: a vacuum leaves holes,
+    # and count-based allocation would hand a new doc a surviving doc's id)
+    docs = assign_doc_ids(fresh, n_shards, mf.allocated_slots(index_dir)).withColumn(
         "sha256", F.sha2(F.col("content"), 256))
 
     # new generations inherit the index's position setting — a mixed
@@ -164,11 +160,14 @@ def delete_documents(spark: SparkSession, index_dir: str, doc_ids: DataFrame) ->
     touched shard's doclens row, published like an add's doclens. The
     dir is named by the next manifest version, so a re-run after a crash
     before the publish rewrites the same dir. Returns the number of
-    distinct ids, counted during the write (0 commits nothing); an id
-    whose shard has no doclens row raises a ValueError naming the shard
-    and commits nothing."""
+    distinct ids, counted during the write (0 commits nothing). An id
+    whose shard has no doclens row, or at or above the slots its shard
+    allocates (``manifest.allocated_slots``: the next add would hand it
+    to a new doc), raises a ValueError and commits nothing."""
     with index_lock(index_dir, purpose="delete_documents"):
         m = mf.load_manifest(index_dir) or mf.adopt_legacy(spark, index_dir)
+        end = F.create_map(*[x for s, n in mf.allocated_slots(index_dir).items()
+                             for x in (F.lit(s), F.lit(s * SHARD_WIDTH + n))])
         new = doc_ids.select(F.col("doc_id").cast("long")).groupBy(F.shiftright(
             "doc_id", SHARD_WIDTH.bit_length() - 1).cast("int").alias("shard")
         ).agg(F.collect_set("doc_id").alias("new"))
@@ -176,19 +175,27 @@ def delete_documents(spark: SparkSession, index_dir: str, doc_ids: DataFrame) ->
         rows = new.join(mf.read_doclens(spark, index_dir), "shard", "left").observe(
             obs, F.sum(F.size("new")).alias("n"),
             F.collect_set(F.when(F.col("base").isNull(), F.col("shard"))).alias("orphans"),
+            F.flatten(F.collect_list(F.filter(
+                "new", lambda x: x >= end[F.col("shard")]))).alias("unallocated"),
         ).select("shard", "base", "n_docs", "dl_bytes", F.array_sort(F.array_union(
             F.coalesce("deleted", F.array().cast("array<long>")), "new")).alias("deleted"))
         rel = f"dl_delete_v{int(m['version']) + 1}"
         path = os.path.join(index_dir, rel)
         mf.write_doclens(rows, path)
-        n, orphans = int(obs.get["n"] or 0), sorted(obs.get["orphans"])
-        if orphans or not n:
+        got = obs.get
+        n, orphans, unallocated = (int(got["n"] or 0), sorted(got["orphans"]),
+                                   sorted(got["unallocated"] or ()))
+        if orphans or unallocated or not n:
             shutil.rmtree(path)
         if orphans:
             raise ValueError(f"delete_documents: shard(s) {orphans} of {index_dir} "
                              "have no doclens row; nothing was deleted")
+        if unallocated:
+            raise ValueError(f"delete_documents: doc id(s) {unallocated[:10]} of "
+                             f"{index_dir} are not allocated yet; nothing was deleted")
         if n:
-            mf.update_manifest(index_dir, lambda mm: mf.add_unique(mm["doclens"], rel))
+            mf.update_manifest(index_dir, lambda mm: mf.add_doclens(mm, index_dir, rel))
+            mf.gc_retired(index_dir)
         return n
 
 

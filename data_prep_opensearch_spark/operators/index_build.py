@@ -1,7 +1,7 @@
 """Inverted-index build: the engine's ETL entry point (SURVEY.md §3.3).
 
     scan -> normalize -> tokenize -> (term, docID, tf, dl)
-         -> hash-repartition by (term, shard) -> encode sorted posting runs
+         -> range-partition by (term, shard) -> encode term-sorted posting runs
          -> segments + doclen sidecar + doc stats + lineage
 
 Shard/salting design (the skew strategy, SURVEY.md §4 X8):
@@ -28,7 +28,10 @@ One write path: a build group and an added generation are both committed
 by ``commit_generation`` — one tokenize pass stages posting runs and doc
 stats, the segment and doclen writes run as concurrent Spark jobs, one
 manifest publish makes them live, then the lineage row. Segment rows are
-encoded by ``postings.encode_flat``, the same encoder the merge uses.
+encoded by ``postings.encode_flat``, the same encoder the merge uses,
+and every segment writer lays its files out by ``term_ranges``: each
+file covers its own term range and holds its rows in term order, so a
+driver read prunes whole files of every generation on their footers.
 
 Checkpoint / resume (SURVEY.md §2.10 I3/I4): shards are processed in
 ``n_groups`` commit groups; each group appends segments + doclens +
@@ -394,16 +397,27 @@ def _flatten_tokens(
     )
 
 
+def term_ranges(rows: DataFrame, n_partitions: int | None = None) -> DataFrame:
+    """The segment layout every writer shares: ``rows`` range-partitioned
+    on (term, shard), ``n_partitions`` ways (None: twice the default
+    parallelism). A (term, shard) key never spans two partitions, and the
+    partitions, so the files written from them, cover disjoint term
+    ranges; neighbours share at most the one term whose shards straddle
+    their boundary. Spark picks the bounds from a sample of the keys, in
+    one job of its own."""
+    if n_partitions is None:
+        n_partitions = rows.sparkSession.sparkContext.defaultParallelism * 2
+    return rows.repartitionByRange(n_partitions, "term", "shard")
+
+
 def segments_from_runs(runs: DataFrame, gen: int, n_partitions: int | None = None,
                        positions: bool = False) -> DataFrame:
-    """REDUCE: hash-repartition runs by (term, shard); per partition,
-    decode ALL runs with one concatenated VByte pass per stream, and
-    re-encode with block-max metadata. Runs of one group come from
-    disjoint doc partitions, so the lexsort inside encode_flat is a k-way
-    merge, never a re-sort of overlapping data."""
-    if n_partitions is None:
-        n_partitions = runs.sparkSession.sparkContext.defaultParallelism * 2
-
+    """REDUCE: range-partition runs by (term, shard) (``term_ranges``);
+    per partition, decode ALL runs with one concatenated VByte pass per
+    stream, and re-encode with block-max metadata in (term, shard) order.
+    Runs of one group come from disjoint doc partitions, so the lexsort
+    inside encode_flat is a k-way merge, never a re-sort of overlapping
+    data."""
     def reduce_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks = list(batches)
         if not chunks:
@@ -418,9 +432,7 @@ def segments_from_runs(runs: DataFrame, gen: int, n_partitions: int | None = Non
                           np.repeat(pdf["shard"].to_numpy(dtype=np.int64), dfs),
                           tfs, dls, gen=gen, with_blocks=True, pos=pos)
 
-    return runs.repartition(n_partitions, "term", "shard").mapInPandas(
-        reduce_runs, SEGMENT_SCHEMA
-    )
+    return term_ranges(runs, n_partitions).mapInPandas(reduce_runs, SEGMENT_SCHEMA)
 
 
 STAGED_SCHEMA = T.StructType([
@@ -442,6 +454,14 @@ STAGED_SCHEMA = T.StructType([
     T.StructField("doclen", T.LongType(), True),
     T.StructField("n_terms", T.LongType(), True),
 ])
+
+# a doc_stats dir is the kind=1 partition of a staged table (the posting
+# run columns null); a vacuumed dir also holds each row's generation in
+# ``_gen``, which other dirs take from their path
+# (manifest.read_doc_stats_with_gen)
+DOC_STATS_SCHEMA = T.StructType(
+    [f for f in STAGED_SCHEMA.fields if f.name != "kind"]
+    + [T.StructField("_gen", T.IntegerType(), True)])
 
 
 def map_runs_and_stats(docs: DataFrame, tokenizer: str = "simple",
@@ -488,12 +508,10 @@ def map_runs_and_stats(docs: DataFrame, tokenizer: str = "simple",
 
 
 def encode_segments(postings: DataFrame, gen: int, n_partitions: int | None = None) -> DataFrame:
-    """Encode explicit (term, doc_id, shard, tf, dl) rows into segments —
-    the un-combined path, kept for tests and ad-hoc use; build_index
-    stages map-side combined runs (map_runs_and_stats) instead."""
-    if n_partitions is None:
-        n_partitions = postings.sparkSession.sparkContext.defaultParallelism * 2
-
+    """Encode explicit (term, doc_id, shard, tf, dl) rows into segments,
+    laid out by ``term_ranges`` — the un-combined path, kept for tests
+    and ad-hoc use; build_index stages map-side combined runs
+    (map_runs_and_stats) instead."""
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks = list(batches)
         if not chunks:
@@ -511,9 +529,7 @@ def encode_segments(postings: DataFrame, gen: int, n_partitions: int | None = No
             with_blocks=True,
         )
 
-    return postings.repartition(n_partitions, "term", "shard").mapInPandas(
-        encode, SEGMENT_SCHEMA
-    )
+    return term_ranges(postings, n_partitions).mapInPandas(encode, SEGMENT_SCHEMA)
 
 
 def encode_doclens(doc_stats: DataFrame, masks: DataFrame | None = None) -> DataFrame:
@@ -689,12 +705,10 @@ def commit_generation(
         seg_thread.start()
     try:
         if has_stats:
-            stats, masks = spark.read.parquet(kind1), None
+            stats, masks = mf.read_doc_stats_dir(spark, kind1), None
             if old_stats is not None:
                 touched = F.col("shard").isin(sorted(int(x) for x in got["shards"]))
-                stats = old_stats.filter(touched).select(
-                    *stats.columns
-                ).unionByName(stats)
+                stats = old_stats.filter(touched).unionByName(stats.drop("_gen"))
                 masks = mf.read_doclens(spark, index_dir).filter(touched)
             mf.write_doclens(encode_doclens(stats, masks), os.path.join(index_dir, dl_rel))
     finally:
@@ -712,9 +726,10 @@ def commit_generation(
         if has_runs:
             mf.add_segment_entry(m, seg_rel, [gen])
         if has_stats:
-            mf.add_unique(m["doclens"], dl_rel)
+            mf.add_doclens(m, index_dir, dl_rel)
             mf.add_unique(m["doc_stats"], f"{staged_rel}/kind=1")
     mf.update_manifest(index_dir, _mut)
+    mf.gc_retired(index_dir)
     counters = _counters(got)
     _append_lineage(index_dir, lineage, counters, t0)
     # posting runs served their purpose; the kind=1 stats stay (the
@@ -805,7 +820,7 @@ def _build_index_locked(
                 t0 = time.monotonic()
                 kind1 = os.path.join(index_dir, staged_rel, "kind=1")
                 c = _counters(
-                    spark.read.parquet(kind1).select(
+                    mf.read_doc_stats_dir(spark, kind1).select(
                         *_group_counters(F.lit(True))).collect()[0]
                     if os.path.exists(kind1)
                     else {"n": 0, "s": 0, "fp": 0, "dl": 0})
@@ -850,23 +865,23 @@ def _build_index_locked(
 
 
 def sort_segments(spark: SparkSession, index_dir: str, n_files: int | None = None) -> None:
-    """Publish pass: rewrite segments range-partitioned + sorted by term so
-    each parquet file covers a narrow term range — query-time ``term IN``
-    filters then prune whole files/row-groups via min/max stats (the scan-
-    pruning X2/X3 of SURVEY.md §4, applied to our own index layout).
-    Logical content is unchanged (index_fingerprint invariant).
+    """Publish pass: rewrite every generation's segments into ONE dir of
+    ``n_files`` files in the writers' layout (``term_ranges``), sorted
+    by (term, shard, gen) within each file. Each generation's files
+    already cover disjoint term ranges; this pass also gathers a term's
+    rows of all generations into one file, so a read opens fewer files
+    (the scan pruning X2/X3 of SURVEY.md §4, applied to our own index
+    layout). Logical content is unchanged (index_fingerprint invariant).
 
     Commit = write a NEW sorted dir, swap the manifest pointer (one
     small-file atomic replace — object-store safe), GC the old dirs."""
     with index_lock(index_dir, purpose="sort_segments"):
         m = mf.load_manifest(index_dir) or mf.adopt_legacy(spark, index_dir)
-        if n_files is None:
-            n_files = spark.sparkContext.defaultParallelism * 2
         seg = mf.read_segments(spark, index_dir)
         gens = mf.live_gens(m)
         rel = f"seg_sorted_v{int(m.get('version', 0)) + 1}"
         (
-            seg.repartitionByRange(n_files, "term", "shard")
+            term_ranges(seg, n_files)
             .sortWithinPartitions("term", "shard", "gen")
             .write.mode("overwrite")
             .parquet(os.path.join(index_dir, rel))

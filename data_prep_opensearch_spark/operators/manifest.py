@@ -25,8 +25,10 @@ Semantics:
     log-structured merge can retire exactly the dirs it consumed.
   - ``doclens``: ordered; a LATER entry overrides an EARLIER one per
     shard (delta adds and deletes re-encode only the shards they
-    touched). Each shard's row carries its doc lengths and its deleted
-    doc ids, so a delete is one more doclens publish.
+    touched), and the publish that leaves a dir winning no shard drops
+    and retires it (``add_doclens``). Each shard's row carries its doc
+    lengths and its deleted doc ids, so a delete is one more doclens
+    publish.
   - ``doc_stats``: unioned; vacuum replaces the whole list.
 
 ``meta.json`` (load_meta/save_meta, the same atomic replace) caches what
@@ -187,14 +189,21 @@ def segment_files(index_dir: str, m: dict | None) -> list[str]:
     )
 
 
+def read_doc_stats_dir(spark: SparkSession, path: str) -> DataFrame:
+    """One doc_stats dir, read with the declared ``DOC_STATS_SCHEMA`` (no
+    schema-inference job); ``_gen`` reads null from a dir that lacks it."""
+    from data_prep_opensearch_spark.operators.index_build import DOC_STATS_SCHEMA
+
+    return spark.read.schema(DOC_STATS_SCHEMA).parquet(path)
+
+
 def _doc_stats_parts(spark: SparkSession, index_dir: str) -> list:
     """(rel, frame) per live doc_stats dir."""
     m = load_manifest(index_dir)
-    if m is None:
-        return [("doc_stats", spark.read.parquet(_abs(index_dir, "doc_stats")))]
-    if not m["doc_stats"]:
+    rels = ["doc_stats"] if m is None else m["doc_stats"]
+    if not rels:
         raise FileNotFoundError(f"no live doc_stats in {index_dir}/{MANIFEST}")
-    return [(p, spark.read.parquet(_abs(index_dir, p))) for p in m["doc_stats"]]
+    return [(p, read_doc_stats_dir(spark, _abs(index_dir, p))) for p in rels]
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -205,10 +214,8 @@ def _union(parts: list[DataFrame]) -> DataFrame:
 
 
 def read_doc_stats(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Union of live doc_stats dirs; per-path reads + unionByName so dirs
-    written at different times (e.g. a vacuumed dir carrying _gen next to
-    fresh delta dirs without it) merge safely."""
-    return _union([df for _, df in _doc_stats_parts(spark, index_dir)])
+    """Union of live doc_stats dirs, without ``_gen``."""
+    return _union([df for _, df in _doc_stats_parts(spark, index_dir)]).drop("_gen")
 
 
 _DELTA_GEN = re.compile(r"delta_gen=(\d+)")
@@ -222,10 +229,9 @@ def read_doc_stats_with_gen(spark: SparkSession, index_dir: str) -> DataFrame:
     Used by the latest-version pruning policy (superseded_doc_ids)."""
     parts = []
     for rel, df in _doc_stats_parts(spark, index_dir):
-        if "_gen" not in df.columns:
-            mm = _DELTA_GEN.search(rel)
-            df = df.withColumn("_gen", F.lit(int(mm.group(1)) if mm else 0))
-        parts.append(df)
+        mm = _DELTA_GEN.search(rel)
+        parts.append(df.withColumn("_gen", F.coalesce(
+            "_gen", F.lit(int(mm.group(1)) if mm else 0))))
     return _union(parts)
 
 
@@ -243,14 +249,30 @@ def _live_doclens(index_dir: str) -> list[tuple[str, list[int]]]:
     rels = ["doclens"] if m is None else m["doclens"]
     if not rels:
         raise FileNotFoundError(f"no live doclens in {index_dir}/{MANIFEST}")
+    return [(_abs(index_dir, rel), won) for rel, won in _winners(index_dir, rels)]
+
+
+def _winners(index_dir: str, rels: list[str]) -> list[tuple[str, list[int]]]:
+    """(rel, shards it wins) per dir of the ordered doclens list ``rels``
+    that wins any shard, in list order."""
     out, taken = [], set()
     for rel in reversed(rels):
-        path = _abs(index_dir, rel)
-        held = set(_shards(path).tolist())
+        held = set(_shards(_abs(index_dir, rel)).tolist())
         if held - taken:
-            out.append((path, sorted(held - taken)))
+            out.append((rel, sorted(held - taken)))
         taken |= held
     return out[::-1]
+
+
+def add_doclens(m: dict, index_dir: str, rel: str) -> None:
+    """Append ``rel`` to manifest ``m``'s ordered doclens list, and move
+    the dirs it leaves winning no shard from the list to the ``retired``
+    ledger, in the same publish: no read needs them. The caller's
+    ``gc_retired`` after the publish deletes them."""
+    add_unique(m["doclens"], rel)
+    live = [r for r, _ in _winners(index_dir, m["doclens"])]
+    _ledger(m, [r for r in m["doclens"] if r not in live])
+    m["doclens"] = live
 
 
 def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -263,15 +285,32 @@ def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
         F.col("shard").isin(won)) for path, won in _live_doclens(index_dir)])
 
 
+def _live_rows(index_dir: str, columns: list[str]) -> pa.Table:
+    """``columns`` of the live doclens rows, read on the driver (no Spark
+    job); ``deleted`` reads null from a dir written without it."""
+    schema = pa.schema([("shard", pa.int32()), ("dl_bytes", pa.binary()),
+                        ("deleted", pa.list_(pa.int64()))])
+    return pa.concat_tables([
+        pads.dataset(path, format="parquet", schema=schema).to_table(
+            columns=columns, filter=pads.field("shard").isin(won))
+        for path, won in _live_doclens(index_dir)])
+
+
 def deleted_count(index_dir: str) -> int:
-    """How many doc ids the live doclens rows mask, read on the driver
-    (no Spark job)."""
-    n, schema = 0, pa.schema([("shard", pa.int32()), ("deleted", pa.list_(pa.int64()))])
-    for path, won in _live_doclens(index_dir):
-        t = pads.dataset(path, format="parquet", schema=schema).to_table(
-            filter=pads.field("shard").isin(won))
-        n += pc.sum(pc.list_value_length(t["deleted"])).as_py() or 0
-    return n
+    """How many doc ids the live doclens rows mask."""
+    t = _live_rows(index_dir, ["deleted"])
+    return pc.sum(pc.list_value_length(t["deleted"])).as_py() or 0
+
+
+def allocated_slots(index_dir: str) -> dict[int, int]:
+    """{shard: docID slots allocated}, from each live doclens row: its
+    ``dl_bytes`` holds one VByte value per slot up to the highest doc
+    offset encoded (``encode_doclens``), so the count is the bytes
+    without a continuation bit. An add continues each shard there and a
+    delete refuses ids at or above it."""
+    t = _live_rows(index_dir, ["shard", "dl_bytes"])
+    return {shard: int(np.count_nonzero(np.frombuffer(b, np.uint8) < 0x80))
+            for shard, b in zip(t["shard"].to_pylist(), t["dl_bytes"].to_pylist())}
 
 
 def _shards(path: str) -> np.ndarray:
@@ -343,16 +382,17 @@ def retire_paths(index_dir: str, rels: list[str],
     tests/test_merge_and_resume.py)."""
     rels = [r for r in rels if r]
     if rels:
-        now = time.time()
-
-        def _mut(m):
-            led = m.setdefault("retired", [])
-            have = {e["path"] for e in led}
-            for r in rels:
-                if r not in have:
-                    led.append({"path": r, "ts": now})
-        update_manifest(index_dir, _mut)
+        update_manifest(index_dir, lambda m: _ledger(m, rels))
     gc_retired(index_dir, grace_sec)
+
+
+def _ledger(m: dict, rels: list[str]) -> None:
+    """Record ``rels`` in manifest ``m``'s ``retired`` ledger, stamped
+    with the wall clock."""
+    now = time.time()
+    led = m.setdefault("retired", [])
+    have = {e["path"] for e in led}
+    led.extend({"path": r, "ts": now} for r in rels if r not in have)
 
 
 def _live_rels(m: dict) -> set[str]:
@@ -366,8 +406,8 @@ def _live_rels(m: dict) -> set[str]:
 def gc_retired(index_dir: str, grace_sec: float | None = None) -> list[str]:
     """Delete ledgered dirs older than the grace period (``None`` reads
     $DPOSS_GC_GRACE_SEC, default 0) and drop them from the ledger.
-    Returns the rels removed. Every writer operation calls this via
-    retire_paths, so an active index converges; an idle one keeps its
+    Returns the rels removed. Every writer operation calls this after
+    its publish, so an active index converges; an idle one keeps its
     ledger until the next write (or an explicit call).
 
     Safety cross-check: a ledger entry whose path the manifest ALSO

@@ -342,7 +342,10 @@ def encode_flat(terms, docs, shards, tfs, dls, gen: int, with_blocks: bool,
     block_min_dl).
 
     ``terms``: one term per posting, or a pre-factorized ``(codes,
-    uniques)`` pair; groups come out in code order, then shard order.
+    uniques)`` pair (``uniques`` may repeat a term, one code per (term,
+    shard) group). Groups are renumbered in term order, so rows come out
+    sorted by (term, shard): a range-partitioned writer's file is then
+    term-sorted, and its row groups' term min/max prune reads.
     ``pos``: optional token-level position stream aligned with the INPUT
     posting order (len == tfs.sum(), ascending within each posting); when
     given, a ``pos_bytes`` stream rides each group (phrase support), else
@@ -351,7 +354,11 @@ def encode_flat(terms, docs, shards, tfs, dls, gen: int, with_blocks: bool,
         codes, uniq_terms = terms
     else:
         codes, uniq_terms = pd.factorize(pd.Series(terms), sort=False)
-    uniq_terms = np.asarray(uniq_terms, dtype=object)
+    # code point order is UTF-8 byte order: the order of Spark's range
+    # partitioner and of parquet's string statistics
+    uniq_terms, rank = np.unique(np.asarray(uniq_terms, dtype=object),
+                                 return_inverse=True)
+    codes = rank[codes]
     order = np.lexsort((docs, shards, codes))
     if pos is not None:
         # token-level gather follows the posting permutation

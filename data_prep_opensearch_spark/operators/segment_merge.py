@@ -8,11 +8,13 @@ the tree-reduce shape of the reference's chunk-summary fan-in
 Merging is a concat-of-sorted-runs with last-wins dedup on docID (MERGE
 upsert semantics) — never a global re-sort, because every run is already
 docID-sorted and the shard bounds group size. Each partition of
-(term, shard)-hashed segment rows is decoded into flat posting arrays in
-one pass (``postings.decode_flat``); the last-wins dedup across
-generations and the drop of deleted docs are array ops over the whole
-partition, and the survivors are re-encoded by ``postings.encode_flat``,
-the build's encoder. Idempotency: the merged index's logical fingerprint
+segment rows, laid out by the build's ``index_build.term_ranges``, is
+decoded into flat posting arrays in one pass (``postings.decode_flat``);
+the last-wins dedup across generations and the drop of deleted docs are
+array ops over the whole partition, and the survivors are re-encoded in
+(term, shard) order by ``postings.encode_flat``, the build's encoder.
+Every dir is read with its declared schema, so no read infers one in a
+Spark job of its own. Idempotency: the merged index's logical fingerprint
 equals the input's (verified by tests), so re-running a merge is a no-op
 semantically.
 
@@ -41,6 +43,7 @@ from data_prep_opensearch_spark.operators.index_build import (
     SEGMENT_SCHEMA,
     SHARD_WIDTH,
     encode_doclens,
+    term_ranges,
 )
 from data_prep_opensearch_spark.operators.locks import index_lock
 from data_prep_opensearch_spark.operators.postings import (
@@ -119,7 +122,7 @@ def _merge_locked(
         next_gen = max(gens) + 1
         src = [e for e in m["segments"] if set(e["gens"]) & batch]
         keep = [e for e in m["segments"] if not (set(e["gens"]) & batch)]
-        to_merge = spark.read.parquet(
+        to_merge = spark.read.schema(SEGMENT_SCHEMA).parquet(
             *[os.path.join(index_dir, e["path"]) for e in src]
         )
         merged = _merge_generation_df(
@@ -164,7 +167,7 @@ def _vacuum_doc_stats(spark: SparkSession, index_dir: str, meta: dict, doclens) 
     alive.write.mode("overwrite").parquet(os.path.join(index_dir, rel))
     # re-encode the doclen sidecar of every shard, masks cleared (holes
     # encode dl=0; no surviving posting references them)
-    alive_new = spark.read.parquet(os.path.join(index_dir, rel))
+    alive_new = mf.read_doc_stats_dir(spark, os.path.join(index_dir, rel))
     dl_rel = f"dl_vacuum_v{int(m.get('version', 0)) + 1}"
     mf.write_doclens(encode_doclens(alive_new),
                      os.path.join(index_dir, dl_rel))
@@ -186,11 +189,11 @@ def _merge_generation_df(to_merge, doclens, next_gen: int,
     one whole partition at a time.
 
     Each segment row carries its shard's doclens row (one per shard,
-    broadcast-joined ahead of the repartition): ``dl_bytes`` to rebuild
-    block_min_dl and, when ``doclens`` has the column, the ``deleted`` ids
-    to drop. The broadcast hint is a sandbox-scale optimization;
-    thousands-of-shards deployments drop it and the join co-partitions
-    with the repartition.
+    broadcast-joined ahead of the range partitioning): ``dl_bytes`` to
+    rebuild block_min_dl and, when ``doclens`` has the column, the
+    ``deleted`` ids to drop. The broadcast hint is a sandbox-scale
+    optimization; thousands-of-shards deployments drop it and join after
+    the partitioning.
     """
     joined = to_merge.join(F.broadcast(doclens), "shard")
 
@@ -204,7 +207,7 @@ def _merge_generation_df(to_merge, doclens, next_gen: int,
         docs, tfs, pos = decode_flat(pdf, positions)
         dfs = pdf["df"].to_numpy(dtype=np.int64)
         # one code per (term, shard) group, numbered in order of first
-        # appearance — encode_flat emits groups in code order
+        # appearance; encode_flat renumbers them in term order
         group = pdf.groupby(["term", "shard"], sort=False).ngroup().to_numpy()
         terms = pdf["term"].to_numpy()[np.unique(group, return_index=True)[1]]
         codes = np.repeat(group, dfs)
@@ -235,7 +238,6 @@ def _merge_generation_df(to_merge, doclens, next_gen: int,
         yield encode_flat((codes, terms), docs, shards, tfs, dls, gen=next_gen,
                           with_blocks=True, pos=pos)
 
-    spark = to_merge.sparkSession
-    return joined.repartition(
-        spark.sparkContext.defaultParallelism, "term", "shard"
+    return term_ranges(
+        joined, to_merge.sparkSession.sparkContext.defaultParallelism
     ).mapInPandas(merge_part, SEGMENT_SCHEMA)

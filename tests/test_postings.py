@@ -198,12 +198,26 @@ def test_encode_flat_matches_reference_codec(seed):
     equals ``encode_posting_list`` + ``encode_positions`` on that group:
     doc, tf and position bytes, df, cf and all six block arrays; the
     posting-run form carries the group's doc lengths as VByte; and
-    ``decode_flat`` reads the rows back to the sorted postings."""
+    ``decode_flat`` reads the rows back to the sorted postings. Rows
+    come out in (term, shard) order, whether the terms are given one per
+    posting or pre-factorized in any code order."""
     rng = np.random.default_rng(seed)
     groups, terms, (docs, shards, tfs, dls), pos = _random_partition(rng)
     seg = encode_flat(terms, docs, shards, tfs, dls, gen=3, with_blocks=True, pos=pos)
     runs = encode_flat(terms, docs, shards, tfs, dls, gen=0, with_blocks=False, pos=pos)
     assert len(seg) == len(runs) == len(groups)
+    keys = list(zip(seg["term"], seg["shard"].astype(int)))
+    assert keys == sorted(groups)
+    # one code per (term, shard) group, numbered in a shuffled order
+    group_keys = list(groups)
+    code_of = {k: c for c, k in enumerate(group_keys[i] for i in
+                                          rng.permutation(len(group_keys)))}
+    codes = np.array([code_of[k] for k in zip(terms, shards.tolist())], np.int64)
+    uniques = np.array([k[0] for k in sorted(code_of, key=code_of.get)], object)
+    pre = encode_flat((codes, uniques), docs, shards, tfs, dls, gen=3,
+                      with_blocks=True, pos=pos)
+    assert list(zip(pre["term"], pre["shard"].astype(int))) == keys
+    assert list(pre["doc_bytes"]) == list(seg["doc_bytes"])
     for row, run in zip(seg.itertuples(index=False), runs.itertuples(index=False)):
         d, t, dl, p = groups[(row.term, int(row.shard))]
         doc_b, tf_b, blk = encode_posting_list(d, t, dl, base=int(row.shard) * SHARD_WIDTH)

@@ -3,9 +3,11 @@ generation commit and encode through one segment encoder.
 
 A positional index with three generations (a build and two adds) and
 deleted docs is merged with ``apply_deletes=True``; every merged row
-must be the reference codec's encoding of its postings. The Spark job
-counts of one small add, one delete and one merge are pinned, as are
-delete_documents' counts, its refusals and its lock.
+must be the reference codec's encoding of its postings. Every writer
+lays its segment files out by term range, term-sorted within each file.
+The Spark job counts of one small add, one delete and one merge are
+pinned, as are delete_documents' counts, its refusals and its lock, and
+the doclens dirs a publish shadows are retired in it.
 """
 
 from __future__ import annotations
@@ -15,10 +17,12 @@ import os
 import shutil
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from data_prep_opensearch_spark.operators import manifest as mf
+from data_prep_opensearch_spark.operators.bm25 import _SegmentFile, term_point_filter
 from data_prep_opensearch_spark.operators.incremental import (
     add_documents,
     delete_documents,
@@ -115,30 +119,70 @@ def test_merged_rows_equal_reference_encoding(spark, three_gens):
             assert list(r[f"block_{name}"]) == getattr(blk, name).tolist(), name
 
 
+def _assert_term_range_layout(idx):
+    """Each live segment dir's files cover disjoint term ranges, sharing
+    at most a boundary term, and hold their rows in (term, shard) order;
+    a one-term read of any other term selects one file of the dir."""
+    for e in mf.load_manifest(idx)["segments"]:
+        files = [_SegmentFile.open(f) for f in mf.segment_files(idx, {"segments": [e]})]
+        keys = [list(zip(*pq.read_table(f.path, columns=["term", "shard"]).to_pydict().values()))
+                for f in files]
+        files, keys = zip(*sorted(zip(files, keys), key=lambda fk: fk[1][0]))
+        assert all(k == sorted(k) for k in keys), e["path"]
+        boundary = set()
+        for a, b in zip(keys, keys[1:]):
+            assert a[-1][0] <= b[0][0], e["path"]
+            if a[-1][0] == b[0][0]:
+                boundary.add(b[0][0])
+        terms = {t for k in keys for t, _ in k}
+        assert len(terms) > 10 * len(files) > 10
+        for t in terms - boundary:
+            assert sum(bool(f.groups(term_point_filter([t]))) for f in files) == 1, t
+
+
+def test_every_writer_lays_files_out_by_term_range(spark, tmp_root):
+    """A build without ``sort_segments``, an add and a merge that applies
+    deletes each write term-range-partitioned, term-sorted files, so a
+    driver read prunes whole files of every generation."""
+    idx = os.path.join(tmp_root, "write_path_layout")
+    full = corpus_df(spark, 300)
+    key = F.xxhash64("repo", "path", "commit") % 3
+    build_index(spark, full.filter(key != 0), idx, n_shards=4, n_groups=1)
+    assert add_documents(spark, idx, full.filter(key == 0))["generation"] == 1
+    _assert_term_range_layout(idx)
+    stats = mf.read_doc_stats(spark, idx)
+    assert delete_documents(spark, idx, stats.filter(F.col("doc_id") % 4 == 0)
+                            .select("doc_id")) > 0
+    assert merge_segments(spark, idx, apply_deletes=True)["generations"] == [2]
+    _assert_term_range_layout(idx)
+
+
 def test_add_and_merge_job_counts(spark, tmp_root):
-    """One small add runs 18 Spark jobs, a delete of two ids 3 and a
-    merge that applies deletes 14 (AQE runs each query stage as its own
-    job, and a parquet read without a declared schema infers it in one).
-    The add's counters and touched shards are observed during its staging
-    write, so no job recounts the new rows or collects their shards; its
-    segment writer's jobs inherit the job group and are counted here.
-    The live doclens rows are read with their declared schema, and the
-    masks ride in them, so neither the add nor the merge reads a mask
-    table of its own."""
+    """One small add runs 13 Spark jobs, a delete of two ids 3 and a
+    merge that applies deletes 10 (AQE runs each query stage as its own
+    job, and the range partitioning of a segment write samples its keys
+    in one). The add's counters and touched shards are observed during
+    its staging write, so no job recounts the new rows or collects their
+    shards, and its docID offsets are read from the doclens rows on the
+    driver; its segment writer's jobs inherit the job group and are
+    counted here. Every segment, doclens and doc_stats dir is read with
+    its declared schema, so no read infers one in a job, and the masks
+    ride in the doclens rows, so neither the add nor the merge reads a
+    mask table of its own."""
     idx = os.path.join(tmp_root, "write_path_jobs")
     full = corpus_df(spark, 120)
     key = F.xxhash64("repo", "path", "commit") % 4
     build_index(spark, full.filter(key != 0), idx, n_shards=4, n_groups=1)
     n, out = _jobs(spark, lambda: add_documents(spark, idx, full.filter(key == 0)))
     assert out["docs_added"] > 0
-    assert n == 18
+    assert n == 13
     victims = spark.createDataFrame([(1,), (SHARD_WIDTH + 2,)], "doc_id long")
     n, out = _jobs(spark, lambda: delete_documents(spark, idx, victims))
     assert out == 2
     assert n == 3
     n, out = _jobs(spark, lambda: merge_segments(spark, idx, apply_deletes=True))
     assert out["generations"] == [2]
-    assert n == 14
+    assert n == 10
 
 
 @pytest.fixture(scope="module")
@@ -174,6 +218,43 @@ def test_delete_documents_rejects_ids_outside_the_index(spark, small_index):
     with pytest.raises(ValueError, match=r"shard\(s\) \[7\]"):
         delete_documents(spark, idx, ids)
     assert (mf.load_manifest(idx), _masks(spark, idx)) == before
+
+
+def test_delete_documents_rejects_unallocated_ids(spark, tmp_root):
+    """An id above its shard's last allocated slot is refused, and nothing
+    is committed: the next add would hand it to a new doc, masked from
+    its first commit. The add continues each shard at that slot, and its
+    new docs are not masked."""
+    idx = os.path.join(tmp_root, "write_path_unallocated")
+    build_index(spark, corpus_df(spark, 100), idx, n_shards=2, n_groups=1)
+    top = {int(r["shard"]): int(r["m"]) for r in mf.read_doc_stats(spark, idx)
+           .groupBy("shard").agg(F.max("doc_id").alias("m")).collect()}
+    assert mf.allocated_slots(idx) == {s: m - s * SHARD_WIDTH + 1 for s, m in top.items()}
+    before = mf.load_manifest(idx)
+    ids = spark.createDataFrame([(m + 1,) for m in top.values()], "doc_id long")
+    with pytest.raises(ValueError, match="not allocated"):
+        delete_documents(spark, idx, ids)
+    assert mf.load_manifest(idx) == before and _masks(spark, idx) == []
+    assert add_documents(spark, idx, corpus_df(spark, 140))["docs_added"] == 40
+    new = mf.read_doc_stats(spark, idx).filter(F.col("doc_id").isin(
+        [m + 1 for m in top.values()])).count()
+    assert new == 2 and _masks(spark, idx) == []
+
+
+def test_shadowed_doclens_dirs_are_retired(spark, tmp_root):
+    """A doclens publish retires the dirs it leaves winning no shard: after
+    a delete and an add the manifest lists exactly the dirs that
+    ``read_doclens`` reads, and the others are gone from disk."""
+    idx = os.path.join(tmp_root, "write_path_shadowed")
+    build_index(spark, corpus_df(spark, 100), idx, n_shards=2, n_groups=1)
+    assert delete_documents(spark, idx, spark.createDataFrame(
+        [(3,), (SHARD_WIDTH + 3,)], "doc_id long")) == 2
+    assert add_documents(spark, idx, corpus_df(spark, 140))["docs_added"] == 40
+    listed = mf.load_manifest(idx)["doclens"]
+    assert [os.path.join(idx, r) for r in listed] == [p for p, _ in mf._live_doclens(idx)]
+    assert listed == ["dl_delta_g1"]
+    assert not os.path.exists(os.path.join(idx, "dl_b0_g0"))
+    assert _masks(spark, idx) == [3, SHARD_WIDTH + 3]
 
 
 def test_delete_documents_takes_the_writer_lock(spark, small_index):
