@@ -455,13 +455,16 @@ STAGED_SCHEMA = T.StructType([
     T.StructField("n_terms", T.LongType(), True),
 ])
 
+# one kind= partition dir of a staged table: ``kind`` is in its path
+STAGED_PART_SCHEMA = T.StructType(
+    [f for f in STAGED_SCHEMA.fields if f.name != "kind"])
+
 # a doc_stats dir is the kind=1 partition of a staged table (the posting
 # run columns null); a vacuumed dir also holds each row's generation in
 # ``_gen``, which other dirs take from their path
 # (manifest.read_doc_stats_with_gen)
 DOC_STATS_SCHEMA = T.StructType(
-    [f for f in STAGED_SCHEMA.fields if f.name != "kind"]
-    + [T.StructField("_gen", T.IntegerType(), True)])
+    STAGED_PART_SCHEMA.fields + [T.StructField("_gen", T.IntegerType(), True)])
 
 
 def map_runs_and_stats(docs: DataFrame, tokenizer: str = "simple",
@@ -689,7 +692,7 @@ def commit_generation(
 
     def _write_segments():
         try:
-            runs = spark.read.parquet(kind0).select(
+            runs = spark.read.schema(STAGED_PART_SCHEMA).parquet(kind0).select(
                 "term", "shard", "df", "cf", "doc_bytes", "tf_bytes",
                 "dl_bytes", "pos_bytes")
             segments_from_runs(runs, gen=gen, positions=positions).write.mode(

@@ -11,7 +11,7 @@ Parity discipline:
   - hashes are md5/sha2 HEX STRINGS (identical in Spark and DuckDB);
   - timestamps/dates are rendered as strings with explicit formats.
 
-Each query's docstring names the SURVEY.md §2 operators it covers.
+Each entry's ``covers`` list names the SURVEY.md §2 operators it covers.
 """
 
 from __future__ import annotations
@@ -21,7 +21,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from data_prep_opensearch_spark.operators.bm25 import B, K1
+from data_prep_opensearch_spark.operators.bm25 import B, K1, BM25Engine
+from data_prep_opensearch_spark.operators.index_build import build_index, sort_segments
+from data_prep_opensearch_spark.operators.manifest import read_doc_stats
+from data_prep_opensearch_spark.operators.multi_match import multi_match_topk
 from data_prep_opensearch_spark.session import _materialize
 
 TOKEN_PATTERN = "([a-z0-9_]+)"
@@ -395,8 +398,6 @@ def _ensure_index(spark: SparkSession, sf_dir: str, key: str,
     import hashlib
     import os
 
-    from data_prep_opensearch_spark.operators.index_build import sort_segments
-
     import data_prep_opensearch_spark as pkg
 
     tag = hashlib.sha256(
@@ -426,8 +427,6 @@ def _index_source(docs: DataFrame, content: "F.Column") -> DataFrame:
 def _ensure_docs_index(spark: SparkSession, sf_dir: str) -> str:
     """The segment index over the documents table, shared by every
     engine-backed catalog entry so the build cost is paid once."""
-    from data_prep_opensearch_spark.operators.index_build import build_index
-
     return _ensure_index(spark, sf_dir, "docs", lambda docs, d: build_index(
         spark, _index_source(docs, F.col("text")), d, n_shards=4, n_groups=1))
 
@@ -435,8 +434,6 @@ def _ensure_docs_index(spark: SparkSession, sf_dir: str) -> str:
 def _doc_id_map(spark: SparkSession, index_dir: str) -> DataFrame:
     """(engine_doc_id, ext_id): the engine docID of each indexed doc and
     its external doc_id (stored as the `path` field at index time)."""
-    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
-
     return read_doc_stats(spark, index_dir).select(
         F.col("doc_id").alias("engine_doc_id"),
         F.col("path").cast("long").alias("ext_id"),
@@ -454,23 +451,32 @@ def _engine_topk_to_external(topk: DataFrame, spark: SparkSession,
     )
 
 
-@register(
-    "ft_bm25_engine_topk",
-    _bm25_sql("SELECT doc_id, text FROM documents", BM25_QUERY_TERMS, BM25_K),
-    covers=["O7 block-max WAND engine", "M3 segment index", "§3.3 query lifecycle"],
-)
-def ft_bm25_engine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL engine under the oracle: build the segment index from the
-    documents table, answer with the pruning kernel
-    (``_score_shard_pruned``: block-max MaxScore, which ``_route`` hands
-    to the exhaustive evaluator on shards where nothing is skippable),
-    map internal docIDs back. Same oracle SQL as ft_bm25_topk — the
-    engine is rank-identical."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
+def _docs_engine(spark: SparkSession, sf_dir: str) -> tuple[BM25Engine, str]:
+    """A cold engine over the documents index, and the index dir."""
     index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(spark, index_dir, " ".join(BM25_QUERY_TERMS), BM25_K, scorer="wand")
-    return _engine_topk_to_external(topk, spark, index_dir)
+    return BM25Engine(spark, index_dir, cache=False), index_dir
+
+
+def _engine_entry(name: str, query: str, sql: str, covers: list[str],
+                  index: Callable[[SparkSession, str], str] = _ensure_docs_index,
+                  **opts) -> None:
+    """Register ``name``: the top ``BM25_K`` hits of ``query`` (engine
+    ``topk`` options ``opts``) on the index that ``index`` ensures,
+    mapped back to external doc_ids."""
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        index_dir = index(spark, sf_dir)
+        topk = BM25Engine(spark, index_dir, cache=False).topk(query, BM25_K, **opts)
+        return _engine_topk_to_external(topk, spark, index_dir)
+
+    REGISTRY[name] = QuerySpec(fn, sql, covers)
+
+
+# the OR query on the segment engine, under ft_bm25_topk's oracle
+_engine_entry(
+    "ft_bm25_engine_topk", " ".join(BM25_QUERY_TERMS),
+    _bm25_sql("SELECT doc_id, text FROM documents", BM25_QUERY_TERMS, BM25_K),
+    ["O7 block-max WAND engine", "M3 segment index", "§3.3 query lifecycle"],
+)
 
 
 @register(
@@ -489,29 +495,14 @@ def ft_bm25_msm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ft_bm25_and_topk",
+# the OR query's four terms, all required
+_engine_entry(
+    "ft_bm25_and_topk", " ".join(BM25_QUERY_TERMS),
     _bm25_sql("SELECT doc_id, text FROM documents", BM25_QUERY_TERMS, BM25_K,
               msm=len(BM25_QUERY_TERMS)),
-    covers=["O7 top-k BM25 conjunctive AND (segment engine)"],
+    ["O7 top-k BM25 conjunctive AND (segment engine)"],
+    min_should_match="all",
 )
-def ft_bm25_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-AND top-k on the SEGMENT ENGINE (min_should_match="all"):
-    the pruning kernel (``_score_shard_pruned``) decodes the rarest
-    clause fully for the candidates and probes every other term
-    block-lazily at candidate docs only; its pigeonhole count gate drops
-    a candidate once the clauses still unprobed cannot complete it, and
-    ``_route`` hands a shard to the exhaustive evaluator when nothing is
-    skippable. Oracle: same BM25 SQL with a HAVING count(*) = n clause
-    gate."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(
-        spark, index_dir, " ".join(BM25_QUERY_TERMS), BM25_K,
-        min_should_match="all",
-    )
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
 def _bm25_prefix_sql(literals: list[str], stem: str, cap: int, k: int,
@@ -608,23 +599,15 @@ def _bm25_not_sql(literals: list[str], neg_stem: str, cap: int,
     """
 
 
-@register(
-    "ft_bm25_not_topk",
+# `key merge` without the docs holding any of `s*`'s 4 top-df
+# expansions, excluded before the top-k cut
+_engine_entry(
+    "ft_bm25_not_topk", "key merge -s*",
     _bm25_not_sql(["key", "merge"], "s", 4, BM25_K),
-    covers=["O7 must_not (-term / -stem*) exclusion clause: per-query "
-            "tombstone masking before the top-k cut"],
+    ["O7 must_not (-term / -stem*) exclusion clause: per-query "
+     "tombstone masking before the top-k cut"],
+    max_expansions=4,
 )
-def ft_bm25_not_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`key merge -s*` on the SEGMENT ENGINE: docs matching any capped
-    expansion of `s*` are folded into the per-shard tombstone mask, so
-    exclusion happens before top-k selection on every scorer (a masked
-    doc is replaced by the next-best, never silently dropped)."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(spark, index_dir, "key merge -s*", BM25_K,
-                      max_expansions=4)
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
 PHRASE_TERMS = ["merge", "sort"]
@@ -764,98 +747,51 @@ def ft_bm25_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# `"merge sort" batch` on the segment engine, under the declarative
+# twin's oracle
+_engine_entry(
     "ft_bm25_phrase_engine_topk",
+    f'"{PHRASE_TERMS[0]} {PHRASE_TERMS[1]}" {PHRASE_LITERAL}',
     _bm25_phrase_sql(PHRASE_TERMS, [PHRASE_LITERAL], BM25_K),
-    covers=["O7 phrase (match_phrase) query — positional segment engine: "
-            "pos_bytes stream, numpy start-position intersection"],
+    ["O7 phrase (match_phrase) query — positional segment engine: "
+     "pos_bytes stream, numpy start-position intersection"],
 )
-def ft_bm25_phrase_engine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same phrase query on the SEGMENT ENGINE: the positional sidecar
-    stream (pos_bytes) decodes only for the phrase terms, start
-    positions intersect as (doc-rank, position) composite keys, and the
-    phrase scores as one clause next to the literal. Oracle identical
-    to the declarative twin — both must hash-match it."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(
-        spark, index_dir,
-        f'"{PHRASE_TERMS[0]} {PHRASE_TERMS[1]}" {PHRASE_LITERAL}', BM25_K,
-    )
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
 PHRASE_SLOP = 2
 
 
-@register(
+# `"merge sort"~2 batch`: the phrase also matches in order with at most
+# two tokens between its terms
+_engine_entry(
     "ft_bm25_phrase_slop_topk",
+    f'"{PHRASE_TERMS[0]} {PHRASE_TERMS[1]}"~{PHRASE_SLOP} {PHRASE_LITERAL}',
     _bm25_phrase_sql(PHRASE_TERMS, [PHRASE_LITERAL], BM25_K,
                      slop=PHRASE_SLOP),
-    covers=["O7 sloppy-phrase (ordered proximity) query — greedy chain "
-            "over positional postings, window oracle in SQL"],
+    ["O7 sloppy-phrase (ordered proximity) query — greedy chain "
+     "over positional postings, window oracle in SQL"],
 )
-def ft_bm25_phrase_slop_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`\"merge sort\"~2 batch` on the segment engine: the phrase
-    matches at any start whose ordered chain has total gap ≤ slop
-    (Phrase semantics — greedy smallest-next chain, all numpy), so it
-    admits up to two interleaving tokens and strictly widens the exact
-    match set. The SQL oracle recomputes the same window with a nested
-    list lambda."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(
-        spark, index_dir,
-        f'"{PHRASE_TERMS[0]} {PHRASE_TERMS[1]}"~{PHRASE_SLOP} '
-        f'{PHRASE_LITERAL}',
-        BM25_K,
-    )
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
-@register(
-    "ft_bm25_prefix_topk",
-    _bm25_prefix_sql(["key"], "s", 4, BM25_K),
-    covers=["O7 prefix (trailing-*) multi-term query, df-ranked "
-            "max_expansions cap, dictionary range-scan expansion"],
+# `key s*`: `s*` is one clause of its 4 top-df dictionary expansions
+# (ties term asc; `sort` and `spark` fall outside the cap)
+_engine_entry(
+    "ft_bm25_prefix_topk", "key s*", _bm25_prefix_sql(["key"], "s", 4, BM25_K),
+    ["O7 prefix (trailing-*) multi-term query, df-ranked "
+     "max_expansions cap, dictionary range-scan expansion"],
+    max_expansions=4,
 )
-def ft_bm25_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix clause on the SEGMENT ENGINE: `key s*` expands `s*` against
-    the term dictionary (a driver-side point read of the term-sorted
-    segment files: only the row groups whose term range meets
-    [`s`, `t`) are read, with no Spark job), keeps the top-4 expansions
-    by df (ties term-asc; sort/spark are dropped at this corpus), and
-    scores the union as a scoring-boolean. Oracle mirrors the expansion
-    rule with LIKE + ORDER BY df DESC LIMIT."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(spark, index_dir, "key s*", BM25_K, max_expansions=4)
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
-@register(
-    "ft_bm25_prefix_and_topk",
+# `key s*` with both clauses required: the expansion set counts once
+# however many of its terms a doc holds
+_engine_entry(
+    "ft_bm25_prefix_and_topk", "key s*",
     _bm25_prefix_sql(["key"], "s", 4, BM25_K, msm=2),
-    covers=["O7 prefix clause under min_should_match: the expansion set "
-            "counts ONCE toward the clause gate (Lucene semantics)"],
+    ["O7 prefix clause under min_should_match: the expansion set "
+     "counts ONCE toward the clause gate (Lucene semantics)"],
+    min_should_match="all", max_expansions=4,
 )
-def ft_bm25_prefix_and_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`key s*` with min_should_match="all": a doc must contain `key` AND
-    at least one capped expansion of `s*` — the prefix clause counts once
-    however many expansions match. Scored by the pruning kernel
-    (``_score_shard_pruned``), whose two clauses are `key` and the whole
-    expansion group: the rarer clause's union gives the candidates and
-    the pigeonhole count gate needs both; ``_route`` hands a shard to the
-    exhaustive evaluator when nothing is skippable."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(spark, index_dir, "key s*", BM25_K,
-                      min_should_match="all", max_expansions=4)
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
 def _bm25_page_sql(terms: list[str], k: int, page: int) -> str:
@@ -883,16 +819,10 @@ def _bm25_page_sql(terms: list[str], k: int, page: int) -> str:
             "previous page's (score, doc_id) cursor"],
 )
 def ft_bm25_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page 2 via OpenSearch search_after: run page 1, cursor on its
-    last (score, doc_id), ask the engine for the next k strictly after
-    it. The oracle computes the same rows as OFFSET k of the full
-    ranking — the definitional equivalence search_after exists to make
-    cheap (no shard ever materializes more than the cursor filter +
-    its per-partition top-k)."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    """Page 2 of the OR query by search_after: the next k hits strictly
+    after page 1's last (score, doc_id), which the oracle takes as
+    OFFSET k of the full ranking."""
+    eng, index_dir = _docs_engine(spark, sf_dir)
     page1 = eng.topk(" ".join(BM25_QUERY_TERMS), BM25_K).collect()
     last = page1[-1]
     page2 = eng.topk(
@@ -918,24 +848,14 @@ def _bm25_boosted_sql(term_weights: dict[str, float], k: int) -> str:
     """
 
 
-@register(
-    "ft_bm25_boosted_topk",
+# `key^3 sort^0.5 merge batch`: per-term query boosts
+_engine_entry(
+    "ft_bm25_boosted_topk", "key^3 sort^0.5 merge batch",
     _bm25_boosted_sql(
         {"key": 3.0, "sort": 0.5, "merge": 1.0, "batch": 1.0}, BM25_K
     ),
-    covers=["O7 query-time term boosts (term^B, Lucene boost syntax)"],
+    ["O7 query-time term boosts (term^B, Lucene boost syntax)"],
 )
-def ft_bm25_boosted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`key^3 sort^0.5 merge batch` on the segment engine: per-clause
-    query boosts fold into the same per-term weight map fuzzy similarity
-    uses; WAND upper bounds scale with the weights so pruning stays
-    admissible."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(spark, index_dir, "key^3 sort^0.5 merge batch",
-                      BM25_K)
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
 def _bm25_explain_sql(terms: list[str]) -> str:
@@ -984,10 +904,7 @@ def ft_bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched clause with (tf, df, idf, weight, tf_norm, contribution);
     the contribution column sums to the hit's BM25 score (asserted in
     pytest against topk on every tier)."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, _ = _docs_engine(spark, sf_dir)
     q = " ".join(BM25_QUERY_TERMS)
     top = eng.topk(q, 1).collect()[0]
     pdf = eng.explain(q, int(top["doc_id"]))
@@ -1046,10 +963,7 @@ def ft_bm25_mlt(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tf >= 2 whose index df >= 5, rank by tf*idf (ties term asc),
     cap at 25 (Lucene MoreLikeThis defaults), BM25-search the OR of the
     selected terms, and drop the source doc from the hits."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     text = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") == MLT_DOC)
@@ -1122,17 +1036,12 @@ def _match_ext_ids(eng, spark: SparkSession, index_dir: str) -> DataFrame:
             "FULL match set (OpenSearch aggregations semantics)"],
 )
 def ft_search_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Search-with-aggregations on the segment engine: `match_ids`
-    emits every doc matching the OR query straight from the postings
-    (distributed — no top-k cut, no driver collect), the external-id
-    mapping and attribute join stay broadcast-shaped, and `facet_counts`
-    buckets lang / source / 256-char size bins, top-10 per facet (count
-    desc, ties value asc)."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    """Facet buckets over every doc matching the OR query: lang, source
+    and 256-char size bins, top 10 per facet (count desc, ties value
+    asc)."""
     from data_prep_opensearch_spark.operators.facets import facet_counts
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     ext = _match_ext_ids(eng, spark, index_dir)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
@@ -1174,14 +1083,11 @@ def _search_stats_sql(terms: list[str]) -> str:
             "full match set"],
 )
 def ft_search_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenSearch `stats` agg (+ exact interpolated median) on n_chars
-    over every doc matching the OR query — the match set streams from
-    the postings into one aggregation."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    """The `stats` aggregation (with the exact interpolated median) of
+    n_chars over every doc matching the OR query."""
     from data_prep_opensearch_spark.operators.facets import stats_counts
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     ext = _match_ext_ids(eng, spark, index_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     agg = stats_counts(ext.join(docs, "doc_id"), ["n_chars"])
@@ -1205,22 +1111,14 @@ HIGHLIGHT_WINDOW = 20
             "(unified-highlighter re-analyze mode) over the top-k"],
 )
 def ft_bm25_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine top-k, then best-fragment highlighting of the hits: the
-    20-token window holding the most matched-term occurrences (ties to
-    the earliest start), as lowercase joined tokens. Runs the Arrow-
-    batched highlighter over exactly k rows (a broadcast join against
-    the documents table) — the raw `<em>`-wrapped snippet is exercised
-    in pytest; the oracle hash-checks window choice, match counts, and
-    the canonical fragment."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
+    """The OR query's top-k hits, each with its best 20-token fragment:
+    the window holding the most query-term occurrences (ties to the
+    earliest start), as lowercase joined tokens."""
     from data_prep_opensearch_spark.operators.highlight import (
         with_highlights,
     )
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(spark, index_dir, " ".join(BM25_QUERY_TERMS), BM25_K,
-                      scorer="wand")
-    ext = _engine_topk_to_external(topk, spark, index_dir)
+    ext = REGISTRY["ft_bm25_engine_topk"].fn(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     joined = docs.join(F.broadcast(ext), "doc_id")
     out = with_highlights(joined, "text", BM25_QUERY_TERMS,
@@ -1233,26 +1131,15 @@ def ft_bm25_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ft_bm25_fuzzy_topk",
+# `qery~2 batch`: `qery` expands to the dictionary terms within 2 edits
+# (`query` at boost 0.75, `key` at 1/3), closest first, capped at 10
+_engine_entry(
+    "ft_bm25_fuzzy_topk", "qery~2 batch",
     _bm25_fuzzy_sql(["batch"], "qery", 2, 10, BM25_K),
-    covers=["O7 fuzzy (term~N) query — Levenshtein dictionary expansion "
-            "with Lucene similarity boosts, closest-first cap"],
+    ["O7 fuzzy (term~N) query — Levenshtein dictionary expansion "
+     "with Lucene similarity boosts, closest-first cap"],
+    max_expansions=10,
 )
-def ft_bm25_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`qery~2 batch` on the segment engine: the misspelled stem expands
-    against the dictionary to terms within 2 edits (`query` at distance
-    1, boost 0.75; `key` at distance 2, boost 1/3) via one length-
-    windowed thresholded-Levenshtein aggregate, each expansion scoring
-    its boost-weighted BM25; `batch` is an ordinary literal clause. The
-    SQL oracle recomputes the expansion, boosts, and cap with DuckDB's
-    levenshtein()."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    topk = query_topk(spark, index_dir, "qery~2 batch", BM25_K,
-                      max_expansions=10)
-    return _engine_topk_to_external(topk, spark, index_dir)
 
 
 def _latest_prune_sql(terms: list[str], k: int) -> str:
@@ -1297,17 +1184,12 @@ def _latest_prune_sql(terms: list[str], k: int) -> str:
             "I-series delta add end-to-end", "O7 engine under version churn"],
 )
 def ft_engine_latest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the segment index, apply a DELTA (every 5th doc re-sent with
-    changed content = a new commit of the same (repo, path)), then answer
-    top-k with prune_superseded=True: old versions are masked from results
-    while corpus statistics still include them (tombstone-style masking —
-    the semantics the oracle mirrors with its ``superseded`` flag). The
-    reference analogue is the latest-pointer resolve of pipeline/io.py:36-76
-    applied per document key."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    """The OR query over an index whose delta re-sends every 5th doc with
+    changed text (a new commit of the same (repo, path)), answered with
+    prune_superseded=True: old versions leave the results but stay in
+    the corpus statistics, as the oracle's ``superseded`` flag mirrors
+    (the reference's latest-pointer resolve, pipeline/io.py:36-76)."""
     from data_prep_opensearch_spark.operators.incremental import add_documents
-    from data_prep_opensearch_spark.operators.index_build import build_index
-    from data_prep_opensearch_spark.operators.manifest import read_doc_stats
 
     def build(docs: DataFrame, index_dir: str) -> None:
         build_index(spark, _index_source(docs, F.col("text")), index_dir,
@@ -1322,7 +1204,7 @@ def ft_engine_latest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index_dir = _ensure_index(spark, sf_dir, "latest", build)
     eng = BM25Engine(spark, index_dir, cache=False, prune_superseded=True)
-    topk = eng.topk(" ".join(BM25_QUERY_TERMS), BM25_K, scorer="wand")
+    topk = eng.topk(" ".join(BM25_QUERY_TERMS), BM25_K)
     stats = read_doc_stats(spark, index_dir).select(
         F.col("doc_id").alias("engine_doc_id"), "path", "sha256"
     )
@@ -1386,25 +1268,9 @@ def _bm25_code_sql(k: int) -> str:
     """
 
 
-@register(
-    "ft_bm25_code_topk",
-    _bm25_code_sql(BM25_K),
-    covers=["§2.11 'code' tokenizer (identifier splitting) end-to-end through "
-            "the segment engine — Arrow marked-split (index_build.py:279-283), "
-            "sub-token query match ('parse' hits parseJson/parse_json; "
-            "'parsed'/'jsonify' must NOT match)"],
-)
-def ft_bm25_code_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build a segment index with tokenizer='code' over a planted corpus
-    of compound identifiers and answer a sub-token query through the real
-    engine. Class 0/1 docs match both query terms (via camelCase and
-    snake_case splits), class 2 matches 'json' only (acronym-boundary
-    split JSONParser -> json+parser), class 3 must match NOTHING
-    ('parsed'/'jsonify' are single-piece identifiers — whole-ident
-    lowering is not stemming)."""
-    from data_prep_opensearch_spark.operators.bm25 import query_topk
-    from data_prep_opensearch_spark.operators.index_build import build_index
-
+def _ensure_code_index(spark: SparkSession, sf_dir: str) -> str:
+    """A tokenizer='code' index over docs 0-63 rewritten as padded
+    compound identifiers, one class per doc_id % 4."""
     def build(docs: DataFrame, index_dir: str) -> None:
         c = F.col("doc_id") % 4
         docs = docs.filter(F.col("doc_id") < 64).withColumn("text", F.concat(
@@ -1417,9 +1283,21 @@ def ft_bm25_code_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_index(spark, _index_source(docs, F.col("text")), index_dir,
                     n_shards=4, n_groups=1, tokenizer="code")
 
-    index_dir = _ensure_index(spark, sf_dir, "code", build)
-    topk = query_topk(spark, index_dir, "parse json", BM25_K, scorer="wand")
-    return _engine_topk_to_external(topk, spark, index_dir)
+    return _ensure_index(spark, sf_dir, "code", build)
+
+
+# `parse json` over the code index: classes 0 and 1 match both terms
+# (camelCase and snake_case splits), class 2 `json` only (JSONParser ->
+# json + parser), class 3 nothing (`parsed` and `jsonify` are one-piece
+# identifiers, and lowering is not stemming)
+_engine_entry(
+    "ft_bm25_code_topk", "parse json", _bm25_code_sql(BM25_K),
+    ["§2.11 'code' tokenizer (identifier splitting) end-to-end through "
+     "the segment engine — Arrow marked-split (index_build.py:279-283), "
+     "sub-token query match ('parse' hits parseJson/parse_json; "
+     "'parsed'/'jsonify' must NOT match)"],
+    index=_ensure_code_index,
+)
 
 
 @register(
@@ -3168,12 +3046,10 @@ def ft_suggest_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     SKIPPED by missing mode); `spork` draws two candidates (spark dist-1
     sim 0.8, sort dist-2 sim 0.5) so the similarity ranking is
     exercised, and the pinned first character excludes `key` from
-    `qery`'s candidates. One dictionary pass for all four tokens."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    `qery`'s candidates."""
     from data_prep_opensearch_spark.operators.suggest import term_suggest
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, _ = _docs_engine(spark, sf_dir)
     out = term_suggest(eng, SUGGEST_TEXT, size=5, max_edits=2,
                        prefix_length=1, min_word_length=4,
                        suggest_mode="missing", sort="score")
@@ -3195,13 +3071,10 @@ def ft_suggest_term(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ft_suggest_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Completion suggester for prefix `s`: six dictionary terms match,
     size=5 cuts the lowest-df one and two share df so the term-asc tie
-    break is exercised. The scan is a filtered aggregate — the prefix
-    predicate pushes to the term-sorted parquet dictionary."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    break is exercised."""
     from data_prep_opensearch_spark.operators.suggest import completion_suggest
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, _ = _docs_engine(spark, sf_dir)
     return completion_suggest(eng, "s", size=5)
 
 
@@ -3234,13 +3107,12 @@ def _attrs_engine_keyed(spark: SparkSession, sf_dir: str,
     )
 
 
-def _ext_topk(topk: DataFrame, attrs: DataFrame,
-              extra: list[str]) -> DataFrame:
+def _ext_topk(topk: DataFrame, attrs: DataFrame) -> DataFrame:
     """Map an engine-keyed result back to external doc_ids."""
     return topk.join(attrs.select("doc_id", "ext_id"), "doc_id").select(
         F.col("ext_id").alias("doc_id"),
-        *[c for c in topk.columns if c != "doc_id"], *extra,
-    ).drop("ext_id")
+        *[c for c in topk.columns if c != "doc_id"],
+    )
 
 
 @register(
@@ -3257,22 +3129,18 @@ def _ext_topk(topk: DataFrame, attrs: DataFrame,
             "the scored match set (idf unchanged — ES semantics)"],
 )
 def ft_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filter context: the OR query's match set restricted to English
-    docs of >= 200 chars, top-10 by the UNCHANGED BM25 score. The
-    filter lands on the attr side before a left-semi join (pushed into
-    the attr scan); index-wide idf is computed before the join, exactly
-    OpenSearch's filter-context rule."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    """Filter context: the OR query's top 10 among English docs of >= 200
+    chars, scored with index-wide statistics (a filter does not change
+    idf, as in OpenSearch)."""
     from data_prep_opensearch_spark.operators.search_body import filtered_topk
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     attrs = _attrs_engine_keyed(spark, sf_dir, index_dir)
     out = filtered_topk(
         eng, " ".join(BM25_QUERY_TERMS), attrs,
         (F.col("lang") == "en") & (F.col("n_chars") >= 200), k=BM25_K,
     )
-    return _ext_topk(out, attrs, []).withColumn("score", F.round("score", 4))
+    return _ext_topk(out, attrs).withColumn("score", F.round("score", 4))
 
 
 @register(
@@ -3289,22 +3157,18 @@ def ft_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
             "relevance order (with _score as a secondary key)"],
 )
 def ft_search_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort param: German-language matches ordered by n_chars desc with
-    relevance as the secondary key — the orderBy(...).limit(k) compiles
-    to TakeOrdered (k rows per partition cross the wire, never a global
-    sort)."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    """Sort param: German-language matches ordered by n_chars desc, with
+    relevance as the secondary key."""
     from data_prep_opensearch_spark.operators.search_body import sorted_topk
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     attrs = _attrs_engine_keyed(spark, sf_dir, index_dir)
     out = sorted_topk(
         eng, " ".join(BM25_QUERY_TERMS), attrs,
         sort=[("n_chars", False), ("score", False)], k=BM25_K,
         filter_expr=F.col("lang") == "de",
     )
-    return _ext_topk(out, attrs, []).withColumn("score", F.round("score", 4))
+    return _ext_topk(out, attrs).withColumn("score", F.round("score", 4))
 
 
 @register(
@@ -3324,22 +3188,18 @@ def ft_search_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ft_function_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """function_score with field_value_factor: new_score = bm25 *
-    ln(1 + n_chars) under boost_mode=multiply; the top-k re-cut happens
-    on the COMBINED score (rank order genuinely changes vs relevance
-    order — long docs climb)."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    ln(1 + n_chars) (boost_mode multiply), the top k cut on new_score."""
     from data_prep_opensearch_spark.operators.search_body import (
         function_score_topk,
     )
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     attrs = _attrs_engine_keyed(spark, sf_dir, index_dir)
     out = function_score_topk(
         eng, " ".join(BM25_QUERY_TERMS), attrs,
         F.log1p(F.col("n_chars")), k=BM25_K, boost_mode="multiply",
     )
-    return _ext_topk(out, attrs, []).select(
+    return _ext_topk(out, attrs).select(
         "doc_id", F.round("score", 4).alias("score"),
         F.round("func_value", 4).alias("func_value"),
         F.round("new_score", 4).alias("new_score"),
@@ -3385,18 +3245,12 @@ SIGTERMS_MIN_DC = 3
             "vs background term frequencies over the match set"],
 )
 def ft_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """significant_terms for the match set of `dup` (a rare term — its
-    25-doc foreground is a genuine subset): foreground dfs re-analyzed
-    from ONLY the matched docs, background dfs read from the index
-    dictionary (two columns, postings untouched), JLH scoring, ES
-    min_doc_count=3 gate. `dup` itself tops the list by construction —
-    OpenSearch behaves the same (the query term is maximally
-    significant in its own match set)."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    """significant_terms of the 25 docs matching `dup`: the JLH score of
+    each term's foreground df against its index df, min_doc_count 3.
+    `dup` tops its own match set, as in OpenSearch."""
     from data_prep_opensearch_spark.operators.facets import significant_terms
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("ext_id"), "text"
     ).join(_doc_id_map(spark, index_dir), "ext_id").select(
@@ -3424,8 +3278,6 @@ def _ensure_title_index(spark: SparkSession, sf_dir: str) -> str:
     and n_shards as the text index, so assign_doc_ids (a pure function
     of keys) puts every doc at the same docID in both — the alignment
     multi_match combines on."""
-    from data_prep_opensearch_spark.operators.index_build import build_index
-
     title = F.array_join(F.slice(_tokens(F.col("text")), 1, TITLE_TOKENS), " ")
     return _ensure_index(spark, sf_dir, f"title{TITLE_TOKENS}", lambda docs, d: (
         build_index(spark, _index_source(docs, title), d, n_shards=4, n_groups=1)))
@@ -3475,55 +3327,34 @@ def _multi_match_sql(terms: list[str], k: int, match_type: str) -> str:
     """
 
 
-def _mm_engines(spark: SparkSession, sf_dir: str):
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+def _multi_match_entry(name: str, match_type: str, covers: list[str]) -> None:
+    """Register multi_match ``match_type`` of the OR query over the text
+    field and the derived title field, boosted MM_TITLE_BOOST, each field
+    keeping its own idf and avgdl (ES per-field statistics)."""
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        text, text_dir = _docs_engine(spark, sf_dir)
+        title = BM25Engine(spark, _ensure_title_index(spark, sf_dir), cache=False)
+        out = multi_match_topk(
+            {"text": (text, 1.0), "title": (title, MM_TITLE_BOOST)},
+            " ".join(BM25_QUERY_TERMS), k=BM25_K, match_type=match_type,
+            tie_breaker=MM_TIE)
+        return _engine_topk_to_external(out, spark, text_dir)
 
-    text_dir = _ensure_docs_index(spark, sf_dir)
-    title_dir = _ensure_title_index(spark, sf_dir)
-    return text_dir, {
-        "text": (BM25Engine(spark, text_dir, cache=False), 1.0),
-        "title": (BM25Engine(spark, title_dir, cache=False), MM_TITLE_BOOST),
-    }
+    REGISTRY[name] = QuerySpec(
+        fn, _multi_match_sql(BM25_QUERY_TERMS, BM25_K, match_type), covers)
 
 
-@register(
-    "ft_multi_match",
-    _multi_match_sql(BM25_QUERY_TERMS, BM25_K, "best_fields"),
-    covers=["O7p multi_match best_fields: per-field indexes, dis_max + "
-            "tie_breaker, per-field boosts and statistics"],
+# (text, title^2) with tie_breaker 0.3
+_multi_match_entry(
+    "ft_multi_match", "best_fields",
+    ["O7p multi_match best_fields: per-field indexes, dis_max + "
+     "tie_breaker, per-field boosts and statistics"],
 )
-def ft_multi_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """best_fields over (text, title^2) with tie_breaker 0.3: the title
-    index is a REAL second segment index over the derived title field,
-    docID-aligned with the text index by key-deterministic assignment;
-    each field keeps its own idf/avgdl (ES per-field statistics)."""
-    from data_prep_opensearch_spark.operators.multi_match import (
-        multi_match_topk,
-    )
-
-    text_dir, engines = _mm_engines(spark, sf_dir)
-    out = multi_match_topk(engines, " ".join(BM25_QUERY_TERMS), k=BM25_K,
-                           match_type="best_fields", tie_breaker=MM_TIE)
-    return _engine_topk_to_external(out, spark, text_dir)
-
-
-@register(
-    "ft_multi_match_most",
-    _multi_match_sql(BM25_QUERY_TERMS, BM25_K, "most_fields"),
-    covers=["O7p multi_match most_fields: boosted per-field score sum"],
+# the boosted per-field score sum (most_fields reads no tie_breaker)
+_multi_match_entry(
+    "ft_multi_match_most", "most_fields",
+    ["O7p multi_match most_fields: boosted per-field score sum"],
 )
-def ft_multi_match_most(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """most_fields over the same two field indexes: boosted score sum
-    (rank order genuinely differs from best_fields when title and text
-    agree)."""
-    from data_prep_opensearch_spark.operators.multi_match import (
-        multi_match_topk,
-    )
-
-    text_dir, engines = _mm_engines(spark, sf_dir)
-    out = multi_match_topk(engines, " ".join(BM25_QUERY_TERMS), k=BM25_K,
-                           match_type="most_fields")
-    return _engine_topk_to_external(out, spark, text_dir)
 
 
 SYN_GROUP = ["stream", "batch", "dup"]
@@ -3563,30 +3394,17 @@ def _bm25_synonyms_sql(group: list[str], lit: str, k: int) -> str:
     """
 
 
-@register(
-    "ft_bm25_synonyms",
+# `sort stream` with both clauses required, `stream` expanded through
+# the synonym map {stream: [batch, dup]} into one clause whose members
+# all score with the idf of the group's max df
+_engine_entry(
+    "ft_bm25_synonyms", f"{SYN_LIT} {SYN_GROUP[0]}",
     _bm25_synonyms_sql(SYN_GROUP, SYN_LIT, BM25_K),
-    covers=["O7q query-time synonyms: Lucene SynonymQuery blended "
-            "statistics (idf of max group df), group counts once "
-            "under min_should_match"],
+    ["O7q query-time synonyms: Lucene SynonymQuery blended "
+     "statistics (idf of max group df), group counts once "
+     "under min_should_match"],
+    min_should_match=2, synonyms={SYN_GROUP[0]: SYN_GROUP[1:]},
 )
-def ft_bm25_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`sort stream` AND-composed (msm=2) with stream expanded through
-    the synonym map {stream: [batch, dup]}: the group is ONE clause (a
-    doc matching only batch+dup still satisfies the group), and every
-    member — including the rare `dup`, df 25 vs stream's 394 — scores
-    with the BLENDED idf of the group's max df, so a rare synonym can
-    never dominate (the SynonymQuery rationale)."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
-    out = eng.topk(
-        f"{SYN_LIT} {SYN_GROUP[0]}", BM25_K, min_should_match=2,
-        synonyms={SYN_GROUP[0]: SYN_GROUP[1:]},
-    )
-    return _engine_topk_to_external(out, spark, index_dir).withColumn(
-        "score", F.round("score", 4))
 
 
 RESCORE_WINDOW = 50
@@ -3659,15 +3477,11 @@ def _rescore_sql(terms: list[str], phrase: list[str], window: int, k: int,
 )
 def ft_bm25_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rescore: the OR query's top-50 window re-ranked by the phrase
-    `\"merge sort\"` at rescore_weight 2 (score_mode total). Window docs
-    without the phrase keep their primary score — rank order genuinely
-    changes (phrase hits climb). The second pass's kernel reads only
-    the phrase terms' postings; the corpus is never rescored."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
+    `\"merge sort\"` at rescore_weight 2 (score_mode total); window docs
+    without the phrase keep their primary score."""
     from data_prep_opensearch_spark.operators.search_body import rescore_topk
 
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
+    eng, index_dir = _docs_engine(spark, sf_dir)
     out = rescore_topk(
         eng, " ".join(BM25_QUERY_TERMS),
         '"' + " ".join(PHRASE_TERMS) + '"',
@@ -3754,24 +3568,13 @@ def _bm25_wildcard_sql(lit: str, rx: str, wild_rx: str, cap: int, k: int,
     """
 
 
-@register(
-    "ft_bm25_wildcard_topk",
+# `row /s(can|ort)/ b?g` with 2 of 3 clauses required: the regexp
+# (scan, sort) and the wildcard (big) are one clause each
+_engine_entry(
+    "ft_bm25_wildcard_topk", f"{WILD_LIT} /{WILD_RE}/ b?g",
     _bm25_wildcard_sql(WILD_LIT, WILD_RE, WILD_PAT_SQLRX, 50, BM25_K, 2),
-    covers=["O7t wildcard (?/* infix) + regexp (/.../ anchored) query "
-            "clauses: dictionary expansion under the df-ranked cap, "
-            "one clause each under min_should_match"],
+    ["O7t wildcard (?/* infix) + regexp (/.../ anchored) query "
+     "clauses: dictionary expansion under the df-ranked cap, "
+     "one clause each under min_should_match"],
+    min_should_match=2,
 )
-def ft_bm25_wildcard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`row /s(can|ort)/ b?g` with msm=2: a Lucene RegexpQuery clause
-    (expands to scan+sort), a WildcardQuery clause (`b?g` -> big), and
-    a literal — each pattern is ONE clause however many expansions
-    match. The wildcard's literal prefix pins a startswith predicate
-    (row-group pruning); the regexp pays the full dictionary-column
-    scan Lucene accepts for RegexpQuery."""
-    from data_prep_opensearch_spark.operators.bm25 import BM25Engine
-
-    index_dir = _ensure_docs_index(spark, sf_dir)
-    eng = BM25Engine(spark, index_dir, cache=False)
-    out = eng.topk(f"{WILD_LIT} /{WILD_RE}/ b?g", BM25_K,
-                   min_should_match=2)
-    return _engine_topk_to_external(out, spark, index_dir)

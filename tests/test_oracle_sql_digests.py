@@ -8,6 +8,9 @@ against ``oracle_sql_digests.json``: an oracle cannot change what it
 checks without that list being regenerated on purpose. No Spark session
 is started.
 
+The catalog's shape is pinned the same way: the names of its entries,
+their order and each entry's ``covers`` list.
+
 ``emb_ann_ivf``'s SQL embeds a codebook trained from
 ``embeddings.parquet``, so its digest is taken at sf0.001 and is skipped
 where that table is absent.
@@ -29,9 +32,17 @@ with open(os.path.join(os.path.dirname(__file__),
                        "oracle_sql_digests.json")) as _f:
     DIGESTS = json.load(_f)
 
+# sha256 of json.dumps([(name, spec.covers) for name, spec in REGISTRY.items()])
+CATALOG_SHAPE = "c9b3f7c958774a04922e49ebff677026517776ebfa8274db87ea8e8a59e74c76"
+
 
 def _digest(sql: str) -> str:
     return hashlib.sha256(sql.encode()).hexdigest()
+
+
+def test_catalog_names_order_and_covers_unchanged():
+    shape = json.dumps([(n, s.covers) for n, s in REGISTRY.items()])
+    assert _digest(shape) == CATALOG_SHAPE
 
 
 def test_every_oracle_is_pinned():

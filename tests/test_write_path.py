@@ -158,24 +158,24 @@ def test_every_writer_lays_files_out_by_term_range(spark, tmp_root):
 
 
 def test_add_and_merge_job_counts(spark, tmp_root):
-    """One small add runs 13 Spark jobs, a delete of two ids 3 and a
+    """One small add runs 12 Spark jobs, a delete of two ids 3 and a
     merge that applies deletes 10 (AQE runs each query stage as its own
     job, and the range partitioning of a segment write samples its keys
     in one). The add's counters and touched shards are observed during
     its staging write, so no job recounts the new rows or collects their
     shards, and its docID offsets are read from the doclens rows on the
     driver; its segment writer's jobs inherit the job group and are
-    counted here. Every segment, doclens and doc_stats dir is read with
-    its declared schema, so no read infers one in a job, and the masks
-    ride in the doclens rows, so neither the add nor the merge reads a
-    mask table of its own."""
+    counted here. Every segment, doclens and doc_stats dir, and the
+    staged posting runs, are read with their declared schemas, so no
+    read infers one in a job, and the masks ride in the doclens rows,
+    so neither the add nor the merge reads a mask table of its own."""
     idx = os.path.join(tmp_root, "write_path_jobs")
     full = corpus_df(spark, 120)
     key = F.xxhash64("repo", "path", "commit") % 4
     build_index(spark, full.filter(key != 0), idx, n_shards=4, n_groups=1)
     n, out = _jobs(spark, lambda: add_documents(spark, idx, full.filter(key == 0)))
     assert out["docs_added"] > 0
-    assert n == 13
+    assert n == 12
     victims = spark.createDataFrame([(1,), (SHARD_WIDTH + 2,)], "doc_id long")
     n, out = _jobs(spark, lambda: delete_documents(spark, idx, victims))
     assert out == 2
