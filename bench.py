@@ -825,6 +825,40 @@ def _catalog_main(sf_dir: str, only: list[str]) -> None:
     print("CATALOGJSON " + json.dumps(out))
 
 
+# the driver parses the LAST line of a 2000-char stdout tail window
+COMPACT_BUDGET = 1900
+# the compact line's fields outside the contract (metric, value, unit,
+# sf, queries, and the gated headline scaling_efficiency), dropped in
+# this order while it is over budget: the optional receipts, then the
+# scaling pair count and the batch latency. All of them stay in
+# BENCH_DETAIL.json
+DROPPABLE = ("scaling_sanity_note", "bm25_p50_ms", "lsh_fresh_session_sec",
+             "bm25_batch_meter_rate", "scaling_efficiency_raw", "detail",
+             f"local{LOW * 4}_docs_per_sec", f"local{LOW}_sec", f"local{LOW * 4}_sec",
+             "scaling_pairs_clean", "bm25_batch_ms_per_query")
+
+
+def compact_line(summary: dict, budget: int = COMPACT_BUDGET) -> str:
+    """``summary`` as one compact JSON line, the last one bench.py
+    prints. Every query key is kept, its wall rounded to 1 dp (full
+    precision is in BENCH_DETAIL.json and the detail line); while the
+    line is over ``budget`` chars, the fields outside the contract are
+    dropped in DROPPABLE order. The contract fields and
+    ``scaling_efficiency`` are never dropped, so a catalog too large for
+    the budget prints an over-budget line rather than a line without
+    some of its keys."""
+    summary = dict(summary, queries={k: round(v, 1) for k, v in summary["queries"].items()})
+    if summary.get("scaling_sanity_note") is None:
+        summary.pop("scaling_sanity_note", None)
+    line = json.dumps(summary, separators=(",", ":"))
+    for victim in DROPPABLE:
+        if len(line) <= budget:
+            break
+        summary.pop(victim, None)
+        line = json.dumps(summary, separators=(",", ":"))
+    return line
+
+
 def _sub_json(args: list[str], tag: str, timeout: int = 3600) -> dict:
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__)] + args,
@@ -891,9 +925,10 @@ def main() -> None:
     #   1. BENCH_DETAIL.json — the full result, committed as a side file;
     #   2. the full detail line (metric engine_bench_detail), printed
     #      first — best-effort;
-    #   3. a COMPACT summary as the LAST stdout line: the driver
-    #      contract fields (metric/value/unit/sf/queries) plus the
-    #      headline scaling + latency numbers with their gate receipts.
+    #   3. a COMPACT summary as the LAST stdout line (compact_line):
+    #      the driver contract fields (metric/value/unit/sf/queries) and
+    #      the gated scaling_efficiency, always; the other scaling and
+    #      latency receipts as far as the tail budget allows.
     ib = result["index_build"]
     high = LOW * 4
     summary = {
@@ -901,9 +936,7 @@ def main() -> None:
         "value": result["value"],
         "unit": "sec",
         "sf": SF_DIR,
-        # 2dp in the compact line (full precision in BENCH_DETAIL.json):
-        # at 63 catalog entries the line flirts with the 2000-char tail
-        "queries": {k: round(v, 2) for k, v in result["queries"].items()},
+        "queries": result["queries"],
         "scaling_efficiency": ib.get("scaling_efficiency"),
         "scaling_efficiency_raw": ib.get("scaling_efficiency_raw"),
         "scaling_pairs_clean": f"{ib.get('pairs_clean')}/{ib.get('pairs_run')}",
@@ -930,40 +963,7 @@ def main() -> None:
     except OSError:
         pass
     print(json.dumps(result))
-    # compact separators: the driver parses the LAST line of a 2000-char
-    # stdout tail window. The full 63-query catalog renders ~1.8-2.0 KB,
-    # so the line defends itself: if over budget, drop optional receipt
-    # fields (all preserved in BENCH_DETAIL.json) until it fits —
-    # the contract fields (metric/value/unit/sf/queries) and the
-    # headline scaling numbers are never dropped.
-    line = json.dumps(summary, separators=(",", ":"))
-    if summary.get("scaling_sanity_note") is None:
-        summary.pop("scaling_sanity_note", None)
-    for victim in ("bm25_p50_ms", "lsh_fresh_session_sec",
-                   "bm25_batch_meter_rate", "scaling_efficiency_raw",
-                   "detail"):
-        if len(line) <= 1900:
-            break
-        summary.pop(victim, None)
-        line = json.dumps(summary, separators=(",", ":"))
-    # the catalog keeps growing (71 entries as of round 5): if the line
-    # still overflows the tail window, coarsen the walls to 1dp, then
-    # keep only the slowest entries (full per-query precision is always
-    # in BENCH_DETAIL.json + the detail line above)
-    if len(line) > 1900:
-        summary["queries"] = {k: round(v, 1)
-                              for k, v in summary["queries"].items()}
-        line = json.dumps(summary, separators=(",", ":"))
-    if len(line) > 1900:
-        full = summary["queries"]
-        by_wall = sorted(full, key=lambda k: -full[k])
-        keep = len(by_wall)
-        while keep > 1 and len(line) > 1900:
-            keep -= 1
-            summary["queries"] = {k: full[k] for k in by_wall[:keep]}
-            summary["queries_omitted"] = len(full) - keep
-            line = json.dumps(summary, separators=(",", ":"))
-    print(line)
+    print(compact_line(summary))
 
 
 if __name__ == "__main__":

@@ -46,7 +46,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from data_prep_opensearch_spark.functions.tokenize import (
     PHRASE_TOKENIZERS,
@@ -62,6 +62,7 @@ from data_prep_opensearch_spark.operators.postings import (
     merge_posting_runs_with_pos,
     vbyte_decode,
 )
+from data_prep_opensearch_spark.session import sql_conf
 
 K1 = 1.2
 B = 0.75
@@ -411,6 +412,29 @@ def term_prefix_filter(stem: str) -> TermKeys:
     return TermKeys(stem=stem, upper=_successor(stem))
 
 
+def sql_string(text: str) -> str:
+    """``text`` as a Spark SQL expression that reads back as exactly
+    ``text``: its UTF-8 bytes as a hex binary literal, cast to string.
+    No character needs escaping, so quotes, backslashes and newlines
+    round-trip, and under either value of
+    ``spark.sql.parser.escapedStringLiterals``. The optimizer folds the
+    cast into a plain literal, so an ``IN`` list of these is still an
+    ``In``/``InSet`` predicate that reaches the cached scan."""
+    return f"CAST(X'{text.encode().hex()}' AS STRING)"
+
+
+def scan_filter(shards: list[int], terms: list[str] | None = None) -> Column:
+    """The scan frame's rows of ``shards`` that hold one of ``terms``, and
+    those shards' sidecar rows (term NULL); ``terms=None`` keeps the
+    sidecar rows alone. One SQL expression, so building it is one parser
+    call however many terms a query reads; a per-literal ``isin`` costs
+    py4j round trips per term."""
+    keep = (f"(term IN ({', '.join(map(sql_string, terms))}) OR term IS NULL)"
+            if terms else "term IS NULL")
+    return F.expr(f"shard IN ({', '.join(map(str, shards))}) AND {keep}"
+                  if shards else "FALSE")
+
+
 class SegmentsRetired(FileNotFoundError):
     """A segment file of the engine's snapshot is gone: a concurrent
     merge retired it after the engine's staleness check."""
@@ -537,12 +561,20 @@ class BM25Engine:
         with no Spark job; resolved dfs are cached per term with the
         shards that hold it,
       - ONE scan frame CACHED pre-partitioned by shard: the segment
-        rows plus, per shard, one sidecar row (term NULL) carrying its
-        doclens and masked ids.
+        rows (without ``cf``, which no query reads) plus, per shard, one
+        sidecar row (term NULL) carrying its doclens and masked ids.
     A warm ``topk`` then runs 1 Spark job:
       filter(term IN ... OR term IS NULL, shard IN touched) ->
       mapInPandas (per-shard top-k) -> TakeOrderedAndProject,
-    with no join, no broadcast and no shuffle.
+    with no join, no broadcast and no shuffle. The filter is one SQL
+    expression (``scan_filter``): one parser call per query, however
+    many terms a prefix expands to, and Catalyst still hands the
+    ``term`` predicate to the cached scan as ``In``/``InSet``. The cache
+    is planned with AQE off (``_cached``): its shard exchange is one AQE
+    never coalesces, and a cached plan that is adaptive makes Spark wrap
+    every query over the cache in AQE. So the warm ``topk``,
+    ``match_scores`` and the local tier's sidecar fetch run as plain
+    plans, with no adaptive stage around them.
 
     ``topk``, ``match_scores`` and ``topk_batch`` plan through one
     ``_shard_scored``. Per shard, every query runs the ONE clause
@@ -633,9 +665,9 @@ class BM25Engine:
         self._token = self._index_token()
         self.meta = load_meta(index_dir)
         # one manifest load: the Spark scan and the driver-side reader see
-        # the same segment files
+        # the same segment files. No query reads cf.
         m = load_manifest(index_dir)
-        seg = read_segments(spark, index_dir, m)
+        seg = read_segments(spark, index_dir, m).drop("cf")
         self._segments = _SegmentReader(segment_files(index_dir, m))
 
         # the doclens rows ARE the sidecar rows, deletes included
@@ -650,11 +682,8 @@ class BM25Engine:
         # double the cached footprint and only phrase queries read it.
         # A positional twin (self._scan_pos) is cached lazily on the
         # first phrase query.
-        if "pos_bytes" in seg.columns:
-            self._scan_all = scan
-            scan = scan.drop("pos_bytes")
-        else:
-            self._scan_all = None
+        self._scan_all = scan
+        scan = scan.drop("pos_bytes")
         self._scan_pos = None
 
         self._shard_partitioned = cache
@@ -670,8 +699,7 @@ class BM25Engine:
                 self.meta["n_shards"],
             )
             self._n_part = n_part
-            scan = scan.repartition(n_part, "shard").cache()
-            scan.count()
+            scan = self._cached(scan)
         self._scan = scan
         # the term rows alone, for the dictionary readers
         self.seg = scan.filter(F.col("term").isNotNull()).drop("base", "dl_bytes", "deleted")
@@ -721,13 +749,25 @@ class BM25Engine:
         if self._scan_pos is None:
             sp = self._scan_all
             if self._shard_partitioned:
-                sp = sp.repartition(self._n_part, "shard").cache()
-                sp.count()
+                sp = self._cached(sp)
             self._scan_pos = sp
         return self._scan_pos
 
+    def _cached(self, scan: DataFrame) -> DataFrame:
+        """``scan`` partitioned by shard, cached and materialized, from a
+        plan made with AQE off. The ``repartition(n, shard)`` exchange is
+        REPARTITION_BY_NUM, which AQE never coalesces, so AQE gains the
+        cache nothing; but a cached plan that is adaptive makes Spark
+        wrap every later query over the cache in AQE (its result-stage
+        thread, its plan re-explains), and a query with no exchange of
+        its own, like a warm ``topk``, then pays for it on every call."""
+        with sql_conf(self.spark, {"spark.sql.adaptive.enabled": "false"}):
+            scan = scan.repartition(self._n_part, "shard").cache()
+            scan.count()
+        return scan
+
     def _require_positions(self) -> None:
-        if not self.meta.get("positions") or self._scan_all is None:
+        if not self.meta.get("positions"):
             raise ValueError(
                 "phrase query requires an index built with positions=True "
                 f"({self.index_dir} has none)"
@@ -1047,9 +1087,8 @@ class BM25Engine:
     def _sidecar_frame(self, shards: list[int]) -> pd.DataFrame:
         """The listed shards' sidecar rows — the scan frame's NULL-term
         rows — on the driver: one Spark job."""
-        return self._scan.filter(
-            F.col("term").isNull() & F.col("shard").isin(shards)
-        ).select("term", "shard", "base", "dl_bytes", "deleted").toPandas()
+        return self._scan.filter(scan_filter(shards)).select(
+            "term", "shard", "base", "dl_bytes", "deleted").toPandas()
 
     def _load_local_sidecars(self, s_missing: list[int]) -> None:
         """Pull the listed shards' sidecars (doclens and deleted ids) to
@@ -1222,7 +1261,14 @@ class BM25Engine:
         last row. The cursor rides in the query plan to the exhaustive
         kernel, which drops every doc at or before it BEFORE its
         per-shard top-k cut, so each shard still emits only k rows and
-        the cut stays exact."""
+        the cut stays exact.
+
+        The returned frame's plan is filter -> mapInPandas ->
+        TakeOrderedAndProject over the engine's cache: one Spark job,
+        no exchange, and (since the cache is planned without AQE) no
+        adaptive wrapper, so a warm call's driver cost is planning that
+        one stage. A cold engine (``cache=False``) adds a shard exchange
+        and plans it with AQE."""
         local = self._shard_scored([query], k, scorer, min_should_match,
                                    max_expansions, synonyms, search_after)
         if local is None:
@@ -1480,7 +1526,13 @@ class BM25Engine:
         when no query can match.
 
         Global df comes from ``resolve_df``, a driver-side point read
-        that runs no Spark job, for warm and cold engines alike."""
+        that runs no Spark job, for warm and cold engines alike. The
+        segment filter is ``scan_filter``: one SQL expression, one
+        parser call whatever the number of terms, whose ``term``
+        predicate reaches the scan as ``In``/``InSet``. A warm engine
+        reads its cache, whose plan was made with AQE off, so a plan
+        with no exchange of its own (``topk``, ``match_scores``) is not
+        wrapped in AQE; the cold path's shard exchange keeps AQE."""
         self._maybe_refresh()
         plans = [self._query_plan(q, scorer, min_should_match,
                                   max_expansions, synonyms, search_after)
@@ -1498,8 +1550,7 @@ class BM25Engine:
         touched = sorted(set().union(*(self._df_cache[t][1] for t in terms)))
         scan = (self._scan_positional() if any(p.phrases or p.neg_phrases
                                                for p in live) else self._scan)
-        seg = scan.filter(F.col("shard").isin(touched) & (
-            F.col("term").isin(rows) | F.col("term").isNull()))
+        seg = scan.filter(scan_filter(touched, rows))
         if not self._shard_partitioned:
             # cold path: co-locate each shard's rows and sidecar row (the
             # filtered set is tiny, so this one exchange is cheap)

@@ -72,6 +72,7 @@ from data_prep_opensearch_spark.operators.postings import (
     vbyte_decode,
     vbyte_encode,
 )
+from data_prep_opensearch_spark.session import sql_conf
 
 POSTING_ROW_SCHEMA = T.StructType([
     T.StructField("term", T.StringType(), False),
@@ -466,6 +467,15 @@ STAGED_PART_SCHEMA = T.StructType(
 DOC_STATS_SCHEMA = T.StructType(
     STAGED_PART_SCHEMA.fields + [T.StructField("_gen", T.IntegerType(), True)])
 
+# the declared schema of each index table that manifest.read_table reads;
+# a format bump that changes a table's columns changes it here
+TABLE_SCHEMAS = {
+    "segments": SEGMENT_SCHEMA,
+    "doclens": DOCLEN_SCHEMA,
+    "doc_stats": DOC_STATS_SCHEMA,
+    "lineage": LINEAGE_SCHEMA,
+}
+
 
 def map_runs_and_stats(docs: DataFrame, tokenizer: str = "simple",
                        positions: bool = False) -> DataFrame:
@@ -708,7 +718,7 @@ def commit_generation(
         seg_thread.start()
     try:
         if has_stats:
-            stats, masks = mf.read_doc_stats_dir(spark, kind1), None
+            stats, masks = mf.read_table(spark, "doc_stats", kind1), None
             if old_stats is not None:
                 touched = F.col("shard").isin(sorted(int(x) for x in got["shards"]))
                 stats = old_stats.filter(touched).unionByName(stats.drop("_gen"))
@@ -767,7 +777,7 @@ def _build_index_locked(
     done_groups: set[int] = set()
     if resume and os.path.exists(lineage_dir):
         done = (
-            spark.read.parquet(lineage_dir)
+            mf.read_table(spark, "lineage", lineage_dir)
             .filter((F.col("phase") == "postings") & (F.col("status") == "complete"))
             .select("group_id")
             .distinct()
@@ -783,13 +793,9 @@ def _build_index_locked(
     # AQE partition coalescing optimizes JVM-relational stages but merges
     # the docID-window output into few, UNEVEN partitions — and for the
     # python-heavy tokenize stage that means stragglers and idle workers.
-    # Disable it for the build only (restored after).
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_coalesce = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
-
+    # Disable it for the build only.
     done_this_run: list[int] = []
-    try:
+    with sql_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
         for g in todo:
             # cooperative cancel (I5): between commit groups is the safe
             # point — the previous group is atomically committed, this one
@@ -823,7 +829,7 @@ def _build_index_locked(
                 t0 = time.monotonic()
                 kind1 = os.path.join(index_dir, staged_rel, "kind=1")
                 c = _counters(
-                    mf.read_doc_stats_dir(spark, kind1).select(
+                    mf.read_table(spark, "doc_stats", kind1).select(
                         *_group_counters(F.lit(True))).collect()[0]
                     if os.path.exists(kind1)
                     else {"n": 0, "s": 0, "fp": 0, "dl": 0})
@@ -838,8 +844,6 @@ def _build_index_locked(
                 )
             group_totals.append((c["n_docs"], c["sum_dl"]))
             done_this_run.append(g)
-    finally:
-        spark.conf.set(coalesce_key, prev_coalesce)
 
     if stop_after_groups is not None and len(todo) < n_groups - len(done_groups):
         return {"status": "interrupted", "groups_done": sorted(done_groups | set(todo))}

@@ -144,7 +144,7 @@ def adopt_legacy(spark: SparkSession, index_dir: str) -> dict:
     if os.path.exists(seg_dir):
         gens = sorted(
             int(r["gen"])
-            for r in spark.read.parquet(seg_dir).select("gen").distinct().collect()
+            for r in read_table(spark, "segments", seg_dir).select("gen").distinct().collect()
         )
         m["segments"].append({"path": "segments", "gens": gens})
     if os.path.exists(os.path.join(index_dir, "doclens")):
@@ -168,6 +168,18 @@ def _segment_dirs(index_dir: str, m: dict | None) -> list[str]:
     return paths
 
 
+def read_table(spark: SparkSession, kind: str, *paths: str) -> DataFrame:
+    """The index table ``kind`` ("segments", "doclens", "doc_stats" or
+    "lineage") at ``paths``, read with its declared schema
+    (``index_build.TABLE_SCHEMAS``), so the read runs no footer
+    schema-inference job. Older layouts read through the same schemas: a
+    column a dir lacks reads as null (``pos_bytes`` of an index built
+    without positions, ``_gen`` of a doc_stats dir that predates it)."""
+    from data_prep_opensearch_spark.operators.index_build import TABLE_SCHEMAS
+
+    return spark.read.schema(TABLE_SCHEMAS[kind]).parquet(*paths)
+
+
 def read_segments(spark: SparkSession, index_dir: str,
                   m: dict | None = None) -> DataFrame:
     """The live segment table. ``m``: a manifest the caller already
@@ -175,7 +187,7 @@ def read_segments(spark: SparkSession, index_dir: str,
     same snapshot (None loads it)."""
     if m is None:
         m = load_manifest(index_dir)
-    return spark.read.parquet(*_segment_dirs(index_dir, m))
+    return read_table(spark, "segments", *_segment_dirs(index_dir, m))
 
 
 def segment_files(index_dir: str, m: dict | None) -> list[str]:
@@ -189,21 +201,13 @@ def segment_files(index_dir: str, m: dict | None) -> list[str]:
     )
 
 
-def read_doc_stats_dir(spark: SparkSession, path: str) -> DataFrame:
-    """One doc_stats dir, read with the declared ``DOC_STATS_SCHEMA`` (no
-    schema-inference job); ``_gen`` reads null from a dir that lacks it."""
-    from data_prep_opensearch_spark.operators.index_build import DOC_STATS_SCHEMA
-
-    return spark.read.schema(DOC_STATS_SCHEMA).parquet(path)
-
-
 def _doc_stats_parts(spark: SparkSession, index_dir: str) -> list:
     """(rel, frame) per live doc_stats dir."""
     m = load_manifest(index_dir)
     rels = ["doc_stats"] if m is None else m["doc_stats"]
     if not rels:
         raise FileNotFoundError(f"no live doc_stats in {index_dir}/{MANIFEST}")
-    return [(p, read_doc_stats_dir(spark, _abs(index_dir, p))) for p in rels]
+    return [(p, read_table(spark, "doc_stats", _abs(index_dir, p))) for p in rels]
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -277,11 +281,8 @@ def add_doclens(m: dict, index_dir: str, rel: str) -> None:
 
 def read_doclens(spark: SparkSession, index_dir: str) -> DataFrame:
     """Live per-shard doclen sidecar, one row per shard with its masked
-    ids in ``deleted``, read with the declared ``DOCLEN_SCHEMA`` (no
-    schema-inference job)."""
-    from data_prep_opensearch_spark.operators.index_build import DOCLEN_SCHEMA
-
-    return _union([spark.read.schema(DOCLEN_SCHEMA).parquet(path).filter(
+    ids in ``deleted`` (``read_table``)."""
+    return _union([read_table(spark, "doclens", path).filter(
         F.col("shard").isin(won)) for path, won in _live_doclens(index_dir)])
 
 

@@ -122,9 +122,8 @@ def _merge_locked(
         next_gen = max(gens) + 1
         src = [e for e in m["segments"] if set(e["gens"]) & batch]
         keep = [e for e in m["segments"] if not (set(e["gens"]) & batch)]
-        to_merge = spark.read.schema(SEGMENT_SCHEMA).parquet(
-            *[os.path.join(index_dir, e["path"]) for e in src]
-        )
+        to_merge = mf.read_table(
+            spark, "segments", *[os.path.join(index_dir, e["path"]) for e in src])
         merged = _merge_generation_df(
             to_merge, dl, next_gen,
             positions=bool(meta.get("positions", False)),
@@ -167,7 +166,7 @@ def _vacuum_doc_stats(spark: SparkSession, index_dir: str, meta: dict, doclens) 
     alive.write.mode("overwrite").parquet(os.path.join(index_dir, rel))
     # re-encode the doclen sidecar of every shard, masks cleared (holes
     # encode dl=0; no surviving posting references them)
-    alive_new = mf.read_doc_stats_dir(spark, os.path.join(index_dir, rel))
+    alive_new = mf.read_table(spark, "doc_stats", os.path.join(index_dir, rel))
     dl_rel = f"dl_vacuum_v{int(m.get('version', 0)) + 1}"
     mf.write_doclens(encode_doclens(alive_new),
                      os.path.join(index_dir, dl_rel))

@@ -1,10 +1,12 @@
 """SparkSession factory tuned for the sandbox (local[N]) but written for
 multi-executor clusters: every knob set here is cluster-safe.
 
-AQE is on (runtime coalesce + skew-join splitting); Arrow is on (every
-pandas UDF transfer is vectorized); shuffle partitions default to the
-local core count rather than 200 so small-SF runs don't drown in empty
-tasks — on a real cluster this is overridden via spark-submit conf.
+AQE is on (runtime coalesce + skew-join splitting), except where a
+caller holds ``sql_conf`` to turn it off (the warm BM25 engine plans its
+cache without it); Arrow is on (every pandas UDF transfer is
+vectorized); shuffle partitions default to the local core count rather
+than 200 so small-SF runs don't drown in empty tasks — on a real cluster
+this is overridden via spark-submit conf.
 Python workers run under ``worker_daemon`` (pyspark's daemon without its
 fixed per-task zip re-read and import-time GC walk), and find this
 package through ``spark.executorEnv.PYTHONPATH`` from any working dir.
@@ -12,7 +14,9 @@ package through ``spark.executorEnv.PYTHONPATH`` from any working dir.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -112,6 +116,25 @@ def stop_spark() -> None:
         active.stop()
     # Spark caches the JVM-side session; clear so a new master takes effect.
     SparkSession.builder._options = {}
+
+
+@contextlib.contextmanager
+def sql_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set the SQL confs in ``confs`` for the body of the ``with``, and
+    restore each one's prior value (or unset it, if it was unset) in
+    ``finally``. The override is session-wide while it is held: every
+    query any thread of this session plans in the meantime sees it."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _materialize(df: DataFrame) -> DataFrame:

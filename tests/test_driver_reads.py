@@ -15,17 +15,21 @@ from __future__ import annotations
 
 import itertools
 import os
+import re
 import shutil
 
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import given, settings, strategies as st
+from py4j import protocol as proto
 from pyspark.sql import functions as F
 
 from data_prep_opensearch_spark.operators import manifest as mf
 from data_prep_opensearch_spark.operators.bm25 import (
     BM25Engine,
+    sql_string,
     term_point_filter,
 )
 from data_prep_opensearch_spark.operators.incremental import (
@@ -37,6 +41,7 @@ from data_prep_opensearch_spark.operators.index_build import (
     sort_segments,
 )
 from data_prep_opensearch_spark.operators.segment_merge import merge_segments
+from data_prep_opensearch_spark.session import sql_conf
 from data_prep_opensearch_spark.sources.corpus import corpus_df
 
 N = 240
@@ -194,21 +199,72 @@ def test_cold_topk_resolves_df_on_the_driver(spark, indexes):
         assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 2, q
 
 
+def _py4j_commands(spark, fn) -> int:
+    """py4j commands the driver sends the JVM while ``fn`` runs, leaving
+    out memory commands: those release JVM references that earlier
+    calls dropped, in batches whose timing is py4j's own."""
+    client = spark.sparkContext._gateway._gateway_client
+    real, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        sent.append(not command.startswith(proto.MEMORY_COMMAND_NAME))
+        return real(command, *args, **kwargs)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(client, "send_command", counting)
+        fn()
+    return sum(sent)
+
+
 @pytest.mark.parametrize("name", ["base", "delta"])
 def test_warm_topk_runs_one_spark_job(spark, indexes, name):
     """Each shard's sidecar row rides in the cached scan frame, so a warm
     ``topk`` is one job (filter -> mapInPandas -> TakeOrderedAndProject)
     on the clean index and on the delta index with deletes alike. A
     shape's first use may run more: its prefix expansion, or the
-    positional twin's cache."""
+    positional twin's cache. Opening the engine runs one job, the
+    cache's count: the segments, doclens and doc_stats are read with
+    declared schemas. The cache is planned without AQE, so no
+    shape's executed plan is adaptive, and the one-expression filter
+    hands the cached scan its ``term`` predicate as In/InSet. Building
+    that filter is one parser call, so a 50-term prefix expansion
+    costs the driver no more py4j commands than a single term."""
     idx, _ = indexes[name]
-    eng = BM25Engine(spark, idx, cache=True)
+    opened = []
+    n_init = _jobs(spark, lambda: opened.append(BM25Engine(spark, idx, cache=True)))
+    (eng,) = opened
     try:
+        assert n_init == 1  # the cache's count; the segment read infers nothing
         for q in QUERIES:
             eng.topk(q, 10).collect()
-            assert _jobs(spark, lambda: eng.topk(q, 10).collect()) == 1, q
+            dfs = []
+            assert _jobs(spark, lambda: dfs.append(eng.topk(q, 10)) or dfs[-1].collect()) == 1, q
+            plan = dfs[-1]._jdf.queryExecution().executedPlan().toString()
+            assert "AdaptiveSparkPlan" not in plan, q
+            (scan,) = [ln for ln in plan.splitlines() if "InMemoryTableScan" in ln]
+            assert re.search(r"term#\d+ (IN \(|INSET )", scan), (q, scan)
+        assert len(eng.expand_prefix("sym")) == 50
+        calls = {}
+        for q in ("import", "sym*"):
+            eng.topk(q, 10).collect()
+            calls[q] = _py4j_commands(spark, lambda: eng.topk(q, 10).collect())
+        assert abs(calls["sym*"] - calls["import"]) <= 2, calls
     finally:
         eng.unpersist()
+
+
+@settings(max_examples=60, deadline=None)
+@given(texts=st.lists(st.text() | st.sampled_from(["'", "\\", "\n", "\U0010ffff",
+                                                   "\\'", "a\\", "''"]),
+                      min_size=1, max_size=8),
+       escaped=st.sampled_from(["false", "true"]))
+def test_sql_string_reads_back_through_the_parser(spark, texts, escaped):
+    """The warm filter's term literals read back as the terms, for any
+    text and under either ``escapedStringLiterals`` setting."""
+    with sql_conf(spark, {"spark.sql.parser.escapedStringLiterals": escaped}):
+        row = spark.range(1).select(
+            *[F.expr(sql_string(t)).alias(f"t{i}") for i, t in enumerate(texts)]
+        ).collect()[0]
+    assert list(row) == texts
 
 
 def test_needle_query_reads_one_sidecar_row(spark, indexes, monkeypatch):
