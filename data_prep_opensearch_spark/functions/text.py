@@ -8,7 +8,6 @@ semantics; Arrow-vectorized pandas UDFs only where they can't
 
 from __future__ import annotations
 
-import html
 import re
 import unicodedata
 
@@ -40,21 +39,6 @@ def clean_str_py(s: str | None) -> str | None:
 @pandas_udf(T.StringType())
 def clean_str_udf(s: pd.Series) -> pd.Series:
     return s.map(clean_str_py, na_action="ignore")
-
-
-# ---------------------------------------------------------------------------
-# strip_html_light — reference semantics: common/utils.py:295-309
-# ---------------------------------------------------------------------------
-
-_TAG = re.compile(r"<[^>]+>")
-
-
-def strip_html_py(s: str | None) -> str | None:
-    if s is None:
-        return None
-    s = html.unescape(s)
-    s = _TAG.sub(" ", s)
-    return _WS.sub(" ", s).strip()
 
 
 # ---------------------------------------------------------------------------

@@ -98,7 +98,3 @@ def tokenize_with_positions(text: str, mode: str = "simple") -> tuple[list[str],
 
 def term_frequencies(text: str, mode: str = "simple") -> Counter:
     return Counter(TOKENIZERS[mode](text))
-
-
-def doc_length(text: str, mode: str = "simple") -> int:
-    return len(TOKENIZERS[mode](text))

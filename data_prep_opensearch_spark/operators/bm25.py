@@ -139,7 +139,7 @@ class Fuzzy(str):
 
     Subclassing ``str`` lets fuzzy stems travel through the same
     expansion-stem lists as prefix stems (every sort/set/str site is
-    oblivious); :meth:`BM25Engine._plan_clauses` dispatches on the type.
+    oblivious); :meth:`BM25Engine._expansions` dispatches on the type.
     ``max_edits`` follows Lucene's FuzzyQuery bounds (0..2; the
     Levenshtein-automata ceiling) — ``None`` resolves to ES ``AUTO``
     by stem length.
@@ -170,9 +170,11 @@ class Wildcard(str):
     """A wildcard/regexp stem: expands against the dictionary like a
     prefix, but through an arbitrary pattern. ``kind='wild'`` uses
     Lucene WildcardQuery syntax (``*`` = any run, ``?`` = one char);
-    ``kind='re'`` is a Lucene RegexpQuery body (implicitly anchored).
+    ``kind='re'`` is a regexp body in the RE2 dialect (the DuckDB
+    oracle's too), implicitly anchored like Lucene RegexpQuery: no
+    lookarounds or backreferences, which raise ``ValueError``.
     Subclasses ``str`` so it travels the same stem lists as prefix /
-    fuzzy stems; ``_plan_clauses`` dispatches on the type."""
+    fuzzy stems; ``BM25Engine._expansions`` dispatches on the type."""
 
     __slots__ = ("kind", "boost")
 
@@ -210,12 +212,14 @@ def parse_query(
     or ``~N`` (N in 0..2, bare ``~`` = ES AUTO by length) is a FUZZY
     clause: the last stem token becomes a :class:`Fuzzy` entry in the
     prefix-stem list (``~0`` collapses to a literal; ``~3`` and up raise
-    ``ValueError``, as Lucene rejects them). A chunk with ``*``/``?`` anywhere but the pure-trailing position is
-    a WILDCARD clause (Lucene WildcardQuery: ``*`` any run, ``?`` one
-    char), and ``/body/`` is a REGEXP clause (Lucene RegexpQuery,
-    implicitly anchored) — both expand against the dictionary under the
-    same df-ranked cap as prefixes and score as one scoring-boolean
-    clause. A chunk starting
+    ``ValueError``, as Lucene rejects them). A chunk with ``*``/``?``
+    anywhere but the pure-trailing position is a WILDCARD clause (Lucene
+    WildcardQuery: ``*`` any run, ``?`` one char), and ``/body/`` is a
+    REGEXP clause (implicitly anchored, as in Lucene RegexpQuery, but in
+    the RE2 dialect: a pattern RE2 rejects, such as a lookahead or a
+    backreference, raises ``ValueError`` when the clause expands) — both
+    expand against the dictionary under the same df-ranked cap as
+    prefixes and score as one scoring-boolean clause. A chunk starting
     with ``-`` is a MUST_NOT clause (Lucene bool must_not): every token
     it produces joins the exclusion set (its trailing-``*`` / ``~N``
     form negates the stem's expansions). A trailing ``^B`` (B a
@@ -412,6 +416,41 @@ def term_prefix_filter(stem: str) -> TermKeys:
     return TermKeys(stem=stem, upper=_successor(stem))
 
 
+def levenshtein(terms: pa.ChunkedArray, stem: str, max_edits: int) -> np.ndarray:
+    """Spark's ``levenshtein(term, stem, max_edits)`` for each of
+    ``terms``: the plain edit distance (unit insertions, deletions and
+    substitutions, no transpositions) counted in code points, or -1
+    where it exceeds ``max_edits``. A term outside the length window
+    ``|len(term) - len(stem)| <= max_edits`` is -1 without a DP. The
+    rest run one numpy DP row per stem character, vectorized across the
+    terms; a row's insertion step is a running minimum. Row minima never
+    fall, so a term leaves the DP once its row minimum passes the
+    budget."""
+    lens = pc.utf8_length(terms).to_numpy()
+    out = np.full(len(lens), -1, np.int64)
+    idx = np.flatnonzero(np.abs(lens - len(stem)) <= max_edits)
+    if not idx.size:
+        return out
+    width = int(lens[idx].max())
+    # numpy's fixed-width str dtype is UTF-32: one uint32 per code point,
+    # zero-padded past each term's length
+    chars = np.array(terms.take(idx).to_pylist(), dtype=f"<U{max(width, 1)}")
+    chars = chars.view(np.uint32).reshape(len(idx), -1)[:, :width]
+    steps = np.arange(width + 1)
+    row = np.tile(steps, (len(idx), 1))
+    for i, c in enumerate(map(ord, stem), 1):
+        nxt = np.empty_like(row)
+        nxt[:, 0] = i
+        np.minimum(row[:, 1:] + 1, row[:, :-1] + (chars != c), out=nxt[:, 1:])
+        row = np.minimum.accumulate(nxt - steps, axis=1) + steps
+        alive = row.min(axis=1) <= max_edits
+        if not alive.all():
+            idx, chars, row = idx[alive], chars[alive], row[alive]
+    dist = row[np.arange(len(idx)), lens[idx]]
+    out[idx] = np.where(dist <= max_edits, dist, -1)
+    return out
+
+
 def sql_string(text: str) -> str:
     """``text`` as a Spark SQL expression that reads back as exactly
     ``text``: its UTF-8 bytes as a hex binary literal, cast to string.
@@ -555,11 +594,12 @@ class BM25Engine:
     """Warm query engine. Init loads, once:
       - a driver-side reader over the live segment files (the term
         dictionary step X10 of SURVEY.md §4), holding each file's footer
-        and per-row-group term min/max: df resolution, prefix expansion
-        and the driver-local tier's posting fetches read only the row
-        groups of the term-sorted files that can hold a wanted term,
-        with no Spark job; resolved dfs are cached per term with the
-        shards that hold it,
+        and per-row-group term min/max: df resolution, every dictionary
+        expansion (prefix, fuzzy, wildcard and regexp, through one
+        ``_expand``), the suggesters and the driver-local tier's posting
+        fetches read only the row groups of the term-sorted files that
+        can hold a wanted term, with no Spark job; resolved dfs are
+        cached per term with the shards that hold it,
       - ONE scan frame CACHED pre-partitioned by shard: the segment
         rows (without ``cf``, which no query reads) plus, per shard, one
         sidecar row (term NULL) carrying its doclens and masked ids.
@@ -709,8 +749,8 @@ class BM25Engine:
         # toPandas() pulled the whole vocab to the driver, which cannot
         # exist at 10^12 docs). Warm terms are cached with their shards.
         self._df_cache: dict[str, tuple[int, frozenset[int]]] = {}
-        # prefix-expansion cache: (stem, cap) -> [(term, df), ...]
-        self._prefix_cache: dict[tuple[str, int], list[tuple[str, int]]] = {}
+        # expansion cache: (stem, ..., cap) -> [(term, df, ...), ...]
+        self._prefix_cache: dict[tuple, list[tuple]] = {}
         # driver-local latency tier (topk_local): per term, fully decoded
         # (docs, tfs, dls, positions | None) spanning all shards and
         # generations, and per-shard sidecars — fetched on demand and
@@ -796,6 +836,21 @@ class BM25Engine:
 
     # Lucene-style default cap on multi-term expansion
     MAX_EXPANSIONS = 50
+    _BY_DF = [("df", "descending"), ("term", "ascending")]
+
+    def _expand(self, key: tuple, read, order: list, cap: int) -> list[tuple]:
+        """The body every dictionary expander shares: the (term, df,
+        shards, ...) rows ``read()`` takes from the driver reader, ranked
+        by ``order`` and capped at ``cap`` (Lucene's max_expansions, so
+        an expanded clause stays bounded). Returns [(term, global_df,
+        ...), ...], cached under ``key`` until the next index mutation;
+        the expansions seed the term-df cache."""
+        if key not in self._prefix_cache:
+            got = read().sort_by(order).slice(0, cap)
+            rows = list(zip(*(c.to_pylist() for c in got.columns)))
+            self._prefix_cache[key] = [(t, d, *rest) for t, d, _, *rest in rows]
+            self._seed_dfs(rows)
+        return self._prefix_cache[key]
 
     @_one_snapshot
     def expand_prefix(
@@ -805,128 +860,107 @@ class BM25Engine:
         driver-side read of the TERM-SORTED segment files bounded to
         the stem's [stem, successor) range, so row groups outside it are
         pruned and this stays a dictionary point-read at any corpus size
-        (never a vocabulary collect). The cap keeps the expanded clause
-        bounded (Lucene's max_expansions): when a stem matches more
-        terms, the HIGHEST-df expansions win (ties to the
+        (never a vocabulary collect). When a stem matches more terms
+        than the cap, the HIGHEST-df expansions win (ties to the
         lexicographically first term) — the deterministic choice that
         retains the expansions with the most matches.
-        Returns [(term, global_df), ...] df-desc; cached per stem until
-        the next index mutation."""
+        Returns [(term, global_df), ...] df-desc."""
         cap = self.MAX_EXPANSIONS if max_expansions is None else max_expansions
-        key = (stem, cap)
-        if key not in self._prefix_cache:
-            got = self._segments.dfs(term_prefix_filter(stem)).sort_by(
-                [("df", "descending"), ("term", "ascending")]).slice(0, cap)
-            rows = list(zip(*(c.to_pylist() for c in got.columns)))
-            self._prefix_cache[key] = [(t, d) for t, d, _ in rows]
-            self._seed_dfs(rows)  # expansions seed the term-df cache
-        return self._prefix_cache[key]
+        return self._expand(
+            (stem, cap), lambda: self._segments.dfs(term_prefix_filter(stem)),
+            self._BY_DF, cap)
 
+    @_one_snapshot
+    def _fuzzy_candidates(self, stem: str, max_edits: int,
+                          prefix_length: int) -> pa.Table:
+        """(term, df, shards, dist) of every dictionary term that starts
+        with ``stem[:prefix_length]``, lies within ``max_edits`` of
+        ``stem`` and has a positive similarity ``1 - dist/min(|term|,
+        |stem|)``: the candidates ``expand_fuzzy`` ranks and
+        ``suggest.term_suggest`` ranks its own way. One driver read of
+        the pinned prefix's [prefix, successor) range; with
+        ``prefix_length`` 0 it reads the whole dictionary, the cost
+        Lucene's FuzzyQuery accepts for ``prefix_length=0``."""
+        dic = self._segments.dfs(term_prefix_filter(stem[:prefix_length]))
+        dist = levenshtein(dic["term"], stem, max_edits)
+        shorter = np.minimum(pc.utf8_length(dic["term"]).to_numpy(), len(stem))
+        keep = (dist >= 0) & (dist < shorter)
+        return dic.filter(keep).append_column("dist", pa.array(dist[keep]))
+
+    @_one_snapshot
     def expand_fuzzy(
         self, stem: str, max_edits: int,
         max_expansions: int | None = None, prefix_length: int = 0,
     ) -> list[tuple[str, int, int]]:
         """Expand a fuzzy stem (Lucene FuzzyQuery): dictionary terms
-        within ``max_edits`` Levenshtein distance of ``stem``, as one
-        filtered aggregate over the term-sorted segment files. The scan
-        pre-filters on the length window (|len(term) - len(stem)| <=
-        max_edits, a codegen'd JVM filter) and computes the distance
-        with the thresholded built-in (early-exits past the budget);
-        expansions whose similarity boost ``1 - dist/min(|term|,
-        |stem|)`` is not positive are dropped (they would contribute
-        nothing — arises only when max_edits reaches the shorter
-        length). The cap keeps the clause bounded: distance-asc first
-        (Lucene's closest-first rewrite), df desc, term asc.
+        within ``max_edits`` Levenshtein distance of ``stem``, read on
+        the driver (``_fuzzy_candidates``). Expansions whose similarity
+        boost ``1 - dist/min(|term|, |stem|)`` is not positive are
+        dropped (they would contribute nothing — arises only when
+        max_edits reaches the shorter length). The cap ranks
+        distance-asc first (Lucene's closest-first rewrite), df desc,
+        term asc. ``prefix_length >= 1`` pins the first chars and
+        restores min/max row-group pruning (the knob Lucene/ES expose
+        for the same reason).
 
-        Scale note: unlike ``expand_prefix`` (whose [stem, successor)
-        point read prunes row groups), a 0-prefix fuzzy scan reads the
-        whole dictionary column — the same cost Lucene accepts for
-        ``prefix_length=0``. Pass ``prefix_length >= 1`` to pin the
-        first chars and restore min/max row-group pruning (the exact
-        knob Lucene/ES expose for the same reason).
-
-        Returns [(term, global_df, distance), ...]; cached per
-        (stem, budget) until the next index mutation."""
+        Returns [(term, global_df, distance), ...]."""
         cap = self.MAX_EXPANSIONS if max_expansions is None else max_expansions
-        key = ("~", stem, max_edits, cap, prefix_length)
-        if key not in self._prefix_cache:
-            cond = F.length("term").between(
-                len(stem) - max_edits, len(stem) + max_edits
-            )
-            if prefix_length > 0:
-                cond &= F.col("term").startswith(stem[:prefix_length])
-            boost = 1.0 - F.col("dist") / F.least(
-                F.length("term"), F.lit(len(stem))
-            )
-            rows = (
-                self.seg.filter(cond)
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"),
-                     F.collect_set("shard").alias("shards"))
-                .withColumn(
-                    "dist",
-                    F.levenshtein(F.col("term"), F.lit(stem), max_edits),
-                )
-                .filter((F.col("dist") >= 0) & (boost > 0))
-                .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
-                .limit(cap)
-                .collect()
-            )
-            exp = [(r["term"], int(r["df"]), int(r["dist"])) for r in rows]
-            self._prefix_cache[key] = exp
-            self._seed_dfs(rows)
-        return self._prefix_cache[key]
+        return self._expand(
+            ("~", stem, max_edits, cap, prefix_length),
+            lambda: self._fuzzy_candidates(stem, max_edits, prefix_length),
+            [("dist", "ascending"), *self._BY_DF], cap)
 
+    @_one_snapshot
     def expand_wildcard(
         self, pattern: str, kind: str = "wild",
         max_expansions: int | None = None,
     ) -> list[tuple[str, int]]:
         """Expand a wildcard (``*``/``?``) or regexp stem against the
-        dictionary: one filtered aggregate over the term-sorted segment
-        files. A wildcard's LITERAL PREFIX (chars before the first
-        ``*``/``?``) pins a ``startswith`` predicate so row-group
-        min/max pruning still applies — the exact cost model of Lucene's
-        WildcardQuery, where a leading wildcard forces a full term scan
-        (we accept it too, cap-bounded). Regexps scan the whole
-        dictionary column like Lucene RegexpQuery. Cap keeps the clause
-        bounded: df desc, term asc (the prefix rule)."""
+        dictionary, read on the driver. A wildcard's LITERAL PREFIX
+        (chars before the first ``*``/``?``) bounds the read to its
+        [prefix, successor) range, so row-group min/max pruning still
+        applies — the cost model of Lucene's WildcardQuery, where a
+        leading wildcard forces a full term scan (we accept it too,
+        cap-bounded). Regexps read the whole dictionary like Lucene
+        RegexpQuery. The terms read are matched whole, in the RE2
+        dialect (``pc.match_substring_regex`` on ``^(?:rx)$``, as the
+        DuckDB oracle's ``regexp_full_match``); a pattern RE2 rejects
+        raises ``ValueError``. Cap keeps the clause bounded: df desc,
+        term asc (the prefix rule)."""
         cap = self.MAX_EXPANSIONS if max_expansions is None else max_expansions
-        key = ("w", kind, pattern, cap)
-        if key not in self._prefix_cache:
-            if kind == "wild":
-                rx = "".join(
-                    ".*" if c == "*" else "." if c == "?" else re.escape(c)
-                    for c in pattern
-                )
-                lit = re.match(r"[a-z0-9_]*", pattern).group(0)
-            else:
-                rx = pattern
-                lit = ""
-            try:
-                re.compile(rx)
-            except re.error as exc:
-                raise ValueError(f"bad pattern {pattern!r}: {exc}") from None
-            sc = self.seg.select("term", "shard", "df")
-            if lit:
-                sc = sc.filter(F.col("term").startswith(lit))
-            rows = (
-                sc.filter(F.col("term").rlike(f"^(?:{rx})$"))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"),
-                     F.collect_set("shard").alias("shards"))
-                .orderBy(F.desc("df"), F.asc("term"))
-                .limit(cap)
-                .collect()
+        if kind == "wild":
+            rx = "".join(
+                ".*" if c == "*" else "." if c == "?" else re.escape(c)
+                for c in pattern
             )
-            exp = [(r["term"], int(r["df"])) for r in rows]
-            self._prefix_cache[key] = exp
-            self._seed_dfs(rows)
-        return self._prefix_cache[key]
+            lit = re.match(r"[a-z0-9_]*", pattern).group(0)
+        else:
+            rx, lit = pattern, ""
+        rx = f"^(?:{rx})$"
+        try:  # compiled here, so a pattern fails even where no term is read
+            pc.match_substring_regex(pa.scalar(""), rx)
+        except pa.ArrowInvalid as exc:
+            raise ValueError(f"bad pattern {pattern!r}: {exc}") from exc
 
-    @staticmethod
-    def _fuzzy_boost(term: str, stem: str, dist: int) -> float:
-        """Lucene FuzzyTermsEnum similarity boost for an expansion."""
-        return 1.0 - dist / min(len(term), len(stem))
+        def read() -> pa.Table:
+            dic = self._segments.dfs(term_prefix_filter(lit))
+            return dic.filter(pc.match_substring_regex(dic["term"], rx))
+        return self._expand(("w", kind, pattern, cap), read, self._BY_DF, cap)
+
+    def _expansions(self, stem: str,
+                    max_expansions: int | None) -> list[tuple[str, float]]:
+        """(term, similarity) per dictionary expansion of a prefix, fuzzy
+        or wildcard stem. A fuzzy expansion's similarity is Lucene
+        FuzzyTermsEnum's boost ``1 - dist/min(|term|, |stem|)``; every
+        other expansion's is 1."""
+        if isinstance(stem, Fuzzy):
+            return [(t, 1.0 - dist / min(len(t), len(stem))) for t, _, dist
+                    in self.expand_fuzzy(stem, stem.max_edits, max_expansions)]
+        if isinstance(stem, Wildcard):
+            got = self.expand_wildcard(str(stem), stem.kind, max_expansions)
+        else:
+            got = self.expand_prefix(stem, max_expansions)
+        return [(t, 1.0) for t, _ in got]
 
     def _plan_clauses(
         self, query: str, max_expansions: int | None = None,
@@ -1019,37 +1053,15 @@ class BM25Engine:
 
         for stem in _dedup_stems(prefixes):
             b = getattr(stem, "boost", 1.0)
-            if isinstance(stem, Fuzzy):
-                exp = self.expand_fuzzy(stem, stem.max_edits,
-                                        max_expansions)
-                clauses.append([t for t, _, _ in exp])
-                for t, _, dist in exp:
-                    bump(t, b * self._fuzzy_boost(t, stem, dist))
-            elif isinstance(stem, Wildcard):
-                exp_w = [t for t, _ in self.expand_wildcard(
-                    str(stem), stem.kind, max_expansions)]
-                clauses.append(exp_w)
-                for t in exp_w:
-                    bump(t, b)
-            else:
-                exp_p = [t for t, _ in
-                         self.expand_prefix(stem, max_expansions)]
-                clauses.append(exp_p)
-                for t in exp_p:
-                    bump(t, b)
+            exp = self._expansions(stem, max_expansions)
+            clauses.append([t for t, _ in exp])
+            for t, sim in exp:
+                bump(t, b * sim)
         negs: set[str] = set(neg_lit)
         for t in neg_lit:
             negs.update(syn_map.get(str(t), []))
         for stem in _dedup_stems(neg_pre):
-            if isinstance(stem, Fuzzy):
-                negs.update(t for t, _, _ in self.expand_fuzzy(
-                    stem, stem.max_edits, max_expansions))
-            elif isinstance(stem, Wildcard):
-                negs.update(t for t, _ in self.expand_wildcard(
-                    str(stem), stem.kind, max_expansions))
-            else:
-                negs.update(t for t, _ in
-                            self.expand_prefix(stem, max_expansions))
+            negs.update(t for t, _ in self._expansions(stem, max_expansions))
         n_clauses = len(clauses) + len(phrases)
         flat = sorted(
             {t for cl in clauses for t in cl} | negs
@@ -1192,9 +1204,9 @@ class BM25Engine:
         reads of the segment files and no Spark job: its df first, so
         the guard runs before any posting bytes are read, then its rows.
         Each reads only the row groups whose term range holds the term
-        and decodes straight from the Arrow columns. Only a shard whose
-        sidecar is not yet cached adds a Spark job, and a fuzzy clause's
-        first expansion is a Spark scan.
+        and decodes straight from the Arrow columns. Prefix, fuzzy,
+        wildcard and regexp clauses expand through the same reader. Only
+        a shard whose sidecar is not yet cached adds a Spark job.
 
         Under the cap the evaluator scores EXHAUSTIVELY over the cached
         flat per-term arrays, with a sparse accumulator: one slot per

@@ -1,4 +1,4 @@
-"""Suggesters: OpenSearch's `suggest` API re-expressed Spark-first.
+"""Suggesters: OpenSearch's `suggest` API over the segment index.
 
 The reference serves its corpus through OpenSearch, whose search body
 accepts `suggest` sections — the term suggester ("did you mean":
@@ -21,15 +21,13 @@ that capability over the segment index:
 - :func:`completion_suggest` — prefix completions ranked by document
   frequency (the df IS the suggestion weight), capped at ``size``.
 
-Scale: one suggest call is ONE dictionary pass however many input
-tokens need correcting — the (tiny) token list broadcasts into a
-cross-join filtered by the length window + pinned prefix + thresholded
-built-in ``levenshtein`` (JVM, early-exit past the budget), and the
-ranking window's input is bounded by candidate count, not corpus size.
-The completion path is a filtered aggregate whose StringStartsWith
-predicate pushes to the term-sorted parquet scan (row-group min/max
-pruning keeps it a dictionary point-read). No driver collect on either
-path; the dictionary never materializes in full.
+Both read the term dictionary on the driver, through the engine's
+segment reader, with no Spark job: the term suggester ranks the
+fuzzy-query candidates (``BM25Engine._fuzzy_candidates``: one read of
+each token's pinned-prefix range, one vectorized Levenshtein), and the
+completion suggester is ``BM25Engine.expand_prefix``. Each returns its
+few rows as a DataFrame built from them (``createDataFrame``), whose
+collect is one Spark job.
 
 Reference parity: the serving-side OpenSearch suggesters
 (`search` body `suggest`) over the indexes built by
@@ -39,13 +37,18 @@ DirectSpellChecker / ES term & completion suggester docs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 SUGGEST_SCHEMA = T.StructType([
     T.StructField("token", T.StringType(), False),
     T.StructField("suggestion", T.StringType(), False),
     T.StructField("dist", T.IntegerType(), False),
     T.StructField("score", T.DoubleType(), False),
+    T.StructField("df", T.LongType(), False),
+])
+
+COMPLETION_SCHEMA = T.StructType([
+    T.StructField("suggestion", T.StringType(), False),
     T.StructField("df", T.LongType(), False),
 ])
 
@@ -75,72 +78,27 @@ def term_suggest(
     engine._maybe_refresh()
     tok = TOKENIZERS[engine.meta["tokenizer"]]
     tokens = sorted({t for t in tok(text or "") if len(t) >= min_word_length})
-    if suggest_mode in ("missing", "popular"):
-        df_map = engine.resolve_df(tokens)
-        if suggest_mode == "missing":
-            tokens = [t for t in tokens if df_map.get(t, 0) == 0]
-    if not tokens:
-        return engine.spark.createDataFrame([], SUGGEST_SCHEMA)
-
-    toks = engine.spark.createDataFrame(
-        [(t, int(df_map.get(t, 0)) if suggest_mode == "popular" else 0)
-         for t in tokens],
-        "token string, token_df long",
-    )
-    # global dictionary: per-term df summed across shards; select first
-    # so the scan reads only the two dictionary columns, never postings
-    dic = (
-        engine.seg.select("term", "df")
-        .groupBy("term").agg(F.sum("df").alias("df"))
-    )
-    cand = dic.crossJoin(F.broadcast(toks)).filter(
-        F.length("term").between(
-            F.length("token") - max_edits, F.length("token") + max_edits
-        )
-    )
-    if prefix_length > 0:
-        cand = cand.filter(
-            F.expr(f"startswith(term, substring(token, 1, {prefix_length}))")
-        )
-    cand = cand.withColumn(
-        "dist", F.levenshtein(F.col("term"), F.col("token"), max_edits)
-    ).filter(F.col("dist") >= 1)
-    score = 1.0 - F.col("dist") / F.least(
-        F.length("term"), F.length("token")
-    )
-    cand = cand.withColumn("score", score).filter(F.col("score") > 0)
-    if suggest_mode == "popular":
-        cand = cand.filter(F.col("df") > F.col("token_df"))
-    order = (
-        [F.desc("score"), F.desc("df"), F.asc("term")]
-        if sort == "score"
-        else [F.desc("df"), F.desc("score"), F.asc("term")]
-    )
-    w = Window.partitionBy("token").orderBy(*order)
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= size)
-        .select(
-            "token",
-            F.col("term").alias("suggestion"),
-            F.col("dist").cast("int").alias("dist"),
-            F.col("score").cast("double").alias("score"),
-            F.col("df").cast("long").alias("df"),
-        )
-    )
+    df_map = engine.resolve_df(tokens) if suggest_mode != "always" else {}
+    if suggest_mode == "missing":
+        tokens = [t for t in tokens if df_map[t] == 0]
+    rows = []
+    for token in tokens:
+        floor = df_map[token] if suggest_mode == "popular" else 0
+        got = engine._fuzzy_candidates(token, max_edits, prefix_length)
+        cand = [(t, dist, 1.0 - dist / min(len(t), len(token)), df)
+                for t, df, dist in zip(*(got[c].to_pylist()
+                                         for c in ("term", "df", "dist")))
+                if dist >= 1 and df > floor]
+        cand.sort(key=(lambda r: (-r[2], -r[3], r[0])) if sort == "score"
+                  else (lambda r: (-r[3], -r[2], r[0])))
+        rows += [(token, *r) for r in cand[:size]]
+    return engine.spark.createDataFrame(rows, SUGGEST_SCHEMA)
 
 
 def completion_suggest(engine, prefix: str, size: int = 10) -> DataFrame:
     """Prefix completions from the index dictionary, weight = global df
-    (desc, term asc ties), capped at ``size``. Declarative filtered
-    aggregate — StringStartsWith pushes to the term-sorted parquet scan,
-    so this stays a point-read at any corpus size."""
+    (desc, term asc ties), capped at ``size``: the engine's prefix
+    expansion, a point read of the term-sorted segment files."""
     engine._maybe_refresh()
-    return (
-        engine.seg.select("term", "df")
-        .filter(F.col("term").startswith(prefix))
-        .groupBy("term").agg(F.sum("df").cast("long").alias("df"))
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(size)
-        .select(F.col("term").alias("suggestion"), "df")
-    )
+    return engine.spark.createDataFrame(
+        engine.expand_prefix(prefix, size), COMPLETION_SCHEMA)

@@ -39,6 +39,44 @@ def _levenshtein(a: str, b: str) -> int:
     return prev[-1]
 
 
+def _expand_fuzzy(df: dict[str, int], stem,
+                  max_expansions: int) -> list[tuple[str, float]]:
+    """Engine's expand_fuzzy rule over the dictionary ``df`` (term ->
+    df): Levenshtein <= ``stem.max_edits``, positive similarity boost,
+    ranked (dist asc, df desc, term asc), capped. Returns [(term,
+    boost)]."""
+    cands = []
+    for t in df:
+        if abs(len(t) - len(stem)) > stem.max_edits:
+            continue
+        d = _levenshtein(t, str(stem))
+        if d > stem.max_edits:
+            continue
+        b = 1.0 - d / min(len(t), len(stem))
+        if b <= 0:
+            continue
+        cands.append((d, -df[t], t, b))
+    cands.sort()
+    return [(t, b) for _, _, t, b in cands[:max_expansions]]
+
+
+def _expand_wild(df: dict[str, int], stem, max_expansions: int) -> list[str]:
+    """Engine's expand_wildcard rule over the dictionary ``df``: anchored
+    pattern match, df desc / term asc, capped. Python ``re`` stands in
+    for the engine's RE2 on the patterns both accept alike."""
+    if stem.kind == "wild":
+        rx = "".join(
+            ".*" if c == "*" else "." if c == "?" else re.escape(c)
+            for c in str(stem)
+        )
+    else:
+        rx = str(stem)
+    pat = re.compile(f"^(?:{rx})$")
+    exp = sorted(((t, n) for t, n in df.items() if pat.match(t)),
+                 key=lambda x: (-x[1], x[0]))[:max_expansions]
+    return [t for t, _ in exp]
+
+
 class OracleIndex:
     def __init__(self, docs: dict[int, str], tokenizer: str = "simple") -> None:
         self.tokenizer = tokenizer
@@ -91,41 +129,6 @@ class OracleIndex:
             )[:max_expansions]
             return [t for t, _ in exp]
 
-        def _expand_fuzzy(stem: Fuzzy) -> list[tuple[str, float]]:
-            """Engine's expand_fuzzy rule: Levenshtein <= max_edits,
-            positive similarity boost, ranked (dist asc, df desc,
-            term asc), capped. Returns [(term, boost)]."""
-            cands = []
-            for t in self.postings:
-                if abs(len(t) - len(stem)) > stem.max_edits:
-                    continue
-                d = _levenshtein(t, str(stem))
-                if d > stem.max_edits:
-                    continue
-                b = 1.0 - d / min(len(t), len(stem))
-                if b <= 0:
-                    continue
-                cands.append((d, -self.df[t], t, b))
-            cands.sort()
-            return [(t, b) for _, _, t, b in cands[:max_expansions]]
-
-        def _expand_wild(stem) -> list[str]:
-            """Engine's expand_wildcard rule: anchored pattern match
-            over the dictionary, df desc / term asc, capped."""
-            if stem.kind == "wild":
-                rx = "".join(
-                    ".*" if c == "*" else "." if c == "?" else re.escape(c)
-                    for c in str(stem)
-                )
-            else:
-                rx = str(stem)
-            pat = re.compile(f"^(?:{rx})$")
-            exp = sorted(
-                ((t, self.df[t]) for t in self.postings if pat.match(t)),
-                key=lambda x: (-x[1], x[0]),
-            )[:max_expansions]
-            return [t for t, _ in exp]
-
         def _stems(stems_in):
             seen = {}
             for s in stems_in:
@@ -150,12 +153,12 @@ class OracleIndex:
         for stem in _stems(prefixes):
             b = getattr(stem, "boost", 1.0)
             if isinstance(stem, Fuzzy):
-                exp_f = _expand_fuzzy(stem)
+                exp_f = _expand_fuzzy(self.df, stem, max_expansions)
                 clauses.append([t for t, _ in exp_f])
                 for t, fb in exp_f:
                     bump(t, b * fb)
             elif isinstance(stem, Wildcard):
-                exp_w = _expand_wild(stem)
+                exp_w = _expand_wild(self.df, stem, max_expansions)
                 clauses.append(exp_w)
                 for t in exp_w:
                     bump(t, b)
@@ -168,9 +171,10 @@ class OracleIndex:
         negs: set[str] = set(neg_lit)
         for stem in _stems(neg_pre):
             if isinstance(stem, Fuzzy):
-                negs.update(t for t, _ in _expand_fuzzy(stem))
+                negs.update(
+                    t for t, _ in _expand_fuzzy(self.df, stem, max_expansions))
             elif isinstance(stem, Wildcard):
-                negs.update(_expand_wild(stem))
+                negs.update(_expand_wild(self.df, stem, max_expansions))
             else:
                 negs.update(_expand(stem))
         excluded: set[int] = set()

@@ -20,7 +20,6 @@ ALLOWED = {
     # public API that tests, tools and the benchmark exercise as capabilities
     "brute_force_topk": "exact kNN baseline of the ANN recall gates",
     "corpus_pandas": "synthetic corpus as pandas, for oracles and fixtures",
-    "doc_length": "Python twin of the token count",
     "index_fingerprint": "logical identity of an index across merges",
     "ivf_probe_topk": "IVF search API",
     "ivf_refresh": "IVF refresh API",
@@ -30,7 +29,6 @@ ALLOWED = {
     "search_facets": "faceted search API",
     "sessionize_stream": "streaming API",
     "stop_spark": "session teardown",
-    "strip_html_py": "Python twin of the HTML stripper",
     "windowed_counts_batch": "streaming API, batch twin",
     "windowed_counts_stream": "streaming API",
     # the reference codec and tokenizer the tests hold product code to

@@ -1,8 +1,8 @@
-"""The engine's driver-side segment reads (``resolve_df``,
-``expand_prefix``, the local tier's posting fetch) against the Spark
-aggregates they replace, their Spark job counts (and the engine
-query's), and their behaviour when a concurrent merge retires the files
-they read.
+"""The engine's driver-side segment reads (``resolve_df``, the prefix,
+fuzzy and wildcard expansions, the local tier's posting fetch) against
+the Spark aggregates they replace and ``oracle.py``'s expansion rules,
+their Spark job counts (and the engine query's), and their behaviour
+when a concurrent merge retires the files they read.
 
 Indexes: a clean base build; the base plus a delta generation and a
 delete; the same base in the legacy layout (no manifest, a
@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from data_prep_opensearch_spark.operators import manifest as mf
 from data_prep_opensearch_spark.operators.bm25 import (
     BM25Engine,
+    Fuzzy,
+    Wildcard,
     sql_string,
     term_point_filter,
 )
@@ -41,6 +43,7 @@ from data_prep_opensearch_spark.operators.index_build import (
     sort_segments,
 )
 from data_prep_opensearch_spark.operators.segment_merge import merge_segments
+from data_prep_opensearch_spark.oracle import _expand_fuzzy, _expand_wild
 from data_prep_opensearch_spark.session import sql_conf
 from data_prep_opensearch_spark.sources.corpus import corpus_df
 
@@ -129,6 +132,40 @@ def test_expand_prefix_matches_spark_aggregate(spark, engine):
     assert eng.expand_prefix("sym") == eng.expand_prefix("sym", 10_000)[:50]
 
 
+@pytest.mark.parametrize("name", ["base", "delta"])
+def test_fuzzy_and_wildcard_expansions_match_oracle_rules(spark, indexes, name):
+    """The driver-side fuzzy and wildcard/regexp expansions give the
+    lists ``oracle.py``'s rules give over the Spark aggregate of the
+    dictionary: on the delta index, df summed across generations and
+    the shards of both."""
+    idx, _ = indexes[name]
+    dic = {r["term"]: (int(r["df"]), frozenset(r["shards"])) for r in
+           mf.read_segments(spark, idx).groupBy("term").agg(
+               F.sum("df").alias("df"),
+               F.collect_set("shard").alias("shards")).collect()}
+    dfs = {t: df for t, (df, _) in dic.items()}
+    eng = BM25Engine(spark, idx, cache=False)
+    # closer expansions rank first whatever their df (fn99, sym7), and
+    # caps cut inside a distance band (sym30~2) and inside one df order
+    for stem, k, cap in (("retrn", 1, 50), ("imprt", 2, 50), ("sym12", 1, 50),
+                         ("fn", 1, 3), ("needle", 2, 50), ("fn99", 1, 50),
+                         ("sym7", 1, 5), ("sym30", 2, 50), ("self", 2, 50)):
+        want = _expand_fuzzy(dfs, Fuzzy(stem, k), cap)
+        assert want, stem
+        assert eng._expansions(Fuzzy(stem, k), cap) == want, stem
+        assert [(t, d) for t, d, _ in eng.expand_fuzzy(stem, k, cap)] == \
+            [(t, dfs[t]) for t, _ in want]
+    for pattern, kind, cap in (("*port", "wild", 50), ("fn?2", "wild", 50),
+                               ("s?m*", "wild", 7), ("(sym|fn)1[0-9]", "re", 50),
+                               ("needle[0-9]+", "re", 50), ("zz*q", "wild", 50)):
+        want = _expand_wild(dfs, Wildcard(pattern, kind), cap)
+        assert bool(want) == (pattern != "zz*q"), pattern
+        assert eng.expand_wildcard(pattern, kind, cap) == \
+            [(t, dfs[t]) for t in want], pattern
+    # the expansions seed each term's df and shard set
+    assert eng._df_cache and all(dic[t] == v for t, v in eng._df_cache.items())
+
+
 def test_posting_fetch_matches_spark_rows(spark, engine):
     idx, eng = engine
     cols = ["term", "shard", "gen", "df", "doc_bytes", "tf_bytes", "pos_bytes"]
@@ -172,13 +209,17 @@ def test_warm_lookups_run_no_spark_job(spark, indexes):
         assert len(eng._local_side) == eng.meta["n_shards"]
         assert _jobs(spark, lambda: eng.resolve_df(["needle2", "fn7", "zz"])) == 0
         assert _jobs(spark, lambda: eng.expand_prefix("sym")) == 0
-        for q in ("needle1", "return -needle2", '"def return"', "fn*"):
+        # every expansion is a driver read, the whole-dictionary ones too
+        assert _jobs(spark, lambda: eng.expand_fuzzy("retrn", 1)) == 0
+        for pattern, kind in (("*port", "wild"), ("fn?2", "wild"),
+                              ("(sym|fn)1[0-9]", "re")):
+            assert _jobs(spark, lambda: eng.expand_wildcard(pattern, kind)) == 0
+        for q in ("needle1", "return -needle2", '"def return"', "fn*",
+                  "imprt~1 def", "s?m1* -fn3"):
             assert _jobs(spark, lambda: eng.topk_local(q, 10, as_pandas=True)) == 0, q
         # explain keeps its one sidecar collect on Spark
         doc = int(eng.topk_local("class", 1, as_pandas=True)["doc_id"][0])
         assert _jobs(spark, lambda: eng.explain('class "self return"', doc)) == 1
-        # a whole-dictionary fuzzy scan stays a Spark job
-        assert _jobs(spark, lambda: eng.expand_fuzzy("retrn", 1)) >= 1
     finally:
         eng.unpersist()
 

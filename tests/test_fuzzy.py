@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import pickle
 
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 
 def _rows(df_or_pdf):
@@ -213,3 +216,49 @@ def test_fuzzy_boost_weighting(spark, built_index, oracle_index):
             float(tf), float(oracle_index.doclen[top_doc]), avgdl
         )
     assert abs(acc - top_score) <= 1e-9
+
+
+# any code point UTF-8 can carry: NUL, astral planes, U+10FFFF
+_CHARS = st.characters(codec="utf-8")
+
+
+@st.composite
+def _stem_and_terms(draw):
+    """A stem and terms around it: random text, the empty string, lone
+    astral code points, and the stem after 0-3 random single-character
+    edits, so the terms reach both edges of every budget's length
+    window and distances on both sides of every budget."""
+    stem = draw(st.text(_CHARS, max_size=6))
+    edited = []
+    for _ in range(draw(st.integers(0, 6))):
+        t = list(stem)
+        for _ in range(draw(st.integers(0, 3))):
+            at = draw(st.integers(0, len(t)))
+            op = draw(st.sampled_from(["insert", "delete", "substitute"]))
+            if op == "insert":
+                t.insert(at, draw(_CHARS))
+            elif at < len(t):
+                t[at:at + 1] = [] if op == "delete" else [draw(_CHARS)]
+        edited.append("".join(t))
+    other = draw(st.lists(
+        st.text(_CHARS, max_size=8)
+        | st.sampled_from(["", "\U0001f600", "\U0010ffff", "\x00"]),
+        max_size=6))
+    return stem, edited + other
+
+
+@settings(max_examples=60, deadline=None)
+@given(case=_stem_and_terms())
+def test_levenshtein_matches_spark(spark, case):
+    """The expansion's numpy Levenshtein equals Spark's thresholded
+    ``levenshtein(term, stem, k)`` for budgets 0-2: plain edit distance
+    in code points, -1 past the budget."""
+    from data_prep_opensearch_spark.operators.bm25 import levenshtein
+
+    stem, terms = case
+    want = spark.createDataFrame([(t,) for t in terms], "term string").select(
+        *[F.levenshtein("term", F.lit(stem), k) for k in range(3)]).collect()
+    got = [levenshtein(pa.chunked_array([terms], pa.string()), stem, k)
+           for k in range(3)]
+    assert [tuple(int(g[i]) for g in got) for i in range(len(terms))] == \
+        [tuple(r) for r in want], (stem, terms)

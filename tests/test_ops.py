@@ -3,7 +3,9 @@ operators (the training-data-pipeline surface)."""
 
 from __future__ import annotations
 
+import html
 import math
+import re
 
 import numpy as np
 import pytest
@@ -13,7 +15,6 @@ from data_prep_opensearch_spark.functions.text import (
     canonical_url_py,
     clean_str_py,
     normalize_date_py,
-    strip_html_py,
 )
 
 
@@ -25,6 +26,15 @@ def test_clean_str():
     assert clean_str_py("a​ b  c\x00 d") == "a b c d"
     assert clean_str_py("  x   y  ") == "x y"
     assert clean_str_py(None) is None
+
+
+def strip_html_py(s: str | None) -> str | None:
+    """The reference's strip_html_light (common/utils.py:295-309), in
+    Python: unescape entities, tags to spaces, collapse whitespace."""
+    if s is None:
+        return None
+    s = re.sub(r"<[^>]+>", " ", html.unescape(s))
+    return re.sub(r"\s+", " ", s).strip()
 
 
 def test_strip_html():

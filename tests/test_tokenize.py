@@ -1,11 +1,16 @@
 from __future__ import annotations
 
 from data_prep_opensearch_spark.functions.tokenize import (
-    doc_length,
+    TOKENIZERS,
     term_frequencies,
     tokenize_code,
     tokenize_simple,
 )
+
+
+def doc_length(text: str, mode: str = "simple") -> int:
+    """A document's length in tokens, as the index counts it."""
+    return len(TOKENIZERS[mode](text))
 
 
 def test_simple_lowercase_and_split():
